@@ -1144,9 +1144,14 @@ def token_budget_select(
                 )
             )
         )
-    finite = F.lit(0)
-    for s in splits:  # higher score -> LOWER bucket index
-        finite = finite + F.when(score <= F.lit(s), 1).otherwise(0)
+    # bucket index = number of splits at or above the score (higher score
+    # -> LOWER index), as ONE expression: a per-split when-chain nests
+    # ~n_buckets deep and overflows the JVM stack past ~700 splits
+    finite = (
+        F.size(F.filter(F.array(*map(F.lit, splits)), lambda s: score <= s))
+        if splits
+        else F.lit(0)
+    )
     bucket = F.when(score.isNull(), F.lit(len(splits) + 1)).otherwise(
         finite
     )

@@ -16,7 +16,7 @@ aggregation over a column-pruned scan.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
 
 
@@ -88,10 +88,12 @@ def fk_orphans(
     )
 
 
-def expect_passed(summary: DataFrame, gate_name: str = "quality") -> None:
+def expect_passed(summary: DataFrame, gate_name: str = "quality") -> Row:
     """Driver-side fail-fast: raise if the gate row is falsy (C4).
 
     The collect here moves exactly one row — the gate aggregate — never data.
+    The row is returned, so a caller that also wants its counts does not run
+    the gate a second time.
     """
     row = summary.collect()[0]
     if not row["passed"]:
@@ -99,6 +101,7 @@ def expect_passed(summary: DataFrame, gate_name: str = "quality") -> None:
             f"{gate_name} gate failed: total_rows={row['total_rows']} "
             f"null_rows={row['null_rows']}"
         )
+    return row
 
 
 def iqr_outliers(

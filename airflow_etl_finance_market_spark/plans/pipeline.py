@@ -25,7 +25,10 @@ Scale design (100 TB posture):
   weekly aggregate, report) so the window computation runs once;
 - dims use the anti-join append sink (ON CONFLICT DO NOTHING, S6) — the
   incoming distinct keys are the broadcast side;
-- nothing `.collect()`s except the one-row gate and the ≤k-row report.
+- nothing `.collect()`s except the one-row gate and the ≤k-row report;
+- every re-read of a table the run wrote (staging, the weekly MV, the fact
+  on the incremental path) passes the table's DDL schema from ``schemas``,
+  so no read pays a footer-inference job before its scan.
 """
 
 from __future__ import annotations
@@ -38,6 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.quality import expect_passed, quality_summary
+from ..schemas import FACT_MOVIMENTACAO, STAGING, VOLATILITY_WEEKLY
 from ..sources.readers import read_ohlcv_csv
 from ..sources.sinks import append_if_absent, overwrite_parquet, overwrite_partitions
 from .dims import build_dim_instrumento, build_dim_tempo
@@ -202,7 +206,7 @@ def _incremental_fact(
     """
     lo = day - dt.timedelta(days=lookback_days)
     prev = (
-        spark.read.parquet(fact_path)
+        spark.read.schema(FACT_MOVIMENTACAO).parquet(fact_path)
         .filter((F.col("data_id") >= F.lit(lo)) & (F.col("data_id") < F.lit(day)))
         .groupBy("ticker")
         .agg(F.max_by("close", "data_id").alias("_prev_close"))
@@ -268,14 +272,14 @@ def run_pipeline(
         staging = staging.filter(F.col("date") == F.lit(incremental_date))
     staging_path = f"{warehouse_dir}/staging"
     overwrite_parquet(staging, staging_path)
-    staging = spark.read.parquet(staging_path)  # re-read: columnar, pruned
+    # re-read: columnar, pruned
+    staging = spark.read.schema(STAGING).parquet(staging_path)
 
     # -- 4: quality gate (A1, A2, P4, P5, C4) ------------------------------
     gate = quality_summary(
         staging, null_check_cols=["close", "date"], expected_count=expected_count
     )
-    expect_passed(gate, gate_name="staging")
-    staged_rows = gate.collect()[0]["total_rows"]
+    staged_rows = expect_passed(gate, gate_name="staging")["total_rows"]
 
     # -- 5: dimensions (A8, F2-F4, F8, F9, S6/J3) --------------------------
     dim_inst = build_dim_instrumento(staging, symbol_col="symbol")
@@ -305,13 +309,17 @@ def run_pipeline(
     else:
         # recompute ONLY the touched week from its (pruned) day-partitions
         wk0 = incremental_date - dt.timedelta(days=incremental_date.weekday())
-        week_slice = spark.read.parquet(fact_path).filter(
-            (F.col("data_id") >= F.lit(wk0))
-            & (F.col("data_id") <= F.lit(wk0 + dt.timedelta(days=6)))
+        week_slice = (
+            spark.read.schema(FACT_MOVIMENTACAO)
+            .parquet(fact_path)
+            .filter(
+                (F.col("data_id") >= F.lit(wk0))
+                & (F.col("data_id") <= F.lit(wk0 + dt.timedelta(days=6)))
+            )
         )
         weekly_inc = weekly_volatility(week_slice, key="ticker", ts="data_id")
         overwrite_partitions(weekly_inc, weekly_path, partition_by=["week"])
-    weekly = spark.read.parquet(weekly_path)
+    weekly = spark.read.schema(VOLATILITY_WEEKLY).parquet(weekly_path)
     weekly_rows = weekly.count()
 
     # -- 8-9: report + log (O1, S8, F12, S10) ------------------------------
@@ -328,7 +336,9 @@ def run_pipeline(
         # the report is global: in incremental mode the in-memory `fact`
         # is one day, so read the full (freshly updated) table back
         report_fact = (
-            fact if incremental_date is None else spark.read.parquet(fact_path)
+            fact
+            if incremental_date is None
+            else spark.read.schema(FACT_MOVIMENTACAO).parquet(fact_path)
         )
         if report_path:
             from .report import write_report

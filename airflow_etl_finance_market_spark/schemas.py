@@ -4,7 +4,9 @@ The reference declares every table schema as Postgres DDL
 (reference: dags/financial_pipeline.py:104-112,143-147,153-158,170-180).
 We mirror that discipline with StructTypes: the CSV/Parquet readers never use
 ``inferSchema`` (it double-scans the input and can mistype), and every write
-produces a stable, documented schema.
+produces a stable, documented schema. ``plans.pipeline`` re-reads the tables
+it wrote (staging, the weekly MV, the fact) with these same schemas, so no
+read back runs Spark's Parquet footer-inference job before its scan.
 
 Type mapping rationale (SURVEY.md §1.2): NUMERIC→Double (all reference math is
 tolerance-friendly and the driver fixtures use DOUBLE), BIGINT→Long,

@@ -12,7 +12,7 @@ Scale notes: the anti-join's build side is the *incoming* batch (small) so
 Spark broadcasts it when under the threshold; partition the target by a date
 column (``partition_by``) so downstream scans get static/dynamic partition
 pruning, and so overwrites of a daily run touch one partition, not 100 TB
-(``spark.sql.sources.partitionOverwriteMode=dynamic`` on a real deployment).
+(``overwrite_partitions``: the per-write ``partitionOverwriteMode=dynamic``).
 """
 
 from __future__ import annotations
@@ -22,26 +22,26 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def _cluster_for_write(
-    df: DataFrame,
-    partition_by: list[str],
-    files_per_partition: int,
-) -> DataFrame:
+def _cluster_for_write(df: DataFrame, partition_by: list[str]) -> DataFrame:
     """Co-locate each output partition's rows before a partitionBy write.
 
     Without this, every task writes one file into every partition directory
     it holds rows for — up to tasks × partitions tiny files (a 32-thread
     local run already emits 32 files per day; a 1000-executor cluster makes
     it pathological). One shuffle keyed on the partition columns yields ONE
-    file per partition; ``files_per_partition > 1`` adds a deterministic
-    hash salt for partitions too large for a single file (the 100 TB knob:
-    a ~40 GB day wants ~40 × 1 GB files, not 1).
+    file per partition.
+
+    The shuffle's partition count is explicit (``spark.sql.shuffle.partitions``)
+    because AQE never coalesces a repartition to a fixed count. Left to AQE,
+    a sub-MB shuffle coalesces by bytes into ONE task, which then writes
+    every directory serially — but a partitioned write costs per file
+    (open, footer, commit), not per byte, so the directories are spread
+    over every core instead. A session that sets the shuffle partitions as
+    a very high AQE upper bound pays that many write tasks, most of them
+    empty.
     """
-    keys = [F.col(c) for c in partition_by]
-    if files_per_partition > 1:
-        salt = F.abs(F.hash(*[F.col(c) for c in df.columns])) % files_per_partition
-        return df.repartition(*keys, salt)
-    return df.repartition(*keys)
+    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return df.repartition(n, *[F.col(c) for c in partition_by])
 
 
 def overwrite_parquet(
@@ -49,11 +49,10 @@ def overwrite_parquet(
     path: str,
     *,
     partition_by: list[str] | None = None,
-    files_per_partition: int = 1,
 ) -> None:
     """Truncate-and-reload sink (S4/S5/S7): full overwrite of `path`."""
     if partition_by:
-        df = _cluster_for_write(df, partition_by, files_per_partition)
+        df = _cluster_for_write(df, partition_by)
         df.write.mode("overwrite").partitionBy(*partition_by).parquet(path)
     else:
         df.write.mode("overwrite").parquet(path)
@@ -64,7 +63,6 @@ def overwrite_partitions(
     path: str,
     *,
     partition_by: list[str],
-    files_per_partition: int = 1,
 ) -> None:
     """Dynamic partition overwrite (S7 incremental refresh): replace ONLY
     the partitions present in ``df``, leaving every other partition's files
@@ -72,19 +70,17 @@ def overwrite_partitions(
 
     This is the 100 TB daily-load primitive: a one-day increment rewrites
     one ``data_id=`` directory instead of truncate-reloading the table. The
-    session conf is flipped to ``dynamic`` only for the duration of this
-    write and restored after (Spark's default ``static`` mode would wipe
-    the whole table root).
+    ``dynamic`` mode is a per-write option, so the session's own
+    ``spark.sql.sources.partitionOverwriteMode`` (Spark's default ``static``
+    would wipe the whole table root) is never touched.
     """
-    spark = df.sparkSession
-    df = _cluster_for_write(df, partition_by, files_per_partition)
-    key = "spark.sql.sources.partitionOverwriteMode"
-    prev = spark.conf.get(key, "static")
-    spark.conf.set(key, "dynamic")
-    try:
-        df.write.mode("overwrite").partitionBy(*partition_by).parquet(path)
-    finally:
-        spark.conf.set(key, prev)
+    (
+        _cluster_for_write(df, partition_by)
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*partition_by)
+        .parquet(path)
+    )
 
 
 def append_if_absent(

@@ -8,6 +8,7 @@ here it should hash-match in CORRECTNESS_r{N}.json.
 
 from __future__ import annotations
 
+import contextlib
 import datetime as _dt
 import math
 import os
@@ -27,6 +28,27 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 def spark():
     s = get_spark("finmarket-tests", shuffle_partitions=8)
     yield s
+
+
+@pytest.fixture
+def job_group(spark):
+    """``with job_group(name) as tracker:`` tags the block's Spark jobs with
+    job group ``name``; after the block, ``tracker`` (the status tracker)
+    lists them via ``getJobIdsForGroup(name)``. The listener bus is drained
+    on exit, so every job the block ran is already in the tracker."""
+    sc = spark.sparkContext
+
+    @contextlib.contextmanager
+    def tag(name: str):
+        sc.setJobGroup(name, name)
+        try:
+            yield sc.statusTracker()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+
+    return tag
 
 
 @pytest.fixture(scope="session")

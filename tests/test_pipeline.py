@@ -115,6 +115,17 @@ def test_rerun_idempotent(spark, ohlcv_csv, warehouse, result):
     )
 
 
+def test_warm_rerun_job_count(spark, ohlcv_csv, warehouse, result, job_group):
+    """A warm full reload runs a fixed number of Spark jobs on this input,
+    so a change in the count means the plan changed, not the host. It was
+    26 before staging and the weekly MV were re-read with their DDL schemas
+    (two footer-inference jobs gone) and the gate row was collected once
+    (one job gone); the benchmark's traced reload moved 26 -> 23 too."""
+    with job_group("pipeline-rerun") as tracker:
+        run_pipeline(spark, ohlcv_csv, warehouse)
+    assert len(tracker.getJobIdsForGroup("pipeline-rerun")) == 23
+
+
 def test_report_file_written(spark, ohlcv_csv, warehouse, result, tmp_path):
     """S9: run with report_path writes the notebook-equivalent artifact,
     consistent with the XCom report message."""

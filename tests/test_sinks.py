@@ -47,6 +47,35 @@ def test_unreadable_existing_path_raises_not_overwrites(spark, tmp_path):
     assert sentinel.read_bytes() == b"this is not a parquet file"
 
 
+def test_partitioned_write_fans_out_one_file_per_directory(
+    spark, job_group, tmp_path
+):
+    """A partitionBy overwrite writes its directories from several tasks
+    and still leaves ONE file per directory: the clustering shuffle has an
+    explicit partition count, which AQE does not coalesce into one serial
+    write task however small the data."""
+    from pyspark.sql import functions as F
+
+    from airflow_etl_finance_market_spark.sources.sinks import overwrite_parquet
+
+    df = spark.range(800).select(
+        (F.col("id") % 8).alias("k"), F.col("id").alias("v")
+    )
+    path = str(tmp_path / "fanout")
+    with job_group("sinks-fanout") as tracker:
+        overwrite_parquet(df, path, partition_by=["k"])
+
+    dirs = sorted(d for d in os.listdir(path) if d.startswith("k="))
+    assert dirs == [f"k={i}" for i in range(8)]
+    for d in dirs:
+        files = [f for f in os.listdir(f"{path}/{d}") if f.endswith(".parquet")]
+        assert len(files) == 1, (d, files)
+    # the write is the group's last job; its result stage is its last stage
+    write_job = tracker.getJobInfo(max(tracker.getJobIdsForGroup("sinks-fanout")))
+    write_stage = tracker.getStageInfo(max(write_job.stageIds))
+    assert write_stage.numTasks > 1
+
+
 def test_zorder_write_clusters_both_dimensions(spark, sf_dir, tmp_path):
     """Z-ordered layout: every output file must cover a materially narrower
     range of EACH cluster column than the global span — a plain sort by one
