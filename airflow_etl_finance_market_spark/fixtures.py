@@ -1,11 +1,10 @@
 """Shared planted-family fixture builders for harness gates and bench.
 
-The WAV re-encode family and the PNG tile-crop family were copy-pasted
-between their driver gates and their bench sections (four WAV copies,
-two tile copies by round 9) — drift between a gate's construction and
-its bench twin would silently desynchronize what they measure (r09
-advice). This module is the ONE copy of each construction; both sides
-build their fixtures through it.
+The planted image and MJPEG families were copy-pasted between their
+harness gates and their bench sections (two tile copies by round 9) —
+drift between a gate's construction and its bench twin would silently
+desynchronize what they measure (r09 advice). This module is the ONE
+copy of each construction; both sides build their fixtures through it.
 
 Everything here follows the pickle house rule: each builder is a
 FACTORY whose product (a plain ``text -> [payload, ...]`` closure)
@@ -16,164 +15,6 @@ driver only.
 """
 
 from __future__ import annotations
-
-
-def audio_fixture_primitives():
-    """Return ``(lattice, pcm8_wav)``: the md5-stream byte lattice and
-    the raw PCM8 RIFF writer every audio family is synthesized from.
-
-    ``lattice(seed, n)`` expands a seed into ``n`` deterministic bytes;
-    the audio families use them as 8-BIT-LATTICE samples
-    ``(u - 128) << 8`` so the 16->8-bit re-encode is LOSSLESS by
-    arithmetic. ``pcm8_wav`` writes an 8-bit unsigned PCM RIFF (the
-    package codec only ENCODES PCM16, so the 8-bit member needs its own
-    writer), word-aligning the data chunk per the RIFF spec."""
-    import hashlib
-    import struct
-
-    def lattice(seed: bytes, n: int = 8000) -> bytes:
-        out = bytearray()
-        i = 0
-        while len(out) < n:
-            out += hashlib.md5(
-                seed + bytes([i & 0xFF, (i >> 8) & 0xFF])
-            ).digest()
-            i += 1
-        return bytes(out[:n])
-
-    def pcm8_wav(rate: int, u8: bytes) -> bytes:
-        fmt = struct.pack("<HHIIHH", 1, 1, rate, rate, 1, 8)
-        out = b"WAVE" + b"fmt " + len(fmt).to_bytes(4, "little") + fmt
-        out += b"data" + len(u8).to_bytes(4, "little") + u8
-        if len(u8) & 1:
-            out += b"\x00"  # RIFF chunks are word-aligned
-        return b"RIFF" + len(out).to_bytes(4, "little") + out
-
-    return lattice, pcm8_wav
-
-
-def wav_family_members():
-    """The 3-member WAV RE-ENCODE family: ``members(text) ->
-    [mono PCM16, stereo channel-dup PCM16, 8-bit-lattice PCM8]``.
-
-    All three decode to the SAME sample stream (the downmix is an exact
-    mean; 8-bit decodes to ``(u-128) << 8``), so their fingerprints are
-    equal BY ARITHMETIC — the construction behind the audio_near_dups
-    and streaming_media_dedup_ingest gates and the bench audio tier."""
-    import hashlib
-
-    from .multimodal.audio import _stdlib_wav_codec
-
-    _, _, _wav_enc, _ = _stdlib_wav_codec()
-    lattice, pcm8_wav = audio_fixture_primitives()
-
-    def members(text: str) -> list[bytes]:
-        u8 = lattice(hashlib.md5(text.encode("utf-8")).digest())
-        x = [(v - 128) << 8 for v in u8]
-        return [
-            _wav_enc(8000, [x]),
-            _wav_enc(8000, [x, x]),
-            pcm8_wav(8000, u8),
-        ]
-
-    return members
-
-
-def wav_rate_family_members():
-    """The 3-member CROSS-RATE family: ``members(text) -> [8 kHz base,
-    2x sample-replicated 16 kHz, 3x replicated 24 kHz]``.
-
-    Nearest ``k*r -> r`` downsampling picks every k-th sample, inverting
-    the replication bit-for-bit, so all three normalize to the SAME
-    stream — the audio_norm_near_dups gate's construction."""
-    import hashlib
-
-    from .multimodal.audio import _stdlib_wav_codec
-
-    _, _, _wav_enc, _ = _stdlib_wav_codec()
-    lattice, _ = audio_fixture_primitives()
-
-    def members(text: str) -> list[bytes]:
-        u8 = lattice(hashlib.md5(text.encode("utf-8")).digest())
-        x = [(v - 128) << 8 for v in u8]
-        return [
-            _wav_enc(8000, [x]),
-            _wav_enc(16000, [[v for v in x for _ in range(2)]]),
-            _wav_enc(24000, [[v for v in x for _ in range(3)]]),
-        ]
-
-    return members
-
-
-def wav_trim_family_members(window_samples: int = 2000):
-    """The 3-member TRIM family: ``members(text) -> [full 8000-sample
-    clip, trim dropping the FIRST window, stereo channel-dup of the
-    trim]`` (all mono-equivalent PCM16 at 8 kHz).
-
-    The trim removes exactly one ``window_samples`` block, so every
-    surviving window of the trimmed clip is byte-identical to a window
-    of the original (``trimmed[i*W:(i+1)*W] == original[(i+1)*W:
-    (i+2)*W]``) — window-subfingerprint set overlap is 1.0 on the
-    trim's side BY ARITHMETIC, while the whole-clip fingerprint's
-    segment boundaries all shift and its signature diverges. The
-    audio_window_trim_near_dups gate's construction."""
-    import hashlib
-
-    from .multimodal.audio import _stdlib_wav_codec
-
-    _, _, _wav_enc, _ = _stdlib_wav_codec()
-    lattice, _ = audio_fixture_primitives()
-    W = window_samples
-
-    def members(text: str) -> list[bytes]:
-        u8 = lattice(hashlib.md5(text.encode("utf-8")).digest())
-        x = [(v - 128) << 8 for v in u8]
-        trim = x[W:]
-        return [
-            _wav_enc(8000, [x]),
-            _wav_enc(8000, [trim]),
-            _wav_enc(8000, [trim, trim]),
-        ]
-
-    return members
-
-
-def wav_cdc_trim_family_members(
-    n_samples: int = 16000, trim_front: int = 1234, trim_back: int = 777
-):
-    """The 3-member ARBITRARY-TRIM family for the CDC tier:
-    ``members(text) -> [full n_samples clip, trim dropping
-    trim_front/trim_back samples off the edges, stereo channel-dup of
-    the trim]`` (PCM16 at 8 kHz on the md5 lattice).
-
-    The trim offsets are deliberately NOT multiples of the fixed-window
-    tier's 2000-sample grid — every fixed window of the trim straddles
-    two windows of the original, so window-subfingerprint overlap is
-    ~0 (the case audio_window_trim_near_dups pins as honest
-    degradation) — while content-defined segmentation re-synchronizes
-    after at most one segment per edited edge, so CDC segment overlap
-    stays high (measured worst 0.83 over 120 seeds at the kernel
-    defaults). The audio_cdc_trim_near_dups gate's construction."""
-    import hashlib
-
-    from .multimodal.audio import _stdlib_wav_codec
-
-    _, _, _wav_enc, _ = _stdlib_wav_codec()
-    lattice, _ = audio_fixture_primitives()
-
-    def members(text: str) -> list[bytes]:
-        u8 = lattice(
-            hashlib.md5(text.encode("utf-8")).digest(), n_samples
-        )
-        x = [(v - 128) << 8 for v in u8]
-        trim = x[trim_front : n_samples - trim_back]
-        return [
-            _wav_enc(8000, [x]),
-            _wav_enc(8000, [trim]),
-            _wav_enc(8000, [trim, trim]),
-        ]
-
-    return members
 
 
 def image_fixture_primitives():
@@ -198,60 +39,6 @@ def image_fixture_primitives():
         )
 
     return noise_pix, crop
-
-
-def image_encoding_variants():
-    """``variant(pix, k) -> bytes``: four byte-DIFFERENT encodings of
-    one 32x32 luma plane that decode IDENTICALLY (gray PNG /
-    gray-palette GIF / REVERSED-palette GIF with inverted indices and
-    inverted palette / RGB PNG with R=G=B) — dHash-equal by arithmetic,
-    the multimodal_corpus_prep construction (NOT an upscale: the 9-wide
-    dHash grid does not divide 64, so integer upscales are not
-    hash-exact for dHash)."""
-    from .multimodal.binary import _stdlib_png_codec
-    from .multimodal.gif import _stdlib_gif_codec
-
-    _, _, _png_enc, _ = _stdlib_png_codec()
-    _, _, _gif_enc = _stdlib_gif_codec()
-    gray_pal = [(i, i, i) for i in range(256)]
-    rev_pal = [(255 - i, 255 - i, 255 - i) for i in range(256)]
-
-    def variant(pix: bytes, k: int) -> bytes:
-        k = k % 4
-        if k == 0:
-            return _png_enc(32, 32, 1, pix)
-        if k == 1:
-            return _gif_enc(32, 32, pix, gray_pal)
-        if k == 2:
-            return _gif_enc(32, 32, bytes(255 - v for v in pix), rev_pal)
-        return _png_enc(32, 32, 3, b"".join(bytes((v, v, v)) for v in pix))
-
-    return variant
-
-
-def wav_encoding_variants():
-    """``variant(u8, k) -> bytes``: four byte-DIFFERENT encodings of one
-    8-bit-lattice sample stream whose FINGERPRINTS are equal by
-    arithmetic — mono PCM16, stereo channel-dup (exact-mean downmix),
-    PCM8 (lossless on the lattice), and HALF-GAIN PCM16 ((u-128)<<7:
-    scaling by a power of two is exact in IEEE float, so every band
-    energy scales by exactly 1/4 and the double-difference signs are
-    unchanged — the gain invariance pinned in tests/test_audio.py)."""
-    from .multimodal.audio import _stdlib_wav_codec
-
-    _, _, _wav_enc, _ = _stdlib_wav_codec()
-    _, pcm8_wav = audio_fixture_primitives()
-
-    def variant(u8: bytes, k: int) -> bytes:
-        k = k % 4
-        if k == 2:
-            return pcm8_wav(8000, u8)
-        if k == 3:
-            return _wav_enc(8000, [[(v - 128) << 7 for v in u8]])
-        x = [(v - 128) << 8 for v in u8]
-        return _wav_enc(8000, [x] if k == 0 else [x, x])
-
-    return variant
 
 
 def mjpeg_video_variants():
@@ -464,49 +251,6 @@ def mirror_family_members():
             _png_enc(32, 32, 1, pix),
             _png_enc(32, 32, 1, mir),
             _gif_enc(32, 32, mir, gray_pal),
-        ]
-
-    return members
-
-
-def wav_cdc_gain_family_members(
-    n_samples: int = 16000, trim_front: int = 1234, trim_back: int = 777
-):
-    """The 3-member GAIN x ARBITRARY-TRIM family for the sign-anchored
-    CDC tier: ``members(text) -> [full clip, GAIN-DOUBLED arbitrary
-    trim, stereo channel-dup of the gain-trim]`` (PCM16 at 8 kHz on
-    the md5 lattice, synthesized at <<6 scale so the x2 gain stays
-    inside int16 exactly).
-
-    The trim offsets are off the fixed-window grid AND the copy is
-    gain-scaled — the one cell of the robustness matrix r11 left open:
-    amplitude-anchored CDC loses every anchor to the gain (its gate
-    pins exactly that as honest degradation on these members), while
-    sign-anchored CDC chooses identical boundaries (positive gain
-    preserves every sample's sign) and the band-energy-sign
-    fingerprint is gain-invariant by arithmetic, so shared segments
-    land EXACT. Measured worst within-family overlap 0.90 across 40
-    lattice seeds; cross-family 0.0. The audio_cdc_gain_near_dups
-    gate's construction."""
-    import hashlib
-
-    from .multimodal.audio import _stdlib_wav_codec
-
-    _, _, _wav_enc, _ = _stdlib_wav_codec()
-    lattice, _ = audio_fixture_primitives()
-
-    def members(text: str) -> list[bytes]:
-        u8 = lattice(
-            hashlib.md5(text.encode("utf-8")).digest(), n_samples
-        )
-        x = [(v - 128) << 6 for v in u8]
-        gain_trim = [
-            2 * v for v in x[trim_front : n_samples - trim_back]
-        ]
-        return [
-            _wav_enc(8000, [x]),
-            _wav_enc(8000, [gain_trim]),
-            _wav_enc(8000, [gain_trim, gain_trim]),
         ]
 
     return members

@@ -44,231 +44,25 @@ def register(name: str, oracle: str | None = None):
     return deco
 
 
-#: Entries pushed to the BACK of the registry order. The driver verifies
-#: exactly the first 50 registered names per round; demoted entries get no
-#: driver correctness row that round.
+#: Entries pushed to the BACK of the registry order. Only the first 50
+#: registered names are oracle-verified each round (one CORRECTNESS_r*.json
+#: ledger per round); demoted entries get no ledger row that round, so the
+#: window is a RE-VERIFICATION cadence (tests/test_harness_window.py
+#: derives rules 1 and 3 from the ledgers):
 #:
-#: ROTATION POLICY (encoded in tests/test_harness_window.py, adopted round
-#: 5 per the r04 verdict): the window is a RE-VERIFICATION cadence, not a
-#: one-shot ledger. Priority for the 50 live slots each round:
-#:   1. entries with NO driver row yet (new registrations);
-#:   2. entries whose depended-on code changed since their last driver row
-#:      (a local parity run is evidence, a driver row is the hard signal);
-#:   3. everything else, oldest last-driver-row first.
-#: Consequently no demoted entry's last green driver row may be more than
-#: 2 rounds behind the newest CORRECTNESS file — mechanically asserted by
-#: test_demoted_entries_within_staleness_budget, so a forgotten rotation
-#: fails the suite, not the judge.
-#:
-#: Round-15 rotation — BACKBONE ROUND (executing the r14 verdict's #1,
-#: the binding obligation pre-committed in the r14 docstring): the 46
-#: r12-green trail-2 entries (recent_extract through
-#: audio_cdc_gain_near_dups) are LIVE this round — 45 verbatim, the
-#: 46th via its merge successor: the PRE-COMMITTED r15 MERGE landed,
-#: image_cdc_crop_near_dups (r12 cohort, due) + video_cdc_crop_near_dups
-#: (r13 cohort) → media_cdc_crop_near_dups (variant rows
-#: 'image'/'video', both fixtures and oracles VERBATIM in the UNION;
-#: retirement rationale in the successor's docstring,
-#: harness_streaming.py). That fills 46 of the 50 slots; the 4
-#: remaining are budgeted this round as:
-#:   - rule 1: kn_bigram_logprob (NEW gate, pre-committed r14 — the
-#:     interpolated Kneser-Ney perplexity scorer built+tested r14;
-#:     oracle = direct SQL replay of the four count CTEs + the KN
-#:     formula, float-safe because the scorer has no interior argmax);
-#:   - rule 1: near_dup_decontamination (NEW gate, pre-committed r14 —
-#:     cross-frame banded MinHash + exact-Jaccard verify built+tested
-#:     r14; portable hash mode, the minhash_lsh_near_dups replay with
-#:     per-side CTEs and a cross-side band join);
-#:   - rule 2: url_canonical_dedup (the r14 ADVICE :443 fix landed in
-#:     canonicalize_url — http strips only ITS OWN default :80 now, so
-#:     http://h:443 keeps scheme AND port; gate fixture extended
-#:     QUINT→SEXT with the must-not-fold :443 member);
-#:   - rule 1: ccnet_perplexity_buckets (NEW gate, built r15 — the
-#:     published CCNet head/middle/tail stage composing the KN scorer
-#:     per-language; integer-exact floor split on the ROUND-6 score
-#:     with doc_id tiebreak). It takes slot 50, displacing the
-#:     OPTIONAL top_avg_volatility early refresh (that entry stays
-#:     first in the demoted list: r13-green, due r16 with its cohort
-#:     — the r16 crunch is 47 due + 3 spare).
-#: Demoted below: the r13-green entries (trail 2 at r15 — due and
-#: PRE-COMMITTED live at r16, first block) and the r14-verified
-#: entries (trail 1, due r17, second block; url_canonical_dedup is
-#: commented out of it while live under rule 2).
-#: Registry after the merge + 3 new gates: 146/150.
-#: r16 NEW-GATE CANDIDATES (operators + pytests landed r15, gates
-#: deferred — the r15 window is exactly full): operators/dedup.
-#: minhash_estimated_pairs — the signature-only Jaccard-estimator
-#: verify tier (Broder's resemblance estimator; no gram rehydration
-#: past the signature agg) — and operators/dedup.minhash_triage_pairs
-#: — the composed estimate/exact-borderline pipeline on top of it.
-#: Oracle plan: ONE multi-variant gate ('estimate'/'triage' rows)
-#: built on the minhash_lsh_near_dups portable replay with the
-#: per-pair agreement count as an unrolled 32-term CASE sum (integer
-#: n_agree; ROUND-6 estimate at the edge; every cut on the integer
-#: count; the triage variant adds the borderline-only gram CTE) —
-#: one slot funds both operators, keeping r16 at 47 due + 3 spare.
-#: The oracle SQL was SCRATCH-VALIDATED r15 at sf0.01 (32-term CASE
-#: agreement sum over per-pair sig joins; est/triage-accept/borderline
-#: UNION; hash MATCH vs both operators in portable mode) with ONE
-#: caveat: the natural corpus puts ZERO pairs in the borderline band
-#: at threshold 0.5 / margin 0.125 (planted near-dups are near-exact,
-#: n_agree >= 20) — the gate fixture MUST plant shared-prefix
-#: borderline families (true J ~ 0.5, the doc_jaccard pattern) so the
-#: exact-verdict path is exercised, not a 0-row accident (the
-#: near_dup_decontamination fixture lesson).
-#: Second r16 candidate (operator + stream≡batch pytests landed r15):
-#: streaming decontamination-at-ingest (streaming/windows.
-#: contamination_pregate_flags — stateless in-plan Bloom pre-verdict,
-#: exactly-clean majority — + streaming/io.run_decontaminate_to_parquet
-#: — per-micro-batch exact verify + clean/quarantine router). Gate
-#: shape: the streaming_dedup_ingest file-replay pattern with the
-#: doc_contamination_dual SQL as the batch-twin oracle. SCRATCH-
-#: VALIDATED r15 at sf0.01: corpus = docs %25!=7 with planted exact
-#: copies (%25==8, of the id-interleaved bench text) and one-gram
-#: overlaps (%25==9, 'zz yy eval item k qq rr'), bench = %25==7
-#: id-interleaved texts; 3 doc_id-ranged micro-batch files through
-#: run_decontaminate_to_parquet; output = ('quarantine', doc_id,
-#: n_overlap) UNION ('clean', doc_id, NULL); oracle = construction
-#: CASE + distinct-gram intersect counts — hash MATCH (480 rows, 40
-#: quarantined: both planted classes recovered, no stream/batch
-#: divergence).
-#: Third r16 candidate (operator + sequential-reference differential
-#: landed r15): operators/packing.pack_sequences_spfhp — SPFHP
-#: whole-document packing (Krell et al. 2021). Oracle plan: a PLANTED
-#: length construction whose SPFHP solution is closed-form (perfectly
-#: tiling length classes from doc_id arithmetic), so the oracle
-#: derives pack composition/fill from the construction (the r10
-#: independent-formulation rule, the url gate precedent) — never by
-#: re-running the solver in SQL. SCRATCH-VALIDATED r15 at sf0.01:
-#: docs %17 in {3,4,5} planted at 64/32/48 tokens, budget 96 — the
-#: SPFHP solution is provably unique ((64,32) perfect pairs, 48s
-#: self-pack in pairs + odd singleton) and the per-doc
-#: (pack_id, pack_offset, pack_fill) is pure ROW_NUMBER arithmetic
-#: (64 rank r → pack r off 0; 32 rank r → pack r off 64; 48 rank r →
-#: pack n64 + r div 2, off (r%2)*48) — hash MATCH vs the operator. r16 slot math if all three land:
-#: 47 due + 3 new = 50 exactly, zero spare — land at most two unless
-#: no rule-2 debts exist at rotation time.
-#: r16-ROTATION maintenance item (r15 review #1, deliberately NOT
-#: landed mid-r15 — the full-window freeze rule): roll _check_bands
-#: out to the OLDER minhash surfaces (minhash_dedup_pairs,
-#: minhash_index, minhash_probe, minhash_containment_pairs), which
-#: still truncate silently when bands does not divide num_hashes.
-#: The change is output-neutral for every gate (all use 32/8 —
-#: pytest-provable), but it reaches the dependency chains of
-#: minhash_lsh_near_dups (r15-green), doc_incremental_probe and
-#: doc_containment_pairs (r14-green): land it AT the r16 rotation
-#: and record the rule-2 judgment there (either re-enter the two
-#: r14-green gates early, or record the output-neutrality argument
-#: explicitly — judged at rotation time as the window test header
-#: prescribes).
-#: PRE-COMMITTED r16 MERGE (funds a slot + ceiling headroom):
-#: doc_near_dup_triangles + doc_near_dup_triangles_degree →
-#: near_dup_triangles_multi. The pair shares ONE oracle string
-#: (identical unrolled SQL — orientation never changes the triangle
-#: set), one operator (graph.triangles, orient='asc'/'degree') and
-#: one input pipeline (edit_distance_near_dups); green together
-#: since their landing round. Successor: variant rows 'asc'/'degree',
-#: both builders verbatim, the shared oracle duplicated per variant
-#: (the media_cdc precedent). Both are r13-green (due r16), so the
-#: successor takes one of their backbone slots under rule 1 and
-#: carries the other's refresh: r16 becomes 46 due + merge successor
-#: + up to 3 new = 50, registry 146 → 145 before new gates.
-#: r17-PIPELINE candidate (operator + reference-differential pytests
-#: landed r15; r16 is already slot-saturated): operators/similarity.
-#: bitext_margin_mining — the Artetxe & Schwenk ratio-margin bitext
-#: miner; oracle = the _COS_SQL + ROW_NUMBER replay on embeddings
-#: with sides split by label parity (every selection already on
-#: ROUND-6 + id tiebreaks, so the replay is mechanical).
-#: r15-OPTIMIZATION rule-2 debts (recorded at the optimization round,
-#: to be serviced at the r16 rotation): the optimization round changed
-#: operator INTERNALS under two demoted r14-cohort gates —
-#: doc_duplicate_span_removal (interval coverage + xxhash64-pair span
-#: keys) and dsir_importance_weights (bucket-histogram checkpoint) —
-#: both emulator-verified green at sf0.01 this round (incl.
-#: TZ=Asia/Tokyo for the span gate), but a DRIVER row on the new code
-#: is the hard signal: re-enter both EARLY at r16 under rule 2 (they
-#: ride the same slots the r16 crunch already budgets spare for).
-#: doc_duplicate_spans and doc_dedup_clusters also changed and are
-#: r13-green — due live at r16 anyway, no extra slot needed. Every
-#: other corpus gate's chain was touched only through util.fan_out,
-#: whose gate-fixture path (single-file input → the unconditional
-#: branch) is provably byte-identical; the live-window r15 driver rows
-#: cover the changed branch at every multi-file tier the bench runs.
-#: (Round-12/13/15 history — merges funding rule-1/rule-2 slots —
-#: lives in the ledgers and VERDICTs; merged gates' docstrings carry
-#: their retirement rationales.)
+#: 1. entries with no ledger row yet are always in-window;
+#: 2. entries whose depended-on code changed re-enter the window (judged at
+#:    rotation time — not mechanically checkable);
+#: 3. no demoted entry's last green ledger row may be more than 2 rounds
+#:    behind the newest CORRECTNESS file.
 _WINDOW_DEMOTED = [
-    # --- r13-green, trail 2 at r15: the PRE-COMMITTED r16 backbone
-    # (all 46 still listed here MUST be live the moment
-    # CORRECTNESS_r16.json lands; any whose depended-on code changes
-    # mid-r15 re-enters EARLY under rule 2 and still counts).
-    # top_avg_volatility stays FIRST: it briefly held live slot 50
-    # this round until the ccnet gate registered (50 non-demoted
-    # entries now), so it refreshes at r16 with its cohort ---
-    "top_avg_volatility",
-    "pricing_summary",
-    "ticker_metrics",
-    "volume_leaders",
-    "star_revenue",
-    # url_canonical_dedup: LIVE at r15 under rule 2 (the :443 no-fold
-    # fix landed in canonicalize_url per ADVICE r14 #1) — re-joins
-    # the r17 cohort after
-    "doc_jaccard_near_dups",
-    "embedding_topk",
-    "embedding_near_dups",
-    "price_percentiles",
-    "windowed_event_kpis",
-    "embedding_topk_lsh",
-    "approx_event_stats",
-    "curated_corpus",
-    "doc_dedup_clusters",
-    "reorder_within_30d",
-    "doc_pii_redaction",
-    "qty_cube",
-    "event_value_outliers",
-    "view_click_attribution",
-    "doc_length_deciles",
-    "doc_near_dup_triangles",
-    "doc_near_dup_triangles_degree",
-    "price_trend_regression",
-    "customer_tier_scd2",
-    "trailing_7d_avg_price",
-    "doc_token_entropy",
-    "corpus_lang_source_chi2",
-    "multimodal_frame_sample",
-    "doc_weighted_sample",
-    "doc_lang_rebalance",
-    "ticker_stats_unpivot",
-    "doc_duplicate_spans",
-    "events_daily_ffill",
-    "hll_user_rollup",
-    "order_price_percent_rank",
-    "multimodal_video_frames_real",
-    "video_near_dups",
-    "doc_paragraph_dedup",
-    "c4_line_filter",
-    "media_pair_bucket_audit",
-    "embedding_semantic_dedup",
-    "gopher_quality_flags",
-    "streaming_dedup_ingest",
-    "embedding_contrastive_negatives",
-    "token_budget_corpus_select",
-    # video_cdc_crop_near_dups: RETIRED at the r15 rotation — merged
-    # with image_cdc_crop_near_dups into media_cdc_crop_near_dups
-    # (live, rule 1); its fixture + oracle run verbatim as the
-    # 'video' variant row
-    "streaming_pct_change_multi",
-    "multimodal_corpus_prep_multi",
-    # --- r14-verified, trail 1 (due r17; slack slots at r16 can start
-    # refreshing the oldest of these early) ---
-    "weekly_volatility",
+    # r14-green: oldest ledger rows, due back in the window next round
     "market_overview",
     "ticker_report_stats",
     "segment_balance",
     "distinct_counts",
     "customer_big_order_split",
     "dim_snapshots",
-    # url_canonical_dedup: LIVE at r15 under rule 2 (see above)
     "quality_gate_exact",
     "fk_orphan_check",
     "brand_scores",
@@ -296,21 +90,63 @@ _WINDOW_DEMOTED = [
     "doc_containment_pairs",
     "multimodal_image_codec_real",
     "image_phash_multi_near_dups",
-    "audio_multi_near_dups",
     "html_text_extract",
-    "dsir_importance_weights",
     "bpe_pipeline",
     "weekly_user_kmv_rollup",
-    "streaming_windowed_media_dedup",
     "cross_doc_ngram_overlap",
     "doc_nb_lang_classifier",
     "corpus_prep_pipeline",
-    "file_roundtrip_ingest",
     "term_heavy_hitters",
     "weekly_value_quantile_rollup",
-    "doc_duplicate_span_removal",
     "unicode_fold_dedup",
     "unigram_lm_tokenizer",
+    # r16-green: verified in the newest ledger
+    "recent_extract",
+    "url_canonical_dedup",
+    "quality_gate",
+    "doc_exact_dedup",
+    "doc_lang_id",
+    "purchase_attribution",
+    "user_sessions",
+    "minhash_lsh_near_dups",
+    "simhash_near_dups",
+    "embedding_topk_ivf",
+    "top_docs_per_lang",
+    "term_frequencies",
+    "doc_repetition_stats",
+    "embedding_centroids",
+    "split_balance",
+    "doc_tfidf_top_terms",
+    "doc_seq_packing",
+    "doc_winnow_fingerprints",
+    "doc_stratified_sample",
+    "doc_unigram_logprob",
+    "event_funnel",
+    "user_retention_cohorts",
+    "doc_inverted_index",
+    "term_pmi_pairs",
+    "embedding_quantization",
+    "event_transition_matrix",
+    "top_event_trigrams",
+    "regional_supplier_volume",
+    "ohlcv_weekly_bars",
+    "ticker_max_drawdown",
+    "ticker_beta",
+    "doc_source_quota_sample",
+    "ticker_pair_correlation",
+    "part_supplier_pagerank",
+    "embedding_topk_pq",
+    "embedding_topk_ivfpq",
+    "user_funnel_times",
+    "streaming_funnel_ooo",
+    "weekly_activity_panel",
+    "domain_blocklist_filter",
+    "kn_bigram_logprob",
+    "near_dup_decontamination",
+    "ccnet_perplexity_buckets",
+    "image_tile_multi_crop_near_dups",
+    "image_mirror_canonical_near_dups",
+    "media_cdc_crop_near_dups",
 ]
 
 #: The driver verifies exactly this many leading registry entries per round.

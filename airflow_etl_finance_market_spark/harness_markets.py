@@ -23,7 +23,6 @@ from .harness import (  # noqa: F401  (shared gate surface)
     _bounded_stream_shuffle,
     _lineitem_changes,
     _next_stream_seq,
-    fan_out,
     load_fixture,
     load_fixtures,
     register,
@@ -352,6 +351,11 @@ def q_ticker_pair_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+#: Synchronous PageRank rounds the part_supplier_pagerank gate runs (and
+#: its oracle unrolls).
+_PAGERANK_ROUNDS = 3
+
+
 def _pagerank_round_sql(i: int) -> str:
     """One unrolled PageRank round (oracle side), exact integer arithmetic
     mirroring operators/graph.py pagerank_fixed_point."""
@@ -383,9 +387,9 @@ WITH e0 AS (
 , deg AS (SELECT src, COUNT(*) AS deg FROM e GROUP BY src)
 , s0 AS (SELECT node, CAST(1000000 AS BIGINT) AS score FROM nodes)
 """
-    + "".join(_pagerank_round_sql(i) for i in (1, 2, 3))
-    + """
-SELECT node, score FROM s3
+    + "".join(_pagerank_round_sql(i) for i in range(1, _PAGERANK_ROUNDS + 1))
+    + f"""
+SELECT node, score FROM s{_PAGERANK_ROUNDS}
 ORDER BY score DESC, node ASC
 LIMIT 50
 """,
@@ -405,7 +409,7 @@ def q_part_supplier_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).distinct()
     edges = e0.union(e0.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
     pr = pagerank_fixed_point(
-        edges, iterations=3, damping_pct=85, scale=1_000_000
+        edges, iterations=_PAGERANK_ROUNDS, damping_pct=85, scale=1_000_000
     )
     return pr.orderBy(F.col("score").desc(), F.col("node").asc()).limit(50)
 
@@ -1037,95 +1041,6 @@ def q_weekly_activity_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             ).alias("users_ok"),
         )
-    )
-
-
-@register(
-    "multimodal_audio_features",
-    """
-SELECT COUNT(*) AS n_docs,
-       true AS all_decoded,
-       true AS durations_exact,
-       true AS amplitude_sane
-FROM documents
-""",
-)
-def q_multimodal_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL-WAV audio feature extraction HARD GATE
-    (multimodal/audio.extract_audio_features + _stdlib_wav_codec): each
-    document's utf-8 bytes become full-scale PCM16 samples (b·257−32768),
-    encoded to a real RIFF/WAVE payload and pushed through the REAL
-    decode path — so the gate exercises encoder, chunk walk, PCM decode,
-    and the amplitude stats end to end on every fixture row. The oracle
-    PREDICTS n_docs from first principles and pins three booleans:
-    every payload decoded (no quarantines on well-formed WAV), every
-    duration exactly octet_length(text)/8000 s, and 0 ≤ rms ≤ peak ≤ 1.
-    A codec regression (mis-parsed fmt, dropped samples, broken RMS)
-    flips the hash red in CORRECTNESS_r{N}.json. Both stages are
-    map-only Arrow passes — zero data movement at any scale."""
-    from .multimodal.audio import _stdlib_wav_codec, extract_audio_features
-
-    _, _, _enc, _ = _stdlib_wav_codec()
-
-    def _attach(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            payloads = [
-                _enc(
-                    8000,
-                    [[b * 257 - 32768 for b in t.encode("utf-8")]],
-                )
-                for t in pdf["text"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": pd.Series(payloads, dtype="object"),
-                    "expect_samples": pd.Series(
-                        [len(t.encode("utf-8")) for t in pdf["text"]],
-                        dtype="int64",
-                    ),
-                }
-            )
-
-    docs = fan_out(load_fixture(spark, sf_dir, "documents"), "doc_id")
-    media = docs.select("doc_id", "text").mapInPandas(
-        _attach, "doc_id long, payload binary, expect_samples long"
-    )
-    # the derived frame feeds TWO consumers (feature input + the
-    # expect_samples join) — checkpoint so the per-document WAV encode
-    # runs once, not once per reference (the house fix for derived-frame
-    # reuse; see the round-5 pagerank/pair-correlation findings)
-    media = media.localCheckpoint(eager=False)
-    feats = extract_audio_features(media.select("doc_id", "payload"))
-    joined = feats.join(
-        media.select("doc_id", "expect_samples"), "doc_id"
-    )
-    row = joined.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        (
-            F.count(F.lit(1)) == F.count("sample_rate")
-        ).alias("all_decoded"),
-        F.min(
-            (F.col("n_samples") == F.col("expect_samples"))
-            & (
-                F.col("duration_s")
-                == F.round(F.col("expect_samples") / 8000.0, 6)
-            )
-            & (F.col("sample_rate") == 8000)
-            & (F.col("channels") == 1)
-        ).alias("durations_exact"),
-        F.min(
-            (F.col("rms") >= 0)
-            & (F.col("rms") <= F.col("peak"))
-            & (F.col("peak") <= 1.0)
-        ).alias("amplitude_sane"),
-    ).first()
-    return spark.createDataFrame(
-        [tuple(row)],
-        "n_docs long, all_decoded boolean, "
-        "durations_exact boolean, amplitude_sane boolean",
     )
 
 

@@ -1,6 +1,6 @@
 """Multimodal gate tier: real codec roundtrips, perceptual-hash /
-tile / row-CDC image dedup, audio fingerprint tiers, video
-overlap, crawl text extraction, and cross-modal corpus prep.
+tile / row-CDC image dedup, video overlap, and crawl text
+extraction.
 
 One CONTIGUOUS slice of the registry in REGISTRATION ORDER —
 the driver-ledger contract: ``harness.py`` imports the tier
@@ -44,9 +44,9 @@ FROM documents
 """,
 )
 def q_multimodal_image_codec_real(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL image-codec HARD GATE, mirroring multimodal_audio_features
-    (r06 verdict #2): per document, deterministic doc-byte-derived pixels
-    are encoded to real PNG (RGB), baseline JPEG (grayscale, 8x8-block
+    """REAL image-codec HARD GATE (r06 verdict #2): per document,
+    deterministic doc-byte-derived pixels are encoded to real PNG
+    (RGB), baseline JPEG (grayscale, 8x8-block
     content), GIF (grayscale palette), and WebP (VP8L lossless RGB)
     payloads, then pushed through the REAL frame path
     (extract_binary_features(use_fake_codec=False) — the stdlib codec
@@ -556,95 +556,6 @@ def q_image_phash_multi_near_dups(
 
 
 @register(
-    "audio_multi_near_dups",
-    """
-SELECT 'norm' AS variant,
-       COUNT(*) * 3 AS n_clips,
-       COUNT(*) * 3 AS n_pairs,
-       true AS pairs_within_family,
-       true AS families_fully_paired
-FROM documents
-WHERE doc_id % 6 = 2
-UNION ALL
-SELECT 'raw' AS variant,
-       COUNT(*) * 3 AS n_clips,
-       COUNT(*) * 3 AS n_pairs,
-       true AS pairs_within_family,
-       true AS families_fully_paired
-FROM documents
-WHERE doc_id % 9 = 4
-""",
-)
-def q_audio_multi_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """AUDIO near-dup through BOTH ingest pipelines in ONE gate — the
-    r10 verdict's registry-headroom merge of ``audio_near_dups`` (r08)
-    + ``audio_norm_near_dups`` (r09); every assertion of both retired
-    gates survives as one variant row here, and both pipelines still
-    feed the SAME banded spectral-energy sign fingerprint
-    (multimodal/audio.py audio_fingerprints — the Haitsma-Kalker
-    shape) and the SAME hamming_near_pairs block-LSH.
-
-    Variant 'raw' (same-rate RE-ENCODE axis): every 9th document seeds
-    a 3-member family on the 8-BIT LATTICE (mono PCM16 / stereo
-    channel-dup PCM16 / mono PCM8; fixtures.wav_family_members) — all
-    three decode to the same sample stream, so fingerprints collide at
-    Hamming 0 by arithmetic while cross-family sits near
-    Binomial(64, 1/2).
-
-    Variant 'norm' (cross-RATE axis, where raw fingerprints drift past
-    the Hamming-4 radius — measured 5 bits, pinned in pytest): every
-    6th document seeds a family at 8/16/24 kHz by sample replication
-    (fixtures.wav_rate_family_members); nearest k*r -> r downsampling
-    inverts the replication bit-for-bit, so normalize-then-fingerprint
-    (resample_audio to 8 kHz first) is exact.
-
-    The oracle PREDICTS both outcomes: 3n clips fingerprinted per
-    variant, exactly the 3 within-family pairs per family, none
-    cross-family. Both stages are map-only Arrow; the pair stage is
-    the shared pigeonhole equi-join. Resample robustness on real
-    signals (not provable, only measurable) stays pinned empirically
-    in tests/test_audio.py."""
-    from .fixtures import wav_family_members, wav_rate_family_members
-    from .multimodal.audio import audio_fingerprints, resample_audio
-
-    rows = []
-    for variant, mod, rem, members, normalize in (
-        ("raw", 9, 4, wav_family_members(), False),
-        ("norm", 6, 2, wav_rate_family_members(), True),
-    ):
-        docs = fan_out(
-            load_fixture(spark, sf_dir, "documents").filter(
-                F.col("doc_id") % mod == rem
-            ),
-            "doc_id",
-        )
-        n_docs = docs.count()
-        media = docs.select("doc_id", "text").mapInPandas(
-            _family_media_builder(members), "doc_id long, payload binary"
-        )
-        if normalize:
-            media = resample_audio(media, target_rate=8000).select(
-                "doc_id", "payload"
-            )
-        # n_clips counts the POST-normalize POST-fingerprint frame (a
-        # quarantine at either stage shrinks it); eager checkpoint so
-        # the WAV decode (+resample) + FFT runs exactly once before
-        # the count AND the LSH self-join
-        fps = audio_fingerprints(media).localCheckpoint()
-        rows.append(
-            (variant,)
-            + _family_pair_outcome(
-                fps, sig_col="afp", n_docs=n_docs, max_hamming=4
-            )
-        )
-    return spark.createDataFrame(
-        rows,
-        "variant string, n_clips long, n_pairs long, "
-        "pairs_within_family boolean, families_fully_paired boolean",
-    )
-
-
-@register(
     "doc_paragraph_dedup",
     """
 WITH pages AS (
@@ -1001,118 +912,6 @@ def q_media_pair_bucket_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "audio_trim_multi_near_dups",
-    """
-SELECT 'window' AS variant,
-       COUNT(*) * 3 AS n_clips,
-       COUNT(*) * 3 AS n_pairs,
-       true AS pairs_within_family,
-       true AS families_fully_paired
-FROM documents
-WHERE doc_id % 14 = 9
-UNION ALL
-SELECT 'cdc' AS variant,
-       COUNT(*) * 3 AS n_clips,
-       COUNT(*) * 3 AS n_pairs,
-       true AS pairs_within_family,
-       true AS families_fully_paired
-FROM documents
-WHERE doc_id % 13 = 11
-""",
-)
-def q_audio_trim_multi_near_dups(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """TRIM-robust audio near-dup through BOTH segmentation tiers in
-    ONE gate — the r12 registry-headroom merge of
-    ``audio_window_trim_near_dups`` (r09) + ``audio_cdc_trim_near_dups``
-    (r11), the image_phash_multi precedent applied to audio: every
-    assertion of both retired gates survives as one variant row, and
-    both tiers still ride the SAME set-overlap pair machinery.
-    RETIREMENT RATIONALE: the two gates exercised the same
-    fixture-family → fingerprint-stage → block-join → per-family-verdict
-    pipeline differing ONLY in the segmentation kernel and trim
-    lattice; merging pins both kernels under one hash per round instead
-    of two ledger rows, funding the r12 growth (token budget, row-CDC,
-    mirror, gain-CDC gates) per the pair-growth-with-retirements rule.
-
-    Variant 'window' (audio_window_fingerprints ∘
-    audio_window_near_dup_pairs): every 14th document seeds the 3-member
-    WINDOW-ALIGNED trim family (fixtures.wav_trim_family_members — drop
-    the first 2000-sample window; surviving windows byte-identical BY
-    ARITHMETIC, overlap 1.0, threshold 0.8).
-
-    Variant 'cdc' (audio_cdc_fingerprints ∘ the same pair machinery):
-    every 13th document seeds the 3-member ARBITRARY-offset trim family
-    (fixtures.wav_cdc_trim_family_members — 1234 front / 777 back, OFF
-    the window grid; the exact case the window tier pins as honest
-    degradation in tests, re-synced by Gear content anchors; measured
-    worst overlap 0.83 over 120 seeds, threshold 0.5).
-
-    The oracle PREDICTS both outcomes from the construction: 3n clips
-    per variant, exactly 3 within-family pairs per family, none
-    cross-family. Both signature stages map-only Arrow; each pair
-    stage is the ONE shared block-bounded equi-join."""
-    from .fixtures import (
-        wav_cdc_trim_family_members,
-        wav_trim_family_members,
-    )
-    from .multimodal.audio import (
-        audio_cdc_fingerprints,
-        audio_window_fingerprints,
-        audio_window_near_dup_pairs,
-    )
-
-    rows = []
-    for variant, mod, rem, members, fp_stage, frac in (
-        ("window", 14, 9, wav_trim_family_members(),
-         audio_window_fingerprints, 0.8),
-        ("cdc", 13, 11, wav_cdc_trim_family_members(),
-         audio_cdc_fingerprints, 0.5),
-    ):
-        media = fan_out(
-            load_fixture(spark, sf_dir, "documents").filter(
-                F.col("doc_id") % mod == rem
-            ),
-            "doc_id",
-        ).select("doc_id", "text")
-        n_docs = media.count()
-        media = media.mapInPandas(
-            _family_media_builder(members), "doc_id long, payload binary"
-        )
-        # the segment frame feeds the count AND the overlap self-join:
-        # eager checkpoint so decode + per-window/segment FFTs run once
-        sigs = fp_stage(media).localCheckpoint()
-        n_clips = sigs.select("doc_id").distinct().count()
-        fam = audio_window_near_dup_pairs(
-            sigs, max_hamming=4, min_match_frac=frac
-        ).select(
-            (F.col("id_a") / 10).cast("long").alias("fam_a"),
-            (F.col("id_b") / 10).cast("long").alias("fam_b"),
-        )
-        per_fam = fam.groupBy("fam_a").agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.min(F.col("fam_a") == F.col("fam_b")).alias("within"),
-        )
-        row = per_fam.agg(
-            F.sum("cnt").alias("n_pairs"),
-            F.min("within").alias("within"),
-            (
-                F.min((F.col("cnt") == 3) & F.col("within"))
-                & (F.count(F.lit(1)) == F.lit(n_docs))
-            ).alias("fully"),
-        ).first()
-        rows.append(
-            (variant, n_clips, row["n_pairs"], row["within"], row["fully"])
-        )
-    return spark.createDataFrame(
-        rows,
-        "variant string, n_clips long, n_pairs long, "
-        "pairs_within_family boolean, families_fully_paired boolean",
-    )
-
-
-@register(
     "image_tile_multi_crop_near_dups",
     """
 SELECT 'aligned' AS variant,
@@ -1220,264 +1019,6 @@ def q_image_tile_multi_crop_near_dups(
         rows,
         "variant string, n_images long, n_pairs long, "
         "pairs_within_family boolean, families_fully_paired boolean",
-    )
-
-
-def q_multimodal_corpus_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """[RETIRED r13 into multimodal_corpus_prep_multi — now that gate's
-    'image_only' variant builder; the funnel is unchanged.]
-
-    CROSS-MODAL corpus-prep funnel: image-dedup survivorship gates
-    DOCUMENT selection — the vision-LM twin of corpus_prep_pipeline
-    (there the dedup key was a text fingerprint; here it is the image
-    dHash, so documents whose attached images are byte-different
-    re-encodes of the same pixels collapse to one survivor). Every 8th
-    document carries one image; documents in the same 32-id block share
-    PIXELS (seed = the block id) but each of the block's 4 members
-    ((doc_id // 8) % 4) publishes a different byte encoding — gray PNG,
-    gray-palette GIF, REVERSED-palette GIF (indices inverted, palette
-    inverted — same decoded values, different bytes), and RGB PNG with
-    R=G=B — all decoding to the IDENTICAL luma plane, hence
-    dHash-identical by arithmetic. (A 2x upscale variant would NOT be:
-    the 9-wide dHash grid does not divide 64, so upscaled pixel pairs
-    straddle grid columns — unlike the 32-grid DCT hash where integer
-    upscales are exact.) The funnel: map-only hash stage → exact-signature min-id
-    survivor (one hash-agg) → broadcast semi-join back to documents →
-    per-lang data card. The oracle re-derives survivorship PURELY from
-    id arithmetic (min doc_id per 32-block), so a hash drift, a missed
-    re-encode, or an over-dedup all break the per-lang counts. Scale
-    shape: pixels never shuffle (8 B/image out of the Arrow stage);
-    the survivor agg shuffles 8-byte hashes; the semi-join broadcasts
-    ≤ one row per image."""
-    from .fixtures import image_encoding_variants
-    from .multimodal.phash import image_dhash
-
-    _variant = image_encoding_variants()
-
-    def _build(batches):
-        import hashlib
-
-        import pandas as pd
-
-        def noise32(seed: bytes) -> bytes:
-            out = bytearray()
-            i = 0
-            while len(out) < 32 * 32:
-                out += hashlib.md5(seed + bytes([i])).digest()
-                i += 1
-            return bytes(out[: 32 * 32])
-
-        for pdf in batches:
-            ids, payloads = [], []
-            for doc_id in pdf["doc_id"]:
-                block = int(doc_id) // 32
-                pix = noise32(hashlib.md5(str(block).encode()).digest())
-                ids.append(doc_id)
-                payloads.append(_variant(pix, (int(doc_id) // 8) % 4))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "payload": pd.Series(payloads, dtype="object"),
-                }
-            )
-
-    docs = fan_out(
-        load_fixture(spark, sf_dir, "documents").filter(
-            F.col("doc_id") % 8 == 3
-        ),
-        "doc_id",
-    ).select("doc_id", "lang")
-    media = docs.select("doc_id").mapInPandas(
-        _build, "doc_id long, payload binary"
-    )
-    sigs = image_dhash(media)
-    survivors = sigs.groupBy("dhash").agg(
-        F.min("doc_id").alias("doc_id")
-    )
-    return (
-        docs.join(F.broadcast(survivors.select("doc_id")), "doc_id", "semi")
-        .groupBy("lang")
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-    )
-
-
-def q_multimodal_corpus_prep_full(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """[RETIRED r13 into multimodal_corpus_prep_multi — now that gate's
-    'full' variant builder; the funnel is unchanged.]
-
-    The FULL multimodal-LM prep funnel (r09 verdict #7): a document
-    is selected only if it survives dedup in ALL THREE media modalities
-    — image dHash, audio fingerprint, AND video frame-set — each
-    grouping content at a DIFFERENT granularity so every modality has
-    independent teeth. Every 4th document carries one of each medium:
-
-    - IMAGE: 32-id blocks share pixels; the 8 selected members cycle
-      the four byte-different dHash-exact encodings (gray PNG / gray
-      GIF / REVERSED-palette GIF / RGB PNG — fixtures.py
-      image_encoding_variants). Survivor = min doc_id per dhash.
-    - AUDIO: 16-id blocks share an 8-bit-lattice stream; the 4 members
-      cycle mono PCM16 / stereo dup / PCM8 / HALF-GAIN PCM16 (all
-      fingerprint-equal by arithmetic — wav_encoding_variants).
-      Survivor = min doc_id per afp.
-    - VIDEO: 8-id blocks share 5 deterministic MJPEG frames; the 2
-      members carry 5 vs first-4 frames (byte-identical JPEGs —
-      frame-set overlap 4/min(5,4) = 1). Survivors = videos never the
-      LARGER id of a >= 0.8-overlap pair (anti-join on video_b).
-
-    Because a block's min id is also the min of its nested sub-blocks,
-    the intersection equals the 32-block survivors — but the THREE
-    reported survivor counts break independently: a missed re-encode,
-    gain drift, or dropped frame-set pair in ANY modality inflates or
-    deflates its count (over- AND under-dedup both visible). The
-    oracle re-derives everything PURELY from id arithmetic. Scale
-    shape: three map-only signature stages (pixels/samples/frames
-    never shuffle; 8 B per item out), two 8-byte hash-aggs + one
-    block-bounded pair join, three broadcast semi/anti-joins back to
-    documents, survivor counts crossJoined as broadcast 1-row frames."""
-    from .fixtures import (
-        image_encoding_variants,
-        mjpeg_video_variants,
-        wav_encoding_variants,
-    )
-    from .multimodal.audio import audio_fingerprints
-    from .multimodal.phash import (
-        image_dhash,
-        video_frame_dhash,
-        video_near_dup_pairs,
-    )
-
-    _img = image_encoding_variants()
-    _wav = wav_encoding_variants()
-    _vid = mjpeg_video_variants()
-
-    def _mk_builder(kind):
-        img_v, wav_v, vid_v = _img, _wav, _vid
-
-        def _build(batches):
-            import hashlib
-
-            import pandas as pd
-
-            def noise32(seed: bytes) -> bytes:
-                out = bytearray()
-                i = 0
-                while len(out) < 32 * 32:
-                    out += hashlib.md5(seed + bytes([i])).digest()
-                    i += 1
-                return bytes(out[: 32 * 32])
-
-            def lattice(seed: bytes, n: int = 8000) -> bytes:
-                out = bytearray()
-                i = 0
-                while len(out) < n:
-                    out += hashlib.md5(
-                        seed + bytes([i & 0xFF, (i >> 8) & 0xFF])
-                    ).digest()
-                    i += 1
-                return bytes(out[:n])
-
-            for pdf in batches:
-                ids, payloads = [], []
-                for doc_id in pdf["doc_id"]:
-                    d = int(doc_id)
-                    k = d // 4
-                    if kind == "image":
-                        seed = hashlib.md5(
-                            b"img%d" % (d // 32)
-                        ).digest()
-                        payload = img_v(noise32(seed), k % 4)
-                    elif kind == "audio":
-                        seed = hashlib.md5(
-                            b"aud%d" % (d // 16)
-                        ).digest()
-                        payload = wav_v(lattice(seed), k % 4)
-                    else:
-                        seed = hashlib.md5(b"vid%d" % (d // 8)).digest()
-                        payload = vid_v(seed, k % 2)
-                    ids.append(doc_id)
-                    payloads.append(payload)
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pd.Series(ids, dtype="int64"),
-                        "payload": pd.Series(payloads, dtype="object"),
-                    }
-                )
-
-        return _build
-
-    docs = fan_out(
-        load_fixture(spark, sf_dir, "documents").filter(
-            F.col("doc_id") % 4 == 1
-        ),
-        "doc_id",
-    ).select("doc_id", "lang")
-    ids = docs.select("doc_id")
-
-    img_surv = (
-        image_dhash(ids.mapInPandas(
-            _mk_builder("image"), "doc_id long, payload binary"
-        ))
-        .groupBy("dhash")
-        .agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id")
-    )
-    aud_surv = (
-        audio_fingerprints(ids.mapInPandas(
-            _mk_builder("audio"), "doc_id long, payload binary"
-        ))
-        .groupBy("afp")
-        .agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id")
-    )
-    # video: pair stage (frame hashes are per-frame, not one per video,
-    # so survivorship goes through the overlap gate) — checkpoint the
-    # 8-byte sig frame so the container walk + JPEG decodes run once
-    # for the pair join's both sides
-    vid_sigs = video_frame_dhash(
-        ids.mapInPandas(
-            _mk_builder("video"), "doc_id long, payload binary"
-        )
-    ).localCheckpoint()
-    vid_pairs = video_near_dup_pairs(
-        vid_sigs, min_match_frac=0.8
-    )
-    vid_surv = (
-        vid_sigs.select(F.col("video_id").alias("doc_id"))
-        .distinct()
-        .join(
-            F.broadcast(
-                vid_pairs.select(F.col("video_b").alias("doc_id"))
-            ),
-            "doc_id",
-            "anti",
-        )
-    )
-
-    counts = [
-        surv.agg(F.count(F.lit(1)).alias(name))
-        for surv, name in (
-            (img_surv, "n_img_survivors"),
-            (aud_surv, "n_audio_survivors"),
-            (vid_surv, "n_video_survivors"),
-        )
-    ]
-    out = (
-        docs.join(F.broadcast(img_surv), "doc_id", "semi")
-        .join(F.broadcast(aud_surv), "doc_id", "semi")
-        .join(F.broadcast(vid_surv), "doc_id", "semi")
-        .groupBy("lang")
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-    )
-    for c in counts:
-        out = out.crossJoin(F.broadcast(c))
-    return out.select(
-        "lang",
-        "n_docs",
-        "n_img_survivors",
-        "n_audio_survivors",
-        "n_video_survivors",
     )
 
 

@@ -1,8 +1,7 @@
 """Streaming-dedup + late-pipeline gate tier: BPE train/apply,
-domain blocklist, KMV/histogram rollups, streaming media dedup
-(keyed, signature, windowed-signature), corpus-prep pipeline,
+domain blocklist, KMV/histogram rollups, corpus-prep pipeline,
 file roundtrips, and the r12 gates (token budget, image row-CDC,
-mirror-canonical, gain-robust audio CDC).
+mirror-canonical).
 
 One CONTIGUOUS slice of the registry in REGISTRATION ORDER —
 the driver-ledger contract: ``harness.py`` imports the tier
@@ -409,309 +408,6 @@ def q_streaming_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .localCheckpoint()  # materialize before tmp cleanup
             )
         return out
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-@register(
-    "streaming_media_dedup_ingest",
-    """
-SELECT COUNT(*) AS n_unique_clips,
-       true AS one_survivor_per_family
-FROM documents
-WHERE doc_id % 10 = 7
-""",
-)
-def q_streaming_media_dedup_ingest(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Streaming MEDIA dedup-on-ingest HARD GATE — the multimodal twin
-    of streaming_dedup_ingest: the key is not a delivery id but the
-    audio FINGERPRINT, so byte-different re-encodes of the same content
-    collapse at the stream edge. Every 10th document seeds the audio
-    tier's 3-member re-encode family (mono PCM16 / stereo channel-dup /
-    8-bit-lattice PCM8 — identical fingerprints BY ARITHMETIC), each
-    family sharing one ingest timestamp; families land whole in one of
-    3 file micro-batches and replay as a REAL availableNow streaming
-    query: mapInPandas fingerprint stage (event-time column passed
-    THROUGH the stage — a watermark dies with any projection that drops
-    its column) → watermark → dropDuplicatesWithinWatermark on the
-    signature (state bounded by the watermark horizon x unique-content
-    rate — the property that lets ingest dedup run unbounded at 100 TB).
-    The oracle PREDICTS the outcome: exactly ONE survivor per family
-    (n docs → n clips out of 3n in), checked per-family so an
-    over-dedup (signature collision) or under-dedup (missed re-encode)
-    both flip the boolean."""
-    import os
-    import shutil
-    import tempfile
-
-    from .fixtures import wav_family_members
-    from .multimodal.audio import audio_fingerprints
-    from .streaming import dedup_by_signature, run_available_now
-
-    _members = wav_family_members()
-
-    seq = _next_stream_seq()
-
-    def _build(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            ids, tss, payloads = [], [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                # one ingest timestamp per family (micros); re-encodes
-                # of one upload arrive together
-                fam_ts = 1_700_000_000_000_000 + int(doc_id) * 1_000_000
-                for k, payload in enumerate(_members(text)):
-                    ids.append(doc_id * 10 + k)
-                    tss.append(fam_ts)
-                    payloads.append(payload)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "ts": pd.Series(tss, dtype="int64"),
-                    "payload": pd.Series(payloads, dtype="object"),
-                }
-            )
-
-    docs = fan_out(
-        load_fixture(spark, sf_dir, "documents").filter(
-            F.col("doc_id") % 10 == 7
-        ),
-        "doc_id",
-    )
-    n_docs = docs.count()
-    media = docs.select("doc_id", "text").mapInPandas(
-        _build, "doc_id long, ts long, payload binary"
-    )
-    tmp = tempfile.mkdtemp(prefix="finmarket_media_dedup_gate_")
-    try:
-        # 3 ts-ordered file micro-batches; every family lands whole in
-        # one batch (partitioned on CONTIGUOUS family-id ranges), so
-        # duplicate groups never straddle a batch boundary AND event
-        # time is monotone non-decreasing across batches — the r09
-        # advice: the old fam % 3 assignment interleaved timestamps
-        # across batches, so correctness silently depended on the
-        # fixture's id span staying inside the 1-hour watermark; range
-        # batches stay valid at any fixture size.
-        fam = (F.col("doc_id") / 10).cast("long")
-        f_lo, f_hi = media.select(
-            F.min(fam).alias("lo"), F.max(fam).alias("hi")
-        ).first()
-        f_span = (f_hi - f_lo) // 3 + 1
-        for i in range(3):
-            pdir = f"{tmp}/in/b{i}"
-            media.filter(
-                (fam >= f_lo + i * f_span) & (fam < f_lo + (i + 1) * f_span)
-            ).coalesce(1).write.mode("overwrite").parquet(pdir)
-            for f in os.listdir(pdir):
-                if f.endswith(".parquet"):
-                    os.utime(f"{pdir}/{f}", (1_700_000_000 + i,) * 2)
-        stream = (
-            spark.readStream.schema("doc_id long, ts long, payload binary")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{tmp}/in/b*")
-            # event-time watermarks require TIMESTAMP (LTZ); the output
-            # carries no timestamp so no TZ rendering can leak
-            .withColumn("ts", F.expr("timestamp_micros(ts)"))
-        )
-        fps = audio_fingerprints(stream, passthrough=("ts",))
-        with _bounded_stream_shuffle(spark):
-            survivors = run_available_now(
-                dedup_by_signature(fps, sig_col="afp", ts="ts"),
-                f"_gate_media_dedup_{seq}",
-                output_mode="append",
-            )
-            per_fam = (
-                survivors.select(
-                    (F.col("doc_id") / 10).cast("long").alias("fam")
-                )
-                .groupBy("fam")
-                .agg(F.count(F.lit(1)).alias("cnt"))
-            )
-            row = per_fam.agg(
-                F.count(F.lit(1)).alias("n_fams"),
-                F.min(F.col("cnt") == 1).alias("all_single"),
-                F.sum("cnt").alias("n_unique"),
-            ).first()
-        ok = row["n_fams"] == n_docs and row["all_single"] is True
-        return spark.createDataFrame(
-            [(row["n_unique"], ok)],
-            "n_unique_clips long, one_survivor_per_family boolean",
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-
-@register(
-    "streaming_windowed_media_dedup",
-    """
-SELECT COUNT(*) * 3 AS n_clips,
-       COUNT(*) AS n_survivors,
-       COUNT(*) * 2 AS n_duplicates,
-       true AS survivors_are_originals,
-       true AS dups_attributed_within_family
-FROM documents
-WHERE doc_id % 12 = 5
-""",
-)
-def q_streaming_windowed_media_dedup(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Streaming WINDOWED-signature media dedup HARD GATE — closes the
-    r10 composition gap (#6): ``dedup_by_signature`` collapses only
-    whole-content signatures at the ingest edge, so the trim/crop-robust
-    tiers (window/tile/frame subfingerprints matched as SETS) were
-    batch-only. ``windowed_signature_ownership`` moves them to the
-    stream: per-window subfingerprints explode into max_hamming+1
-    pigeonhole blocks, ``applyInPandasWithState`` keeps a per-block
-    registry of hashes seen within the retention horizon (state bounded
-    by horizon x unique-window rate — evicted at last_seen + retain),
-    rows buffer until the watermark passes them (the
-    pct_change_reordered discipline, so ownership is a pure function of
-    EVENT time), and ``windowed_dedup_verdicts`` reduces ownership rows
-    to per-clip duplicate verdicts.
-
-    Fixture: every 12th document seeds the trim tier's 3-member family
-    (full 4-window lattice clip / its WINDOW-ALIGNED trim — surviving
-    windows byte-identical BY ARITHMETIC / a stereo channel-dup of the
-    trim), planted across 3 ts-ordered file micro-batches BY MEMBER:
-    all fulls land at ts B in batch 0, all trims at B+600s in batch 1,
-    all stereo dups at B+1200s in batch 2 — so every duplicate's
-    matching state entry was REGISTERED IN AN EARLIER MICRO-BATCH (the
-    cross-batch carry is the point of the gate), and a later-stamped
-    sentinel clip (batch 3) pushes the final watermark past every real
-    row (append-mode: unfinalized = unemitted). The oracle PREDICTS the
-    outcome: 3n verdict rows (a quarantine or an unflushed buffer
-    shrinks the count), the n survivors are EXACTLY the fulls, and all
-    2n duplicates attribute to their own family's full (trim overlap =
-    3/min(4,3) = 1.0 >= 0.8 on the smaller side; a cross-family
-    single-window collision is absorbed by the fraction threshold)."""
-    import os
-    import shutil
-    import tempfile
-
-    from .fixtures import wav_trim_family_members
-    from .multimodal.audio import audio_window_fingerprints
-    from .streaming import (
-        run_available_now,
-        windowed_dedup_verdicts,
-        windowed_signature_ownership,
-    )
-
-    _members = wav_trim_family_members()
-
-    seq = _next_stream_seq()
-
-    base_us = 1_700_000_000_000_000
-
-    def _build(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            ids, tss, payloads = [], [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                for k, payload in enumerate(_members(text)):
-                    ids.append(doc_id * 10 + k)
-                    # member k of EVERY family shares one ingest time:
-                    # the duplicate always lands in a later micro-batch
-                    # than its original, never alongside it
-                    tss.append(base_us + k * 600_000_000)
-                    payloads.append(payload)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "ts": pd.Series(tss, dtype="int64"),
-                    "payload": pd.Series(payloads, dtype="object"),
-                }
-            )
-
-    docs = fan_out(
-        load_fixture(spark, sf_dir, "documents").filter(
-            F.col("doc_id") % 12 == 5
-        ),
-        "doc_id",
-    )
-    n_docs = docs.count()
-    media = docs.select("doc_id", "text").mapInPandas(
-        _build, "doc_id long, ts long, payload binary"
-    )
-    tmp = tempfile.mkdtemp(prefix="finmarket_wsd_gate_")
-    try:
-        # batch k = member k of every family (ts monotone across
-        # batches by construction); batch 3 = the sentinel clip whose
-        # timestamp drags the final watermark past every real row
-        for i in range(3):
-            pdir = f"{tmp}/in/b{i}"
-            media.filter(F.col("doc_id") % 10 == i).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(pdir)
-            for f in os.listdir(pdir):
-                if f.endswith(".parquet"):
-                    os.utime(f"{pdir}/{f}", (1_700_000_000 + i,) * 2)
-        sentinel = spark.createDataFrame(
-            [(-1, base_us + 10_800_000_000,
-              bytearray(_members("wsd sentinel")[0]))],
-            "doc_id long, ts long, payload binary",
-        )
-        pdir = f"{tmp}/in/b3"
-        sentinel.coalesce(1).write.mode("overwrite").parquet(pdir)
-        for f in os.listdir(pdir):
-            if f.endswith(".parquet"):
-                os.utime(f"{pdir}/{f}", (1_700_000_003,) * 2)
-        stream = (
-            spark.readStream.schema("doc_id long, ts long, payload binary")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{tmp}/in/b*")
-            .withColumn("ts", F.expr("timestamp_micros(ts)"))
-        )
-        fps = audio_window_fingerprints(stream, passthrough=("ts",))
-        own = windowed_signature_ownership(
-            fps, delay="5 minutes", retain="1 hour", max_hamming=4
-        )
-        with _bounded_stream_shuffle(spark):
-            own_tbl = run_available_now(
-                own, f"_gate_wsd_{seq}", output_mode="append"
-            )
-            v = windowed_dedup_verdicts(
-                own_tbl.filter(F.col("doc_id") >= 0), min_match_frac=0.8
-            )
-            fam = (F.col("doc_id") / 10).cast("long") * 10
-            row = v.agg(
-                F.count(F.lit(1)).alias("n_clips"),
-                F.sum(
-                    F.when(~F.col("is_duplicate"), 1).otherwise(0)
-                ).alias("n_survivors"),
-                F.sum(
-                    F.when(F.col("is_duplicate"), 1).otherwise(0)
-                ).alias("n_duplicates"),
-                F.min(
-                    F.when(
-                        ~F.col("is_duplicate"),
-                        F.col("doc_id") % 10 == 0,
-                    )
-                ).alias("survivors_ok"),
-                F.min(
-                    F.when(
-                        F.col("is_duplicate"), F.col("dup_of") == fam
-                    )
-                ).alias("dups_ok"),
-            ).first()
-        return spark.createDataFrame(
-            [(
-                row["n_clips"],
-                row["n_survivors"],
-                row["n_duplicates"],
-                bool(row["survivors_ok"])
-                and row["n_survivors"] == n_docs,
-                bool(row["dups_ok"]),
-            )],
-            "n_clips long, n_survivors long, n_duplicates long, "
-            "survivors_are_originals boolean, "
-            "dups_attributed_within_family boolean",
-        )
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -1333,90 +1029,6 @@ def q_image_mirror_canonical_near_dups(
 
 
 @register(
-    "audio_cdc_gain_near_dups",
-    """
-SELECT COUNT(*) * 3 AS n_clips,
-       COUNT(*) * 3 AS n_pairs,
-       true AS pairs_within_family,
-       true AS families_fully_paired
-FROM documents
-WHERE doc_id % 17 = 12
-""",
-)
-def q_audio_cdc_gain_near_dups(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """GAIN-ROBUST arbitrary-offset audio near-dup via SIGN-ANCHORED
-    content-defined segmentation (multimodal/audio.py
-    audio_cdc_fingerprints(anchor="sign") ∘ the shared set-overlap
-    pair machinery) — closes the last cell of the audio robustness
-    matrix (r11 verdict #6): the amplitude-anchored CDC tier is exact
-    for trims but loses every anchor to a gain change (its own
-    docstring's honesty note), while the whole-clip kernel is
-    gain-invariant but not trim-robust. Sign anchoring gets both: a
-    positive gain preserves every downmixed sample's SIGN, so the
-    Gear stream — and hence every boundary — is identical on the
-    scaled copy, and the per-segment band-energy-sign fingerprint is
-    gain-invariant BY ARITHMETIC (energies scale by c^2, the double-
-    difference sign survives), so shared segments match at Hamming 0
-    with no tolerance. Every 17th document seeds a 3-member family
-    (fixtures.wav_cdc_gain_family_members): (a) a 2 s / 8 kHz lattice
-    clip, (b) its GAIN-DOUBLED arbitrary-offset trim (1234 front /
-    777 back — off the fixed-window grid), (c) a stereo channel-dup
-    of the gain-trim. Measured overlap across 40 lattice seeds: worst
-    0.90 trim↔full, 1.0 trim↔stereo, 0.0 cross-family — far from the
-    0.5 threshold on both sides; the closing pytest pins the
-    amplitude-anchored tier finding NOTHING on the same members. The
-    oracle PREDICTS the outcome: 3n clips with >= 1 segment, exactly
-    3 within-family pairs per family, none cross-family."""
-    from .fixtures import wav_cdc_gain_family_members
-    from .multimodal.audio import (
-        audio_cdc_fingerprints,
-        audio_window_near_dup_pairs,
-    )
-
-    media = fan_out(
-        load_fixture(spark, sf_dir, "documents").filter(
-            F.col("doc_id") % 17 == 12
-        ),
-        "doc_id",
-    ).select("doc_id", "text")
-    n_docs = media.count()
-    media = media.mapInPandas(
-        _family_media_builder(wav_cdc_gain_family_members()),
-        "doc_id long, payload binary",
-    )
-    # the segment frame feeds the count AND the overlap self-join:
-    # eager checkpoint so decode + per-segment FFTs run exactly once
-    sigs = audio_cdc_fingerprints(media, anchor="sign").localCheckpoint()
-    n_clips = sigs.select("doc_id").distinct().count()
-    fam = audio_window_near_dup_pairs(
-        sigs, max_hamming=4, min_match_frac=0.5
-    ).select(
-        (F.col("id_a") / 10).cast("long").alias("fam_a"),
-        (F.col("id_b") / 10).cast("long").alias("fam_b"),
-    )
-    per_fam = fam.groupBy("fam_a").agg(
-        F.count(F.lit(1)).alias("cnt"),
-        F.min(F.col("fam_a") == F.col("fam_b")).alias("within"),
-    )
-    row = per_fam.agg(
-        F.sum("cnt").alias("n_pairs"),
-        F.min("within").alias("pairs_within_family"),
-        (
-            F.min((F.col("cnt") == 3) & F.col("within"))
-            & (F.count(F.lit(1)) == F.lit(n_docs))
-        ).alias("families_fully_paired"),
-    ).first()
-    return spark.createDataFrame(
-        [(n_clips, row["n_pairs"], row["pairs_within_family"],
-          row["families_fully_paired"])],
-        "n_clips long, n_pairs long, pairs_within_family boolean, "
-        "families_fully_paired boolean",
-    )
-
-
-@register(
     "doc_duplicate_span_removal",
     """
 WITH pages AS (
@@ -1612,8 +1224,8 @@ def q_media_cdc_crop_near_dups(
     multi-variant gate — round-15 merge of `image_cdc_crop_near_dups`
     (r12 cohort) + `video_cdc_crop_near_dups` (r13 cohort), the
     pre-committed r15 rotation merge (the registry headroom rule:
-    growth paired with retirements; the streaming_pct_change_multi /
-    multimodal_corpus_prep_multi precedents). RETIREMENT RATIONALE:
+    growth paired with retirements; the streaming_pct_change_multi
+    precedent). RETIREMENT RATIONALE:
     the two gates exercised the SAME per-row Gear-hash CDC kernel
     (multimodal/phash.py `_row_cdc_kernel`, reached via
     image_row_cdc_hashes and video_frame_row_cdc) composed with the
@@ -1713,86 +1325,6 @@ def q_streaming_pct_change_multi(
         F.lit(None).cast("boolean").alias("aud_b"),
     )
     return vol.unionByName(reo)
-
-
-@register(
-    "multimodal_corpus_prep_multi",
-    """
-WITH sel8 AS (
-    SELECT doc_id, lang FROM documents WHERE doc_id % 8 = 3
-), keep8 AS (
-    SELECT MIN(doc_id) AS doc_id FROM sel8 GROUP BY doc_id // 32
-), sel4 AS (
-    SELECT doc_id, lang FROM documents WHERE doc_id % 4 = 1
-), img AS (
-    SELECT MIN(doc_id) AS doc_id FROM sel4 GROUP BY doc_id // 32
-), aud AS (
-    SELECT MIN(doc_id) AS doc_id FROM sel4 GROUP BY doc_id // 16
-), vid AS (
-    SELECT MIN(doc_id) AS doc_id FROM sel4 GROUP BY doc_id // 8
-)
-SELECT 'image_only' AS variant, s.lang, COUNT(*) AS n_docs,
-       CAST(NULL AS BIGINT) AS n_img_survivors,
-       CAST(NULL AS BIGINT) AS n_audio_survivors,
-       CAST(NULL AS BIGINT) AS n_video_survivors
-FROM sel8 s JOIN keep8 k USING (doc_id)
-GROUP BY s.lang
-UNION ALL
-SELECT 'full' AS variant, s.lang, COUNT(*) AS n_docs,
-       (SELECT COUNT(*) FROM img) AS n_img_survivors,
-       (SELECT COUNT(*) FROM aud) AS n_audio_survivors,
-       (SELECT COUNT(*) FROM vid) AS n_video_survivors
-FROM sel4 s
-JOIN img USING (doc_id)
-JOIN aud USING (doc_id)
-JOIN vid USING (doc_id)
-GROUP BY s.lang
-""",
-)
-def q_multimodal_corpus_prep_multi(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """BOTH cross-modal corpus-prep funnels in ONE multi-variant gate —
-    round-13 merge of `multimodal_corpus_prep` +
-    `multimodal_corpus_prep_full` (the registry headroom rule: growth
-    paired with retirements). RETIREMENT RATIONALE: the 3-modality gate
-    SUBSUMES the 1-modality construction — same image encodings
-    (fixtures.image_encoding_variants), same min-id-per-block
-    survivorship, same broadcast-semi-join funnel shape — and the two
-    were always green together since r10; keeping the 1-modality rows
-    as this gate's 'image_only' variant preserves its independent
-    fixture (doc_id % 8 = 3, 32-id pixel blocks with FOUR byte
-    encodings per block — the 'full' variant's image tier reuses the
-    same encoder but a different selection), so a drift in either
-    funnel still flips the hash. Variant rows ride a common (variant,
-    lang, n_docs, n_img_survivors, n_audio_survivors,
-    n_video_survivors) projection — the survivor counts are NULL for
-    the image_only variant. Both retained builders run verbatim
-    (harness_media.q_multimodal_corpus_prep / _full); both oracles
-    re-derive survivorship purely from id arithmetic, unchanged."""
-    from .harness_media import (
-        q_multimodal_corpus_prep,
-        q_multimodal_corpus_prep_full,
-    )
-
-    nulls = F.lit(None).cast("long")
-    img_only = q_multimodal_corpus_prep(spark, sf_dir).select(
-        F.lit("image_only").alias("variant"),
-        "lang",
-        "n_docs",
-        nulls.alias("n_img_survivors"),
-        nulls.alias("n_audio_survivors"),
-        nulls.alias("n_video_survivors"),
-    )
-    full = q_multimodal_corpus_prep_full(spark, sf_dir).select(
-        F.lit("full").alias("variant"),
-        "lang",
-        "n_docs",
-        "n_img_survivors",
-        "n_audio_survivors",
-        "n_video_survivors",
-    )
-    return img_only.unionByName(full)
 
 
 @register(

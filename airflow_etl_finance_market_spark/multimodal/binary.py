@@ -1,6 +1,6 @@
 """Multimodal binary-column plumbing (SURVEY.md §7.5, BASELINE.json north star).
 
-Images/audio/video are opaque ``binary`` columns with typed metadata. The
+Images/video are opaque ``binary`` columns with typed metadata. The
 Spark-side plumbing here is real and tested — schema, Arrow-batched
 ``mapInPandas`` decode stage, partition-safe batch shape. The codec tiers:
 
@@ -18,12 +18,10 @@ Spark-side plumbing here is real and tested — schema, Arrow-batched
   prefix codes, color cache, meta groups, LZ77, all four transforms),
   so the formats a media crawl actually contains decode/resize actual
   pixels even in this bare container.
-- **WAV audio is REAL too** (:mod:`.audio` — RIFF chunk walk, PCM 8/16
-  decode, feature extraction, mono resample; same factory/quarantine
-  pattern), and so is **MJPEG-in-AVI video** (:mod:`.video` — movi walk,
+- **MJPEG-in-AVI video is REAL too** (:mod:`.video` — movi walk,
   byte-exact frame extraction feeding the JPEG codec; truncated files
   yield their intact frame prefix).
-- **Other formats** (lossy-VP8 WebP/AVIF/compressed audio, H.264+
+- **Other formats** (lossy-VP8 WebP/AVIF, H.264+
   video) need Pillow/libav — detected at call time. The single-payload probe
   :func:`decode_image` raises NotImplementedError without them (the
   honest seam, loud for a caller holding one payload); the FRAME-level

@@ -315,8 +315,8 @@ def image_dhash(
     :mod:`.binary` frame-path posture. No shuffle; partitioning carries
     over from the source, so a 100 TB media table hashes with zero data
     movement and 8 output bytes per image. ``passthrough`` columns are
-    copied verbatim (the streaming dedup caller's event-time column must
-    survive this stage — see ``audio.audio_fingerprints``).
+    copied verbatim (a streaming dedup caller's event-time column must
+    survive this stage).
     """
     kernel = _dhash_kernel()
     if mirror_canonical:
@@ -475,8 +475,8 @@ def _block_candidates(
 ) -> DataFrame:
     """Candidate pairs for every block-LSH consumer: ``items`` is an
     ``(id, sig)`` frame; returns ``(id_a, id_b, sig_a, sig_b)`` with
-    ``id_a < id_b`` — the ONE join shape the image / video / tile /
-    audio pair stages all ride (so its cost model is audited once).
+    ``id_a < id_b`` — the ONE join shape the image / video / tile
+    pair stages all ride (so its cost model is audited once).
     Rows are NOT deduplicated: a pair colliding in several blocks (or
     several ball probes) appears once per collision, and each caller
     applies its own distinct exactly as cheap as its output shape
@@ -1070,8 +1070,8 @@ def _row_cdc_kernel(
     factory-nested per the pickle house rule.
 
     The tile tiers recover crops congruent to 0 or tile/2 (mod 32);
-    an arbitrary crop shifts every fixed tile. The audio tier's fix
-    (``audio._cdc_segment_kernel``) transfers, but NOT as the r11
+    an arbitrary crop shifts every fixed tile. Gear-anchored CDC
+    (the rsync/LBFS chunking shape) transfers, but NOT as the r11
     sketch proposed (anchors from 1-D Gear over row/column SUMS):
     a column's sum runs over ALL rows, so cropping rows changes every
     column sum and no anchor survives a two-axis crop — the sum-
@@ -1100,8 +1100,8 @@ def _row_cdc_kernel(
     (the decision is a function of content), cutting signature volume
     2^bits with no pair-machinery change. Returns
     ``rows(w, h, ch, pix) -> [(seg_idx, sig64), ...]``; ``ch == 3``
-    reduces to exact-floor mean luma first (channel-layout invariant
-    by the audio downmix argument)."""
+    reduces to exact-floor mean luma first (channel-layout invariant:
+    R=G=B planes reduce to the same luma)."""
     import hashlib
 
     import numpy as np

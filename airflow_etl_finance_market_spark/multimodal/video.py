@@ -3,13 +3,12 @@
 With the baseline-JPEG codec in place (:mod:`.jpeg`), one real video
 format becomes reachable without libav: Motion-JPEG in an AVI (RIFF)
 container, where every frame is an independent baseline JPEG and the
-container adds only a chunk walk — the same RIFF machinery as the WAV
-codec (:mod:`.audio`). That makes frame SAMPLING (the operation a
+container adds only a RIFF chunk walk. That makes frame SAMPLING (the operation a
 vision-LM data pipeline actually runs: take every Nth frame for
 captioning/filtering) fully real: container walk, frame extraction,
 and per-frame dimension decode all run on actual bytes.
 
-Honesty boundary, same shape as the image/audio tiers: modern codecs
+Honesty boundary, same shape as the image tier: modern codecs
 (H.264/VP9/AV1 in MP4/MKV) need libav and raise NotImplementedError
 from the single-payload probe; the FRAME-level Spark path QUARANTINES
 those payloads (no rows emitted) because one bad byte string in a

@@ -24,8 +24,6 @@ from .io import (
 from .stateful import (
     pct_change_reordered,
     pct_change_stateful,
-    windowed_dedup_verdicts,
-    windowed_signature_ownership,
 )
 from .windows import (
     contamination_pregate_flags,
@@ -47,8 +45,6 @@ __all__ = [
     "pct_change_reordered",
     "pct_change_stateful",
     "session_stats",
-    "windowed_dedup_verdicts",
     "windowed_event_kpis",
-    "windowed_signature_ownership",
     "windowed_volatility",
 ]

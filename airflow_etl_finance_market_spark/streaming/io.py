@@ -171,56 +171,6 @@ def run_available_now_upsert(
     q.awaitTermination()
 
 
-def run_windowed_dedup_to_parquet(
-    ownership: DataFrame,
-    out_path: str,
-    checkpoint: str,
-    *,
-    id_col: str = "doc_id",
-    sig_col: str = "afp",
-    min_match_frac: float = 0.8,
-    survivors_only: bool = True,
-) -> None:
-    """foreachBatch sink for the windowed-signature dedup chain: drain
-    the :func:`..streaming.stateful.windowed_signature_ownership`
-    stream, reduce each micro-batch to per-clip verdicts
-    (:func:`..streaming.stateful.windowed_dedup_verdicts`), and append
-    survivors (or all verdicts, with ``survivors_only=False``) to a
-    parquet table.
-
-    Per-batch reduction is CORRECT, not approximate: all of a clip's
-    ownership rows flush in one trigger (its windows share one event
-    time, so one watermark advance finalizes them everywhere — bucket
-    alarms fire together), so no clip's verdict ever needs rows from
-    two micro-batches. The checkpoint carries offsets + the per-block
-    registry, making re-runs incremental and restart-safe — the
-    streaming twin of the batch tier's store-then-pair cadence, with
-    only survivors ever reaching storage."""
-    from .stateful import windowed_dedup_verdicts
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        v = windowed_dedup_verdicts(
-            batch_df,
-            id_col=id_col,
-            sig_col=sig_col,
-            min_match_frac=min_match_frac,
-        )
-        if survivors_only:
-            v = v.filter(~F.col("is_duplicate")).drop(
-                "is_duplicate", "dup_of"
-            )
-        v.write.mode("append").parquet(out_path)
-
-    q = (
-        ownership.writeStream.outputMode("append")
-        .foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
 def run_decontaminate_to_parquet(
     docs: DataFrame,
     benchmark: DataFrame,

@@ -457,387 +457,3 @@ def funnel_stateful(
             F.timestamp_micros(F.col("_ts_us")).alias("reached_at"),
         )
     )
-
-
-_M64 = (1 << 64) - 1
-
-
-def _sig_block_exprs(sig_col: str, n_blocks: int) -> list:
-    """JVM-side split of a 64-bit signature into ``n_blocks`` contiguous
-    bit spans (widths differ by at most 1) — the pigeonhole convention
-    of the batch tier's ``_block_candidates``: two signatures within
-    Hamming ``n_blocks - 1`` agree EXACTLY on at least one block, so
-    block equality is a lossless candidate filter for that radius."""
-    base, rem = divmod(64, n_blocks)
-    widths = [base + (1 if i < rem else 0) for i in range(n_blocks)]
-    exprs, lo = [], 0
-    for w in widths:
-        if w >= 64:
-            exprs.append(F.col(sig_col))
-        else:
-            exprs.append(
-                F.shiftrightunsigned(F.col(sig_col), lo)
-                .bitwiseAND(F.lit((1 << w) - 1))
-                .cast("long")
-            )
-        lo += w
-    return exprs
-
-
-def windowed_signature_ownership(
-    sigs: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    sig_col: str = "afp",
-    ts: str = "ts",
-    delay: str = "5 minutes",
-    retain: str = "1 hour",
-    max_hamming: int = 4,
-) -> DataFrame:
-    """Streaming SET-overlap media dedup, stage 1 of 2: per-window
-    subfingerprint OWNERSHIP against per-block keyed state — the
-    trim/crop-robust tiers' machinery (audio window / image tile /
-    video frame subfingerprints matched as sets) moved to the INGEST
-    edge, where ``dedup_by_signature`` only covers whole-content
-    signatures (r10 verdict, composition gap #6).
-
-    Input: one row per (clip, window subfingerprint) —
-    ``audio_window_fingerprints(..., passthrough=(ts,))`` or the
-    tile/frame stages' output. Each row is exploded JVM-side into
-    ``max_hamming + 1`` pigeonhole blocks and grouped by
-    ``(block_idx, block_value)``; ``applyInPandasWithState`` keeps, per
-    bucket, the registry of full hashes seen within the retention
-    horizon (owner id, full 64-bit hash, registration time, last seen).
-    A row MATCHES when some bucket holds an earlier entry from a
-    DIFFERENT clip within ``max_hamming`` of its full hash (pigeonhole:
-    a true near-pair shares at least one exact block, so the union over
-    a row's buckets misses nothing at that radius); the match
-    attributes to the entry with the smallest (registration time,
-    owner id). Unmatched hashes register; exact re-arrivals refresh
-    ``last seen`` instead of duplicating the entry.
-
-    Ordering contract (the :func:`pct_change_reordered` reorder-buffer
-    discipline): rows buffer in bucket state until the event-time
-    watermark passes them and are processed in (event time, clip id,
-    hash) order — so within the ``delay`` horizon ANY arrival order
-    yields exactly the batch result, and ownership is deterministic.
-    Append-mode semantics: rows the final watermark never passes stay
-    buffered (drive a finite fixture with a later-stamped sentinel
-    clip to flush).
-
-    State bound — the 100 TB posture: every entry is ~32 bytes keyed by
-    an 8-byte bucket; entries are EVICTED once the watermark passes
-    ``last seen + retain`` (they can never match a future in-watermark
-    row), so state is (unique-window arrival rate x retain x
-    ``max_hamming + 1``), the same envelope as a windowed aggregate —
-    NOT all content ever ingested. Re-uploads older than ``retain`` are
-    the stored-table batch tier's job (``audio_window_near_dup_pairs``);
-    the ingest edge's contract is the redelivery/re-encode window.
-
-    Output (append): ``(id, ts, sig, owner_id, owner_ts)`` — one row
-    per (clip, window) from block 0 plus one per matching bucket;
-    ``owner_id`` NULL when unmatched. Feed
-    :func:`windowed_dedup_verdicts` (safe per-micro-batch in a
-    ``foreachBatch`` sink: a clip's windows are fingerprinted from one
-    ingest row and flushed by one watermark advance, so its ownership
-    rows never straddle batches). Batch frames compute the identical
-    first-writer semantics as one block equi-join + ``bit_count``
-    verify — the differential-test twin (valid when the frame's time
-    span fits inside ``retain``; beyond that the batch tier owns the
-    problem)."""
-    n_blocks = max_hamming + 1
-    retain_us = _duration_us(retain)
-    max_h = max_hamming
-
-    if not sigs.isStreaming:
-        rows = (
-            sigs.select(
-                F.col(id_col),
-                F.col(ts),
-                F.unix_micros(F.col(ts)).alias("_ts_us"),
-                F.col(sig_col),
-            )
-            .dropDuplicates([id_col, "_ts_us", sig_col])
-        )
-        reg = rows.groupBy(sig_col).agg(
-            F.min(
-                F.struct(
-                    F.col("_ts_us").alias("rts"), F.col(id_col).alias("rid")
-                )
-            ).alias("_reg")
-        )
-        r_ex = rows.select(
-            F.col(id_col).alias("_d"),
-            F.col("_ts_us").alias("_t"),
-            F.col(sig_col).alias("_h"),
-            F.posexplode(F.array(*_sig_block_exprs(sig_col, n_blocks))).alias(
-                "_blk", "_blk_val"
-            ),
-        )
-        e_ex = reg.select(
-            F.col(sig_col).alias("_eh"),
-            F.col("_reg.rts").alias("_ets"),
-            F.col("_reg.rid").alias("_eid"),
-            F.posexplode(F.array(*_sig_block_exprs(sig_col, n_blocks))).alias(
-                "_blk", "_blk_val"
-            ),
-        )
-        owners = (
-            r_ex.join(e_ex, ["_blk", "_blk_val"])
-            .filter(
-                (F.bit_count(F.col("_h").bitwiseXOR(F.col("_eh"))) <= max_h)
-                & (F.col("_eid") != F.col("_d"))
-                & (
-                    (F.col("_ets") < F.col("_t"))
-                    | (
-                        (F.col("_ets") == F.col("_t"))
-                        & (F.col("_eid") < F.col("_d"))
-                    )
-                )
-            )
-            .groupBy("_d", "_t", "_h")
-            .agg(
-                F.min(
-                    F.struct(
-                        F.col("_ets").alias("ots"), F.col("_eid").alias("oid")
-                    )
-                ).alias("_o")
-            )
-        )
-        return (
-            rows.join(
-                owners,
-                (rows[id_col] == owners["_d"])
-                & (rows["_ts_us"] == owners["_t"])
-                & (rows[sig_col] == owners["_h"]),
-                "left",
-            )
-            .select(
-                F.col(id_col),
-                F.col(ts),
-                F.col(sig_col),
-                F.col("_o.oid").alias("owner_id"),
-                F.timestamp_micros(F.col("_o.ots")).alias("owner_ts"),
-            )
-        )
-
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    # epoch-micros discipline throughout (see pct_change_reordered's TZ
-    # note): the worker never touches the timestamp column; output
-    # converts back via timestamp_micros JVM-side.
-    out_schema = (
-        f"{id_col} long, _ts_us long, {sig_col} long, "
-        "owner_id long, owner_ts long"
-    )
-    state_schema = (
-        "own_id array<long>, own_hash array<long>, own_ts array<long>, "
-        "own_seen array<long>, "
-        "buf_ts array<long>, buf_id array<long>, buf_hash array<long>"
-    )
-    d_col, h_col = id_col, sig_col
-
-    def fn(key_tuple, pdf_iter, state):
-        import pandas as pd
-
-        blk_idx = key_tuple[0]
-        own_id, own_hash, own_ts, own_seen, buf_ts, buf_id, buf_hash = (
-            state.get if state.exists else ([], [], [], [], [], [], [])
-        )
-        e_id = list(own_id or [])
-        e_hash = list(own_hash or [])
-        e_ts = list(own_ts or [])
-        e_seen = list(own_seen or [])
-        buf = set(zip(buf_ts or [], buf_id or [], buf_hash or []))
-        for pdf in pdf_iter:
-            if pdf.empty:
-                continue
-            buf.update(
-                zip(
-                    pdf["_ts_us"].tolist(),
-                    pdf[d_col].tolist(),
-                    pdf[h_col].tolist(),
-                )
-            )
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        emit = sorted(e for e in buf if e[0] <= wm_us)
-        hold = sorted(e for e in buf if e[0] > wm_us)
-        out = []
-        for t, d, h in emit:
-            best = None
-            exact_i = None
-            for j in range(len(e_id)):
-                if e_seen[j] + retain_us < t:
-                    continue  # expired w.r.t. this row's event time
-                ham = ((e_hash[j] ^ h) & _M64).bit_count()
-                if ham == 0:
-                    exact_i = j
-                if ham <= max_h and e_id[j] != d:
-                    cand = (e_ts[j], e_id[j])
-                    if best is None or cand < best:
-                        best = cand
-            if exact_i is not None:
-                e_seen[exact_i] = max(e_seen[exact_i], t)
-            else:
-                e_id.append(d)
-                e_hash.append(h)
-                e_ts.append(t)
-                e_seen.append(t)
-            if best is not None:
-                out.append((d, t, h, best[1], best[0]))
-            elif blk_idx == 0:
-                # presence row: emitted exactly once (block 0 sees
-                # every row), so the verdict stage can count a clip's
-                # total windows without n_blocks-fold amplification
-                out.append((d, t, h, None, None))
-        if out:
-            yield pd.DataFrame(
-                {
-                    d_col: pd.Series([r[0] for r in out], dtype="int64"),
-                    "_ts_us": pd.Series([r[1] for r in out], dtype="int64"),
-                    h_col: pd.Series([r[2] for r in out], dtype="int64"),
-                    "owner_id": pd.array(
-                        [r[3] for r in out], dtype="Int64"
-                    ),
-                    "owner_ts": pd.array(
-                        [r[4] for r in out], dtype="Int64"
-                    ),
-                }
-            )
-        # evict entries the watermark has aged out: last_seen + retain
-        # < wm means no future in-watermark row can be within its
-        # validity window — the bound that keeps state O(horizon)
-        keep = [j for j in range(len(e_id)) if e_seen[j] + retain_us >= wm_us]
-        e_id = [e_id[j] for j in keep]
-        e_hash = [e_hash[j] for j in keep]
-        e_ts = [e_ts[j] for j in keep]
-        e_seen = [e_seen[j] for j in keep]
-        if not e_id and not hold:
-            state.remove()
-            return
-        state.update(
-            (
-                e_id,
-                e_hash,
-                e_ts,
-                e_seen,
-                [r[0] for r in hold],
-                [r[1] for r in hold],
-                [r[2] for r in hold],
-            )
-        )
-        if hold:
-            # wake when the watermark passes the oldest held row
-            state.setTimeoutTimestamp(hold[0][0] // 1000 + 1)
-        else:
-            # no held rows: alarm at the earliest entry expiry so the
-            # bucket is swept even if no row ever lands here again
-            # (timeout must sit strictly past the current watermark)
-            state.setTimeoutTimestamp(
-                max(
-                    (min(e_seen) + retain_us) // 1000 + 1,
-                    wm_us // 1000 + 1,
-                )
-            )
-
-    return (
-        sigs.select(id_col, ts, sig_col)
-        .withColumn("_ts_us", F.unix_micros(F.col(ts)))
-        # the watermarked ts column must survive to the stateful
-        # operator (projecting it away drops the watermark and
-        # EventTimeTimeout refuses to plan)
-        .withWatermark(ts, delay)
-        .select(
-            id_col,
-            ts,
-            "_ts_us",
-            sig_col,
-            F.posexplode(F.array(*_sig_block_exprs(sig_col, n_blocks))).alias(
-                "_blk", "_blk_val"
-            ),
-        )
-        .groupBy("_blk", "_blk_val")
-        .applyInPandasWithState(
-            fn,
-            out_schema,
-            state_schema,
-            "append",
-            GroupStateTimeout.EventTimeTimeout,
-        )
-        .select(
-            id_col,
-            F.timestamp_micros(F.col("_ts_us")).alias(ts),
-            sig_col,
-            "owner_id",
-            F.timestamp_micros(F.col("owner_ts")).alias("owner_ts"),
-        )
-    )
-
-
-def windowed_dedup_verdicts(
-    ownership: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    sig_col: str = "afp",
-    ts: str = "ts",
-    min_match_frac: float = 0.8,
-) -> DataFrame:
-    """Stage 2 of the streaming set-overlap dedup: reduce
-    :func:`windowed_signature_ownership` rows to per-CLIP verdicts —
-    the set-overlap decision the batch pair tier makes, evaluated
-    against the ingest-window registry instead of a self-join.
-
-    A clip is a DUPLICATE when ``>= min_match_frac`` of its distinct
-    window subfingerprints were owned by earlier clips; ``dup_of`` is
-    the modal owner among its matched windows (ties broken to the
-    smallest owner id — deterministic), NULL for survivors. Three
-    CHAINED narrow hash-aggs on (clip, hash) rows — no join, so the
-    plan stays one shuffle chain: safe per-micro-batch inside
-    ``foreachBatch`` because a clip's ownership rows never straddle
-    micro-batches (they flush on one watermark advance), and equally
-    valid over the whole drained sink — the shape the gate uses."""
-    per_sig = ownership.groupBy(id_col, sig_col).agg(
-        F.min(
-            F.when(
-                F.col("owner_id").isNotNull(),
-                F.struct(
-                    F.col("owner_ts").alias("ots"),
-                    F.col("owner_id").alias("oid"),
-                ),
-            )
-        ).alias("_own"),
-        F.min(ts).alias("_ts"),
-    )
-    per_owner = per_sig.groupBy(
-        id_col, F.col("_own.oid").alias("_oid")
-    ).agg(F.count(F.lit(1)).alias("_cnt"), F.min("_ts").alias("_mts"))
-    per_doc = per_owner.groupBy(id_col).agg(
-        F.min("_mts").alias(ts),
-        F.sum("_cnt").alias("n_windows"),
-        F.sum(
-            F.when(F.col("_oid").isNotNull(), F.col("_cnt")).otherwise(
-                F.lit(0)
-            )
-        ).alias("n_matched"),
-        # modal owner: max count, ties to the SMALLEST owner id; null
-        # ordering structs (the unmatched bucket) are skipped by max_by
-        F.max_by(
-            "_oid",
-            F.when(
-                F.col("_oid").isNotNull(),
-                F.struct(F.col("_cnt"), (-F.col("_oid")).alias("_n")),
-            ),
-        ).alias("_modal"),
-    )
-    frac = F.round(F.col("n_matched") / F.col("n_windows"), 6)
-    return per_doc.select(
-        F.col(id_col),
-        F.col(ts),
-        "n_windows",
-        "n_matched",
-        frac.alias("match_frac"),
-        (frac >= F.lit(min_match_frac)).alias("is_duplicate"),
-        F.when(frac >= F.lit(min_match_frac), F.col("_modal")).alias(
-            "dup_of"
-        ),
-    )

@@ -153,9 +153,9 @@ def dedup_by_signature(
     """Media dedup-on-ingest: keep one row per content SIGNATURE.
 
     The multimodal twin of :func:`dedup_events` — the key is not a
-    delivery id but a perceptual signature (audio fingerprint, image
-    dHash), so byte-DIFFERENT re-encodes of the same content collapse at
-    the stream edge before storage ever pays for them. Streaming frames
+    delivery id but a perceptual signature (an image dHash), so
+    byte-DIFFERENT re-encodes of the same content collapse at the
+    stream edge before storage ever pays for them. Streaming frames
     use ``dropDuplicatesWithinWatermark`` keyed on the signature:
     per-signature state is EVICTED once the watermark passes, so state
     is bounded by (watermark horizon x unique-content arrival rate) —

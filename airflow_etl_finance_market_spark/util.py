@@ -15,6 +15,12 @@ from pyspark.sql import functions as F
 #: exists to avoid. Unknown nodes now keep the unconditional repartition
 #: (fail-safe); the skip still fires exactly where it was measured to win
 #: (plain parquet scans, optionally projected/filtered).
+#: ``Range`` and DataSource V2 relations are left out on purpose: nothing
+#: measured the skip on them, and a V2 scan's ``df.rdd`` probe asks the
+#: source to plan its input partitions, which is not the pure plan
+#: inspection the skip relies on.
+#: Because the list is fail-safe, leaving a node out costs at most one
+#: repartition.
 _SCAN_LIKE_NODES = frozenset(
     {"Project", "Filter", "Relation", "LogicalRDD", "LocalRelation",
      "SubqueryAlias", "View"}
@@ -64,11 +70,11 @@ def fan_out(
     Partition count probing uses the physical scan plan only
     (``df.rdd.getNumPartitions()`` — plans, never runs, the frame);
     single-file / single-row-group gate fixtures keep the fan-out.
-    r16 hardening (ADVICE): scan-likeness is an ALLOWLIST of logical
-    node names (``_SCAN_LIKE_NODES``) so unrecognized operators
-    fail-safe into the unconditional repartition, and an EXPLICIT
-    ``partitions=n`` is always honored (the skip applies only to the
-    default defaultParallelism fan-out).
+    Scan-likeness is an ALLOWLIST of logical node names
+    (``_SCAN_LIKE_NODES``), so unrecognized operators fail-safe into the
+    unconditional repartition. An explicit ``partitions=n`` (``n >= 1``;
+    anything smaller raises ``ValueError``) is always honored: the skip
+    applies only to the default defaultParallelism fan-out.
 
     ``force=True`` keeps the UNCONDITIONAL repartition: when the
     fanned-out frame feeds a MULTI-CONSUMER expansion whose consumers
@@ -87,27 +93,22 @@ def fan_out(
     reused by a later groupBy on the same key; keyless round-robin
     would shuffle twice).
     """
-    n = partitions or df.sparkSession.sparkContext.defaultParallelism
+    if partitions is not None and partitions < 1:
+        raise ValueError(f"fan_out partitions must be >= 1, got {partitions}")
+    n = (
+        partitions
+        if partitions is not None
+        else df.sparkSession.sparkContext.defaultParallelism
+    )
     if partitions is None and not force and not df.isStreaming:
-        # The skip applies only when the caller asked for the DEFAULT
-        # defaultParallelism fan-out: an explicit ``partitions=n`` is a
-        # per-task memory/sizing contract and is honored unconditionally
-        # (ADVICE r15: the skip used to override it silently).
-        try:
-            # The skip applies only to SCAN-LIKE frames (relation +
-            # projections/filters): there the partition probe is a pure
-            # plan inspection. On a derived frame (join/aggregate/...)
-            # `df.rdd` would MATERIALIZE the AQE query stages eagerly —
-            # running the upstream shuffles at construction time and
-            # then again in the real query (observed live: the
-            # corpus-prep funnel's dedup stage fans out a semi-join
-            # input; the probe doubled its wall) — so anything
-            # non-scan-like keeps the unconditional fan-out. Scan-like
-            # is decided by the _SCAN_LIKE_NODES allowlist above.
-            plan = df._jdf.queryExecution().analyzed().toString()
-            if _is_scan_like(plan) and df.rdd.getNumPartitions() >= n:
-                return df
-        except Exception:
-            pass  # unplannable frame: keep the unconditional fan-out
+        # The skip applies only to SCAN-LIKE frames (relation +
+        # projections/filters): there the partition probe is a pure plan
+        # inspection. On a derived frame (join/aggregate/...) `df.rdd`
+        # would MATERIALIZE the AQE query stages eagerly — running the
+        # upstream shuffles at construction time and then again in the
+        # real query — so anything non-scan-like keeps the fan-out.
+        plan = df._jdf.queryExecution().analyzed().toString()
+        if _is_scan_like(plan) and df.rdd.getNumPartitions() >= n:
+            return df
     cols = [F.col(k) if isinstance(k, str) else k for k in keys]
     return df.repartition(n, *cols) if cols else df.repartition(n)

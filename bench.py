@@ -1377,138 +1377,6 @@ def video_dedup_section(spark, tmp: str) -> tuple[dict[str, float], int]:
     return out, n_videos
 
 
-def audio_dedup_section(spark, tmp: str) -> tuple[dict[str, float], int]:
-    """Audio near-dup tier (r09): 3 WAV re-encode variants (mono PCM16 /
-    stereo channel-dup / 8-bit-lattice PCM8) of a 1 s 8 kHz clip per
-    every 3rd sf0.1 document (~5k clips, ~1.7k planted 3-member
-    families — the driver gate's construction at bench scale). Timed:
-    (a) the map-only decode+FFT fingerprint stage, (b) the full
-    fingerprint + block-LSH + verify pair chain. Fixture written to
-    parquet outside the timers, same contract as the image tier."""
-    import time as _time
-
-    from airflow_etl_finance_market_spark.fixtures import wav_family_members
-    from airflow_etl_finance_market_spark.multimodal.audio import (
-        audio_fingerprints,
-        audio_cdc_fingerprints,
-        audio_near_dup_pairs,
-        audio_window_fingerprints,
-        audio_window_near_dup_pairs,
-    )
-    from airflow_etl_finance_market_spark.util import fan_out
-
-    _members = wav_family_members()
-
-    def _build(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            ids, payloads = [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                for k, payload in enumerate(_members(text)):
-                    ids.append(doc_id * 10 + k)
-                    payloads.append(payload)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "payload": pd.Series(payloads, dtype="object"),
-                }
-            )
-
-    docs = fan_out(
-        spark.read.parquet(f"{SF_DIR}/documents.parquet").filter(
-            "doc_id % 3 = 0"
-        ),
-        "doc_id",
-    ).select("doc_id", "text")
-    media_path = f"{tmp}/audio.parquet"
-    docs.mapInPandas(_build, "doc_id long, payload binary").write.mode(
-        "overwrite"
-    ).parquet(media_path)
-    media = spark.read.parquet(media_path)
-    n_clips = media.count()
-    # stored window/CDC sigs for the join-only pair timers (_sigs
-    # entries): materialized OUTSIDE the timers, like the crossover demo
-    audio_window_fingerprints(media).write.mode("overwrite").parquet(
-        f"{tmp}/audio_window_sigs.parquet"
-    )
-    audio_cdc_fingerprints(media).write.mode("overwrite").parquet(
-        f"{tmp}/audio_cdc_sigs.parquet"
-    )
-
-    def _noop(df):
-        df.write.format("noop").mode("overwrite").save()
-
-    out: dict[str, float] = {}
-    for name, thunk in (
-        ("audio_fp_hash", lambda: _noop(audio_fingerprints(media))),
-        ("audio_pairs", lambda: _noop(audio_near_dup_pairs(media))),
-        # r09: the normalize-then-fingerprint pipeline (resample_audio
-        # to 8 kHz before the FFT stage). The fixture is already 8 kHz,
-        # so this prices the normalize stage itself (decode → downmix →
-        # re-encode per clip) on top of audio_pairs — the honest cost a
-        # mixed-rate corpus pays for the cross-rate dedup contract.
-        (
-            "audio_norm_pairs",
-            lambda: _noop(audio_near_dup_pairs(media, normalize_rate=8000)),
-        ),
-        # r10: the trim-robust windowed-subfingerprint tier (4 windows
-        # per 8000-sample clip) — hash stage and the full window-set
-        # overlap chain (the video gate's machinery on window sigs)
-        (
-            "audio_window_hash",
-            lambda: _noop(audio_window_fingerprints(media)),
-        ),
-        (
-            "audio_window_pairs",
-            lambda: _noop(
-                audio_window_near_dup_pairs(
-                    audio_window_fingerprints(media)
-                )
-            ),
-        ),
-        # r11 measurement hygiene (verdict #7): the cumulative entry
-        # above re-hashes inside the timer (the E2E view), which blurs
-        # the pair-join signal the block cost model prices — this twin
-        # times ONLY the candidate join + overlap aggregate over
-        # STORED sigs (written outside the timers), the same posture
-        # as the 200k crossover demo. Read both: cumulative for the
-        # pipeline bill, _sigs for the join the audit query predicts.
-        (
-            "audio_window_pairs_sigs",
-            lambda: _noop(
-                audio_window_near_dup_pairs(
-                    spark.read.parquet(f"{tmp}/audio_window_sigs.parquet")
-                )
-            ),
-        ),
-        # r11: the content-defined-segmentation tier — hash stage over
-        # the same clips (Gear anchors + per-segment FFTs), pair stage
-        # join-only over stored sigs (the _sigs convention; CDC match
-        # threshold 0.5 per the gate's measured overlap band)
-        (
-            "audio_cdc_hash",
-            lambda: _noop(audio_cdc_fingerprints(media)),
-        ),
-        (
-            "audio_cdc_pairs_sigs",
-            lambda: _noop(
-                audio_window_near_dup_pairs(
-                    spark.read.parquet(f"{tmp}/audio_cdc_sigs.parquet"),
-                    min_match_frac=0.5,
-                )
-            ),
-        ),
-    ):
-        best = float("inf")
-        for _ in range(3):
-            t0 = _time.perf_counter()
-            thunk()
-            best = min(best, _time.perf_counter() - t0)
-        out[name] = round(best, 3)
-    return out, n_clips
-
-
 def image_tile_section(spark, tmp: str) -> tuple[dict[str, float], int]:
     """Tile-overlap crop-dedup tier (r09): per every 3rd sf0.1 document,
     a 128x128 noise PNG + its tile-aligned 96x96 crop + a GIF re-encode
@@ -1581,9 +1449,10 @@ def image_tile_section(spark, tmp: str) -> tuple[dict[str, float], int]:
                 image_tile_near_dup_pairs(image_tile_dhash(media))
             ),
         ),
-        # r11 measurement hygiene (verdict #7): join-only twin over
-        # STORED sigs — see the audio section's note; the cumulative
-        # entry above stays as the E2E view
+        # r11 measurement hygiene (verdict #7): the cumulative entry
+        # above re-hashes inside the timer (the E2E view); this twin
+        # times ONLY the candidate join + overlap aggregate over
+        # STORED sigs (written outside the timers)
         (
             "tile_pairs_sigs",
             lambda: _noop(
@@ -2240,10 +2109,6 @@ def main() -> None:
             vd, n_vid = video_dedup_section(spark, tmp)
             payload["video_dedup"] = vd
             payload["video_dedup_rows"] = {"videos": n_vid}
-        with tempfile.TemporaryDirectory() as tmp:
-            ad, n_clips = audio_dedup_section(spark, tmp)
-            payload["audio_dedup"] = ad
-            payload["audio_dedup_rows"] = {"clips": n_clips}
         with tempfile.TemporaryDirectory() as tmp:
             td, n_timg = image_tile_section(spark, tmp)
             payload["tile_dedup"] = td

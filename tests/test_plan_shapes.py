@@ -5,6 +5,8 @@ depends on, pinned so a refactor can't silently lose them (the build rule:
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import functions as F
 
 from airflow_etl_finance_market_spark import harness
@@ -619,43 +621,6 @@ def test_paragraph_dedup_single_window_single_agg(spark, sf_dir):
     assert "hashpartitioning(h#" in plan  # window shuffles on the hash
 
 
-def test_windowed_dedup_verdicts_join_free_agg_chain(spark):
-    """The streaming set-overlap verdict reduction must stay three
-    CHAINED hash aggregates — a join-bearing formulation (the first
-    draft's per_doc ⋈ modal self-join) doubles the shuffle bill and
-    breaks on self-join attribute dedup over memory-sink frames."""
-    from airflow_etl_finance_market_spark.streaming import (
-        windowed_dedup_verdicts,
-    )
-
-    own = spark.createDataFrame(
-        [(1, 10, None, None), (2, 11, 1, 5)],
-        "doc_id long, afp long, owner_id long, owner_ts long",
-    ).withColumn("ts", F.expr("timestamp_micros(owner_ts)"))
-    plan = plan_of(windowed_dedup_verdicts(own))
-    assert "Join" not in plan
-    assert "CartesianProduct" not in plan
-    assert plan.count("HashAggregate") >= 2  # a pure aggregate chain
-
-
-def test_windowed_ownership_batch_twin_block_join_no_cartesian(spark):
-    """The batch twin's candidate stage must be the pigeonhole block
-    EQUI-join (+ bit_count verify filter) — never a cartesian/NL join,
-    the same bill as every other media pair stage."""
-    from airflow_etl_finance_market_spark.streaming import (
-        windowed_signature_ownership,
-    )
-
-    sigs = spark.createDataFrame(
-        [(1, 1_700_000_000_000_000, 7), (2, 1_700_000_000_001_000, 8)],
-        "doc_id long, tsu long, afp long",
-    ).select("doc_id", F.expr("timestamp_micros(tsu)").alias("ts"), "afp")
-    plan = plan_of(windowed_signature_ownership(sigs))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "bit_count" in plan  # the hamming verify stays JVM-side
-
-
 def test_row_cdc_pair_join_reuses_signature_exchange(spark):
     """The row-CDC pair stage is the ball-0 pigeonhole self-join: both
     sides must stay PLAN-IDENTICAL so the shuffled exchange is reused
@@ -756,8 +721,13 @@ def test_pagerank_round_is_single_join_plus_aggregate(spark, sf_dir):
     join feeding a zero-seeded aggregate — the old per-round deg join
     and nodes LEFT-OUTER (+COALESCE) must not come back. The out-degree
     rides the checkpointed edge frame instead."""
+    from airflow_etl_finance_market_spark.harness_markets import (
+        _PAGERANK_ROUNDS,
+    )
+
     plan = plan_of(harness.queries()["part_supplier_pagerank"](spark, sf_dir))
     assert "LeftOuter" not in plan          # per-round left join gone
     assert "CartesianProduct" not in plan
-    # one zero-seed Union per round feeds the round aggregate
-    assert plan.count("Union") >= 3
+    nodes = re.findall(r"^[\s:+-]*(\w+)", plan, re.M)
+    joins = [n for n in nodes if n.endswith("Join")]
+    assert len(joins) == _PAGERANK_ROUNDS, joins  # one join per round

@@ -421,34 +421,6 @@ def test_jpeg_block_constant_images_roundtrip_tightly(bw, bh, data):
     assert max(abs(a - b) for a, b in zip(pix, out)) <= 2
 
 
-@given(
-    rate=st.sampled_from([8000, 16000, 44100]),
-    nch=st.integers(min_value=1, max_value=3),
-    data=st.data(),
-)
-@settings(**_CODEC_SETTINGS)
-def test_wav_roundtrip_exact_on_random_pcm(rate, nch, data):
-    """PCM16 WAV is lossless: encode->decode is the identity on arbitrary
-    sample values (full int16 range), channel counts, and rates."""
-    from airflow_etl_finance_market_spark.multimodal.audio import (
-        _stdlib_wav_codec,
-    )
-
-    n = data.draw(st.integers(min_value=0, max_value=64))
-    chans = [
-        data.draw(
-            st.lists(
-                st.integers(-32768, 32767), min_size=n, max_size=n
-            )
-        )
-        for _ in range(nch)
-    ]
-    info, dec, enc, _ = _stdlib_wav_codec()
-    b = enc(rate, chans)
-    assert info(b) == (rate, nch, 16, n)
-    assert dec(b) == (rate, chans)
-
-
 @given(data=st.data())
 @settings(**_CODEC_SETTINGS)
 def test_avi_container_roundtrip_byte_exact(data):

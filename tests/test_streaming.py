@@ -818,67 +818,6 @@ def test_funnel_retires_completed_and_idle_keys(spark, tmp_path):
     ]
 
 
-def test_media_signature_dedup_stream_equals_batch(spark, tmp_path):
-    """dedup_by_signature: byte-different re-encodes of the same audio
-    collapse to one survivor at the stream edge (fingerprint-keyed
-    dropDuplicatesWithinWatermark), and the batch twin agrees on the
-    surviving signature set. Quarantined payloads never reach the
-    dedup state."""
-    import hashlib
-
-    from airflow_etl_finance_market_spark.multimodal.audio import (
-        _stdlib_wav_codec,
-        audio_fingerprints,
-    )
-    from airflow_etl_finance_market_spark.streaming import dedup_by_signature
-
-    _, _, enc, _ = _stdlib_wav_codec()
-
-    def lattice(seed: bytes, n: int = 8000) -> bytes:
-        out = bytearray()
-        i = 0
-        while len(out) < n:
-            out += hashlib.md5(seed + bytes([i & 0xFF, i >> 8])).digest()
-            i += 1
-        return bytes(out[:n])
-
-    rows = []
-    for fam in range(3):
-        x = [(v - 128) << 8 for v in lattice(bytes([fam]))]
-        base_us = 1_700_000_000_000_000 + fam * 1_000_000
-        rows.append((fam * 10, base_us, bytearray(enc(8000, [x]))))
-        rows.append((fam * 10 + 1, base_us, bytearray(enc(8000, [x, x]))))
-    rows.append((90, 1_700_000_000_000_000, bytearray(b"junk")))
-    in_dir = str(tmp_path / "media_in")
-    spark.createDataFrame(
-        rows, "doc_id long, ts long, payload binary"
-    ).coalesce(1).write.mode("overwrite").parquet(in_dir)
-
-    def pipeline(media):
-        fps = audio_fingerprints(
-            media.withColumn("ts", F.expr("timestamp_micros(ts)")),
-            passthrough=("ts",),
-        )
-        return dedup_by_signature(fps, sig_col="afp", ts="ts")
-
-    batch = pipeline(
-        spark.read.schema("doc_id long, ts long, payload binary").parquet(
-            in_dir
-        )
-    )
-    stream = pipeline(
-        spark.readStream.schema(
-            "doc_id long, ts long, payload binary"
-        ).parquet(in_dir)
-    )
-    got = run_available_now(stream, "media_dedup_eq", output_mode="append")
-    stream_sigs = sorted(r.afp for r in got.collect())
-    batch_sigs = sorted(r.afp for r in batch.collect())
-    assert stream_sigs == batch_sigs
-    assert len(stream_sigs) == 3  # one per family; junk quarantined
-    assert all(r.doc_id // 10 in (0, 1, 2) for r in got.collect())
-
-
 def test_image_signature_dedup_stream_equals_batch(spark, tmp_path):
     """The image twin: dedup_by_signature(sig_col='dhash') over
     image_dhash(passthrough=('ts',)) — re-encodes (PNG vs GIF palette)
@@ -933,542 +872,69 @@ def test_image_signature_dedup_stream_equals_batch(spark, tmp_path):
 
 
 def test_media_signature_dedup_carries_state_across_batches(spark, tmp_path):
-    """A re-encode arriving in a LATER micro-batch (same event time,
-    inside the watermark) must still dedup — dropDuplicatesWithinWatermark
-    state carries across batch boundaries until the watermark passes."""
+    """A re-encode arriving in a LATER micro-batch (inside the watermark)
+    must still dedup — dropDuplicatesWithinWatermark state carries across
+    batch boundaries until the watermark passes."""
     import hashlib
-    import os
 
-    from airflow_etl_finance_market_spark.multimodal.audio import (
-        _stdlib_wav_codec,
-        audio_fingerprints,
+    from airflow_etl_finance_market_spark.multimodal.binary import (
+        _stdlib_png_codec,
     )
+    from airflow_etl_finance_market_spark.multimodal.gif import (
+        _stdlib_gif_codec,
+    )
+    from airflow_etl_finance_market_spark.multimodal.phash import image_dhash
     from airflow_etl_finance_market_spark.streaming import dedup_by_signature
 
-    _, _, enc, _ = _stdlib_wav_codec()
+    _, _, png_enc, _ = _stdlib_png_codec()
+    _, _, gif_enc = _stdlib_gif_codec()
+    gray_pal = [(i, i, i) for i in range(256)]
 
-    def lattice(seed: bytes, n: int = 8000) -> bytes:
+    def noise(seed: bytes) -> bytes:
         out = bytearray()
         i = 0
-        while len(out) < n:
-            out += hashlib.md5(seed + bytes([i & 0xFF, i >> 8])).digest()
+        while len(out) < 32 * 32:
+            out += hashlib.md5(seed + bytes([i])).digest()
             i += 1
-        return bytes(out[:n])
+        return bytes(out[: 32 * 32])
 
-    x = [(v - 128) << 8 for v in lattice(b"xbatch")]
-    y = [(v - 128) << 8 for v in lattice(b"other")]
+    x, y = noise(b"xbatch"), noise(b"other")
     t0 = 1_700_000_000_000_000
     in_dir = tmp_path / "in"
-    # batch 0: original (mono) + an unrelated clip
-    spark.createDataFrame(
-        [(1, t0, bytearray(enc(8000, [x]))), (2, t0, bytearray(enc(8000, [y])))],
-        "doc_id long, ts long, payload binary",
-    ).coalesce(1).write.parquet(str(in_dir / "b0"))
-    # batch 1: the stereo re-encode of clip 1, 1 s later (within watermark)
-    spark.createDataFrame(
-        [(3, t0 + 1_000_000, bytearray(enc(8000, [x, x])))],
-        "doc_id long, ts long, payload binary",
-    ).coalesce(1).write.parquet(str(in_dir / "b1"))
-    for i in range(2):
+    schema = "doc_id long, ts long, payload binary"
+    # batch 0: the original (PNG) + an unrelated image; batch 1: the GIF
+    # re-encode of image 1, 1 s later (within the watermark)
+    batches = [
+        [
+            (1, t0, bytearray(png_enc(32, 32, 1, x))),
+            (2, t0, bytearray(png_enc(32, 32, 1, y))),
+        ],
+        [(3, t0 + 1_000_000, bytearray(gif_enc(32, 32, x, gray_pal)))],
+    ]
+    for i, rows in enumerate(batches):
         d = str(in_dir / f"b{i}")
+        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(d)
         for f in os.listdir(d):
             if f.endswith(".parquet"):
                 os.utime(f"{d}/{f}", (1_700_000_000 + i,) * 2)
     stream = (
-        spark.readStream.schema("doc_id long, ts long, payload binary")
+        spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(str(in_dir / "b*"))
         .withColumn("ts", F.expr("timestamp_micros(ts)"))
     )
     got = run_available_now(
         dedup_by_signature(
-            audio_fingerprints(stream, passthrough=("ts",)),
-            sig_col="afp",
+            image_dhash(stream, passthrough=("ts",)),
+            sig_col="dhash",
             ts="ts",
             watermark="1 hour",
         ),
         "media_dedup_xbatch",
         output_mode="append",
     )
-    rows = sorted((r.doc_id for r in got.collect()))
+    rows = sorted(r.doc_id for r in got.collect())
     assert rows == [1, 2]  # doc 3's re-encode deduped ACROSS the boundary
-
-
-# ---------------------------------------------------------------------------
-# windowed_signature_ownership / windowed_dedup_verdicts — the SET-overlap
-# (trim/crop-robust) dedup tier at the ingest edge (r10 verdict, gap #6)
-# ---------------------------------------------------------------------------
-
-_WSD_T0 = 1_700_000_000_000_000  # epoch micros
-
-
-def _wsd_df(spark, rows):
-    return spark.createDataFrame(
-        rows, "doc_id long, tsu long, afp long"
-    ).select("doc_id", F.expr("timestamp_micros(tsu)").alias("ts"), "afp")
-
-
-def _wsd_plant(spark, tmp_path, batches, name):
-    """Write one parquet file per micro-batch, mtime-ordered."""
-    in_dir = tmp_path / name
-    for i, rows in enumerate(batches):
-        d = str(in_dir / f"b{i}")
-        _wsd_df(spark, rows).coalesce(1).write.parquet(d)
-        for f in os.listdir(d):
-            if f.endswith(".parquet"):
-                os.utime(f"{d}/{f}", (1_700_000_000 + i,) * 2)
-    return (
-        spark.readStream.schema("doc_id long, ts timestamp, afp long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(in_dir / "b*"))
-    )
-
-
-def _wsd_verdicts(df):
-    from airflow_etl_finance_market_spark.streaming import (
-        windowed_dedup_verdicts,
-        windowed_signature_ownership,
-    )
-
-    own = windowed_signature_ownership(
-        df, delay="5 minutes", retain="1 hour", max_hamming=4
-    )
-    if own.isStreaming:
-        own = run_available_now(
-            own, "wsd_own_" + str(abs(hash(df)) % 10_000), output_mode="append"
-        )
-    return windowed_dedup_verdicts(
-        own.filter("doc_id >= 0"), min_match_frac=0.8
-    )
-
-
-_H = [0x1111111111111111, 0x2222222222222222, -0x3333333333333334,
-      0x4444444444444444]
-_G = [0x5555555555555555, -0x6666666666666667, 0x0F0F0F0F0F0F0F0F]
-
-
-def test_windowed_signature_dedup_stream_equals_batch(spark, tmp_path):
-    """The full contract on synthetic window-hash sets: an exact-subset
-    clip (window-aligned trim) and a within-Hamming-4 re-encode both
-    dedup against the original ACROSS micro-batch boundaries; an
-    unrelated clip survives; stream verdicts == batch-twin verdicts
-    row for row (the reorder-buffer discipline makes ownership a pure
-    function of event time)."""
-    b0 = [(1, _WSD_T0, x) for x in _H]
-    b1 = [(2, _WSD_T0 + 600_000_000, x) for x in _H[1:]] + [
-        (3, _WSD_T0 + 600_000_000, x) for x in _G
-    ]
-    b2 = [(4, _WSD_T0 + 1_200_000_000, _H[1] ^ 0b11)] + [
-        (4, _WSD_T0 + 1_200_000_000, x) for x in _H[2:]
-    ]
-    sentinel = [(-1, _WSD_T0 + 10_800_000_000, 0x7777777777777777)]
-    all_rows = b0 + b1 + b2 + sentinel
-
-    batch_v = _rows(_wsd_verdicts(_wsd_df(spark, all_rows)))
-    stream = _wsd_plant(spark, tmp_path, [b0, b1, b2, sentinel], "wsd_eq")
-    stream_v = _rows(_wsd_verdicts(stream))
-    assert stream_v == batch_v
-    got = {r[0]: (r[5], r[6]) for r in stream_v}  # doc -> (is_dup, dup_of)
-    assert got[1] == (False, None)
-    assert got[2] == (True, 1)  # subset of 1's windows
-    assert got[3] == (False, None)  # unrelated
-    assert got[4] == (True, 1)  # hamming-2 variant of 1's windows
-
-
-def test_windowed_signature_dedup_out_of_order_arrival(spark, tmp_path):
-    """Rows buffer until the watermark passes them and are processed in
-    EVENT-TIME order, so a clip whose rows ARRIVE first but are stamped
-    later still loses ownership to the earlier-stamped clip — within
-    the delay horizon any arrival order yields the batch result."""
-    late_arriving_original = [(1, _WSD_T0, x) for x in _H]
-    early_arriving_copy = [(2, _WSD_T0 + 120_000_000, x) for x in _H]
-    sentinel = [(-1, _WSD_T0 + 10_800_000_000, 0x7777777777777777)]
-
-    batch_v = _rows(
-        _wsd_verdicts(
-            _wsd_df(
-                spark,
-                late_arriving_original + early_arriving_copy + sentinel,
-            )
-        )
-    )
-    # copy's file lands FIRST; original's event time is earlier
-    stream = _wsd_plant(
-        spark,
-        tmp_path,
-        [early_arriving_copy, late_arriving_original, sentinel],
-        "wsd_ooo",
-    )
-    stream_v = _rows(_wsd_verdicts(stream))
-    assert stream_v == batch_v
-    got = {r[0]: (r[5], r[6]) for r in stream_v}
-    assert got[1] == (False, None)  # earlier event time owns
-    assert got[2] == (True, 1)
-
-
-def test_windowed_signature_hamming_boundary(spark):
-    """Exactly max_hamming matches; max_hamming+1 does not (the
-    pigeonhole block filter is lossless at the configured radius) —
-    pinned on the batch twin, which shares the radius semantics."""
-    from airflow_etl_finance_market_spark.streaming import (
-        windowed_dedup_verdicts,
-        windowed_signature_ownership,
-    )
-
-    flip4 = _H[0] ^ 0b1111
-    flip5 = _H[0] ^ 0b11111
-    rows = [(1, _WSD_T0, _H[0]), (2, _WSD_T0 + 1_000_000, flip4),
-            (3, _WSD_T0 + 2_000_000, flip5)]
-    v = windowed_dedup_verdicts(
-        windowed_signature_ownership(
-            _wsd_df(spark, rows), delay="5 minutes", max_hamming=4
-        ),
-        min_match_frac=0.8,
-    )
-    got = {r.doc_id: (r.is_duplicate, r.dup_of) for r in v.collect()}
-    assert got[2] == (True, 1)
-    # doc 3 is hamming 5 from doc 1 but hamming 1 from doc 2's variant —
-    # chained drift attributes to the nearest REGISTERED hash, which is
-    # exactly the sequential first-writer contract
-    assert got[3] == (True, 2)
-    lone = windowed_dedup_verdicts(
-        windowed_signature_ownership(
-            _wsd_df(spark, [rows[0], (9, _WSD_T0 + 1_000_000, flip5)]),
-            delay="5 minutes",
-            max_hamming=4,
-        ),
-        min_match_frac=0.8,
-    )
-    got2 = {r.doc_id: r.is_duplicate for r in lone.collect()}
-    assert got2[9] is False
-
-
-def test_windowed_signature_self_repeat_and_frac(spark):
-    """A clip repeating its own window hash never matches itself, and
-    the verdict counts DISTINCT hashes: 1 shared window out of 4
-    distinct (0.25 < 0.8) stays a survivor."""
-    from airflow_etl_finance_market_spark.streaming import (
-        windowed_dedup_verdicts,
-        windowed_signature_ownership,
-    )
-
-    rows = (
-        [(1, _WSD_T0, x) for x in _H]
-        + [(1, _WSD_T0, _H[0])]  # repeated window within the same clip
-        + [(2, _WSD_T0 + 1_000_000, _H[0])]
-        + [(2, _WSD_T0 + 1_000_000, x) for x in _G]
-    )
-    v = windowed_dedup_verdicts(
-        windowed_signature_ownership(_wsd_df(spark, rows), delay="5 minutes"),
-        min_match_frac=0.8,
-    )
-    got = {r.doc_id: r for r in v.collect()}
-    assert got[1].n_windows == 4 and got[1].n_matched == 0
-    assert not got[1].is_duplicate
-    assert got[2].n_windows == 4 and got[2].n_matched == 1
-    assert not got[2].is_duplicate
-    assert abs(got[2].match_frac - 0.25) < 1e-9
-
-
-def test_windowed_signature_state_eviction_past_retain(spark, tmp_path):
-    """Ownership EXPIRES at the retention horizon: an exact re-upload
-    arriving later than ``retain`` after the original's last sighting
-    is NOT deduped (it re-registers as the new owner) — the bound that
-    keeps ingest state O(horizon), with years-old re-uploads left to
-    the stored-table batch tier."""
-    from airflow_etl_finance_market_spark.streaming import (
-        windowed_dedup_verdicts,
-        windowed_signature_ownership,
-    )
-
-    orig = [(1, _WSD_T0, x) for x in _H]
-    # 3 minutes later: past retain=2 minutes
-    reupload = [(2, _WSD_T0 + 180_000_000, x) for x in _H]
-    sentinel = [(-1, _WSD_T0 + 10_800_000_000, 0x7777777777777777)]
-    stream = _wsd_plant(
-        spark, tmp_path, [orig, reupload, sentinel], "wsd_evict"
-    )
-    own = windowed_signature_ownership(
-        stream, delay="1 minute", retain="2 minutes", max_hamming=4
-    )
-    tbl = run_available_now(own, "wsd_evict_own", output_mode="append")
-    v = windowed_dedup_verdicts(tbl.filter("doc_id >= 0"))
-    got = {r.doc_id: r.is_duplicate for r in v.collect()}
-    assert got == {1: False, 2: False}
-
-
-def test_audio_windowed_dedup_ingest_stream_equals_batch(spark, tmp_path):
-    """End-to-end media shape (the gate's pipeline): WAV payloads →
-    audio_window_fingerprints(passthrough=ts) → ownership → verdicts.
-    A window-aligned trim and its stereo re-encode arriving in LATER
-    micro-batches dedup against the original via state carried across
-    batch boundaries; the unrelated family survives; stream == batch."""
-    from airflow_etl_finance_market_spark.fixtures import (
-        wav_trim_family_members,
-    )
-    from airflow_etl_finance_market_spark.multimodal.audio import (
-        audio_window_fingerprints,
-    )
-    from airflow_etl_finance_market_spark.streaming import (
-        windowed_dedup_verdicts,
-        windowed_signature_ownership,
-    )
-
-    members = wav_trim_family_members()
-    fams = {fam: members(f"wsd media {fam}") for fam in (1, 2)}
-    batches = [
-        [(fam * 10, _WSD_T0, bytearray(fams[fam][0])) for fam in fams],
-        [(fam * 10 + 1, _WSD_T0 + 600_000_000, bytearray(fams[fam][1]))
-         for fam in fams],
-        [(fam * 10 + 2, _WSD_T0 + 1_200_000_000, bytearray(fams[fam][2]))
-         for fam in fams],
-        [(-1, _WSD_T0 + 10_800_000_000,
-          bytearray(fams[1][0]))],  # sentinel: flushes the watermark
-    ]
-    in_dir = tmp_path / "wsd_audio"
-    for i, rows in enumerate(batches):
-        d = str(in_dir / f"b{i}")
-        spark.createDataFrame(
-            rows, "doc_id long, tsu long, payload binary"
-        ).coalesce(1).write.parquet(d)
-        for f in os.listdir(d):
-            if f.endswith(".parquet"):
-                os.utime(f"{d}/{f}", (1_700_000_000 + i,) * 2)
-
-    def pipeline(media):
-        fps = audio_window_fingerprints(
-            media.withColumn("ts", F.expr("timestamp_micros(tsu)")),
-            passthrough=("ts",),
-        )
-        own = windowed_signature_ownership(
-            fps, delay="5 minutes", retain="1 hour", max_hamming=4
-        )
-        if own.isStreaming:
-            own = run_available_now(
-                own, "wsd_audio_own", output_mode="append"
-            )
-        return windowed_dedup_verdicts(
-            own.filter("doc_id >= 0"), min_match_frac=0.8
-        )
-
-    schema = "doc_id long, tsu long, payload binary"
-    batch_v = _rows(pipeline(spark.read.schema(schema).parquet(
-        str(in_dir / "b*"))))
-    stream_v = _rows(pipeline(
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(in_dir / "b*"))
-    ))
-    assert stream_v == batch_v
-    got = {r[0]: (r[5], r[6]) for r in stream_v}
-    for fam in (1, 2):
-        assert got[fam * 10] == (False, None)  # the original survives
-        assert got[fam * 10 + 1] == (True, fam * 10)  # aligned trim
-        assert got[fam * 10 + 2] == (True, fam * 10)  # stereo re-encode
-
-
-def test_windowed_dedup_checkpoint_restart_restores_registry(
-    spark, tmp_path
-):
-    """Kill-and-restart for the windowed-signature tier: run availableNow
-    over the original's batch with a checkpoint, stop, then deliver an
-    exact copy in a NEW file and re-run with the SAME checkpoint. The
-    restart must (a) process only the new file, (b) restore the
-    per-block hash registry so the copy's windows match entries
-    REGISTERED IN THE PREVIOUS RUN, (c) never duplicate sink rows —
-    the restartable daily-ingest shape."""
-    from airflow_etl_finance_market_spark.streaming import (
-        windowed_dedup_verdicts,
-        windowed_signature_ownership,
-    )
-    from airflow_etl_finance_market_spark.streaming.io import (
-        run_available_now_to_parquet,
-    )
-
-    src = tmp_path / "src"
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-
-    def plant(name, rows, mtime):
-        d = str(src / name)
-        _wsd_df(spark, rows).coalesce(1).write.parquet(d)
-        for f in os.listdir(d):
-            if f.endswith(".parquet"):
-                os.utime(f"{d}/{f}", (mtime,) * 2)
-
-    # run 1: the original + a mid sentinel that advances the watermark
-    # far enough for the original to emit and REGISTER before shutdown
-    plant("b0", [(1, _WSD_T0, x) for x in _H], 1_700_000_000)
-    plant("b1", [(-2, _WSD_T0 + 1_200_000_000, 0x7777777777777777)],
-          1_700_000_001)
-
-    def own_stream():
-        stream = (
-            spark.readStream.schema("doc_id long, ts timestamp, afp long")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(src / "b*"))
-        )
-        return windowed_signature_ownership(
-            stream, delay="5 minutes", retain="1 hour", max_hamming=4
-        )
-
-    run_available_now_to_parquet(own_stream(), out, ckpt)
-    rows_after_first = spark.read.parquet(out).count()
-    assert rows_after_first == len(_H)  # original's presence rows only
-
-    # run 2: an exact copy arrives in a new file; the final sentinel
-    # flushes it. Same checkpoint -> offsets + state restored.
-    plant("b2", [(2, _WSD_T0 + 1_500_000_000, x) for x in _H],
-          1_700_000_002)
-    plant("b3", [(-3, _WSD_T0 + 10_800_000_000, 0x0F0F0F0F0F0F0F0F)],
-          1_700_000_003)
-    run_available_now_to_parquet(own_stream(), out, ckpt)
-
-    sink = spark.read.parquet(out)
-    v = windowed_dedup_verdicts(sink.filter("doc_id >= 0"))
-    got = {r.doc_id: (r.is_duplicate, r.dup_of) for r in v.collect()}
-    assert got[1] == (False, None)
-    assert got[2] == (True, 1)  # matched the RESTORED registry
-    # exactly-once: the original's rows were not re-emitted on restart
-    assert sink.filter("doc_id = 1").count() == len(_H)
-
-
-def test_windowed_dedup_state_bounded_by_retention(spark, tmp_path):
-    """The state-store row count must DROP once the watermark passes
-    last_seen + retain — the mechanical form of the bounded-state
-    claim (buckets are removed via event-time timeouts, not merely
-    ignored). Peak state covers the original's 4 hashes x 5 blocks;
-    after the horizon only the final flusher's held buckets remain."""
-    from airflow_etl_finance_market_spark.streaming import (
-        windowed_signature_ownership,
-    )
-
-    src = tmp_path / "evict_src"
-    batches = [
-        [(1, _WSD_T0, x) for x in _H],
-        [(-2, _WSD_T0 + 180_000_000, 0x7777777777777777)],
-        [(-3, _WSD_T0 + 1_800_000_000, 0x0F0F0F0F0F0F0F0F)],
-    ]
-    for i, rows in enumerate(batches):
-        d = str(src / f"b{i}")
-        _wsd_df(spark, rows).coalesce(1).write.parquet(d)
-        for f in os.listdir(d):
-            if f.endswith(".parquet"):
-                os.utime(f"{d}/{f}", (1_700_000_000 + i,) * 2)
-    stream = (
-        spark.readStream.schema("doc_id long, ts timestamp, afp long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src / "b*"))
-    )
-    own = windowed_signature_ownership(
-        stream, delay="1 minute", retain="2 minutes", max_hamming=4
-    )
-    q = (
-        own.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("wsd_state_bound")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        counts = [
-            p["stateOperators"][0]["numRowsTotal"]
-            for p in q.recentProgress
-            if p.get("stateOperators")
-        ]
-    finally:
-        q.stop()
-    peak, final = max(counts), counts[-1]
-    # original: 4 hashes x 5 blocks = 20 buckets at peak (plus flusher
-    # buckets); final: only the unflushed -3 row's 5 held buckets
-    assert peak >= 20
-    assert final <= 6
-    assert final < peak
-
-
-def test_windowed_dedup_foreachbatch_survivor_sink(spark, tmp_path):
-    """run_windowed_dedup_to_parquet: the end-to-end ingest shape —
-    ownership stream → per-micro-batch verdicts → only SURVIVORS reach
-    the parquet table. Per-batch reduction is exact because a clip's
-    ownership rows all flush in one trigger; the survivor set equals
-    the whole-sink batch reduction."""
-    from airflow_etl_finance_market_spark.streaming import (
-        windowed_signature_ownership,
-    )
-    from airflow_etl_finance_market_spark.streaming.io import (
-        run_windowed_dedup_to_parquet,
-    )
-
-    b0 = [(1, _WSD_T0, x) for x in _H]
-    b1 = [(2, _WSD_T0 + 600_000_000, x) for x in _H[1:]] + [
-        (3, _WSD_T0 + 600_000_000, x) for x in _G
-    ]
-    sentinel = [(-1, _WSD_T0 + 10_800_000_000, 0x7777777777777777)]
-    stream = _wsd_plant(spark, tmp_path, [b0, b1, sentinel], "wsd_sink")
-    own = windowed_signature_ownership(stream, delay="5 minutes")
-    out = str(tmp_path / "survivors")
-    ckpt = str(tmp_path / "wsd_sink_ckpt")
-    run_windowed_dedup_to_parquet(own, out, ckpt)
-    got = spark.read.parquet(out).filter("doc_id >= 0")
-    assert sorted(r.doc_id for r in got.collect()) == [1, 3]
-    assert "is_duplicate" not in got.columns  # survivors-only projection
-
-
-def test_windowed_dedup_is_modality_agnostic_image_tiles(spark, tmp_path):
-    """The SAME ownership operator closes the CROP-robust image tier at
-    the ingest edge: tile dHashes (image_tile_dhash with the event-time
-    passthrough) through windowed_signature_ownership — a tile-aligned
-    crop arriving in a LATER micro-batch dedups against its original;
-    the unrelated image survives."""
-    from airflow_etl_finance_market_spark.fixtures import (
-        tile_crop_family_members,
-    )
-    from airflow_etl_finance_market_spark.multimodal.phash import (
-        image_tile_dhash,
-    )
-    from airflow_etl_finance_market_spark.streaming import (
-        windowed_dedup_verdicts,
-        windowed_signature_ownership,
-    )
-
-    members = tile_crop_family_members()
-    fam_a = members("wsd img A")  # full 128x128 / aligned crop / GIF crop
-    fam_b = members("wsd img B")
-    batches = [
-        [(10, _WSD_T0, bytearray(fam_a[0])),
-         (20, _WSD_T0, bytearray(fam_b[0]))],
-        [(11, _WSD_T0 + 600_000_000, bytearray(fam_a[1]))],
-        [(-1, _WSD_T0 + 10_800_000_000, bytearray(fam_b[0]))],
-    ]
-    src = tmp_path / "wsd_img"
-    for i, rows in enumerate(batches):
-        d = str(src / f"b{i}")
-        spark.createDataFrame(
-            rows, "doc_id long, tsu long, payload binary"
-        ).coalesce(1).write.parquet(d)
-        for f in os.listdir(d):
-            if f.endswith(".parquet"):
-                os.utime(f"{d}/{f}", (1_700_000_000 + i,) * 2)
-    stream = (
-        spark.readStream.schema("doc_id long, tsu long, payload binary")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src / "b*"))
-        .withColumn("ts", F.expr("timestamp_micros(tsu)"))
-    )
-    sigs = image_tile_dhash(stream, passthrough=("ts",))
-    own = windowed_signature_ownership(
-        sigs, sig_col="dhash", delay="5 minutes", max_hamming=4
-    )
-    tbl = run_available_now(own, "wsd_img_own", output_mode="append")
-    v = windowed_dedup_verdicts(
-        tbl.filter("doc_id >= 0"), sig_col="dhash", min_match_frac=0.8
-    )
-    got = {r.doc_id: (r.is_duplicate, r.dup_of) for r in v.collect()}
-    assert got[10] == (False, None)
-    assert got[20] == (False, None)
-    # the crop's 9 tiles are 9 of the original's 16 — overlap 1.0 on
-    # the crop's side, cross-micro-batch via the restored registry
-    assert got[11] == (True, 10)
 
 
 class TestStreamingDecontamination:

@@ -9,7 +9,8 @@ flagged. These tests pin the r16 ALLOWLIST semantics:
 - any derived frame (joins, set ops, distinct — including node names the
   old blocklist had never heard of, e.g. Except) keeps the repartition;
 - an explicit ``partitions=n`` is honored unconditionally (the skip
-  applies only to the default defaultParallelism fan-out).
+  applies only to the default defaultParallelism fan-out), and
+  ``partitions < 1`` is rejected rather than replaced by the default.
 """
 
 from __future__ import annotations
@@ -83,6 +84,12 @@ def test_fan_out_honors_explicit_partition_count(wide_parquet):
     out = fan_out(wide_parquet, "doc_id", partitions=n)  # satisfied, but explicit
     plan = analyzed(out)
     assert "RepartitionByExpression" in plan and f", {n}" in plan
+
+
+@pytest.mark.parametrize("bad", [0, -1])
+def test_fan_out_rejects_non_positive_partition_count(wide_parquet, bad):
+    with pytest.raises(ValueError, match="partitions must be >= 1"):
+        fan_out(wide_parquet, "doc_id", partitions=bad)
 
 
 def test_fan_out_force_always_repartitions(wide_parquet):
