@@ -20,7 +20,7 @@ Layout:
     plans/        full query plans / pipeline stages (the 9-task reference
                   chain re-expressed as one Spark driver program, analytics)
     streaming/    Structured Streaming variants (weekly windowed volatility)
-    multimodal/   binary-column plumbing, stdlib image/video codecs, phash
+    multimodal/   binary-column plumbing, stdlib image/video codecs
 """
 
 __version__ = "0.1.0"

@@ -57,7 +57,6 @@ def register(name: str, oracle: str | None = None):
 #:    behind the newest CORRECTNESS file.
 _WINDOW_DEMOTED = [
     # r14-green: oldest ledger rows, due back in the window next round
-    "market_overview",
     "ticker_report_stats",
     "segment_balance",
     "distinct_counts",
@@ -89,7 +88,6 @@ _WINDOW_DEMOTED = [
     "doc_edit_distance_near_dups",
     "doc_containment_pairs",
     "multimodal_image_codec_real",
-    "image_phash_multi_near_dups",
     "html_text_extract",
     "bpe_pipeline",
     "weekly_user_kmv_rollup",
@@ -109,7 +107,6 @@ _WINDOW_DEMOTED = [
     "purchase_attribution",
     "user_sessions",
     "minhash_lsh_near_dups",
-    "simhash_near_dups",
     "embedding_topk_ivf",
     "top_docs_per_lang",
     "term_frequencies",
@@ -144,9 +141,6 @@ _WINDOW_DEMOTED = [
     "kn_bigram_logprob",
     "near_dup_decontamination",
     "ccnet_perplexity_buckets",
-    "image_tile_multi_crop_near_dups",
-    "image_mirror_canonical_near_dups",
-    "media_cdc_crop_near_dups",
 ]
 
 #: The driver verifies exactly this many leading registry entries per round.
@@ -171,18 +165,13 @@ def _bounded_stream_shuffle(spark: SparkSession, n: int = 8):
     to key cardinality — state stores are per-partition, not per-key.
     """
     key = "spark.sql.shuffle.partitions"
-    try:
-        old = spark.conf.get(key)
-    except Exception:
-        old = None
+    # a registered conf with a default: get() always returns a value
+    old = spark.conf.get(key)
     spark.conf.set(key, str(n))
     try:
         yield
     finally:
-        if old is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, old)
+        spark.conf.set(key, old)
 
 
 _STREAM_GATE_SEQ = 0

@@ -1,6 +1,6 @@
-"""Multimodal gate tier: real codec roundtrips, perceptual-hash /
-tile / row-CDC image dedup, video overlap, and crawl text
-extraction.
+"""Multimodal gate tier: real image/video codec roundtrips, plus
+the text gates registered between them (paragraph dedup, crawl text
+extraction, line filtering, semantic dedup, quality flags, DSIR).
 
 One CONTIGUOUS slice of the registry in REGISTRATION ORDER —
 the driver-ledger contract: ``harness.py`` imports the tier
@@ -29,7 +29,7 @@ from .harness_corpus import (  # noqa: F401
 
 
 # ---------------------------------------------------------------------------
-# Round 7: REAL image/video codec driver gates + image perceptual-hash dedup
+# Round 7: REAL image/video codec gates
 # ---------------------------------------------------------------------------
 
 
@@ -276,282 +276,6 @@ def q_multimodal_video_frames_real(spark: SparkSession, sf_dir: str) -> DataFram
                 F.col("got_shas") == F.array_sort(F.col("exp_shas"))
             ).alias("shas_exact"),
         )
-    )
-
-
-@register(
-    "video_near_dups",
-    """
-SELECT COUNT(*) * 2 AS n_videos,
-       COUNT(*) AS n_pairs,
-       true AS pairs_within_family,
-       true AS full_overlap
-FROM documents
-WHERE doc_id % 11 = 5
-""",
-)
-def q_video_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """VIDEO-level near-dup via frame-hash set overlap
-    (multimodal/phash.py video_frame_dhash ∘ video_near_dup_pairs):
-    every 11th document seeds a 2-member planted video family — 5
-    MJPEG/AVI frames of 72x64 block-grid pixels (the dHash gate's
-    >=32-luma-margin construction, seed varying per frame), video B
-    re-encoding the SAME frames with sub-margin +-4 luma noise (byte-
-    different, gradient-sign-identical, so each frame pair hashes
-    EQUAL). The walk+decode+dHash all happen in one map-only Arrow
-    stage (8 bytes out per frame, raw frames never shuffled); pairs
-    come from the pigeonhole block equi-join keyed on video ids, and
-    the match FRACTION threshold absorbs any single-frame collision —
-    a cross-family frame match contributes at most 1/5 < 0.8. The
-    oracle PREDICTS the outcome: 2n videos hashed, the near-dup pair
-    set is exactly the n planted (A, B) pairs, every pair within
-    family at full overlap (match_frac == 1)."""
-    from .multimodal.phash import video_frame_dhash, video_near_dup_pairs
-
-    _LEVELS = [16, 48, 80, 112, 144, 176, 208, 240]
-
-    def _build(batches):
-        import hashlib
-
-        import pandas as pd
-
-        gw, gh, blk = 9, 8, 8
-
-        def base_pixels(seed: bytes) -> bytearray:
-            vals = []
-            for r in range(gh):
-                row = []
-                for c in range(gw):
-                    hv = hashlib.md5(seed + bytes([r, c])).digest()[0]
-                    v = _LEVELS[hv % 8]
-                    if c > 0 and v == row[-1]:
-                        v = _LEVELS[(hv % 8 + 1) % 8]
-                    row.append(v)
-                vals.append(row)
-            pix = bytearray()
-            for r in range(gh):
-                rowbytes = bytearray()
-                for c in range(gw):
-                    rowbytes += bytes([vals[r][c]]) * blk
-                pix += bytes(rowbytes) * blk
-            return pix
-
-        for pdf in batches:
-            ids, payloads = [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                seed = hashlib.md5(text.encode("utf-8")).digest()
-                frames_a, frames_b = [], []
-                for fi in range(5):
-                    pix = base_pixels(seed + bytes([fi]))
-                    frames_a.append(
-                        _jpeg_enc(gw * blk, gh * blk, 1, bytes(pix), quality=90)
-                    )
-                    noisy = bytearray(pix)
-                    for t in range(4):
-                        p = hashlib.md5(seed + bytes([fi, 128 + t])).digest()
-                        pos = (p[0] % (gh * blk)) * gw * blk + p[1] % (gw * blk)
-                        noisy[pos] = max(
-                            0, min(255, noisy[pos] + (p[2] % 9) - 4)
-                        )
-                    frames_b.append(
-                        _jpeg_enc(
-                            gw * blk, gh * blk, 1, bytes(noisy), quality=90
-                        )
-                    )
-                ids.append(doc_id * 10)
-                payloads.append(_avi_enc(frames_a, fps=10, width=72, height=64))
-                ids.append(doc_id * 10 + 1)
-                payloads.append(_avi_enc(frames_b, fps=10, width=72, height=64))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "payload": pd.Series(payloads, dtype="object"),
-                }
-            )
-
-    from .multimodal.jpeg import _stdlib_jpeg_codec
-    from .multimodal.video import _stdlib_avi_codec
-
-    _, _, _jpeg_enc = _stdlib_jpeg_codec()
-    _, _, _avi_enc = _stdlib_avi_codec()
-
-    docs = fan_out(
-        load_fixture(spark, sf_dir, "documents").filter(
-            F.col("doc_id") % 11 == 5
-        ),
-        "doc_id",
-    )
-    n_docs = docs.count()
-    media = docs.select("doc_id", "text").mapInPandas(
-        _build, "doc_id long, payload binary"
-    )
-    # the signature frame feeds the count AND the pair self-join: eager
-    # checkpoint so encode+walk+decode+hash runs exactly once
-    sigs = video_frame_dhash(media).localCheckpoint()
-    n_videos = sigs.select("video_id").distinct().count()
-    pairs = video_near_dup_pairs(sigs, max_hamming=4, min_match_frac=0.8)
-    row = pairs.agg(
-        F.count(F.lit(1)).alias("n_pairs"),
-        F.min(
-            (F.col("video_a") / 10).cast("long")
-            == (F.col("video_b") / 10).cast("long")
-        ).alias("within"),
-        F.min(F.col("match_frac") == 1.0).alias("full"),
-    ).first()
-    return spark.createDataFrame(
-        [
-            (
-                n_videos,
-                row["n_pairs"],
-                bool(row["within"]) if row["within"] is not None else False,
-                bool(row["full"]) if row["full"] is not None else False,
-            )
-        ],
-        "n_videos long, n_pairs long, pairs_within_family boolean, "
-        "full_overlap boolean",
-    )
-
-
-def _family_media_builder(members):
-    """``mapInPandas`` closure for the planted 3-member media families:
-    ``(doc_id, text)`` -> ``(doc_id*10 + k, payload)`` for each family
-    member ``k``. ``members`` is a fixtures.py factory PRODUCT, so the
-    closure ships self-contained to bare workers (the pickle house
-    rule)."""
-
-    def _build(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            ids, payloads = [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                for k, payload in enumerate(members(text)):
-                    ids.append(doc_id * 10 + k)
-                    payloads.append(payload)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "payload": pd.Series(payloads, dtype="object"),
-                }
-            )
-
-    return _build
-
-
-def _family_pair_outcome(fps, *, sig_col, n_docs, max_hamming=4):
-    """Shared verdict aggregate for every planted 3-member-family media
-    gate: run the block-LSH pair stage over the (already checkpointed)
-    signature frame and reduce to the 4-tuple the oracles predict —
-    ``(n_items, n_pairs, pairs_within_family, families_fully_paired)``
-    with family = id div 10. Hoisted r11 from four near-identical gate
-    bodies when the dHash/DCT and raw/normalized-audio gate pairs were
-    merged (registry-headroom work, r10 verdict #1)."""
-    from .multimodal.phash import hamming_near_pairs
-
-    n_items = fps.count()
-    fam = hamming_near_pairs(
-        fps, sig_col=sig_col, max_hamming=max_hamming
-    ).select(
-        (F.col("id_a") / 10).cast("long").alias("fam_a"),
-        (F.col("id_b") / 10).cast("long").alias("fam_b"),
-    )
-    per_fam = fam.groupBy("fam_a").agg(
-        F.count(F.lit(1)).alias("cnt"),
-        F.min(F.col("fam_a") == F.col("fam_b")).alias("within"),
-    )
-    row = per_fam.agg(
-        F.sum("cnt").alias("n_pairs"),
-        F.min("within").alias("within"),
-        (
-            F.min((F.col("cnt") == 3) & F.col("within"))
-            & (F.count(F.lit(1)) == F.lit(n_docs))
-        ).alias("fully"),
-    ).first()
-    return n_items, row["n_pairs"], row["within"], row["fully"]
-
-
-@register(
-    "image_phash_multi_near_dups",
-    """
-SELECT 'dct' AS variant,
-       COUNT(*) * 3 AS n_images,
-       COUNT(*) * 3 AS n_pairs,
-       true AS pairs_within_family,
-       true AS families_fully_paired
-FROM documents
-WHERE doc_id % 7 = 3
-UNION ALL
-SELECT 'dhash' AS variant,
-       COUNT(*) * 3 AS n_images,
-       COUNT(*) * 3 AS n_pairs,
-       true AS pairs_within_family,
-       true AS families_fully_paired
-FROM documents
-WHERE doc_id % 5 = 0
-""",
-)
-def q_image_phash_multi_near_dups(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """IMAGE near-dup through BOTH perceptual-hash kernels in ONE gate
-    — the r10 verdict's registry-headroom merge of
-    ``image_phash_near_dups`` (r06) + ``image_phash_dct_near_dups``
-    (r07); every assertion of both retired gates survives as one
-    variant row here, and both kernels still ride the SAME
-    hamming_near_pairs block-LSH.
-
-    Variant 'dhash' (multimodal/phash.py image_dhash — decode -> luma
-    -> 9x8 gradient-sign hash): every 5th document seeds a 3-member
-    family (72x64 block-grid PNG / baseline JPEG q90 / GIF of the 2x
-    nearest upscale; fixtures.dhash_family_members) — byte-different,
-    pixel-similar, with adjacent blocks >= 32 luma apart so every
-    gradient sign survives codec noise.
-
-    Variant 'dct' (image_phash_dct — luma -> 32x32 area-average ->
-    orthonormal 2-D DCT -> 63 median-sign bits): every 7th document
-    seeds a family EXACT BY ARITHMETIC (gray PNG / GIF palette
-    re-encode of identical pixels / PNG of the 2x nearest upscale,
-    which area-averages back to the same raster;
-    fixtures.dct_family_members).
-
-    The oracle PREDICTS both outcomes from first principles: 3n images
-    hash per variant (a quarantine shrinks the count), the verified
-    pair set is exactly the 3 within-family pairs per family, none
-    cross-family. Hash stages are map-only Arrow; the pair stage is
-    the 64k-bucket block equi-join + bit_count verify — never
-    all-pairs. JPEG robustness of the DCT kernel (not provable, only
-    measurable) stays pinned empirically in tests/test_phash.py."""
-    from .fixtures import dct_family_members, dhash_family_members
-    from .multimodal.phash import image_dhash, image_phash_dct
-
-    rows = []
-    for variant, mod, rem, members, hash_fn, sig_col in (
-        ("dhash", 5, 0, dhash_family_members(), image_dhash, "dhash"),
-        ("dct", 7, 3, dct_family_members(), image_phash_dct, "phash"),
-    ):
-        docs = fan_out(
-            load_fixture(spark, sf_dir, "documents").filter(
-                F.col("doc_id") % mod == rem
-            ),
-            "doc_id",
-        )
-        n_docs = docs.count()
-        media = docs.select("doc_id", "text").mapInPandas(
-            _family_media_builder(members), "doc_id long, payload binary"
-        )
-        # the hash frame feeds the count AND the LSH self-join: eager
-        # checkpoint so the pure-Python decode + hash runs exactly once
-        fps = hash_fn(media).localCheckpoint()
-        rows.append(
-            (variant,)
-            + _family_pair_outcome(
-                fps, sig_col=sig_col, n_docs=n_docs, max_hamming=4
-            )
-        )
-    return spark.createDataFrame(
-        rows,
-        "variant string, n_images long, n_pairs long, "
-        "pairs_within_family boolean, families_fully_paired boolean",
     )
 
 
@@ -828,198 +552,6 @@ def q_c4_line_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     return c4_line_quality(docs.select("doc_id", page.alias("text")))
-
-
-@register(
-    "media_pair_bucket_audit",
-    """
-WITH sigs AS (
-    SELECT DISTINCT doc_id,
-           CAST(('0x' || substr(md5(text), 1, 15)) AS BIGINT) AS sig
-    FROM documents WHERE doc_id % 5 = 3
-), blocks AS (
-    SELECT 0 AS block_idx, (sig % 4096) AS block_val FROM sigs
-    UNION ALL SELECT 1, (sig // 4096) % 4096 FROM sigs
-    UNION ALL SELECT 2, (sig // 16777216) % 4096 FROM sigs
-    UNION ALL SELECT 3, (sig // 68719476736) % 4096 FROM sigs
-    UNION ALL SELECT 4, (sig // 281474976710656) % 65536 FROM sigs
-), buckets AS (
-    SELECT block_idx, block_val, COUNT(*) AS sz
-    FROM blocks GROUP BY block_idx, block_val
-)
-SELECT (SELECT COUNT(*) FROM sigs) AS n_items,
-       COUNT(*) AS n_buckets,
-       MAX(sz) AS max_bucket,
-       ROUND(AVG(sz), 6) AS avg_bucket,
-       CAST(SUM(sz * (sz - 1) // 2) AS BIGINT) AS candidate_pairs,
-       true AS stats_match_join
-FROM buckets
-""",
-)
-def q_media_pair_bucket_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The block-LSH PAIR-JOIN COST AUDIT, oracle-gated (r10 — the
-    instrument the 100 TB media-dedup posture stands on): before a
-    large pair job, ``block_bucket_stats`` prices the candidate join
-    from one 8-byte-keyed aggregation. This gate verifies BOTH halves
-    of that claim: (a) the bucket accounting itself against a full SQL
-    replay of the 5-block split (12/12/12/12/16 bits — remainder
-    widens the LAST block, the ``_block_rows`` convention) over a
-    portable 60-bit md5 signature, and (b) the accounting IDENTITY —
-    ``candidate_pairs`` must equal the ACTUAL ball-0 candidate join's
-    row count, computed live by running ``_block_candidates`` on the
-    same signatures (``stats_match_join`` flips to false if the stats
-    query and the join it prices ever drift apart; measured exact at
-    150k images and 200k audio windows, bench.py r10 notes). The md5
-    signature is the repo's established engine-portable hash
-    (operators/dedup.py:61 pattern), so the oracle replays bucket
-    sizes bit-for-bit."""
-    from .multimodal.phash import _block_candidates, block_bucket_stats
-
-    sigs = fan_out(
-        load_fixture(spark, sf_dir, "documents").filter(
-            F.col("doc_id") % 5 == 3
-        ),
-        "doc_id",
-    ).select(
-        "doc_id",
-        F.conv(F.substring(F.md5("text"), 1, 15), 16, 10)
-        .cast("bigint")
-        .alias("sig"),
-    )
-    row = block_bucket_stats(
-        sigs, id_col="doc_id", sig_col="sig", max_hamming=4
-    ).first()
-    joined = _block_candidates(
-        sigs.select(F.col("doc_id").alias("id"), "sig"),
-        n_blocks=5,
-        n_bits=64,
-    ).count()
-    return spark.createDataFrame(
-        [
-            (
-                row["n_items"],
-                row["n_buckets"],
-                row["max_bucket"],
-                float(row["avg_bucket"]),
-                row["candidate_pairs"],
-                int(row["candidate_pairs"]) == joined,
-            )
-        ],
-        "n_items long, n_buckets long, max_bucket long, "
-        "avg_bucket double, candidate_pairs long, "
-        "stats_match_join boolean",
-    )
-
-
-@register(
-    "image_tile_multi_crop_near_dups",
-    """
-SELECT 'aligned' AS variant,
-       COUNT(*) * 3 AS n_images,
-       COUNT(*) * 3 AS n_pairs,
-       true AS pairs_within_family,
-       true AS families_fully_paired
-FROM documents
-WHERE doc_id % 13 = 6
-UNION ALL
-SELECT 'phase' AS variant,
-       COUNT(*) * 3 AS n_images,
-       COUNT(*) * 3 AS n_pairs,
-       true AS pairs_within_family,
-       true AS families_fully_paired
-FROM documents
-WHERE doc_id % 15 = 8
-""",
-)
-def q_image_tile_multi_crop_near_dups(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """CROP-tolerant image near-dup through BOTH tile-grid
-    configurations in ONE gate — the r12 registry-headroom merge of
-    ``image_tile_crop_near_dups`` (r08) + ``image_tile_phase_crop_
-    near_dups`` (r09): every assertion of both retired gates survives
-    as one variant row; same kernel (image_tile_dhash), same pair
-    machinery (image_tile_near_dup_pairs), differing ONLY in
-    phase_offsets and the planted crop offset. RETIREMENT RATIONALE:
-    the pair always moved together (one tile kernel feeds both), the
-    merge pins single-phase AND two-phase recovery under one hash per
-    round, and it funds the r12 growth per the
-    pair-growth-with-retirements rule; the arbitrary-offset case both
-    tiers degrade on is now covered by the row-CDC gate
-    (image_cdc_crop_near_dups), completing the crop lattice:
-    aligned / half-phase / ANY offset.
-
-    Variant 'aligned': every 13th document seeds the TILE-ALIGNED
-    3-member family (fixtures.tile_crop_family_members — 96x96 crop at
-    (32, 32); surviving tiles byte-identical BY ARITHMETIC), single
-    (0, 0) phase.
-
-    Variant 'phase': every 15th document seeds the HALF-tile family
-    (crop at (16, 16) — off the base grid, exactly on the tile/2
-    phase), hashed on TWO interleaved grids (phase_offsets=((0, 0),
-    (16, 16))): the crop's phase-0 tiles are byte-identical to the
-    original's phase-16 tiles and vice versa — exactly 2x hash cost,
-    pair machinery unchanged.
-
-    The oracle PREDICTS both outcomes: 3n images per variant, exactly
-    3 within-family pairs per family, none cross-family. Off-BOTH-
-    phases crops remain pinned as this tier's honest degradation in
-    tests/test_phash.py — and recovered by the row-CDC tier."""
-    from .fixtures import tile_crop_family_members
-    from .multimodal.phash import (
-        image_tile_dhash,
-        image_tile_near_dup_pairs,
-    )
-
-    rows = []
-    for variant, mod, rem, members, phases in (
-        ("aligned", 13, 6, tile_crop_family_members(), ((0, 0),)),
-        ("phase", 15, 8, tile_crop_family_members(16, 16),
-         ((0, 0), (16, 16))),
-    ):
-        docs = fan_out(
-            load_fixture(spark, sf_dir, "documents").filter(
-                F.col("doc_id") % mod == rem
-            ),
-            "doc_id",
-        )
-        n_docs = docs.count()
-        media = docs.select("doc_id", "text").mapInPandas(
-            _family_media_builder(members), "doc_id long, payload binary"
-        )
-        # the tile frame feeds the count AND the overlap self-join:
-        # eager checkpoint so decode + 16-25 dHashes per image run once
-        sigs = image_tile_dhash(
-            media, phase_offsets=phases
-        ).localCheckpoint()
-        n_images = sigs.select("doc_id").distinct().count()
-        fam = image_tile_near_dup_pairs(
-            sigs, max_hamming=4, min_match_frac=0.8
-        ).select(
-            (F.col("id_a") / 10).cast("long").alias("fam_a"),
-            (F.col("id_b") / 10).cast("long").alias("fam_b"),
-        )
-        per_fam = fam.groupBy("fam_a").agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.min(F.col("fam_a") == F.col("fam_b")).alias("within"),
-        )
-        row = per_fam.agg(
-            F.sum("cnt").alias("n_pairs"),
-            F.min("within").alias("within"),
-            (
-                F.min((F.col("cnt") == 3) & F.col("within"))
-                & (F.count(F.lit(1)) == F.lit(n_docs))
-            ).alias("fully"),
-        ).first()
-        rows.append(
-            (variant, n_images, row["n_pairs"], row["within"],
-             row["fully"])
-        )
-    return spark.createDataFrame(
-        rows,
-        "variant string, n_images long, n_pairs long, "
-        "pairs_within_family boolean, families_fully_paired boolean",
-    )
 
 
 @register(

@@ -1,7 +1,7 @@
 """Streaming-dedup + late-pipeline gate tier: BPE train/apply,
 domain blocklist, KMV/histogram rollups, corpus-prep pipeline,
-file roundtrips, and the r12 gates (token budget, image row-CDC,
-mirror-canonical).
+file roundtrips, token budget selection, and the streaming
+pct-change gates.
 
 One CONTIGUOUS slice of the registry in REGISTRATION ORDER —
 the driver-ledger contract: ``harness.py`` imports the tier
@@ -28,10 +28,6 @@ from .harness import (  # noqa: F401  (shared gate surface)
 from .harness_corpus import (  # noqa: F401
     _GRAMS_SQL,
     _TOKS_SQL,
-)
-from .harness_media import (  # noqa: F401
-    _family_media_builder,
-    _family_pair_outcome,
 )
 
 
@@ -872,162 +868,6 @@ def q_token_budget_corpus_select(
     return picked
 
 
-def q_image_cdc_crop_near_dups(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """[Retired r15 as a standalone gate — runs VERBATIM as the 'image'
-    variant row of media_cdc_crop_near_dups below.]
-    ARBITRARY-OFFSET image crop near-dup via per-row CONTENT-DEFINED
-    segmentation (multimodal/phash.py image_row_cdc_hashes ∘ the shared
-    tile set-overlap machinery at max_hamming=0) — closes the r11
-    coverage gap (What's missing #2): the tile tiers recover only crops
-    congruent to 0 or tile/2 (mod 32), and this fixture's crop offset
-    (17, 23) is deliberately OFF both phases in BOTH axes — exactly the
-    case the phase-grid gate pins as honest degradation (the closing
-    pytest re-pins it on these members), while row-CDC boundaries are
-    chosen by a Gear rolling hash of each ROW's content, so every crop
-    row (a contiguous substring of an original row) re-synchronizes at
-    its first full-context anchor and its interior segments hash
-    identically. Every 16th document seeds a 3-member family: (a) a
-    128x128 grayscale PNG of md5(text)-stream pixels, (b) a PNG of its
-    96x96 crop at offset (17, 23), (c) a GIF palette re-encode of the
-    same crop (identical luma → identical segments BY ARITHMETIC).
-    Measured overlap across 40 lattice seeds: worst 0.80 crop↔full,
-    1.0 crop↔crop, 0.0 cross-family — the 0.5 gate threshold sits far
-    from both sides. The oracle PREDICTS the outcome: 3n images with
-    >= 1 segment (a quarantine shrinks the count), exactly 3
-    within-family pairs per family, none cross-family. The signature
-    stage is map-only Arrow; the pair stage is the ONE shared
-    block-bounded equi-join."""
-    from .fixtures import tile_crop_family_members
-    from .multimodal.phash import (
-        image_row_cdc_hashes,
-        image_tile_near_dup_pairs,
-    )
-
-    docs = fan_out(
-        load_fixture(spark, sf_dir, "documents").filter(
-            F.col("doc_id") % 16 == 7
-        ),
-        "doc_id",
-    )
-    n_docs = docs.count()
-    media = docs.select("doc_id", "text").mapInPandas(
-        _family_media_builder(tile_crop_family_members(17, 23)),
-        "doc_id long, payload binary",
-    )
-    # the segment frame feeds the count AND the overlap self-join:
-    # eager checkpoint so decode + ~1.6k md5s per image run exactly once
-    sigs = image_row_cdc_hashes(media).localCheckpoint()
-    n_images = sigs.select("doc_id").distinct().count()
-    fam = image_tile_near_dup_pairs(
-        sigs, sig_col="sig", max_hamming=0, min_match_frac=0.5
-    ).select(
-        (F.col("id_a") / 10).cast("long").alias("fam_a"),
-        (F.col("id_b") / 10).cast("long").alias("fam_b"),
-    )
-    per_fam = fam.groupBy("fam_a").agg(
-        F.count(F.lit(1)).alias("cnt"),
-        F.min(F.col("fam_a") == F.col("fam_b")).alias("within"),
-    )
-    row = per_fam.agg(
-        F.sum("cnt").alias("n_pairs"),
-        F.min("within").alias("pairs_within_family"),
-        (
-            F.min((F.col("cnt") == 3) & F.col("within"))
-            & (F.count(F.lit(1)) == F.lit(n_docs))
-        ).alias("families_fully_paired"),
-    ).first()
-    return spark.createDataFrame(
-        [(n_images, row["n_pairs"], row["pairs_within_family"],
-          row["families_fully_paired"])],
-        "n_images long, n_pairs long, pairs_within_family boolean, "
-        "families_fully_paired boolean",
-    )
-
-
-@register(
-    "image_mirror_canonical_near_dups",
-    """
-SELECT 'canonical' AS variant,
-       COUNT(*) * 3 AS n_images,
-       COUNT(*) * 3 AS n_pairs,
-       true AS pairs_within_family,
-       true AS families_fully_paired
-FROM documents
-WHERE doc_id % 18 = 4
-UNION ALL
-SELECT 'plain' AS variant,
-       COUNT(*) * 3 AS n_images,
-       COUNT(*) AS n_pairs,
-       true AS pairs_within_family,
-       false AS families_fully_paired
-FROM documents
-WHERE doc_id % 18 = 4
-""",
-)
-def q_image_mirror_canonical_near_dups(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """MIRROR-canonical image signatures HARD GATE
-    (multimodal/phash.py _mirror_canonical_kernel via
-    image_dhash(mirror_canonical=True)) — promotes the r11
-    pytest-only tier to the driver ledger (r11 verdict #4). Every
-    18th document seeds a 3-member family (fixtures.
-    mirror_family_members): (a) a 32x32 grayscale PNG of
-    md5(text)-stream pixels, (b) a PNG of its LEFT-RIGHT mirror, (c) a
-    GIF palette re-encode of the mirror (identical flipped luma). Both
-    variants run the SAME families through the SAME max_hamming=0
-    exact pair machinery (the full-width-block path of the pigeonhole
-    join): variant 'canonical' hashes with mirror_canonical=True —
-    min(hash, flipped-hash) collapses all three members BY ARITHMETIC
-    (flip of flip is the original buffer), 3 pairs per family, fully
-    paired; variant 'plain' hashes with the default kernel and finds
-    ONLY the (b)↔(c) identical-luma pair — 1 per family, fully_paired
-    FALSE — pinning the exact gap the option closes in the ledger
-    itself (the closing-test pattern, driver-run). DIHEDRAL residual,
-    decided (r11 verdict #4): vertical flips and 90° rotations stay
-    PERMANENTLY out of scope of this tier — rotations change the
-    aspect ratio and the 8-transform canonical min would 8x the hash
-    bill for a transform far rarer in crawl data than the mirror;
-    tests/test_phash.py pins vertical-flip divergence as the honest
-    boundary. Near-radius instability of min() is documented in the
-    kernel docstring and pinned in tests — canonical signatures are
-    an exact-match tier by contract."""
-    from .fixtures import mirror_family_members
-    from .multimodal.phash import image_dhash
-
-    docs = fan_out(
-        load_fixture(spark, sf_dir, "documents").filter(
-            F.col("doc_id") % 18 == 4
-        ),
-        "doc_id",
-    )
-    n_docs = docs.count()
-    media = docs.select("doc_id", "text").mapInPandas(
-        _family_media_builder(mirror_family_members()),
-        "doc_id long, payload binary",
-    )
-    rows = []
-    for variant, canonical in (("canonical", True), ("plain", False)):
-        # the hash frame feeds the count AND the exact self-join:
-        # eager checkpoint so decode + (2x) dhash runs exactly once
-        fps = image_dhash(
-            media, mirror_canonical=canonical
-        ).localCheckpoint()
-        rows.append(
-            (variant,)
-            + _family_pair_outcome(
-                fps, sig_col="dhash", n_docs=n_docs, max_hamming=0
-            )
-        )
-    return spark.createDataFrame(
-        rows,
-        "variant string, n_images long, n_pairs long, "
-        "pairs_within_family boolean, families_fully_paired boolean",
-    )
-
-
 @register(
     "doc_duplicate_span_removal",
     """
@@ -1123,143 +963,6 @@ def q_doc_duplicate_span_removal(
     return duplicate_span_removal(pages, span_tokens=8, min_docs=2)
 
 
-def q_video_cdc_crop_near_dups(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """[Retired r15 as a standalone gate — runs VERBATIM as the 'video'
-    variant row of media_cdc_crop_near_dups below.]
-    CROP-ROBUST video near-dup via per-frame row-CDC
-    (multimodal/phash.py video_frame_row_cdc ∘ video_near_dup_pairs at
-    max_hamming=0) — closes the r12 verdict's What's-missing #2: the
-    whole-frame tier (video_near_dups gate) collapses trims and
-    re-encodes, but a CROPPED video shares no whole-frame hash (every
-    frame's dHash moves — the closing pytest re-pins that miss on
-    these exact members), while each crop frame's interior row
-    segments are byte-identical, so the set-overlap gate recovers the
-    pair. Every 19th document seeds a 2-member family
-    (fixtures.mjpeg_cdc_crop_family_members): (a) a 3-frame 96x64
-    MJPEG/AVI whose every 8x8 block is a q90 roundtrip FIXED POINT
-    (md5-noise iterated through encode∘decode — JPEG is per-MCU, so
-    the full frame decodes to exactly its own pixels), (b) the same
-    footage cropped to 80x32 at offset (8, 24) — OFF both 32-px tile
-    phases in both axes, ON the MCU grid, hence pixel-exact by
-    construction. Measured across 12 seeds: worst within-family
-    overlap 0.78, cross-family 0.0 (threshold 0.5). Off-MCU crops of
-    lossy video are DECIDED out of scope (quantization divergence is
-    an information boundary of the codec — rationale pinned in
-    video_cdc_crop_near_dup_pairs). The oracle PREDICTS the outcome:
-    2n videos with >= 1 segment, exactly the n planted pairs, all
-    within family."""
-    from .fixtures import mjpeg_cdc_crop_family_members
-    from .multimodal.phash import (
-        video_frame_row_cdc,
-        video_near_dup_pairs,
-    )
-
-    docs = fan_out(
-        load_fixture(spark, sf_dir, "documents").filter(
-            F.col("doc_id") % 19 == 8
-        ),
-        "doc_id",
-    )
-    n_docs = docs.count()
-    media = docs.select("doc_id", "text").mapInPandas(
-        _family_media_builder(mjpeg_cdc_crop_family_members()),
-        "doc_id long, payload binary",
-    )
-    # the segment frame feeds the count AND the overlap self-join:
-    # eager checkpoint so walk + decode + per-row CDC runs exactly once
-    sigs = video_frame_row_cdc(media).localCheckpoint()
-    n_videos = sigs.select("video_id").distinct().count()
-    fam = video_near_dup_pairs(
-        sigs, sig_col="sig", max_hamming=0, min_match_frac=0.5
-    ).select(
-        (F.col("video_a") / 10).cast("long").alias("fam_a"),
-        (F.col("video_b") / 10).cast("long").alias("fam_b"),
-    )
-    per_fam = fam.groupBy("fam_a").agg(
-        F.count(F.lit(1)).alias("cnt"),
-        F.min(F.col("fam_a") == F.col("fam_b")).alias("within"),
-    )
-    row = per_fam.agg(
-        F.sum("cnt").alias("n_pairs"),
-        F.min("within").alias("pairs_within_family"),
-        (
-            F.min((F.col("cnt") == 1) & F.col("within"))
-            & (F.count(F.lit(1)) == F.lit(n_docs))
-        ).alias("families_fully_paired"),
-    ).first()
-    return spark.createDataFrame(
-        [(n_videos, row["n_pairs"], row["pairs_within_family"],
-          row["families_fully_paired"])],
-        "n_videos long, n_pairs long, pairs_within_family boolean, "
-        "families_fully_paired boolean",
-    )
-
-
-@register(
-    "media_cdc_crop_near_dups",
-    """
-SELECT 'image' AS variant,
-       COUNT(*) * 3 AS n_media,
-       COUNT(*) * 3 AS n_pairs,
-       true AS pairs_within_family,
-       true AS families_fully_paired
-FROM documents
-WHERE doc_id % 16 = 7
-UNION ALL
-SELECT 'video' AS variant,
-       COUNT(*) * 2 AS n_media,
-       COUNT(*) AS n_pairs,
-       true AS pairs_within_family,
-       true AS families_fully_paired
-FROM documents
-WHERE doc_id % 19 = 8
-""",
-)
-def q_media_cdc_crop_near_dups(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """BOTH content-defined-chunking crop near-dup tiers in ONE
-    multi-variant gate — round-15 merge of `image_cdc_crop_near_dups`
-    (r12 cohort) + `video_cdc_crop_near_dups` (r13 cohort), the
-    pre-committed r15 rotation merge (the registry headroom rule:
-    growth paired with retirements; the streaming_pct_change_multi
-    precedent). RETIREMENT RATIONALE:
-    the two gates exercised the SAME per-row Gear-hash CDC kernel
-    (multimodal/phash.py `_row_cdc_kernel`, reached via
-    image_row_cdc_hashes and video_frame_row_cdc) composed with the
-    SAME block-bounded set-overlap pair machinery at max_hamming=0 /
-    min_match_frac=0.5, over fixtures built by the same
-    family-builder plumbing; they were always green together (r11–r14
-    pytests, r12/r13 driver rows). Each retained audit is UNCHANGED —
-    the retired builders run VERBATIM as this gate's variant rows
-    (q_image_cdc_crop_near_dups / q_video_cdc_crop_near_dups above,
-    fixtures and per-variant oracles verbatim in the UNION), so a
-    drift in either pipeline still flips the hash: variant 'image'
-    pins arbitrary-offset PNG/GIF crop recovery at the (17, 23)
-    off-phase offset, variant 'video' pins MCU-aligned MJPEG crop
-    recovery at (8, 24) with its 2-member families. Audit columns
-    ride a common (variant, n_media, n_pairs, pairs_within_family,
-    families_fully_paired) projection. Their pytest coverage
-    (test_phash.py, test_video.py) is untouched."""
-    img = q_image_cdc_crop_near_dups(spark, sf_dir).select(
-        F.lit("image").alias("variant"),
-        F.col("n_images").alias("n_media"),
-        "n_pairs",
-        "pairs_within_family",
-        "families_fully_paired",
-    )
-    vid = q_video_cdc_crop_near_dups(spark, sf_dir).select(
-        F.lit("video").alias("variant"),
-        F.col("n_videos").alias("n_media"),
-        "n_pairs",
-        "pairs_within_family",
-        "families_fully_paired",
-    )
-    return img.unionByName(vid)
-
-
 @register(
     "streaming_pct_change_multi",
     """
@@ -1288,8 +991,8 @@ def q_streaming_pct_change_multi(
     """BOTH stateful-streaming pct-change flagships in ONE multi-variant
     gate — round-13 merge of `streaming_pct_change_vol` +
     `streaming_pct_change_reordered` (the registry headroom rule: growth
-    paired with retirements; the dim_snapshots / tile-multi-crop
-    precedents). RETIREMENT RATIONALE: the two gates exercised the same
+    paired with retirements; the dim_snapshots precedent). RETIREMENT
+    RATIONALE: the two gates exercised the same
     stateful operator family (streaming/stateful.py — one
     applyInPandasWithState pct-change kernel, in in-order and
     reorder-buffer form) over the same 3-micro-batch file replay

@@ -175,7 +175,7 @@ def _banded_keys(bands: int, hash_mode: str) -> Column:
 
 
 def lsh_candidate_pairs(
-    signatures: DataFrame, *, bands: int = 8, via: str = "join", hash_mode: str = "xxhash64"
+    signatures: DataFrame, *, bands: int = 8, hash_mode: str = "xxhash64"
 ) -> DataFrame:
     """Distinct (id_a, id_b) sharing ≥1 LSH band bucket (id_a < id_b).
 
@@ -184,47 +184,11 @@ def lsh_candidate_pairs(
     n². Banding trades recall/precision via rows-per-band =
     num_hashes/bands.
 
-    ``via="join"`` (default): sort-merge self-join per bucket — never
-    materializes a bucket membership list, so pathological buckets (e.g.
+    Pairs come from a sort-merge self-join per bucket, which never
+    materializes a bucket membership list: pathological buckets (e.g.
     masses of identical empty documents) degrade into AQE skew-split
-    territory instead of an aggregation-buffer blowup. Measured equal to
-    the group form at sf0.1 (signatures are cheap post explode+agg
-    rewrite, so computing them per side costs little).
-    ``via="group"``: ONE shuffle — group each bucket, emit its id pairs
-    with an in-bucket nested transform; preferable when signature
-    computation dominates (very long documents) AND banding keeps buckets
-    provably small. Both produce identical candidates (tested).
+    territory instead of an aggregation-buffer blowup.
     """
-    if via == "group":
-        banded = signatures.select(
-            "id",
-            F.posexplode(_banded_keys(bands, hash_mode)).alias(
-                "band_idx", "band_hash"
-            ),
-        )
-        buckets = (
-            banded.groupBy("band_idx", "band_hash")
-            .agg(F.array_sort(F.collect_list("id")).alias("ids"))
-            .filter(F.size("ids") > 1)
-        )
-        pairs = buckets.select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        F.col("ids"),
-                        lambda x, i: F.transform(
-                            F.slice(
-                                F.col("ids"), i + 2, F.size("ids") - i - 1
-                            ),
-                            lambda y: F.struct(
-                                x.alias("id_a"), y.alias("id_b")
-                            ),
-                        ),
-                    )
-                )
-            ).alias("p")
-        )
-        return pairs.select("p.id_a", "p.id_b").distinct()
     # rows-per-band derived inside the expression (slice is 1-based)
     banded = signatures.select(
         "id",
@@ -400,6 +364,67 @@ def simhash_signatures(
     return votes.select("id", sig.alias("simhash"))
 
 
+def _block_join_pairs(
+    sigs: DataFrame, *, max_hamming: int, n_bits: int, n_blocks: int
+) -> DataFrame:
+    """Block-LSH pairs over an ``(id, simhash)`` frame: ``(id_a, id_b,
+    hamming)`` with ``id_a < id_b`` and ``hamming <= max_hamming``.
+
+    Each signature explodes into ``n_blocks`` ``(block_idx, block_val)``
+    rows; two ``n_bits`` signatures within Hamming ``n_blocks - 1`` must
+    agree on at least one block (pigeonhole), so the equi-join on those
+    rows is an EXACT candidate generator for ``max_hamming <= n_blocks -
+    1``. Candidates verify with ``bit_count(xor)``; a pair colliding in
+    several blocks appears once per collision, hence the ``distinct``.
+    """
+    width = n_bits // n_blocks
+    shifts = [width * j for j in range(n_blocks)]
+    # remainder bits (n_bits not divisible by n_blocks) widen the LAST
+    # block, which only tightens buckets
+    widths = [width] * (n_blocks - 1) + [n_bits - width * (n_blocks - 1)]
+
+    def _block(sh: int, w: int) -> Column:
+        # unsigned shift + mask read the signed-long signature as 64
+        # unsigned bits: every block value is its w bits, never negative
+        shifted = F.shiftrightunsigned(F.col("sig"), sh)
+        if w >= 64:
+            # full-width block (n_blocks=1): the mask literal (1<<64)-1
+            # overflows a Java long and the AND would be the identity
+            return shifted
+        return shifted.bitwiseAND(F.lit((1 << w) - 1))
+
+    # `sig` must be a real column before posexplode references it (a
+    # lateral alias inside a generator fails at resolution time)
+    items = sigs.select("id", F.col("simhash").alias("sig"))
+    blocks = items.select(
+        "*",
+        F.posexplode(
+            F.array(*[_block(sh, w) for sh, w in zip(shifts, widths)])
+        ).alias("block_idx", "block_val"),
+    )
+    # the two join sides stay PLAN-IDENTICAL: Spark reuses the shuffled
+    # block exchange (ReusedExchange) only for byte-equal subplans, and
+    # without the reuse the signature aggregation runs once per side
+    a, b = blocks.alias("a"), blocks.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.block_idx") == F.col("b.block_idx"))
+            & (F.col("a.block_val") == F.col("b.block_val"))
+            & (F.col("a.id") < F.col("b.id")),
+        )
+        .select(
+            F.col("a.id").alias("id_a"),
+            F.col("b.id").alias("id_b"),
+            F.bit_count(F.col("a.sig").bitwiseXOR(F.col("b.sig"))).alias(
+                "hamming"
+            ),
+        )
+        .distinct()
+        .filter(F.col("hamming") <= max_hamming)
+    )
+
+
 def simhash_near_pairs(
     docs: DataFrame,
     *,
@@ -408,7 +433,6 @@ def simhash_near_pairs(
     max_hamming: int = 8,
     hash_mode: str = "xxhash64",
     n_blocks: int = 4,
-    via: str = "join",
 ) -> DataFrame:
     """Near-dup pairs by SimHash: block LSH + Hamming verify.
 
@@ -423,92 +447,15 @@ def simhash_near_pairs(
     bucket space (2^width) and fattens the self-join. The default 4 blocks
     (16-bit at 64-bit width, 15-bit portable) keeps 32k-64k buckets —
     the classic Manku/Jain/Sarma web-dedup configuration.
-
-    ``via="join"`` (default): sort-merge self-join per block bucket. It
-    evaluates the signature aggregation once per side, but pair emission is
-    pure codegen and AQE skew-split applies — measured 2.4x FASTER than the
-    group form on a dense corpus (50k docs in 10-member near-dup families →
-    3.4M candidate pairs: the group form's in-bucket nested ``transform``
-    pair generation is interpreted and dominates). ``via="group"`` groups
-    each bucket and emits pairs in-bucket, evaluating signatures ONCE —
-    preferable only when signature cost dwarfs pair volume (very long
-    documents, sparse buckets). Both produce identical pairs (tested).
     """
-    n_bits = simhash_bits(hash_mode)
-    width = n_bits // n_blocks
-    mask = (1 << width) - 1
     sigs = simhash_signatures(
         docs, text_col=text_col, id_col=id_col, hash_mode=hash_mode
     )
-    if via == "group":
-        blocks = sigs.select(
-            "id",
-            "simhash",
-            F.posexplode(
-                F.array(
-                    *[
-                        (
-                            F.shiftrightunsigned("simhash", width * j)
-                            .bitwiseAND(F.lit(mask))
-                        )
-                        for j in range(n_blocks)
-                    ]
-                )
-            ).alias("block_idx", "block_val"),
-        )
-        buckets = (
-            blocks.groupBy("block_idx", "block_val")
-            .agg(
-                F.array_sort(
-                    F.collect_list(F.struct("id", "simhash"))
-                ).alias("members")
-            )
-            .filter(F.size("members") > 1)
-        )
-        pairs = buckets.select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        F.col("members"),
-                        lambda x, i: F.transform(
-                            F.slice(
-                                F.col("members"),
-                                i + 2,
-                                F.size("members") - i - 1,
-                            ),
-                            lambda y: F.struct(
-                                x.getField("id").alias("id_a"),
-                                y.getField("id").alias("id_b"),
-                                F.bit_count(
-                                    x.getField("simhash").bitwiseXOR(
-                                        y.getField("simhash")
-                                    )
-                                ).alias("hamming"),
-                            ),
-                        ),
-                    )
-                )
-            ).alias("p")
-        )
-        return (
-            pairs.select("p.id_a", "p.id_b", "p.hamming")
-            .distinct()
-            .filter(F.col("hamming") <= max_hamming)
-        )
-    # the join branch IS the generalized block-LSH pair pipeline — one
-    # live copy (r07 review: this and the image-dHash path had drifted
-    # into near-verbatim twins); allow_heuristic covers the documented
-    # Manku-style max_hamming > n_blocks-1 recall band
-    from ..multimodal.phash import hamming_near_pairs
-
-    return hamming_near_pairs(
+    return _block_join_pairs(
         sigs,
-        id_col="id",
-        sig_col="simhash",
         max_hamming=max_hamming,
-        n_bits=n_bits,
+        n_bits=simhash_bits(hash_mode),
         n_blocks=n_blocks,
-        allow_heuristic=True,
     )
 
 

@@ -146,24 +146,23 @@ def dedup_events(
 def dedup_by_signature(
     sigs: DataFrame,
     *,
-    sig_col: str = "afp",
+    sig_col: str,
     ts: str = "ts",
     watermark: str = "1 hour",
 ) -> DataFrame:
-    """Media dedup-on-ingest: keep one row per content SIGNATURE.
+    """Dedup-on-ingest: keep one row per content SIGNATURE.
 
-    The multimodal twin of :func:`dedup_events` — the key is not a
-    delivery id but a perceptual signature (an image dHash), so
-    byte-DIFFERENT re-encodes of the same content collapse at the
-    stream edge before storage ever pays for them. Streaming frames
-    use ``dropDuplicatesWithinWatermark`` keyed on the signature:
-    per-signature state is EVICTED once the watermark passes, so state
-    is bounded by (watermark horizon x unique-content arrival rate) —
-    re-uploads of years-old content are NOT deduped by this operator
-    (that is the batch near-dup tier's job over the stored table); the
-    stream edge's contract is the redelivery/re-encode window. Batch
-    frames take the plain ``dropDuplicates`` twin for differential
-    testing."""
+    The content-keyed twin of :func:`dedup_events` — the key is not a
+    delivery id but a signature of the payload (e.g. a normalized-text
+    fingerprint), so byte-DIFFERENT redeliveries of the same content
+    collapse at the stream edge before storage ever pays for them.
+    Streaming frames use ``dropDuplicatesWithinWatermark`` keyed on the
+    signature: per-signature state is EVICTED once the watermark passes,
+    so state is bounded by (watermark horizon x unique-content arrival
+    rate) — re-sends of years-old content are NOT deduped by this
+    operator (that is the batch dedup tier's job over the stored table);
+    the stream edge's contract is the redelivery window. Batch frames
+    take the plain ``dropDuplicates`` twin for differential testing."""
     if sigs.isStreaming:
         return sigs.withWatermark(ts, watermark).dropDuplicatesWithinWatermark(
             [sig_col]

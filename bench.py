@@ -132,11 +132,7 @@ best-of-3 x3 protocol: simhash_full corpus_x10 2.64->3.23 in-tier but
 user_funnel_times events_x100 1.17->1.50 in-tier, 1.35-1.57 solo
 (min +15%, inside the +20% rule). In-tier numbers inherit contention
 from the preceding tiers in the same JVM; the solo protocol remains
-the arbiter. DELIBERATE r07 delta to expect in image_dedup: the
-review-found pigeonhole fix (hamming_near_pairs now defaults to
-max_hamming+1 = 5 blocks; the old 4-block default silently missed
-pairs at exactly Hamming 4) adds one block row per image to the LSH
-join — phash_pairs may drift up ~25% for the recall fix.
+the arbiter.
 
 r07 late additions: a markets_x100 section (60M lineitem rows — 10x
 tickers x 10x series depth; OHLCV/drawdown/beta/pair-corr plus the
@@ -157,9 +153,7 @@ headline (11.99 vs 11.98) with four drifts past the rule, each solo
 best-of-3 x3 arbitrated: ohlcv_weekly_bars markets_x10 1.237->1.499
 (solo 1.420-1.773, min +15% — host steady-state shift, unchanged
 plan); edit_dist_dups 1.851->2.223 (solo 2.308-2.615 — consistent
-host shift, unchanged code); phash_pairs 1.319->1.938 (solo 2.211 —
-consistent even solo; phash/dedup code untouched this session, plan
-identical; recorded as the same host cluster, re-measure next round);
+host shift, unchanged code);
 corpus_x100 minhash_full 15.9->19.3 (solo 17.6-18.1, min +11% —
 inside the rule; noise). markets_x100 decade ratios vs markets_x10,
 same-run: 8.9x (ohlcv), 8.2x (drawdown), 8.6x (beta), 6.9x
@@ -167,22 +161,13 @@ same-run: 8.9x (ohlcv), 8.2x (drawdown), 8.6x (beta), 6.9x
 flagship weekly_volatility at x100 runs 7.6 s = 13.9x its sf0.1
 headline point for 100x rows.
 
-r08 arbitrations (both carried flags from r07, re-measured solo
-best-of-3 x3 on a quiet host, load < 1/32):
+r08 arbitration (carried flag from r07, re-measured solo best-of-3
+x3 on a quiet host, load < 1/32):
 
-- phash_pairs (r07 flag: 1.319 -> 1.938 in-tier, 2.211 solo): solo
-  sets 1.838 / 1.870 / 1.926 s. Decomposition: the DELIBERATE r07
-  pigeonhole recall fix (5 blocks vs 4 -> +25% LSH join rows)
-  predicts ~1.65 s over the r06 1.319 baseline; the residual
-  1.838/1.65 = +11% is inside the +20% rule. RESOLVED: ~1.84-1.93 s
-  is the real steady state for the fixed recall contract; the r07
-  solo 2.211 was the flagged host cluster. phash_hash is flat
-  (0.817-0.850 vs 0.838 committed).
 - weekly_volatility markets_x100 (r07 discrepancy: note said 7.6 s,
   committed BENCH_LOCAL said 11.925 s): solo sets 6.452 / 7.053 /
   6.826 s. The NOTE was right and the committed artifact inherited
-  the same r07 host cluster as phash_pairs (both were measured in
-  the same final refresh). RESOLVED: decade ratio = 6.45/0.634 ~=
+  an r07 host cluster. RESOLVED: decade ratio = 6.45/0.634 ~=
   10.2x for 100x rows — in line with the rest of the finance chain
   (8-9x), NOT the 18.8x the bad artifact implied; no plan work
   needed (the window sort scales as advertised).
@@ -206,34 +191,12 @@ r08 full refresh (quiet host, load < 1.1/32 at start): headline total
 inside the noise rule — the largest, star_revenue +44% at 0.730 s and
 pricing_summary +35% at 0.297 s, are sub-second (<50% band), and the
 only multi-second mover is ticker_beta 1.011 -> 0.773 (an improvement).
-The refresh CORROBORATES both r08 arbitrations in-tier:
+The refresh CORROBORATES the r08 arbitration in-tier:
 weekly_volatility markets_x100 = 6.400 s (solo band 6.45-7.05; the old
 11.925 artifact was the r07 host cluster — decade ratio now reads
-10.8x for 100x rows) and phash_pairs = 1.901 s (solo band
-1.838-1.926). First numbers for the NEW tiers: image_dedup
-phash_dct_hash 0.513 / phash_dct_pairs 1.333 (the numpy DCT hash is
-FASTER than the pure-Python dHash loop at 0.918); video_dedup
-video_hash 4.068 / video_pairs 6.722 over ~900 videos x 5 frames —
-dominated by the pure-Python per-frame JPEG decode, the honest cost of
-a stdlib codec tier (a deployment with Pillow/libav takes the C path
-through the same seam).
+10.8x for 100x rows).
 
-r08 one-off image-dedup decade (NOT a per-round tier — measured once,
-solo, quiet host, recorded here so the image family carries the same
-x10 evidence as corpus/ann/events/markets without adding ~3 min to
-every round's bench): the sf0.1 phash fixture recipe over the x10
-corpus = 150,000 images (build 3.8 s outside the timers);
-phash_hash_x10 4.666 s (5.1x for 10x images — map-only, fixed costs
-amortize) and phash_pairs_x10 5.792 s (3.0x for 10x — the sf0.1 pair
-stage is fixed-cost dominated; block-bucket collision growth is
-nowhere near the wall at this scale). Both SUB-linear; the map-only
-hash stage is the shape that holds at 100 TB. Same one-off for the
-VIDEO tier over the x10 corpus (9,092 videos / ~45k frames):
-video_hash_x10 27.106 s (6.7x for 10x videos) and video_pairs_x10
-47.511 s (7.1x — includes re-hashing, the tier's cumulative
-convention). Both sub-linear; the cost is the pure-Python per-frame
-JPEG decode in the map-only stage, which parallelizes embarrassingly.
-corpus_prep (the new E2E quality->dedup->rebalance->split funnel)
+r08 corpus_prep (the new E2E quality->dedup->rebalance->split funnel)
 measured 1.954 s solo at corpus_x10 (50k docs) — comparable to
 curated_corpus (1.215 in-tier), as expected for a map-side funnel
 whose only shuffle is the dedup fingerprint aggregate; joins the
@@ -303,22 +266,6 @@ rollup 0.594 -> 0.574 (~1.0x), weekly_user_kmv_rollup 0.933 -> 1.912
 argument. All three entries now run per-round at BOTH tiers
 (hll_user_rollup joins EVENTS_X10/EVENTS_X100 this round).
 
-r09 NEW-tier first numbers (in-tier): audio_dedup audio_fp_hash
-0.801 s / audio_pairs 1.120 s over ~5k WAV clips (1.7k planted
-3-member re-encode families); tile_dedup tile_hash 2.280 s /
-tile_pairs 5.777 s over ~5k images (full/aligned-crop/GIF families;
-pairs re-hashes, the video tier's cumulative convention). Both
-map-only hash stages + the shared block-LSH pair shape.
-
-r09 late addition: audio_norm_pairs joins the audio tier (the
-normalize-then-fingerprint pipeline behind the audio_norm_near_dups
-cross-rate gate) — solo at 5k clips: 2.371 s vs audio_pairs 1.268,
-i.e. the normalize stage (stdlib decode → exact-mean downmix → PCM16
-re-encode per clip) costs ~1.1 s at this scale, embarrassingly
-parallel map-only work. Postdates the committed r09 BENCH_LOCAL
-refresh — first in-tier numbers land in the driver's BENCH_r09 (the
-contamination_bloom precedent).
-
 r09 SECOND same-day refresh (after the late additions; the committed
 BENCH_LOCAL): headline 13.078 (first run 15.335 — the regime relaxed
 ~15% within the day, underscoring the ratio rule), and the run
@@ -327,21 +274,11 @@ at 3.220 (the first run's 10.2 was a stall), flagship in-tier 8.488
 vs post-hygiene 8.843 — hygiene is NOISE-level here (the first run's
 -8% was too), which cements the decomposition: there is NO
 reclaimable tier state; same-day in-tier == solo == the honest
-number, and cross-day gaps are regimes. audio_norm_pairs first
-in-tier number 1.895 (solo 2.371). One new flag, arbitrated
+number, and cross-day gaps are regimes. One new flag, arbitrated
 immediately: ticker_beta markets_x100 13.089 -> 16.166 (+24%) with
 solo best-of-3 x2 at 12.422 / 13.073 — at the prior level; in-tier
 jitter on a 60M-row entry, not a plan change (operators/markets.py
 untouched this round).
-
-r09 one-off audio/tile x10 decades (same contract as the r08
-image/video one-offs — measured once solo over the x10 corpus so the
-new tiers carry decade evidence without adding ~1 min to every
-round): 50,001 clips — audio_fp_hash 5.107 s (6.4x for 10x clips),
-audio_pairs 5.257 s (4.7x); 50,001 images — tile_hash 13.281 s
-(5.8x), tile_pairs 31.468 s (5.4x, cumulative re-hash convention).
-All four SUB-linear: fixed costs amortize and the pair stages stay
-block-bucket-bounded, the shape that holds at 100 TB.
 
 r10 star_revenue arbitration (the r09 verdict's What's wrong #2 —
 +48%, 0.536 -> 0.794, the one headline entry past the regime
@@ -353,46 +290,6 @@ an unchanged plan (plans/analytics.py untouched r08-r10), not a
 plan change. Steady state ~0.60-0.77 s in the current regime.
 star_revenue also rotates back into the driver window this round so
 the arbitration carries a fresh driver row.
-
-r10 candidate-count decade (the r09 verdict's What's wrong #1 done
-criterion — the media pair join's asymptote is now measured, bounded,
-and escapable): over the x10 image fixture (150,000 images, the r08
-one-off recipe), the default 5-block ball-0 join generates
-45,099,201 candidate rows — EXACTLY block_bucket_stats's
-candidate_pairs prediction, so the audit query prices the join to
-the row before it runs (max bucket 624) — while the exact
-MULTI-INDEX mode (n_blocks=3, block_ball=1) generates 2,592,837 —
-17.4x fewer for the SAME verified pair set (150,720 pairs, equality
-asserted). Walls at this scale favor the default (1.86 vs 2.98 s
-over checkpointed sigs): at 150k items the mode's 22/5 probe-row
-premium costs more than 45M candidates do, and the n^2/2048
-candidate term only dominates past ~10^7 items — which is exactly
-when the 17x cut pays; the crossover is measured, not asserted.
-phash_pairs_mih3 joins the per-round image tier so the mode's wall
-stays tracked (NOTE its bench number includes hashing TWICE: ball-1
-probe plans differ from the index side so an unpersisted sig frame
-re-evaluates — callers at scale checkpoint sigs first, see
-_block_candidates); block_bucket_stats is the pre-flight audit for
-any big media pair job. r10 also adds audio_window_hash/
-audio_window_pairs (the trim-robust windowed-subfingerprint tier at
-~5k clips, 4 windows/clip) and tile_hash_2phase (the misaligned-crop
-two-phase grid — prices the "2x hash bytes" claim against tile_hash;
-measured ~parity walls because the stdlib DECODE, not the tile hash,
-dominates the stage at this scale, and the second phase adds only
-~1.5x tiles on 128px images).
-
-r10 REGRESSION CAUGHT BY THE REFRESH, fixed same-day: the first
-_block_candidates cut renamed the ball-0 probe column
-(block_val -> probe_val), making the self-join's two sides
-plan-DIFFERENT — Spark's ReusedExchange no longer fired and the
-upstream signature stage (decode + FFT/dHash mapInPandas) evaluated
-TWICE, doubling every media pair chain (audio_pairs 1.2 -> 2.0-2.2 s
-solo-reproduced across 3 JVMs, audio_norm_pairs 2.4 -> 4.4-4.9).
-Fix: ball-0 keeps byte-identical join sides; solo post-fix
-audio_pairs 1.49 / audio_norm_pairs 2.69 — back at the r09 level
-times the day's regime factor. Lesson recorded: an
-innocent-looking projection rename on ONE side of a self-join is a
-2x data-plane regression when the shared subtree is expensive.
 
 r10 protocol addition: every refresh records regime_anchor (the
 same-day flagship triplet) in the artifact; tools/regime_delta.py
@@ -413,9 +310,6 @@ this round; plan-shape pins all green):
   below the recorded in-tier value and at the old one; in-tier stall.
 - ann_lsh_query 1.022 -> 1.264 (+26%): solo 1.62/1.38/1.14 — the
   band covers both recorded rounds; warm-index query jitter.
-- tile_dedup tile_pairs 4.105 -> 5.361 (+33%): solo 4.88/6.64/6.06 —
-  recorded mid-band; this cumulative re-hash entry wanders 4.1-6.6
-  across same-day JVMs (r09's own driver run read 5.777).
 - events_x100 weekly_activity_panel 2.927 -> 3.990 (+39%): solo
   4.26/3.61 — at the recorded value; the r09 steady band (3.1-3.7)
   widened ~10% today. weekly_user_kmv_rollup 1.514 -> 2.208 (+48%):
@@ -436,37 +330,10 @@ CORROBORATES every r10 arbitration — minhash_full_portable back at
 4.634 (solo band 4.94-5.29), weekly_activity_panel 3.16 (the r09
 steady state), weekly_user_kmv_rollup 1.604, ticker_max_drawdown
 7.625, ohlcv 15.58, beta 14.37 (all flagged x100 values regressed to
-the mean — in-tier jitter, as arbitrated), audio_pairs 1.255 (the
-ReusedExchange fix holds in-tier). First in-tier numbers for the
+the mean — in-tier jitter, as arbitrated). First in-tier numbers for the
 crawl-prep stages at 50k docs: html_extract 0.443 s,
 paragraph_dedup 0.776 s — both the linear map/window shapes their
-plans pin. One NEW entry moved past the rule between its first two
-samples ever: audio_window_pairs 2.510 -> 3.488 (+33% normalized) —
-treat 2.5-3.5 s as this entry's starting jitter band until a third
-round establishes it (its fixture and plan are unchanged between the
-two runs, so this is the entry's own variance, not drift).
-
-r10 one-off audio-window x10 decade (same contract as the r09
-one-offs) — AND the live crossover demo for the multi-index mode:
-50,001 clips -> 200,004 window sigs. audio_window_hash_x10 10.695 s
-(8.8x for 10x clips — sub-linear, map-only). audio_window_pairs_x10
-cumulative 51.134 s (20.4x — SUPER-linear, decomposed): over
-CHECKPOINTED sigs the ball-0 join alone is 32.1 s because the
-random-collision candidate term now dominates (block_bucket_stats:
-106,717,503 candidate pairs, max bucket 4005 — at 4.4x the sig count
-of the 150k-image one-off the n^2/2048 term is 10x bigger, exactly
-the asymptote the r09 verdict flagged), while the exact MULTI-INDEX
-mode (n_blocks=3, block_ball=1) runs the SAME join in 16.8 s — 1.9x
-faster for the identical 50,091-pair gate output (equality
-asserted). This is the measured crossover: below ~10^5 sigs ball-0
-wins on probe-row cost (the 150k-image note above), above it the
-candidate cut pays and grows with n. The per-round
-audio_window_pairs entry stays ball-0 at 5k clips (below crossover);
-a deployment sizes the mode with block_bucket_stats first. The
-cumulative 51.1 also includes ~2x the hash stage (block exchange +
-per-clip sizes agg are different subplans over the unpersisted sig
-frame) — at scale signatures are a written table, the checkpointed
-decomposition is the deployment-representative number.
+plans pin.
 
 r11 brand_scores arbitration (the r10 verdict's What's wrong #1 —
 +68%, 0.161 -> 0.270 driver-to-driver, the one flagged headline
@@ -479,18 +346,9 @@ green). Steady state ~0.24-0.29 s in the current regime.
 
 r11 refresh (two same-day runs; the committed BENCH_LOCAL is the
 FIRST): regime 1.043 vs the r10 artifact (anchor 0.679 -> 0.708).
-THE PAIR-BENCH SPLIT LANDED (r10 verdict #7): every media pair tier
-now carries a join-only twin over STORED sigs next to the cumulative
-E2E entry — audio_window_pairs 2.48 cumulative vs
-audio_window_pairs_sigs 1.03 (the re-hash was ~60% of the cumulative
-number at this scale), tile_pairs 4.98 vs tile_pairs_sigs 2.18
-(~56%). Read _sigs for the join the block cost model prices,
-cumulative for the pipeline bill. First numbers for the r11 stages:
-c4_filter 0.53 s / url_dedup 0.72 s at 50k docs (both linear
-map/window shapes, the html_extract class), audio_cdc_hash 2.53 s
-(~2x the fixed-window hash — Gear anchor scan + per-segment FFTs
-over ~2x the segment count, the expected constant) and
-audio_cdc_pairs_sigs 2.98 s at 5k clips.
+First numbers for the r11 stages: c4_filter 0.53 s / url_dedup
+0.72 s at 50k docs (both linear map/window shapes, the html_extract
+class).
 
 r11 arbitration by second refresh (regime 0.918 run-to-run): run 1's
 ann_x100 section ran uniformly ~2x high (brute 2.84, ivf 1.98, pq
@@ -498,16 +356,7 @@ ann_x100 section ran uniformly ~2x high (brute 2.84, ivf 1.98, pq
 1.07 / 2.16 — the late-tier JVM-state pattern the r10 notes
 document); same verdict for flagship_posthygiene (11.94 -> 8.10 vs
 r10 7.16) and weekly_user_kmv_rollup (1.00 -> 0.78 vs r10 0.63):
-transients, not drift. video_hash is the one entry HIGH IN BOTH runs
-(4.29 / 4.25 vs r10 3.15): solo best-of-3 x3 in fresh JVMs measured
-4.825 / 3.886 / 3.938 — the in-tier values sit mid-band, the r10
-3.15 was a faster-regime value below today's solo floor; code and
-plan untouched (multimodal/video.py unchanged since r09, pins
-green), so the recorded cross-regime band is ~3.1-4.8 s. The media
-tiers wander +25-95% between the two same-day runs at identical
-code (tile_hash_2phase 2.51/4.49 — still under the promised 2x
-bound vs tile_hash in BOTH runs: 1.12x and 1.93x); per the regime
-rule these arbitrate by the same-day anchor, not absolutes.
+transients, not drift.
 
 r11 one-off crawl-stage x100 decade (500k docs, same contract as the
 other one-offs): html_extract 0.598 s (1.4x for 10x docs),
@@ -533,12 +382,7 @@ at a 10%-encoded mix, 2M urls) brought run2 to 1.440 (≈1.20
 r11-units). The residual ≈ +0.35 r11-units is the gate's OWN r12
 growth — 4-variant quad families (one of them percent-encoded, which
 DOES walk the chain) + the %-scan — a sub-1.5 s overhead-dominated
-stage per the decade's honest reading. r12 tile-section additions
-price the row-CDC tier's honesty claim: cdc_hash 3.711 vs tile_hash
-2.853 and cdc_pairs 10.262 vs tile_pairs 7.203 — ~100x the signature
-VOLUME for ~1.3x the wall at 5k images, because decode dominates at
-this scale; the volume term is what sample_bits buys back when the
-corpus grows (cdc_hash_sampled 3.651, sigs/4).
+stage per the decade's honest reading.
 
 r13 refresh: headline 20.202 under an ANOMALOUS SPLIT REGIME — the
 triplet diverges within one run (flagship sf0.1 1.325 = 1.84x r12,
@@ -557,11 +401,7 @@ scheme-fold + userinfo rules (one extra regexp_replace + a when) are
 free at the decade, even in the slow-overhead regime. New r13
 entries: corpus_x10.span_removal 4.341 vs dup_spans 2.856 (the full
 rewrite — one h-shuffled 3-window pass + coverage explode + id-keyed
-reassembly — costs 1.5x the stats-only signal at 50k docs);
-video_dedup.video_cdc_hash 4.508 vs video_hash 3.961 and
-video_cdc_pairs_sigs 7.915 at 910 clips (~500x the signature volume
-for ~1.14x the hash wall, because the container walk + JPEG decode
-dominates — the same honesty shape as the image cdc tier).
+reassembly — costs 1.5x the stats-only signal at 50k docs).
 span_removal joins the corpus_x100 decade: 21.933 s at 500k docs vs
 4.341 at 50k (5x for 10x — sublinear) and 1.23x the dup_spans
 stats-only pass at the decade (17.836) — the rewrite's whole extra
@@ -575,9 +415,7 @@ corpus_x100.span_removal 39.782 IN-TIER (vs 21.9 solo — it runs
 after dedup_clusters' checkpoint blocks; a between-entries reclaim
 now precedes it after one observed run died in GCLocker allocation
 stalls there — the r10 storage-headroom failure mode, not a plan
-problem), video_cdc_hash 4.373 / video_cdc_pairs_sigs 7.773,
-cdc_pairs_sigs 3.570 (the join alone ~= tile's — the cumulative
-cdc_pairs 8.664 is hash-dominated), crawl url stage 1.149.
+problem), crawl url stage 1.149.
 
 r14 refresh: headline 14.606, MILD SLOW REGIME (factor 1.281 on the
 flagship anchor 0.616 -> 0.789; regime_delta normalizes EVERY stage
@@ -1088,430 +926,6 @@ def markets_x100_section(
         entry_jobs(spark, qs, ["weekly_volatility"], x100m)
     )["weekly_volatility"]
     return out, n_rows
-
-
-def image_phash_section(spark, tmp: str) -> tuple[dict[str, float], int]:
-    """Image perceptual-hash dedup tier (r07): 3 PNG variants per sf0.1
-    document (~15k images, 5k planted 3-member families — same-pixel
-    re-encodes with sub-gradient luma noise, the near-dup structure the
-    dHash is built to catch). The image fixture is WRITTEN to parquet
-    outside the timers (a real media table is a stored column); what's
-    timed is (a) the map-only hash stage and (b) the full
-    hash + block-LSH + verify pair chain — the two costs a 100 TB media
-    dedup actually pays."""
-    import time as _time
-
-    from pyspark.sql import functions as F
-
-    from airflow_etl_finance_market_spark.multimodal.binary import (
-        _stdlib_png_codec,
-    )
-    from airflow_etl_finance_market_spark.multimodal.phash import (
-        image_dhash,
-        image_near_dup_pairs,
-    )
-    from airflow_etl_finance_market_spark.util import fan_out
-
-    _, _, _png_enc, _ = _stdlib_png_codec()
-
-    def _build(batches):
-        import hashlib
-
-        import pandas as pd
-
-        levels = [16, 48, 80, 112, 144, 176, 208, 240]
-        gw, gh, blk = 9, 8, 8
-
-        def base_pixels(seed: bytes) -> bytes:
-            vals = []
-            for r in range(gh):
-                row = []
-                for c in range(gw):
-                    hv = hashlib.md5(seed + bytes([r, c])).digest()[0]
-                    v = levels[hv % 8]
-                    if c > 0 and v == row[-1]:
-                        v = levels[(hv % 8 + 1) % 8]
-                    row.append(v)
-                vals.append(row)
-            pix = bytearray()
-            for r in range(gh):
-                rowbytes = bytearray()
-                for c in range(gw):
-                    rowbytes += bytes([vals[r][c]]) * blk
-                pix += bytes(rowbytes) * blk
-            return bytearray(pix)
-
-        for pdf in batches:
-            ids, payloads = [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                seed = hashlib.md5(text.encode("utf-8")).digest()
-                pix = base_pixels(seed)
-                for k in range(3):
-                    v = bytearray(pix)
-                    # variant noise: +-4 luma on a few interior pixels —
-                    # below the >=32 gradient margin, so family hashes
-                    # stay equal while payload bytes differ
-                    for t in range(k * 3):
-                        p = hashlib.md5(seed + bytes([64 + t])).digest()
-                        pos = (p[0] % (gh * blk)) * gw * blk + p[1] % (
-                            gw * blk
-                        )
-                        v[pos] = max(0, min(255, v[pos] + (p[2] % 9) - 4))
-                    ids.append(doc_id * 10 + k)
-                    payloads.append(_png_enc(gw * blk, gh * blk, 1, bytes(v)))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "payload": pd.Series(payloads, dtype="object"),
-                }
-            )
-
-    docs = fan_out(
-        spark.read.parquet(f"{SF_DIR}/documents.parquet"), "doc_id"
-    ).select("doc_id", "text")
-    media_path = f"{tmp}/images.parquet"
-    docs.mapInPandas(_build, "doc_id long, payload binary").write.mode(
-        "overwrite"
-    ).parquet(media_path)
-    media = spark.read.parquet(media_path)
-    n_images = media.count()
-
-    def _noop(df):
-        df.write.format("noop").mode("overwrite").save()
-
-    from airflow_etl_finance_market_spark.multimodal.phash import (
-        hamming_near_pairs,
-        image_phash_dct,
-    )
-
-    out: dict[str, float] = {}
-    for name, thunk in (
-        ("phash_hash", lambda: _noop(image_dhash(media))),
-        (
-            "phash_pairs",
-            lambda: _noop(image_near_dup_pairs(media, max_hamming=4)),
-        ),
-        # r08: the DCT pHash twin — hash stage (numpy DCT per image) and
-        # the full chain through the same block-LSH pair stage
-        ("phash_dct_hash", lambda: _noop(image_phash_dct(media))),
-        (
-            "phash_dct_pairs",
-            lambda: _noop(
-                hamming_near_pairs(
-                    image_phash_dct(media), sig_col="phash", max_hamming=4
-                )
-            ),
-        ),
-        # r10: the exact MULTI-INDEX pair mode (3x~21-bit blocks,
-        # ball-1 probes — the web-scale candidate-bound escape) priced
-        # against the default so the tradeoff stays measured: more
-        # probe rows per signature, ~28x fewer random-collision
-        # candidates (the term that dominates past ~10^7 items)
-        (
-            "phash_pairs_mih3",
-            lambda: _noop(
-                hamming_near_pairs(
-                    image_dhash(media),
-                    max_hamming=4,
-                    n_blocks=3,
-                    block_ball=1,
-                )
-            ),
-        ),
-    ):
-        best = float("inf")
-        for _ in range(3):
-            t0 = _time.perf_counter()
-            thunk()
-            best = min(best, _time.perf_counter() - t0)
-        out[name] = round(best, 3)
-    return out, n_images
-
-
-def video_dedup_section(spark, tmp: str) -> tuple[dict[str, float], int]:
-    """Video near-dup tier (r08): 2 MJPEG/AVI videos x 5 frames per every
-    11th sf0.1 document (~900 videos, ~4.5k frames; planted 2-member
-    re-encode families). Timed: (a) the map-only walk+decode+dHash
-    stage, (b) the full frame-hash set-overlap pair chain — the costs a
-    100 TB video-dedup pass actually pays. Fixture written to parquet
-    outside the timers, same contract as the image tier."""
-    import time as _time
-
-    from airflow_etl_finance_market_spark.multimodal.jpeg import (
-        _stdlib_jpeg_codec,
-    )
-    from airflow_etl_finance_market_spark.multimodal.phash import (
-        video_frame_dhash,
-        video_near_dup_pairs,
-    )
-    from airflow_etl_finance_market_spark.multimodal.video import (
-        _stdlib_avi_codec,
-    )
-    from airflow_etl_finance_market_spark.util import fan_out
-
-    _, _, _jpeg_enc = _stdlib_jpeg_codec()
-    _, _, _avi_enc = _stdlib_avi_codec()
-
-    def _build(batches):
-        import hashlib
-
-        import pandas as pd
-
-        levels = [16, 48, 80, 112, 144, 176, 208, 240]
-        gw, gh, blk = 9, 8, 8
-
-        def base_pixels(seed: bytes) -> bytearray:
-            vals = []
-            for r in range(gh):
-                row = []
-                for c in range(gw):
-                    hv = hashlib.md5(seed + bytes([r, c])).digest()[0]
-                    v = levels[hv % 8]
-                    if c > 0 and v == row[-1]:
-                        v = levels[(hv % 8 + 1) % 8]
-                    row.append(v)
-                vals.append(row)
-            pix = bytearray()
-            for r in range(gh):
-                rowbytes = bytearray()
-                for c in range(gw):
-                    rowbytes += bytes([vals[r][c]]) * blk
-                pix += bytes(rowbytes) * blk
-            return pix
-
-        for pdf in batches:
-            ids, payloads = [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                seed = hashlib.md5(text.encode("utf-8")).digest()
-                for member in range(2):
-                    frames = []
-                    for fi in range(5):
-                        pix = base_pixels(seed + bytes([fi]))
-                        if member:
-                            for t in range(4):
-                                p = hashlib.md5(
-                                    seed + bytes([fi, 128 + t])
-                                ).digest()
-                                pos = (
-                                    p[0] % (gh * blk)
-                                ) * gw * blk + p[1] % (gw * blk)
-                                pix[pos] = max(
-                                    0, min(255, pix[pos] + (p[2] % 9) - 4)
-                                )
-                        frames.append(
-                            _jpeg_enc(
-                                gw * blk, gh * blk, 1, bytes(pix), quality=90
-                            )
-                        )
-                    ids.append(doc_id * 10 + member)
-                    payloads.append(
-                        _avi_enc(frames, fps=10, width=72, height=64)
-                    )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "payload": pd.Series(payloads, dtype="object"),
-                }
-            )
-
-    docs = fan_out(
-        spark.read.parquet(f"{SF_DIR}/documents.parquet").filter(
-            "doc_id % 11 = 5"
-        ),
-        "doc_id",
-    ).select("doc_id", "text")
-    media_path = f"{tmp}/videos.parquet"
-    docs.mapInPandas(_build, "doc_id long, payload binary").write.mode(
-        "overwrite"
-    ).parquet(media_path)
-    media = spark.read.parquet(media_path)
-    n_videos = media.count()
-
-    def _noop(df):
-        df.write.format("noop").mode("overwrite").save()
-
-    # r13: stored row-CDC frame sigs for the join-only pair timer (the
-    # _sigs convention) — materialized OUTSIDE the timers
-    from airflow_etl_finance_market_spark.multimodal.phash import (
-        video_frame_row_cdc,
-    )
-
-    video_frame_row_cdc(media).write.mode("overwrite").parquet(
-        f"{tmp}/video_cdc_sigs.parquet"
-    )
-
-    out: dict[str, float] = {}
-    for name, thunk in (
-        ("video_hash", lambda: _noop(video_frame_dhash(media))),
-        (
-            "video_pairs",
-            lambda: _noop(video_near_dup_pairs(video_frame_dhash(media))),
-        ),
-        # r13: the crop-robust per-frame row-CDC tier priced on the SAME
-        # clips — hash stage (walk + decode + per-row Gear per frame;
-        # ~2.5k sigs/video vs 5 for whole-frame dHash, the tier's
-        # docstring honesty claim) and the join-only pair stage over
-        # stored sigs at max_hamming=0
-        (
-            "video_cdc_hash",
-            lambda: _noop(video_frame_row_cdc(media)),
-        ),
-        (
-            "video_cdc_pairs_sigs",
-            lambda: _noop(
-                video_near_dup_pairs(
-                    spark.read.parquet(f"{tmp}/video_cdc_sigs.parquet"),
-                    sig_col="sig",
-                    max_hamming=0,
-                    min_match_frac=0.5,
-                )
-            ),
-        ),
-    ):
-        best = float("inf")
-        for _ in range(3):
-            t0 = _time.perf_counter()
-            thunk()
-            best = min(best, _time.perf_counter() - t0)
-        out[name] = round(best, 3)
-    return out, n_videos
-
-
-def image_tile_section(spark, tmp: str) -> tuple[dict[str, float], int]:
-    """Tile-overlap crop-dedup tier (r09): per every 3rd sf0.1 document,
-    a 128x128 noise PNG + its tile-aligned 96x96 crop + a GIF re-encode
-    of the crop (~5k images, ~1.7k planted 3-member families — the
-    driver gate's construction at bench scale). Timed: (a) the map-only
-    per-tile dHash stage (16-25 signatures/image), (b) the full tile
-    set-overlap pair chain (the video gate's machinery on tile sigs).
-    Fixture written to parquet outside the timers."""
-    import time as _time
-
-    from airflow_etl_finance_market_spark.fixtures import (
-        tile_crop_family_members,
-    )
-    from airflow_etl_finance_market_spark.multimodal.phash import (
-        image_cdc_crop_near_dup_pairs,
-        image_row_cdc_hashes,
-        image_tile_dhash,
-        image_tile_near_dup_pairs,
-    )
-    from airflow_etl_finance_market_spark.util import fan_out
-
-    _members = tile_crop_family_members()
-
-    def _build(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            ids, payloads = [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                for k, payload in enumerate(_members(text)):
-                    ids.append(doc_id * 10 + k)
-                    payloads.append(payload)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "payload": pd.Series(payloads, dtype="object"),
-                }
-            )
-
-    docs = fan_out(
-        spark.read.parquet(f"{SF_DIR}/documents.parquet").filter(
-            "doc_id % 3 = 1"
-        ),
-        "doc_id",
-    ).select("doc_id", "text")
-    media_path = f"{tmp}/tile_images.parquet"
-    docs.mapInPandas(_build, "doc_id long, payload binary").write.mode(
-        "overwrite"
-    ).parquet(media_path)
-    media = spark.read.parquet(media_path)
-    n_images = media.count()
-    # stored tile/cdc sigs for the join-only pair timers (_sigs
-    # entries): materialized OUTSIDE the timers, like the crossover demo
-    image_tile_dhash(media).write.mode("overwrite").parquet(
-        f"{tmp}/tile_sigs.parquet"
-    )
-    image_row_cdc_hashes(media).write.mode("overwrite").parquet(
-        f"{tmp}/cdc_sigs.parquet"
-    )
-
-    def _noop(df):
-        df.write.format("noop").mode("overwrite").save()
-
-    out: dict[str, float] = {}
-    for name, thunk in (
-        ("tile_hash", lambda: _noop(image_tile_dhash(media))),
-        (
-            "tile_pairs",
-            lambda: _noop(
-                image_tile_near_dup_pairs(image_tile_dhash(media))
-            ),
-        ),
-        # r11 measurement hygiene (verdict #7): the cumulative entry
-        # above re-hashes inside the timer (the E2E view); this twin
-        # times ONLY the candidate join + overlap aggregate over
-        # STORED sigs (written outside the timers)
-        (
-            "tile_pairs_sigs",
-            lambda: _noop(
-                image_tile_near_dup_pairs(
-                    spark.read.parquet(f"{tmp}/tile_sigs.parquet")
-                )
-            ),
-        ),
-        # r10: the two-phase grid (misaligned-crop coverage) — prices
-        # the "exactly 2x hash cost" claim of the phase tier
-        (
-            "tile_hash_2phase",
-            lambda: _noop(
-                image_tile_dhash(
-                    media, phase_offsets=((0, 0), (16, 16))
-                )
-            ),
-        ),
-        # r12: the row-CDC arbitrary-offset tier — prices its docstring
-        # honesty claim (an order more signatures than the tile grids:
-        # ~h*w/2^avg_seg_bits per image) and the sample_bits=2 buyback
-        # (2^bits fewer sigs, both copies sampled identically). Same
-        # planted fixture; the pair stage is the shared block join at
-        # max_hamming=0.
-        (
-            "cdc_hash",
-            lambda: _noop(image_row_cdc_hashes(media)),
-        ),
-        (
-            "cdc_hash_sampled",
-            lambda: _noop(image_row_cdc_hashes(media, sample_bits=2)),
-        ),
-        (
-            "cdc_pairs",
-            lambda: _noop(image_cdc_crop_near_dup_pairs(media)),
-        ),
-        # r13 measurement hygiene parity with tile_pairs_sigs: the
-        # join-only twin over stored row-CDC sigs isolates the
-        # max_hamming=0 block join from the ~1.6k-md5s/image hash
-        # stage the cumulative entry re-runs
-        (
-            "cdc_pairs_sigs",
-            lambda: _noop(
-                image_tile_near_dup_pairs(
-                    spark.read.parquet(f"{tmp}/cdc_sigs.parquet"),
-                    sig_col="sig",
-                    max_hamming=0,
-                    min_match_frac=0.5,
-                )
-            ),
-        ),
-    ):
-        best = float("inf")
-        for _ in range(3):
-            t0 = _time.perf_counter()
-            thunk()
-            best = min(best, _time.perf_counter() - t0)
-        out[name] = round(best, 3)
-    return out, n_images
 
 
 #: Dedup/CC chain timed at 100x documents (500k) — the measured decade of
@@ -2101,18 +1515,6 @@ def main() -> None:
             ex, n_ev = events_x10_section(spark, qs, tmp)
             payload["events_x10"] = ex
             payload["events_x10_rows"] = {"events": n_ev}
-        with tempfile.TemporaryDirectory() as tmp:
-            ph, n_img = image_phash_section(spark, tmp)
-            payload["image_dedup"] = ph
-            payload["image_dedup_rows"] = {"images": n_img}
-        with tempfile.TemporaryDirectory() as tmp:
-            vd, n_vid = video_dedup_section(spark, tmp)
-            payload["video_dedup"] = vd
-            payload["video_dedup_rows"] = {"videos": n_vid}
-        with tempfile.TemporaryDirectory() as tmp:
-            td, n_timg = image_tile_section(spark, tmp)
-            payload["tile_dedup"] = td
-            payload["tile_dedup_rows"] = {"images": n_timg}
 
     if os.environ.get("SPARK_GRAFT_X100", "1") != "0":
         with tempfile.TemporaryDirectory() as tmp:

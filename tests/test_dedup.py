@@ -116,18 +116,6 @@ def test_dedup_exact_survivors(spark, sf_dir):
     assert dedup_exact(survivors).count() == n_fp
 
 
-def test_lsh_candidates_group_equals_join(spark, sf_dir):
-    from airflow_etl_finance_market_spark.operators.dedup import (
-        lsh_candidate_pairs,
-        minhash_signatures,
-    )
-
-    sigs = minhash_signatures(load_fixture(spark, sf_dir, "documents"))
-    a = {(r["id_a"], r["id_b"]) for r in lsh_candidate_pairs(sigs, via="group").collect()}
-    b = {(r["id_a"], r["id_b"]) for r in lsh_candidate_pairs(sigs, via="join").collect()}
-    assert a == b and a
-
-
 def test_minhash_portable_same_plan_shape_as_fast_path(spark, sf_dir):
     """The portable md5 hash must change only the hash expressions, never
     the physical strategy: same Exchange count, still SMJ on band buckets,
@@ -144,17 +132,49 @@ def test_minhash_portable_same_plan_shape_as_fast_path(spark, sf_dir):
     assert ("BroadcastHashJoin" in fast) == ("BroadcastHashJoin" in portable)
 
 
-def test_simhash_pairs_group_equals_join(spark, sf_dir):
-    """Both candidate-generation strategies must produce identical verified
-    pairs (the default is chosen on measured speed, not semantics)."""
-    from airflow_etl_finance_market_spark.operators.dedup import simhash_near_pairs
-    from airflow_etl_finance_market_spark.sources.readers import load_fixture
+class TestBlockJoinPairs:
+    """The block-LSH pair join under simhash_near_pairs, driven with
+    hand-built 64-bit signatures."""
 
-    docs = load_fixture(spark, sf_dir, "documents")
-    g = simhash_near_pairs(docs, max_hamming=8, via="group").collect()
-    j = simhash_near_pairs(docs, max_hamming=8, via="join").collect()
-    assert sorted(map(tuple, g)) == sorted(map(tuple, j))
-    assert len(j) > 0
+    @staticmethod
+    def _pairs(spark, rows, *, max_hamming, n_blocks):
+        from airflow_etl_finance_market_spark.operators.dedup import (
+            _block_join_pairs,
+        )
+
+        sigs = spark.createDataFrame(rows, "id long, simhash long")
+        return {
+            (r.id_a, r.id_b, r.hamming)
+            for r in _block_join_pairs(
+                sigs, max_hamming=max_hamming, n_bits=64, n_blocks=n_blocks
+            ).collect()
+        }
+
+    def test_pigeonhole_recall_is_exact_within_block_bound(self, spark):
+        """For max_hamming <= n_blocks - 1 the block join is an EXACT
+        candidate generator: every pair within the bound must surface,
+        for every choice of which bits differ."""
+        base = 0x0123_4567_89AB_CDEF
+        rows = [(0, base)]
+        # flip 3 bits spread across three different blocks
+        rows.append((1, base ^ (1 << 2) ^ (1 << 20) ^ (1 << 40)))
+        # flip 3 bits all inside ONE block (others must still match)
+        rows.append((2, base ^ 0b111 << 17))
+        # 5 bits > max_hamming: excluded even though blocks collide
+        rows.append((3, base ^ (0b11111 << 30)))
+        got = self._pairs(spark, rows, max_hamming=3, n_blocks=4)
+        assert (0, 1, 3) in got
+        assert (0, 2, 3) in got
+        assert not any(3 in (a, b) for a, b, _ in got)
+
+    def test_signed_longs_block_split_is_unsigned(self, spark):
+        """Hashes stored as NEGATIVE bigints (bit 63 set) must block-split
+        with shiftrightunsigned semantics — a sign-extending shift would
+        put equal high blocks in different buckets."""
+        top = -(1 << 63)  # only bit 63 set
+        rows = [(0, top), (1, top ^ 1)]  # hamming 1, high block equal
+        got = self._pairs(spark, rows, max_hamming=1, n_blocks=2)
+        assert got == {(0, 1, 1)}
 
 
 class TestWinnowFingerprints:

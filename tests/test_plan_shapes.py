@@ -13,6 +13,7 @@ from airflow_etl_finance_market_spark import harness
 from airflow_etl_finance_market_spark.operators.dedup import (
     lsh_candidate_pairs,
     minhash_signatures,
+    simhash_near_pairs,
 )
 from airflow_etl_finance_market_spark.sources.readers import load_fixture
 
@@ -77,6 +78,43 @@ def test_lsh_bucket_join_stays_sort_merge(spark, sf_dir):
     plan = plan_of(lsh_candidate_pairs(minhash_signatures(docs)))
     assert "SortMergeJoin" in plan
     assert "BroadcastHashJoin" not in plan
+
+
+def test_simhash_pair_plan_is_equi_join_never_cartesian(spark, sf_dir):
+    """SimHash candidates come from the block equi-join, never
+    CartesianProduct / all-pairs, and verify JVM-side with bit_count."""
+    docs = load_fixture(spark, sf_dir, "documents")
+    plan = plan_of(simhash_near_pairs(docs))
+    assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan
+    assert "bit_count" in plan
+
+
+def test_simhash_block_join_reuses_block_exchange(spark, sf_dir):
+    """At shuffle-join scale both sides of the block self-join must stay
+    plan-identical, so the shuffled (block_idx, block_val) exchange is
+    reused and the signature aggregation runs once. Broadcast is turned
+    off to get the shuffle join the fixture is too small for."""
+    # built from collected rows: a cached documents table (other tests
+    # cache it) plans one TableCacheQueryStage per side and no reuse
+    docs = spark.createDataFrame(
+        load_fixture(spark, sf_dir, "documents").select("doc_id", "text").collect(),
+        "doc_id long, text string",
+    )
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        df = simhash_near_pairs(docs)
+        df.collect()
+        # AQE surfaces ReusedExchange only in the FINAL executed plan
+        final = plan_of(df).split("== Initial Plan ==")[0]
+    finally:
+        spark.conf.set(key, old)
+    assert "SortMergeJoin" in final
+    assert re.search(
+        r"ReusedExchange \[[^\]]*\], Exchange hashpartitioning\(block_idx", final
+    ), final
 
 
 def test_bruteforce_topk_broadcasts_queries_not_corpus(spark, sf_dir):
@@ -568,21 +606,6 @@ def test_bpe_apply_is_broadcast_join_one_agg(spark, sf_dir):
     assert plan.count("HashAggregate") == 2  # partial + final, doc key
 
 
-def test_phash_dct_stage_is_map_only(spark, sf_dir):
-    """image_phash_dct: the signature stage must contain NO Exchange —
-    hashing a 100 TB media table moves zero bytes."""
-    from airflow_etl_finance_market_spark.multimodal.phash import (
-        image_phash_dct,
-    )
-
-    media = spark.createDataFrame(
-        [(1, bytearray(b"x"))], "doc_id long, payload binary"
-    )
-    plan = plan_of(image_phash_dct(media))
-    assert "Exchange" not in plan
-    assert "MapInPandas" in plan
-
-
 def test_kmv_rollup_is_join_free_array_arithmetic(spark, sf_dir):
     """kmv_rollup_estimates: merge, intersection, and every estimate are
     Catalyst ARRAY expressions over <= k-element sketches — the plan
@@ -621,49 +644,6 @@ def test_paragraph_dedup_single_window_single_agg(spark, sf_dir):
     assert "hashpartitioning(h#" in plan  # window shuffles on the hash
 
 
-def test_row_cdc_pair_join_reuses_signature_exchange(spark):
-    """The row-CDC pair stage is the ball-0 pigeonhole self-join: both
-    sides must stay PLAN-IDENTICAL so the shuffled exchange is reused
-    (ReusedExchange) and the decode + md5 mapInPandas stage evaluates
-    ONCE — the r10 lesson (an innocent rename silently doubled every
-    media pair chain). Full-width block (max_hamming=0) path."""
-    import hashlib
-
-    from airflow_etl_finance_market_spark.multimodal.binary import (
-        _stdlib_png_codec,
-    )
-    from airflow_etl_finance_market_spark.multimodal.phash import (
-        image_cdc_crop_near_dup_pairs,
-    )
-
-    from airflow_etl_finance_market_spark.fixtures import (
-        image_fixture_primitives,
-    )
-
-    _, _, png_enc, _ = _stdlib_png_codec()
-    noise_pix, crop = image_fixture_primitives()
-    pix = noise_pix(hashlib.md5(b"plan pin").digest(), 96, 96)
-    cr = crop(pix, 96, 13, 7, 64, 64)
-    media = spark.createDataFrame(
-        [
-            (1, bytearray(png_enc(96, 96, 1, pix))),
-            (2, bytearray(png_enc(64, 64, 1, cr))),
-        ],
-        "doc_id long, payload binary",
-    )
-    df = image_cdc_crop_near_dup_pairs(media)
-    assert [(r.id_a, r.id_b) for r in df.collect()] == [(1, 2)]
-    # AQE surfaces ReusedExchange only in the FINAL executed plan; the
-    # wall-clock guarantee (signature stage billed once) is also
-    # priced by the bench tile section's cdc entries
-    final = (
-        df._jdf.queryExecution().executedPlan().toString()
-        .split("== Initial Plan ==")[0]
-    )
-    assert "ReusedExchange" in final
-    assert "CartesianProduct" not in final
-
-
 def test_token_budget_boundary_sort_confined_to_one_bucket(spark, sf_dir):
     """token_budget_select's scale contract: the corpus-wide path is
     filter + union (NO global sort); exactly ONE single-partition
@@ -684,36 +664,6 @@ def test_token_budget_boundary_sort_confined_to_one_bucket(spark, sf_dir):
     # never a sort: the ONLY Sort in the plan is the window's own
     assert plan.count("Sort ") <= 1
     assert "CartesianProduct" not in plan
-
-
-def test_video_cdc_pair_join_reuses_signature_exchange(spark):
-    """The video row-CDC pair stage rides the same ball-0 pigeonhole
-    self-join as the image tier: both sides plan-identical so the
-    shuffled exchange is reused and the container walk + per-frame
-    decode + Gear mapInPandas stage evaluates ONCE (the r10 lesson,
-    pinned per tier because an innocent projection rename re-breaks it
-    silently)."""
-    from airflow_etl_finance_market_spark.fixtures import (
-        mjpeg_cdc_crop_family_members,
-    )
-    from airflow_etl_finance_market_spark.multimodal.phash import (
-        video_cdc_crop_near_dup_pairs,
-    )
-
-    members = mjpeg_cdc_crop_family_members()
-    full, cropped = members("plan pin video")
-    media = spark.createDataFrame(
-        [(1, bytearray(full)), (2, bytearray(cropped))],
-        "doc_id long, payload binary",
-    )
-    df = video_cdc_crop_near_dup_pairs(media)
-    assert [(r.video_a, r.video_b) for r in df.collect()] == [(1, 2)]
-    final = (
-        df._jdf.queryExecution().executedPlan().toString()
-        .split("== Initial Plan ==")[0]
-    )
-    assert "ReusedExchange" in final
-    assert "CartesianProduct" not in final
 
 
 def test_pagerank_round_is_single_join_plus_aggregate(spark, sf_dir):

@@ -818,98 +818,24 @@ def test_funnel_retires_completed_and_idle_keys(spark, tmp_path):
     ]
 
 
-def test_image_signature_dedup_stream_equals_batch(spark, tmp_path):
-    """The image twin: dedup_by_signature(sig_col='dhash') over
-    image_dhash(passthrough=('ts',)) — re-encodes (PNG vs GIF palette)
-    of the same pixels collapse at the stream edge, stream ≡ batch."""
-    import hashlib
-
-    from airflow_etl_finance_market_spark.multimodal.binary import (
-        _stdlib_png_codec,
-    )
-    from airflow_etl_finance_market_spark.multimodal.gif import (
-        _stdlib_gif_codec,
-    )
-    from airflow_etl_finance_market_spark.multimodal.phash import image_dhash
-    from airflow_etl_finance_market_spark.streaming import dedup_by_signature
-
-    _, _, png_enc, _ = _stdlib_png_codec()
-    _, _, gif_enc = _stdlib_gif_codec()
-    gray_pal = [(i, i, i) for i in range(256)]
-    rows = []
-    for fam in range(3):
-        pix = bytearray()
-        i = 0
-        while len(pix) < 32 * 32:
-            pix += hashlib.md5(bytes([fam, i])).digest()
-            i += 1
-        pix = bytes(pix[: 32 * 32])
-        base_us = 1_700_000_000_000_000 + fam * 1_000_000
-        rows.append((fam * 10, base_us, bytearray(png_enc(32, 32, 1, pix))))
-        rows.append(
-            (fam * 10 + 1, base_us, bytearray(gif_enc(32, 32, pix, gray_pal)))
-        )
-    in_dir = str(tmp_path / "img_in")
-    spark.createDataFrame(
-        rows, "doc_id long, ts long, payload binary"
-    ).coalesce(1).write.mode("overwrite").parquet(in_dir)
-
-    def pipeline(media):
-        sigs = image_dhash(
-            media.withColumn("ts", F.expr("timestamp_micros(ts)")),
-            passthrough=("ts",),
-        )
-        return dedup_by_signature(sigs, sig_col="dhash", ts="ts")
-
-    schema = "doc_id long, ts long, payload binary"
-    batch = pipeline(spark.read.schema(schema).parquet(in_dir))
-    stream = pipeline(spark.readStream.schema(schema).parquet(in_dir))
-    got = run_available_now(stream, "img_dedup_eq", output_mode="append")
-    assert sorted(r.dhash for r in got.collect()) == sorted(
-        r.dhash for r in batch.collect()
-    )
-    assert got.count() == 3
-
-
 def test_media_signature_dedup_carries_state_across_batches(spark, tmp_path):
-    """A re-encode arriving in a LATER micro-batch (inside the watermark)
+    """A re-send arriving in a LATER micro-batch (inside the watermark)
     must still dedup — dropDuplicatesWithinWatermark state carries across
     batch boundaries until the watermark passes."""
-    import hashlib
-
-    from airflow_etl_finance_market_spark.multimodal.binary import (
-        _stdlib_png_codec,
-    )
-    from airflow_etl_finance_market_spark.multimodal.gif import (
-        _stdlib_gif_codec,
-    )
-    from airflow_etl_finance_market_spark.multimodal.phash import image_dhash
+    from airflow_etl_finance_market_spark.operators.dedup import fingerprint
     from airflow_etl_finance_market_spark.streaming import dedup_by_signature
 
-    _, _, png_enc, _ = _stdlib_png_codec()
-    _, _, gif_enc = _stdlib_gif_codec()
-    gray_pal = [(i, i, i) for i in range(256)]
-
-    def noise(seed: bytes) -> bytes:
-        out = bytearray()
-        i = 0
-        while len(out) < 32 * 32:
-            out += hashlib.md5(seed + bytes([i])).digest()
-            i += 1
-        return bytes(out[: 32 * 32])
-
-    x, y = noise(b"xbatch"), noise(b"other")
     t0 = 1_700_000_000_000_000
     in_dir = tmp_path / "in"
-    schema = "doc_id long, ts long, payload binary"
-    # batch 0: the original (PNG) + an unrelated image; batch 1: the GIF
-    # re-encode of image 1, 1 s later (within the watermark)
+    schema = "doc_id long, ts long, text string"
+    # batch 0: the original + an unrelated document; batch 1: a case and
+    # whitespace variant of document 1, 1 s later (within the watermark)
     batches = [
         [
-            (1, t0, bytearray(png_enc(32, 32, 1, x))),
-            (2, t0, bytearray(png_enc(32, 32, 1, y))),
+            (1, t0, "Quarterly results beat estimates"),
+            (2, t0, "an unrelated note on bond yields"),
         ],
-        [(3, t0 + 1_000_000, bytearray(gif_enc(32, 32, x, gray_pal)))],
+        [(3, t0 + 1_000_000, "quarterly  RESULTS beat   estimates")],
     ]
     for i, rows in enumerate(batches):
         d = str(in_dir / f"b{i}")
@@ -922,19 +848,15 @@ def test_media_signature_dedup_carries_state_across_batches(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(in_dir / "b*"))
         .withColumn("ts", F.expr("timestamp_micros(ts)"))
+        .withColumn("fp", fingerprint("text"))
     )
     got = run_available_now(
-        dedup_by_signature(
-            image_dhash(stream, passthrough=("ts",)),
-            sig_col="dhash",
-            ts="ts",
-            watermark="1 hour",
-        ),
+        dedup_by_signature(stream, sig_col="fp", ts="ts", watermark="1 hour"),
         "media_dedup_xbatch",
         output_mode="append",
     )
     rows = sorted(r.doc_id for r in got.collect())
-    assert rows == [1, 2]  # doc 3's re-encode deduped ACROSS the boundary
+    assert rows == [1, 2]  # doc 3's variant deduped ACROSS the boundary
 
 
 class TestStreamingDecontamination:

@@ -106,186 +106,3 @@ class TestRealFrameSamplingOnSpark:
         for k, nb, sha in prefix:
             assert nb == len(frames[k])
             assert sha == hashlib.sha256(frames[k]).hexdigest()[:16]
-
-
-class TestVideoCdcCrop:
-    def test_whole_frame_tier_misses_the_crop_family(self, spark):
-        """The honest-gap pin (the image tier's precedent): a cropped
-        video shares NO whole-frame dHash with its original — every
-        frame's hash moves — so video_near_dup_pairs finds nothing on
-        the exact members the CDC gate recovers."""
-        from airflow_etl_finance_market_spark.fixtures import (
-            mjpeg_cdc_crop_family_members,
-        )
-        from airflow_etl_finance_market_spark.multimodal.phash import (
-            video_cdc_crop_near_dup_pairs,
-            video_frame_dhash,
-            video_near_dup_pairs,
-        )
-
-        members = mjpeg_cdc_crop_family_members()
-        rows = []
-        for fam, text in enumerate(["vid one", "vid two"]):
-            for k, payload in enumerate(members(text)):
-                rows.append((fam * 10 + k, bytearray(payload)))
-        media = spark.createDataFrame(
-            rows, "doc_id long, payload binary"
-        ).cache()
-        try:
-            whole = video_near_dup_pairs(
-                video_frame_dhash(media),
-                max_hamming=4,
-                min_match_frac=0.5,
-            ).collect()
-            assert whole == []  # the gap the CDC tier closes
-            cdc = {
-                (r.video_a, r.video_b): r.match_frac
-                for r in video_cdc_crop_near_dup_pairs(
-                    media, min_match_frac=0.5
-                ).collect()
-            }
-            assert set(cdc) == {(0, 1), (10, 11)}
-            for frac in cdc.values():
-                assert frac >= 0.7  # measured 0.78 worst across seeds
-        finally:
-            media.unpersist()
-
-    def test_crop_members_are_pixel_exact_by_construction(self):
-        """The fixture's whole premise: every frame is a per-MCU q90
-        fixed point, so the MCU-aligned crop decodes to exactly the
-        crop of the original's decoded pixels."""
-        from airflow_etl_finance_market_spark.fixtures import (
-            mjpeg_cdc_crop_family_members,
-        )
-        from airflow_etl_finance_market_spark.multimodal.jpeg import (
-            _stdlib_jpeg_codec,
-        )
-        from airflow_etl_finance_market_spark.multimodal.video import (
-            _stdlib_avi_codec,
-        )
-
-        _, frames_of, _ = (_stdlib_avi_codec()[0:3])
-        _, dec, _ = _stdlib_jpeg_codec()
-        full, cropped = mjpeg_cdc_crop_family_members()("pixel exact")
-        fa, fb = frames_of(full), frames_of(cropped)
-        assert len(fa) == len(fb) == 3
-        for a, b in zip(fa, fb):
-            w, h, _, pa = dec(a)
-            cw, ch2, _, pb = dec(b)
-            assert (w, h, cw, ch2) == (96, 64, 80, 32)
-            want = b"".join(
-                pa[(24 + y) * 96 + 8 : (24 + y) * 96 + 88]
-                for y in range(32)
-            )
-            assert pb == want
-
-
-def test_video_signature_stages_passthrough_columns(spark):
-    """Streaming parity: both video signature stages must carry
-    `passthrough` columns verbatim onto every emitted row — a watermark
-    dies with any projection that drops its event-time column (the
-    image/audio stages' contract, extended to video)."""
-    import datetime as dt
-
-    from airflow_etl_finance_market_spark.fixtures import (
-        mjpeg_video_variants,
-    )
-    from airflow_etl_finance_market_spark.multimodal.phash import (
-        video_frame_dhash,
-        video_frame_row_cdc,
-    )
-
-    v = mjpeg_video_variants()
-    t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
-    media = spark.createDataFrame(
-        [
-            (1, t0, bytearray(v(b"pt-a", 0))),
-            (2, t0.replace(hour=13), bytearray(v(b"pt-b", 0))),
-            (3, t0.replace(hour=14), None),  # quarantined: no rows
-        ],
-        "doc_id long, ts timestamp_ntz, payload binary",
-    )
-    for stage in (video_frame_dhash, video_frame_row_cdc):
-        rows = stage(media, passthrough=("ts",)).collect()
-        assert rows, stage.__name__
-        got = {(r.video_id, r.ts) for r in rows}
-        assert got == {
-            (1, t0), (2, t0.replace(hour=13))
-        }, stage.__name__
-
-
-def test_mirrored_video_collapses_only_via_canonical_frames(spark):
-    """r13: the image tier's mirror-canonical option lifted to frames —
-    a MIRRORED video flips every frame's pixels, so the plain frame
-    tier finds nothing, while canonical frame signatures collapse the
-    pair by arithmetic (min of hash and flipped-hash per frame)."""
-    import hashlib
-
-    from airflow_etl_finance_market_spark.multimodal.jpeg import (
-        _stdlib_jpeg_codec,
-    )
-    from airflow_etl_finance_market_spark.multimodal.phash import (
-        video_frame_dhash,
-        video_near_dup_pairs,
-    )
-    from airflow_etl_finance_market_spark.multimodal.video import (
-        _stdlib_avi_codec,
-    )
-
-    _, _, jpeg_enc = _stdlib_jpeg_codec()
-    _, _, avi_enc = _stdlib_avi_codec()
-    levels = [16, 48, 80, 112, 144, 176, 208, 240]
-    gw, gh, blk = 9, 8, 8
-
-    def base_pixels(seed: bytes) -> bytes:
-        # the dHash-margin block grid (flat 8px blocks, horizontally
-        # adjacent levels distinct) — JPEG-exact per the video gate
-        vals = []
-        for r in range(gh):
-            row = []
-            for c in range(gw):
-                hv = hashlib.md5(seed + bytes([r, c])).digest()[0]
-                v = levels[hv % 8]
-                if c > 0 and v == row[-1]:
-                    v = levels[(hv % 8 + 1) % 8]
-                row.append(v)
-            vals.append(row)
-        pix = bytearray()
-        for r in range(gh):
-            rowb = bytearray()
-            for c in range(gw):
-                rowb += bytes([vals[r][c]]) * blk
-            pix += bytes(rowb) * blk
-        return bytes(pix)
-
-    def mirror(pix: bytes, w: int, h: int) -> bytes:
-        return b"".join(pix[y * w : (y + 1) * w][::-1] for y in range(h))
-
-    w, h = gw * blk, gh * blk
-    frames, mirrored = [], []
-    for fi in range(4):
-        p = base_pixels(hashlib.md5(b"mir%d" % fi).digest())
-        frames.append(jpeg_enc(w, h, 1, p, quality=90))
-        mirrored.append(jpeg_enc(w, h, 1, mirror(p, w, h), quality=90))
-    media = spark.createDataFrame(
-        [
-            (1, bytearray(avi_enc(frames, fps=10, width=w, height=h))),
-            (2, bytearray(avi_enc(mirrored, fps=10, width=w, height=h))),
-        ],
-        "doc_id long, payload binary",
-    ).cache()
-    try:
-        plain = video_near_dup_pairs(
-            video_frame_dhash(media), max_hamming=0, min_match_frac=0.5
-        ).collect()
-        assert plain == []  # the gap the canonical option closes
-        canon = video_near_dup_pairs(
-            video_frame_dhash(media, mirror_canonical=True),
-            max_hamming=0,
-            min_match_frac=0.5,
-        ).collect()
-        assert [(r.video_a, r.video_b, r.match_frac) for r in canon] == [
-            (1, 2, 1.0)
-        ]
-    finally:
-        media.unpersist()

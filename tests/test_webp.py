@@ -418,17 +418,14 @@ class TestHandBuiltStreams:
 
 class TestSparkIntegration:
     def test_real_features_resize_and_dhash_on_webp(self, spark):
-        """WebP payloads flow through all three real Spark frame paths:
-        features (dims + mime), resize (PNG out), and perceptual hash
-        (codec-invariant vs the same pixels as PNG)."""
+        """WebP payloads flow through the real Spark frame paths:
+        features (dims + mime) and resize (PNG out, pixel-identical to
+        the same pixels sent as PNG)."""
         from airflow_etl_finance_market_spark.multimodal.binary import (
             _stdlib_png_codec,
             decode_image,
             extract_binary_features,
             resize_images,
-        )
-        from airflow_etl_finance_market_spark.multimodal.phash import (
-            image_dhash,
         )
 
         _, _, we = _codec()
@@ -464,9 +461,3 @@ class TestSparkIntegration:
         assert set(resized) == {1, 2}  # truncated row dropped
         # lossless both ways -> identical resized pixels
         assert png_dec(bytes(resized[1])) == png_dec(bytes(resized[2]))
-        hashes = {
-            r.doc_id: r.dhash
-            for r in image_dhash(media).collect()
-        }
-        assert hashes[1] == hashes[2]  # codec-invariant perceptual hash
-        assert 3 not in hashes
