@@ -17,12 +17,26 @@ the orchestrator level, C2), rather than one task per stage; Spark's own DAG
 scheduler parallelizes within.
 
 Scale design (100 TB posture):
+- the reference's chain is strictly linear, but after the quality gate the
+  sinks depend only on staging and on the fact. They run as concurrent
+  Spark jobs from driver threads, and Spark's FIFO scheduler shares the
+  cores between them: the two dimension appends start beside the fact's
+  window + `count`; on the full reload the weekly MV starts once that
+  `count` has filled the fact cache, beside the fact write. Staging and
+  the gate come first because every sink reads staging and none may be
+  submitted before the gate passes (C4); the `count` comes before the
+  weekly fan-out so the weekly aggregate reads the cache instead of
+  recomputing the window. On the incremental path the weekly MV re-reads
+  the stored fact, so it runs after the fact's partition overwrite and
+  only the dims overlap. On a cluster the same threads just queue the
+  jobs in FIFO order;
 - the fact table is written partitioned by `ano`/`data_id` (year, day) →
   static/dynamic partition pruning for BI consumers, and the incremental
   daily run (`incremental_date=`) overwrites ONLY the touched day + week
   partitions under dynamic partitionOverwriteMode;
 - the fact DataFrame is cached between its three consumers (fact write,
-  weekly aggregate, report) so the window computation runs once;
+  weekly aggregate, report) so the window computation runs once, and is
+  unpersisted whether the run succeeds or fails;
 - dims use the anti-join append sink (ON CONFLICT DO NOTHING, S6) — the
   incoming distinct keys are the broadcast side;
 - nothing `.collect()`s except the one-row gate and the ≤k-row report;
@@ -33,12 +47,16 @@ Scale design (100 TB posture):
 
 from __future__ import annotations
 
+import contextlib
 import datetime as dt
 import logging
+import time
+from concurrent.futures import Future, ThreadPoolExecutor
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from ..operators.quality import expect_passed, quality_summary
 from ..schemas import FACT_MOVIMENTACAO, STAGING, VOLATILITY_WEEKLY
@@ -49,15 +67,82 @@ from .volatility import daily_pct_change, top_avg_volatility, weekly_volatility
 
 log = logging.getLogger(__name__)
 
+# the keys of PipelineResult.stage_seconds, in the order they are logged
+STAGES = ("staging", "gate", "dim_instrumento", "dim_tempo", "fact", "weekly", "total")
+# branches on pool threads: the two dims and the full reload's weekly MV;
+# the fact runs on the calling thread
+_SINK_BRANCHES = 3
+
 
 @dataclass
 class PipelineResult:
-    """What the reference pushed through XCom, as plain values (C3)."""
+    """What the reference pushed through XCom, as plain values (C3).
+
+    ``stage_seconds`` holds the wall of each of ``STAGES``. The dims, the
+    fact and the weekly MV overlap, so their walls can sum past ``total``.
+    """
 
     staged_rows: int
     fact_rows: int
     weekly_rows: int
     report_message: str
+    stage_seconds: dict[str, float]
+
+
+@contextlib.contextmanager
+def _timed(seconds: dict[str, float], stage: str):
+    t = time.perf_counter()
+    yield
+    seconds[stage] = time.perf_counter() - t
+
+
+class _Branches:
+    """Sink branches of one run, as concurrent Spark jobs from driver threads.
+
+    Each branch is wrapped with ``inheritable_thread_target(spark)`` when it
+    is submitted, so its jobs carry the submitting thread's job group,
+    description and tags. Its wall goes to ``seconds[stage]``.
+
+    Leaving the block waits for every branch, also when the block itself
+    raised, and then raises the first error: the block's own, else that of
+    the first failed branch in submission order. Every other branch's error
+    is logged and attached to it as a note.
+    """
+
+    def __init__(self, spark: SparkSession, seconds: dict[str, float]):
+        self._spark = spark
+        self._seconds = seconds
+        self._futures: dict[str, Future] = {}
+        self._pool = ThreadPoolExecutor(_SINK_BRANCHES, thread_name_prefix="run_pipeline")
+
+    def submit(self, stage: str, fn) -> None:
+        """Run ``fn()`` as branch ``stage``; its plan is built on the branch
+        thread too, so that driver work overlaps the other branches."""
+
+        def branch():
+            with _timed(self._seconds, stage):
+                return fn()
+
+        target = inheritable_thread_target(self._spark)(branch)
+        self._futures[stage] = self._pool.submit(target)
+
+    def result(self, stage: str):
+        return self._futures[stage].result()
+
+    def __enter__(self) -> _Branches:
+        return self
+
+    def __exit__(self, exc_type, exc, tb) -> None:
+        self._pool.shutdown(wait=True)
+        failed = [(s, f.exception()) for s, f in self._futures.items() if f.exception()]
+        first = exc
+        if first is None and failed:
+            first = failed.pop(0)[1]
+        for stage, err in failed:
+            log.error("run_pipeline branch %s also failed", stage, exc_info=err)
+            first.add_note(f"run_pipeline branch {stage} also failed: {type(err).__name__}: {err}")
+        if first is not exc:
+            raise first  # a branch's error; the block's own propagates on return
 
 
 @dataclass
@@ -233,6 +318,18 @@ def _incremental_fact(
     )
 
 
+def _refresh_weekly(
+    spark: SparkSession, sink, daily: DataFrame, weekly_path: str, top_k: int
+) -> tuple[int, list]:
+    """Write the weekly MV of the ``daily`` fact rows with ``sink``, then
+    re-read the stored table with its DDL schema: its row count and its
+    top-k rows."""
+    weekly = weekly_volatility(daily, key="ticker", ts="data_id")
+    sink(weekly, weekly_path, partition_by=["week"])
+    stored = spark.read.schema(VOLATILITY_WEEKLY).parquet(weekly_path)
+    return stored.count(), top_avg_volatility(stored, k=top_k).collect()
+
+
 def run_pipeline(
     spark: SparkSession,
     csv_path: str,
@@ -247,6 +344,15 @@ def run_pipeline(
 ) -> PipelineResult:
     """Execute the full daily run. Raises QualityGateError to halt (C4).
 
+    Staging and the quality gate run first; no sink is submitted before the
+    gate passes. Then the two dimension appends run on pool threads beside
+    the fact (window, cache, ``count``, write) on the calling thread. On the
+    full reload the weekly MV (write from the cached fact, re-read,
+    ``count``, top-k) joins them once the ``count`` has filled the cache,
+    beside the fact write. Each branch inherits the caller's job group and
+    tags. The run waits for every branch, raises the first error with the
+    others attached as notes, and always unpersists the fact.
+
     ``report_path``: when set, write the executive text report (S9,
     the notebook's `relatorio_completo.txt`) there from the fact table.
 
@@ -259,71 +365,109 @@ def run_pipeline(
     the weekly MV are refreshed via DYNAMIC partition overwrite: only the
     ``ano=/data_id=`` directory of that day and the ``week=`` directory of
     its week are rewritten; every other partition's files stay untouched.
+    The touched week is recomputed from the stored fact, so the weekly MV
+    runs after the fact's overwrite and only the dims overlap.
     This is the reference's TRUNCATE-reload cadence upgraded to the 100 TB
     posture promised above: a daily run costs one day of I/O, not the
     table.
     """
+    t_run = time.perf_counter()
+    seconds: dict[str, float] = {}
     fact_path = f"{warehouse_dir}/fact_movimentacao_diaria"
     weekly_path = f"{warehouse_dir}/volatility_weekly"
 
     # -- 1-3: locate + load staging (S1, S2, S4) ---------------------------
-    staging = read_ohlcv_csv(spark, csv_path)
-    if incremental_date is not None:
-        staging = staging.filter(F.col("date") == F.lit(incremental_date))
-    staging_path = f"{warehouse_dir}/staging"
-    overwrite_parquet(staging, staging_path)
-    # re-read: columnar, pruned
-    staging = spark.read.schema(STAGING).parquet(staging_path)
+    with _timed(seconds, "staging"):
+        staging = read_ohlcv_csv(spark, csv_path)
+        if incremental_date is not None:
+            staging = staging.filter(F.col("date") == F.lit(incremental_date))
+        staging_path = f"{warehouse_dir}/staging"
+        overwrite_parquet(staging, staging_path)
+        # re-read: columnar, pruned
+        staging = spark.read.schema(STAGING).parquet(staging_path)
 
     # -- 4: quality gate (A1, A2, P4, P5, C4) ------------------------------
-    gate = quality_summary(
-        staging, null_check_cols=["close", "date"], expected_count=expected_count
-    )
-    staged_rows = expect_passed(gate, gate_name="staging")["total_rows"]
-
-    # -- 5: dimensions (A8, F2-F4, F8, F9, S6/J3) --------------------------
-    dim_inst = build_dim_instrumento(staging, symbol_col="symbol")
-    dim_tempo = build_dim_tempo(staging, date_col="date")
-    append_if_absent(spark, dim_inst, f"{warehouse_dir}/dim_instrumento", ["ticker"])
-    append_if_absent(spark, dim_tempo, f"{warehouse_dir}/dim_tempo", ["data_id"])
-
-    # -- 6: fact with %-change window (P1, W1, W2, F7) ---------------------
-    if incremental_date is None:
-        fact = build_fact(staging)
-    else:
-        fact = _incremental_fact(
-            spark, staging, fact_path, incremental_date, lookback_days
+    with _timed(seconds, "gate"):
+        gate = quality_summary(
+            staging, null_check_cols=["close", "date"], expected_count=expected_count
         )
-    fact = fact.withColumn("ano", F.year("data_id"))
-    fact.cache()  # three consumers below (SURVEY.md §4.3)
-    fact_rows = fact.count()
-    if incremental_date is None:
-        overwrite_parquet(fact, fact_path, partition_by=["ano", "data_id"])
-    else:
-        overwrite_partitions(fact, fact_path, partition_by=["ano", "data_id"])
+        staged_rows = expect_passed(gate, gate_name="staging")["total_rows"]
 
-    # -- 7: weekly volatility = MV refresh (F1, A3, S7) --------------------
-    if incremental_date is None:
-        weekly = weekly_volatility(fact, key="ticker", ts="data_id")
-        overwrite_parquet(weekly, weekly_path, partition_by=["week"])
-    else:
-        # recompute ONLY the touched week from its (pruned) day-partitions
-        wk0 = incremental_date - dt.timedelta(days=incremental_date.weekday())
-        week_slice = (
-            spark.read.schema(FACT_MOVIMENTACAO)
-            .parquet(fact_path)
-            .filter(
-                (F.col("data_id") >= F.lit(wk0))
-                & (F.col("data_id") <= F.lit(wk0 + dt.timedelta(days=6)))
+    fact = None
+    try:
+        with _Branches(spark, seconds) as branches:
+            # -- 5: dimensions (A8, F2-F4, F8, F9, S6/J3) ------------------
+            branches.submit("dim_instrumento", lambda: append_if_absent(
+                spark, build_dim_instrumento(staging, symbol_col="symbol"),
+                f"{warehouse_dir}/dim_instrumento", ["ticker"],
+            ))
+            branches.submit("dim_tempo", lambda: append_if_absent(
+                spark, build_dim_tempo(staging, date_col="date"),
+                f"{warehouse_dir}/dim_tempo", ["data_id"],
+            ))
+
+            # -- 6: fact with %-change window (P1, W1, W2, F7) -------------
+            with _timed(seconds, "fact"):
+                fact = (
+                    build_fact(staging)
+                    if incremental_date is None
+                    else _incremental_fact(
+                        spark, staging, fact_path, incremental_date, lookback_days
+                    )
+                ).withColumn("ano", F.year("data_id"))
+                fact.cache()  # three consumers below (SURVEY.md §4.3)
+                fact_rows = fact.count()
+                if incremental_date is None:
+                    # -- 7: weekly volatility = MV refresh (F1, A3, S7), from
+                    # the cache the count just filled
+                    branches.submit("weekly", lambda: _refresh_weekly(
+                        spark, overwrite_parquet, fact, weekly_path, top_k
+                    ))
+                    overwrite_parquet(fact, fact_path, partition_by=["ano", "data_id"])
+                else:
+                    overwrite_partitions(fact, fact_path, partition_by=["ano", "data_id"])
+
+            if incremental_date is not None:
+                # -- 7: recompute ONLY the touched week from its (pruned)
+                # day-partitions of the fact just written
+                with _timed(seconds, "weekly"):
+                    wk0 = incremental_date - dt.timedelta(days=incremental_date.weekday())
+                    week_slice = (
+                        spark.read.schema(FACT_MOVIMENTACAO)
+                        .parquet(fact_path)
+                        .filter(
+                            (F.col("data_id") >= F.lit(wk0))
+                            & (F.col("data_id") <= F.lit(wk0 + dt.timedelta(days=6)))
+                        )
+                    )
+                    weekly_rows, top = _refresh_weekly(
+                        spark, overwrite_partitions, week_slice, weekly_path, top_k
+                    )
+        if incremental_date is None:
+            weekly_rows, top = branches.result("weekly")
+
+        # -- 8: report + charts (S9), before the fact cache is released ----
+        if report_path or charts_dir:
+            # the report is global: in incremental mode the in-memory `fact`
+            # is one day, so read the full (freshly updated) table back
+            report_fact = (
+                fact
+                if incremental_date is None
+                else spark.read.schema(FACT_MOVIMENTACAO).parquet(fact_path)
             )
-        )
-        weekly_inc = weekly_volatility(week_slice, key="ticker", ts="data_id")
-        overwrite_partitions(weekly_inc, weekly_path, partition_by=["week"])
-    weekly = spark.read.schema(VOLATILITY_WEEKLY).parquet(weekly_path)
-    weekly_rows = weekly.count()
+            if report_path:
+                from .report import write_report
 
-    # -- 8-9: report + log (O1, S8, F12, S10) ------------------------------
-    top = top_avg_volatility(weekly, k=top_k).collect()
+                write_report(report_fact, report_path, k=5)
+            if charts_dir:
+                from .charts import write_report_charts
+
+                write_report_charts(report_fact, charts_dir, k=5)
+    finally:
+        if fact is not None:
+            fact.unpersist()
+
+    # -- 9: report message + log (O1, S8, F12, S10) ------------------------
     if not top:
         message = "Nenhum dado de volatilidade disponível."
     else:
@@ -332,30 +476,18 @@ def run_pipeline(
             f"Ativo mais volátil: {r['ticker']} "
             f"(volatilidade média semanal: {r['avg_volatility']:.2f}%)"
         )
-    if report_path or charts_dir:
-        # the report is global: in incremental mode the in-memory `fact`
-        # is one day, so read the full (freshly updated) table back
-        report_fact = (
-            fact
-            if incremental_date is None
-            else spark.read.schema(FACT_MOVIMENTACAO).parquet(fact_path)
-        )
-        if report_path:
-            from .report import write_report
-
-            write_report(report_fact, report_path, k=5)
-        if charts_dir:
-            from .charts import write_report_charts
-
-            write_report_charts(report_fact, charts_dir, k=5)
+    seconds["total"] = time.perf_counter() - t_run
+    stage_seconds = {stage: seconds[stage] for stage in STAGES}
     log.info(
-        "pipeline ok: staged=%s fact=%s weekly=%s | %s",
-        staged_rows, fact_rows, weekly_rows, message,
+        "pipeline ok: staged=%s fact=%s weekly=%s %s | %s",
+        staged_rows, fact_rows, weekly_rows,
+        " ".join(f"{stage}_s={s:.3f}" for stage, s in stage_seconds.items()),
+        message,
     )
-    fact.unpersist()
     return PipelineResult(
         staged_rows=staged_rows,
         fact_rows=fact_rows,
         weekly_rows=weekly_rows,
         report_message=message,
+        stage_seconds=stage_seconds,
     )

@@ -12,12 +12,15 @@ Golden invariants from the reference semantics:
 from __future__ import annotations
 
 import datetime as dt
+import os
+import shutil
+import threading
 
 import pytest
 from pyspark.sql import functions as F
 
 from airflow_etl_finance_market_spark.operators.quality import QualityGateError
-from airflow_etl_finance_market_spark.plans.pipeline import run_pipeline
+from airflow_etl_finance_market_spark.plans.pipeline import STAGES, run_pipeline
 from tests.make_ohlcv import TICKERS, write_csv
 
 
@@ -157,16 +160,56 @@ def test_chart_files_written(spark, ohlcv_csv, warehouse, result, tmp_path):
     assert meta["title"].startswith("TOP 5") and "=" in meta["series"]
 
 
+def test_stage_seconds(result):
+    """Every stage's own wall is reported; the overlapping branches may
+    sum past the total, but none can outlast it."""
+    assert tuple(result.stage_seconds) == STAGES
+    assert all(s > 0 for s in result.stage_seconds.values())
+    assert max(result.stage_seconds.values()) == result.stage_seconds["total"]
+
+
+def test_branch_failure_raised_cache_released_threads_joined(
+    spark, ohlcv_csv, warehouse, result, tmp_path
+):
+    """Failing dim branches fail the run with the first one's own read
+    error, the other attached as a note, after every branch has finished:
+    the fact cache is released and no pool thread outlives the call."""
+    wh = tmp_path / "wh"
+    shutil.copytree(warehouse, wh)
+    for dim in ("dim_instrumento", "dim_tempo"):
+        (wh / dim / "part-0.parquet").write_bytes(b"not parquet")
+    spark.catalog.clearCache()
+    threads = threading.active_count()
+    with pytest.raises(Exception, match="dim_instrumento/part-0.parquet") as err:
+        run_pipeline(spark, ohlcv_csv, str(wh))
+    notes = getattr(err.value, "__notes__", [])
+    assert len(notes) == 1 and "branch dim_tempo also failed" in notes[0]
+    assert "dim_tempo/part-0.parquet" in notes[0]
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert threading.active_count() == threads
+
+
+def _no_sink_written(wh: str) -> bool:
+    return not any(
+        os.path.exists(f"{wh}/{t}")
+        for t in ("dim_instrumento", "dim_tempo", "fact_movimentacao_diaria",
+                  "volatility_weekly")
+    )
+
+
 def test_gate_trips_on_corruption(spark, tmp_path):
     bad_csv = str(tmp_path / "bad.csv")
     write_csv(bad_csv, corrupt=True)
     with pytest.raises(QualityGateError):
         run_pipeline(spark, bad_csv, str(tmp_path / "wh"))
+    assert _no_sink_written(str(tmp_path / "wh"))
 
 
 def test_gate_trips_on_wrong_count(spark, ohlcv_csv, tmp_path):
+    """The gate halts the run before any sink is submitted (C4)."""
     with pytest.raises(QualityGateError):
         run_pipeline(spark, ohlcv_csv, str(tmp_path / "wh2"), expected_count=123)
+    assert _no_sink_written(str(tmp_path / "wh2"))
 
 
 def test_missing_csv_fails_fast(spark, tmp_path):
