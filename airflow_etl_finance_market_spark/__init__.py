@@ -5,7 +5,7 @@ capabilities of the reference financial-ETL pipeline
 Everything here is built Spark-first on the public PySpark DataFrame/SQL API:
 the logical plan is declared declaratively and Catalyst/Tungsten pick the
 physical strategy. Python UDFs are avoided in the parity tier entirely; the
-extension tier (similarity search, multimodal) uses Arrow-batched Pandas UDFs
+extension tier (similarity search) uses Arrow-batched Pandas UDFs
 only where built-in functions cannot express the semantics.
 
 Layout:
@@ -20,7 +20,6 @@ Layout:
     plans/        full query plans / pipeline stages (the 9-task reference
                   chain re-expressed as one Spark driver program, analytics)
     streaming/    Structured Streaming variants (weekly windowed volatility)
-    multimodal/   binary-column plumbing, stdlib image/video codecs
 """
 
 __version__ = "0.1.0"

@@ -2,14 +2,9 @@
 gates, cluster dedup, retrieval (TF-IDF/BM25/PMI), packing,
 funnels, and sequence analytics.
 
-One CONTIGUOUS slice of the registry in REGISTRATION ORDER —
-the driver-ledger contract: ``harness.py`` imports the tier
-modules in sequence, so ``queries()``/``oracles()`` keep the
-exact pre-split ordering (the 50-slot window membership is
-pinned by tests/test_harness_window.py). Slices are cut at
-registration boundaries, so a handful of entries sit with
-their chronological neighbors rather than their thematic kin
-— ordering is the contract, theming is the map.
+``harness.py`` imports the tier modules in sequence; its note
+on that import states what registration order does and does not
+decide (the 50-slot window is pinned by tests/test_harness_window.py).
 """
 
 from __future__ import annotations
@@ -1376,31 +1371,3 @@ def q_top_event_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.desc("n"), "trigram")
         .limit(15)
     )
-
-
-@register(
-    "multimodal_frame_sample",
-    """
-WITH p AS (
-    SELECT doc_id, octet_length(encode(text)) AS nb FROM documents
-), frames AS (
-    SELECT doc_id, nb,
-           CAST((i - 1) * 2 AS INT) AS frame_idx
-    FROM p, unnest(generate_series(
-        1, (CAST(ceil(nb / 256.0) AS BIGINT) + 1) // 2)) AS g(i)
-)
-SELECT doc_id, frame_idx,
-       CAST(least(256, nb - frame_idx * 256) AS BIGINT) AS frame_bytes
-FROM frames
-""",
-)
-def q_multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Frame-sampling plumbing gate (multimodal/binary.sample_frames):
-    every 2nd 256-byte 'frame' of each fake payload — the 1→N mapInPandas
-    generator shape. The oracle mirrors the fake codec's chunk
-    arithmetic; frame hashes stay pytest-covered (DuckDB blob hashing is
-    not mirrored)."""
-    from .multimodal.binary import attach_fake_payload, sample_frames
-
-    media = attach_fake_payload(load_fixture(spark, sf_dir, "documents"))
-    return sample_frames(media).select("doc_id", "frame_idx", "frame_bytes")

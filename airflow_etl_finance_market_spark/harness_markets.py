@@ -2,14 +2,9 @@
 pagerank, PQ/IVFPQ ANN audits, stateful funnel streaming, and
 rollup sketches.
 
-One CONTIGUOUS slice of the registry in REGISTRATION ORDER —
-the driver-ledger contract: ``harness.py`` imports the tier
-modules in sequence, so ``queries()``/``oracles()`` keep the
-exact pre-split ordering (the 50-slot window membership is
-pinned by tests/test_harness_window.py). Slices are cut at
-registration boundaries, so a handful of entries sit with
-their chronological neighbors rather than their thematic kin
-— ordering is the contract, theming is the map.
+``harness.py`` imports the tier modules in sequence; its note
+on that import states what registration order does and does not
+decide (the 50-slot window is pinned by tests/test_harness_window.py).
 """
 
 from __future__ import annotations

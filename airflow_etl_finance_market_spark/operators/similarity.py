@@ -833,8 +833,9 @@ def pq_index(
     batch linear algebra, exactly the shape Catalyst HOFs pay an
     interpreted-lambda constant for. ``"arrow"`` (default) runs it as a
     vectorized numpy ``mapInPandas`` stage (map-only, partitioning
-    preserved, self-contained closure; ~7× the HOF throughput — the
-    same (b)-tier justification as the multimodal codecs). ``"sql"`` is
+    preserved, self-contained closure; ~7× the HOF throughput, which
+    is what earns a Python stage where Catalyst can express the math
+    but only slowly). ``"sql"`` is
     the pure-Catalyst reference used differentially in tests (its
     ``_cell`` stamp composes :func:`assign_cells_frame` via an id join —
     reference semantics, not the scale path). Both are deterministic;

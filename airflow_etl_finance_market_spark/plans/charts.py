@@ -33,8 +33,12 @@ from pyspark.sql import functions as F
 from .report import ticker_stats
 
 # --------------------------------------------------------------------------
-# Minimal PNG writer (stdlib only)
+# Minimal PNG writer and reader (stdlib only)
 # --------------------------------------------------------------------------
+
+_PNG_SIG = b"\x89PNG\r\n\x1a\n"
+# channels per pixel -> PNG color type (greyscale, truecolor, RGBA)
+_COLOR_TYPE = {1: 0, 3: 2, 4: 6}
 
 
 def _chunk(tag: bytes, payload: bytes) -> bytes:
@@ -47,18 +51,19 @@ def _chunk(tag: bytes, payload: bytes) -> bytes:
 
 
 def encode_png(rgb: np.ndarray, text_meta: dict[str, str] | None = None) -> bytes:
-    """Encode an (H, W, 3) uint8 array as a PNG byte string.
+    """Encode an (H, W, C) uint8 array as a PNG byte string.
 
-    Truecolor 8-bit, filter 0 scanlines, one IDAT — the simplest valid
-    encoding; every PNG reader accepts it. ``text_meta`` becomes tEXt
-    chunks (latin-1, the PNG spec's encoding for tEXt).
+    C is 3 for the charts (truecolor); 1 (greyscale) and 4 (RGBA) map to
+    PNG color types 0 and 6. 8-bit, filter 0 scanlines, one IDAT — the
+    simplest valid encoding; every PNG reader accepts it. ``text_meta``
+    becomes tEXt chunks (latin-1, the PNG spec's encoding for tEXt).
     """
-    h, w, _ = rgb.shape
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
+    h, w, ch = rgb.shape
+    ihdr = struct.pack(">IIBBBBB", w, h, 8, _COLOR_TYPE[ch], 0, 0, 0)
     raw = np.concatenate(
-        [np.zeros((h, 1), dtype=np.uint8), rgb.reshape(h, w * 3)], axis=1
+        [np.zeros((h, 1), dtype=np.uint8), rgb.reshape(h, w * ch)], axis=1
     ).tobytes()
-    out = [b"\x89PNG\r\n\x1a\n", _chunk(b"IHDR", ihdr)]
+    out = [_PNG_SIG, _chunk(b"IHDR", ihdr)]
     for key, val in (text_meta or {}).items():
         out.append(
             _chunk(
@@ -71,11 +76,69 @@ def encode_png(rgb: np.ndarray, text_meta: dict[str, str] | None = None) -> byte
     return b"".join(out)
 
 
+def decode_png(data: bytes) -> tuple[int, int, int, bytes]:
+    """Read a PNG's pixels back: ``(width, height, channels, row-major
+    bytes)`` (test hook, the pixel counterpart of :func:`read_png_meta`).
+
+    Covers what :func:`encode_png` writes and a little more: 8-bit
+    greyscale/RGB/RGBA, non-interlaced, any number of IDAT chunks, all
+    five scanline filters. Other formats, and pixel data shorter than
+    the header declares, raise ValueError.
+    """
+    if data[:8] != _PNG_SIG:
+        raise ValueError("not a PNG")
+    pos, idat, ihdr = 8, [], None
+    while pos + 8 <= len(data):
+        (ln,) = struct.unpack(">I", data[pos : pos + 4])
+        tag = data[pos + 4 : pos + 8]
+        if tag == b"IHDR":
+            ihdr = struct.unpack(">IIBBBBB", data[pos + 8 : pos + 21])
+        elif tag == b"IDAT":
+            idat.append(data[pos + 8 : pos + 8 + ln])
+        elif tag == b"IEND":
+            break
+        pos += 12 + ln
+    if ihdr is None:
+        raise ValueError("PNG has no IHDR")
+    w, h, depth, ctype, _, _, interlace = ihdr
+    ch = {v: k for k, v in _COLOR_TYPE.items()}.get(ctype)
+    if depth != 8 or ch is None or interlace:
+        raise ValueError(
+            f"unsupported PNG (depth={depth}, color_type={ctype}, "
+            f"interlace={interlace})"
+        )
+    stride = w * ch
+    raw = zlib.decompress(b"".join(idat))
+    if len(raw) < h * (stride + 1):
+        raise ValueError("truncated PNG pixel data")
+    out = bytearray(h * stride)
+    prev = bytearray(stride)
+    for y in range(h):
+        p = y * (stride + 1)
+        f, line = raw[p], bytearray(raw[p + 1 : p + 1 + stride])
+        for i in range(stride if f else 0):  # filter 0 (None) is a copy
+            a = line[i - ch] if i >= ch else 0
+            b, c = prev[i], (prev[i - ch] if i >= ch else 0)
+            if f == 1:  # Sub
+                line[i] = (line[i] + a) & 255
+            elif f == 2:  # Up
+                line[i] = (line[i] + b) & 255
+            elif f == 3:  # Average
+                line[i] = (line[i] + ((a + b) >> 1)) & 255
+            elif f == 4:  # Paeth
+                pa, pb, pc = abs(b - c), abs(a - c), abs(a + b - 2 * c)
+                pred = a if pa <= pb and pa <= pc else (b if pb <= pc else c)
+                line[i] = (line[i] + pred) & 255
+        out[y * stride : (y + 1) * stride] = line
+        prev = line
+    return w, h, ch, bytes(out)
+
+
 def read_png_meta(path: str) -> dict[str, str]:
     """Parse IHDR dimensions + tEXt chunks back out of a PNG (test hook)."""
     with open(path, "rb") as fh:
         data = fh.read()
-    assert data[:8] == b"\x89PNG\r\n\x1a\n", "not a PNG"
+    assert data[:8] == _PNG_SIG, "not a PNG"
     meta: dict[str, str] = {}
     pos = 8
     while pos < len(data):

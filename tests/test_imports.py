@@ -5,11 +5,14 @@ name that a deletion removed only fails when that function runs. This test
 walks every ``import`` / ``from ... import`` statement (function-local ones
 included) in the package, ``bench.py``, ``tools/`` and ``__spark_entry__.py``
 and checks that each targeted module imports and each imported name exists.
+The same walk bounds the finance path: what ``plans/`` and ``session.py``
+reach, import by import, stays inside the modules the daily ETL needs.
 """
 
 from __future__ import annotations
 
 import ast
+import fnmatch
 import glob
 import importlib
 import importlib.util
@@ -77,3 +80,63 @@ def test_every_package_import_resolves():
     assert not unresolved, "unresolved package imports:\n" + "\n".join(
         unresolved
     )
+
+
+#: What the finance path (``plans/`` and ``session.py``) may reach, as
+#: patterns over module names relative to the package ("" is the package).
+_FINANCE_CENSUS = (
+    "",
+    "schemas",
+    "session",
+    "sources",
+    "sources.*",
+    "functions",
+    "functions.datetime",
+    "functions.finance",
+    "operators",
+    "operators.asof",
+    "operators.markets",
+    "operators.quality",
+    "operators.scoring",
+    "operators.topk",
+    "plans",
+    "plans.*",
+)
+
+
+def _module_file(module: str) -> str | None:
+    base = os.path.join(_REPO, *module.split("."))
+    for path in (f"{base}.py", os.path.join(base, "__init__.py")):
+        if os.path.exists(path):
+            return path
+    return None
+
+
+def test_finance_path_import_closure_stays_in_census():
+    seeds = [f"{PKG}.session"] + [
+        f"{PKG}.plans.{os.path.basename(p)[:-3]}"
+        for p in glob.glob(f"{_REPO}/{PKG}/plans/*.py")
+    ]
+    seen: set[str] = set()
+    todo = [s.removesuffix(".__init__") for s in seeds]
+    while todo:
+        parts = todo.pop().split(".")
+        # importing a module runs every enclosing package's __init__ too
+        for i in range(1, len(parts) + 1):
+            module = ".".join(parts[:i])
+            if module in seen:
+                continue
+            seen.add(module)
+            for _, target, names in _targets(_module_file(module)):
+                todo.append(target)
+                todo += [
+                    f"{target}.{n}" for n in names
+                    if _module_file(f"{target}.{n}")
+                ]
+    rel = {m.removeprefix(PKG).removeprefix(".") for m in seen}
+    assert {"plans.pipeline", "sources.sinks", "operators.quality"} <= rel
+    outside = sorted(
+        m for m in rel
+        if not any(fnmatch.fnmatchcase(m, pat) for pat in _FINANCE_CENSUS)
+    )
+    assert not outside, f"finance path imports outside its census: {outside}"

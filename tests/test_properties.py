@@ -355,11 +355,9 @@ def test_weighted_sample_matches_python_replay(spark, rows, k):
 
 
 # ---------------------------------------------------------------------------
-# Codec round-trip properties (pure driver-side — no Spark per example, so
-# these afford far more examples than the differential tests above)
+# PNG round-trip property (pure driver-side — no Spark per example, so it
+# affords far more examples than the differential tests above)
 # ---------------------------------------------------------------------------
-
-_CODEC_SETTINGS = dict(max_examples=40, deadline=None)
 
 
 @given(
@@ -368,12 +366,15 @@ _CODEC_SETTINGS = dict(max_examples=40, deadline=None)
     ch=st.sampled_from([1, 3, 4]),
     data=st.data(),
 )
-@settings(**_CODEC_SETTINGS)
+@settings(max_examples=40, deadline=None)
 def test_png_roundtrip_exact_on_random_pixels(w, h, ch, data):
-    """PNG is lossless: encode->decode must be the identity on ANY pixel
-    buffer, not just the fixture images."""
-    from airflow_etl_finance_market_spark.multimodal.binary import (
-        _stdlib_png_codec,
+    """PNG is lossless: the chart codec's encode->decode must be the
+    identity on ANY pixel buffer, not just the rendered charts."""
+    import numpy as np
+
+    from airflow_etl_finance_market_spark.plans.charts import (
+        decode_png,
+        encode_png,
     )
 
     pix = bytes(
@@ -385,97 +386,8 @@ def test_png_roundtrip_exact_on_random_pixels(w, h, ch, data):
             )
         )
     )
-    png_size, png_decode, png_encode, _ = _stdlib_png_codec()
-    b = png_encode(w, h, ch, pix)
-    assert png_size(b) == (w, h)
-    assert png_decode(b) == (w, h, ch, pix)
-
-
-@given(
-    bw=st.integers(min_value=1, max_value=3),
-    bh=st.integers(min_value=1, max_value=3),
-    data=st.data(),
-)
-@settings(max_examples=20, deadline=None)
-def test_jpeg_block_constant_images_roundtrip_tightly(bw, bh, data):
-    """Any image whose 8x8 blocks are each constant is DC-only after the
-    DCT — the JPEG round trip must land within +/-2 gray levels on every
-    pixel for ARBITRARY block values (quant rounding only), a property a
-    broken IDCT/zigzag/Huffman path cannot fake."""
-    from airflow_etl_finance_market_spark.multimodal.jpeg import (
-        _stdlib_jpeg_codec,
-    )
-
-    vals = data.draw(
-        st.lists(
-            st.integers(0, 255), min_size=bw * bh, max_size=bw * bh
-        )
-    )
-    w, h = bw * 8, bh * 8
-    pix = bytes(
-        vals[(y // 8) * bw + (x // 8)] for y in range(h) for x in range(w)
-    )
-    _, jdec, jenc = _stdlib_jpeg_codec()
-    dw, dh, ch, out = jdec(jenc(w, h, 1, pix, quality=90))
-    assert (dw, dh, ch) == (w, h, 1)
-    assert max(abs(a - b) for a, b in zip(pix, out)) <= 2
-
-
-@given(data=st.data())
-@settings(**_CODEC_SETTINGS)
-def test_avi_container_roundtrip_byte_exact(data):
-    """The AVI container must hand back EVERY frame byte-for-byte for
-    arbitrary frame payloads — including empty and odd-length frames
-    (word-aligned chunk padding is where naive walkers corrupt)."""
-    from airflow_etl_finance_market_spark.multimodal.video import (
-        _stdlib_avi_codec,
-    )
-
-    frames = data.draw(
-        st.lists(st.binary(min_size=0, max_size=40), min_size=0, max_size=8)
-    )
-    info, extract, enc = _stdlib_avi_codec()
-    b = enc(frames, fps=data.draw(st.integers(1, 60)))
-    assert extract(b) == frames
-    assert info(b)[0] == len(frames)
-
-
-@given(
-    w=st.integers(min_value=1, max_value=16),
-    h=st.integers(min_value=1, max_value=16),
-    data=st.data(),
-)
-@settings(**_CODEC_SETTINGS)
-def test_gif_roundtrip_exact_on_random_indexed_images(w, h, data):
-    """GIF is palette-lossless: encode->decode is the identity on ANY
-    index buffer over ANY palette (LZW + palette lookup must compose to
-    the identity)."""
-    from airflow_etl_finance_market_spark.multimodal.gif import (
-        _stdlib_gif_codec,
-    )
-
-    n_colors = data.draw(st.integers(min_value=1, max_value=16))
-    pal = [
-        tuple(
-            data.draw(st.integers(0, 255)) for _ in range(3)
-        )
-        for _ in range(n_colors)
-    ]
-    idx = bytes(
-        data.draw(
-            st.lists(
-                st.integers(0, n_colors - 1),
-                min_size=w * h,
-                max_size=w * h,
-            )
-        )
-    )
-    gif_size, gif_decode, gif_encode = _stdlib_gif_codec()
-    b = gif_encode(w, h, idx, pal)
-    assert gif_size(b) == (w, h)
-    dw, dh, ch, pix = gif_decode(b)
-    assert (dw, dh, ch) == (w, h, 3)
-    assert pix == b"".join(bytes(pal[v]) for v in idx)
+    rgb = np.frombuffer(pix, np.uint8).reshape(h, w, ch)
+    assert decode_png(encode_png(rgb)) == (w, h, ch, pix)
 
 
 _word = st.text(

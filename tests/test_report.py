@@ -78,6 +78,7 @@ def test_write_report_charts(spark, tmp_path):
     """S9 PNG chart sinks: the notebook's four figures, rendered without
     matplotlib, with content pinned via tEXt metadata."""
     from airflow_etl_finance_market_spark.plans.charts import (
+        decode_png,
         read_png_meta,
         write_report_charts,
     )
@@ -88,6 +89,10 @@ def test_write_report_charts(spark, tmp_path):
     for p in paths.values():
         meta = read_png_meta(p)
         assert int(meta["width"]) > 0 and int(meta["height"]) > 0
+        with open(p, "rb") as fh:
+            w, h, ch, pix = decode_png(fh.read())
+        assert (str(w), str(h), ch) == (meta["width"], meta["height"], 3)
+        assert len(set(pix)) > 1  # something drawn on the background
 
     # chart CONTENT: rankings and values match the data, not just existence
     vol = read_png_meta(paths["volatility"])
@@ -128,3 +133,36 @@ def test_charts_handle_all_null_metric(spark, tmp_path):
     for p in paths.values():
         meta = read_png_meta(p)
         assert int(meta["width"]) > 0
+
+
+def test_encode_png_decodes_to_its_pixels():
+    """The chart encoder's PNG read back with the stdlib alone: every
+    chunk's CRC holds, and the inflated IDAT is exactly the filter-0
+    scanlines of the input pixels (``read_png_meta`` reads only IHDR and
+    tEXt, so this is the one check on the pixel data)."""
+    import struct
+    import zlib
+
+    import numpy as np
+
+    from airflow_etl_finance_market_spark.plans.charts import encode_png
+
+    rgb = np.random.default_rng(7).integers(0, 256, (6, 7, 3), np.uint8)
+    rgb[2, 3] = [1, 2, 3]
+    png = encode_png(rgb, text_meta={"title": "t"})
+    assert png[:8] == b"\x89PNG\r\n\x1a\n"
+    chunks, pos = [], 8
+    while pos < len(png):
+        (n,) = struct.unpack(">I", png[pos : pos + 4])
+        tag, payload = png[pos + 4 : pos + 8], png[pos + 8 : pos + 8 + n]
+        (crc,) = struct.unpack(">I", png[pos + 8 + n : pos + 12 + n])
+        assert crc == zlib.crc32(tag + payload), tag
+        chunks.append((tag, payload))
+        pos += 12 + n
+    assert pos == len(png)
+    assert [t for t, _ in chunks] == [b"IHDR", b"tEXt", b"IDAT", b"IEND"]
+    # 7 wide, 6 high, 8-bit truecolor, deflate, filter method 0, no interlace
+    assert chunks[0][1] == struct.pack(">IIBBBBB", 7, 6, 8, 2, 0, 0, 0)
+    assert chunks[1][1] == b"title\x00t"
+    raw = zlib.decompress(b"".join(p for t, p in chunks if t == b"IDAT"))
+    assert raw == b"".join(b"\x00" + row.tobytes() for row in rgb)
