@@ -57,11 +57,6 @@ def register(name: str, oracle: str | None = None):
 #:    behind the newest CORRECTNESS file.
 _WINDOW_DEMOTED = [
     # r14-green: oldest ledger rows, due back in the window next round
-    "distinct_counts",
-    "customer_big_order_split",
-    "dim_snapshots",
-    "quality_gate_exact",
-    "fk_orphan_check",
     "brand_scores",
     "returnflag_correlation",
     "latest_event_per_user",
@@ -103,11 +98,9 @@ _WINDOW_DEMOTED = [
     "purchase_attribution",
     "user_sessions",
     "minhash_lsh_near_dups",
-    "embedding_topk_ivf",
     "top_docs_per_lang",
     "term_frequencies",
     "doc_repetition_stats",
-    "embedding_centroids",
     "split_balance",
     "doc_tfidf_top_terms",
     "doc_seq_packing",
@@ -118,7 +111,6 @@ _WINDOW_DEMOTED = [
     "user_retention_cohorts",
     "doc_inverted_index",
     "term_pmi_pairs",
-    "embedding_quantization",
     "event_transition_matrix",
     "top_event_trigrams",
     "regional_supplier_volume",
@@ -128,8 +120,6 @@ _WINDOW_DEMOTED = [
     "doc_source_quota_sample",
     "ticker_pair_correlation",
     "part_supplier_pagerank",
-    "embedding_topk_pq",
-    "embedding_topk_ivfpq",
     "user_funnel_times",
     "streaming_funnel_ooo",
     "weekly_activity_panel",

@@ -1,7 +1,7 @@
 """Corpus gate tier I: text dedup (exact/minhash/simhash), language
-ID, embedding ANN, window analytics, the curation funnel, and the
-crawl-text curation gates (paragraph dedup, HTML extraction, C4 line
-rules, semantic dedup, Gopher flags, DSIR weights).
+ID, window analytics, the curation funnel, and the crawl-text curation
+gates (paragraph dedup, HTML extraction, C4 line rules, Gopher flags,
+DSIR weights).
 
 ``harness.py`` imports the tier modules in sequence; its note
 on that import states what registration order does and does not
@@ -211,71 +211,6 @@ def q_doc_jaccard_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
         block_col="lang",
         n=3,
         threshold=0.1,
-    )
-
-
-_COS_SQL = """
-list_reduce(list_transform(generate_series(1, 64), i -> {a}[i] * {b}[i]),
-            (x, y) -> x + y)
-/ NULLIF(sqrt(list_reduce(list_transform(generate_series(1, 64), i -> {a}[i] * {a}[i]),
-              (x, y) -> x + y))
-       * sqrt(list_reduce(list_transform(generate_series(1, 64), i -> {b}[i] * {b}[i]),
-              (x, y) -> x + y)), 0)
-"""
-
-
-@register(
-    "embedding_topk",
-    f"""
-WITH v AS (
-    SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings
-), scored AS (
-    SELECT
-        q.vec_id AS query_id,
-        c.vec_id AS neighbor_id,
-        ROUND({_COS_SQL.format(a="q.e", b="c.e")}, 6) AS cosine_sim
-    FROM v q
-    JOIN v c ON c.vec_id != q.vec_id
-    WHERE q.vec_id IN (0, 1, 2, 3, 4)
-)
-SELECT query_id, neighbor_id, cosine_sim,
-       CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                               ORDER BY cosine_sim DESC, neighbor_id) AS INT) AS rank
-FROM scored
-QUALIFY rank <= 5
-""",
-)
-def q_embedding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force top-5 cosine neighbors for 5 query vectors (§7.5)."""
-    from .operators.similarity import cosine_topk_bruteforce
-
-    return cosine_topk_bruteforce(
-        load_fixture(spark, sf_dir, "embeddings"), [0, 1, 2, 3, 4], k=5
-    )
-
-
-@register(
-    "embedding_near_dups",
-    f"""
-WITH v AS (
-    SELECT vec_id, label, embedding::DOUBLE[] AS e FROM embeddings
-), pairs AS (
-    SELECT
-        a.vec_id AS id_a,
-        b.vec_id AS id_b,
-        ROUND({_COS_SQL.format(a="a.e", b="b.e")}, 6) AS cosine_sim
-    FROM v a
-    JOIN v b ON a.label = b.label AND a.vec_id < b.vec_id
-)
-SELECT id_a, id_b, cosine_sim FROM pairs WHERE cosine_sim >= 0.35
-""",
-)
-def q_embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-dup pairs within label blocks (§7.5)."""
-    from .operators.similarity import embedding_near_dup_pairs
-
-    return embedding_near_dup_pairs(
-        load_fixture(spark, sf_dir, "embeddings"), threshold=0.35
     )
 
 
@@ -695,186 +630,6 @@ def q_simhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_fixture(spark, sf_dir, "documents"),
         max_hamming=8,
         hash_mode="portable",
-    )
-
-
-def _lsh_ann_oracle_sql(
-    query_ids: list[int],
-    k: int,
-    *,
-    n_planes: int = 4,
-    n_tables: int = 8,
-    dim: int = 64,
-) -> str:
-    """DuckDB twin of the FULL hyperplane-LSH ANN pipeline. The hyperplanes
-    are seeded constants (numpy default_rng), embedded as list literals in
-    both engines; the signature dot products fold left-to-right over the
-    same doubles on both sides, so sign bits — and therefore buckets,
-    candidates and the re-ranked top-k — match bit-for-bit."""
-    from .operators.similarity import _hyperplanes
-
-    tables = [_hyperplanes(dim, n_planes, seed=7 + t) for t in range(n_tables)]
-
-    def dot_lit(plane) -> str:
-        lit = "[" + ", ".join(repr(float(w)) for w in plane) + "]"
-        return (
-            f"list_reduce(list_transform(generate_series(1, {dim}), "
-            f"i -> e[i] * ({lit})[i]), (x, y) -> x + y)"
-        )
-
-    sig_cols = ",\n        ".join(
-        "("
-        + "\n         + ".join(
-            f"(CASE WHEN {dot_lit(tables[t][j])} > 0 THEN {1 << j} ELSE 0 END)"
-            for j in range(n_planes)
-        )
-        + f") AS sig{t}"
-        for t in range(n_tables)
-    )
-    corpus = "\n    UNION ALL\n    ".join(
-        f"SELECT vec_id AS neighbor_id, {t} AS table_idx, sig{t} AS bucket FROM sigs"
-        for t in range(n_tables)
-    )
-    probe_arms = []
-    for t in range(n_tables):
-        probe_arms.append(f"SELECT vec_id AS query_id, {t} AS table_idx, sig{t} AS bucket FROM qsigs")
-        probe_arms += [
-            f"SELECT vec_id AS query_id, {t} AS table_idx, "
-            f"xor(sig{t}, {1 << j}) AS bucket FROM qsigs"
-            for j in range(n_planes)
-        ]
-    probes = "\n    UNION ALL\n    ".join(probe_arms)
-    ids = ", ".join(str(q) for q in query_ids)
-    return f"""
-WITH v AS (
-    SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings
-), sigs AS (
-    SELECT vec_id, e,
-        sqrt(list_reduce(list_transform(generate_series(1, {dim}),
-             i -> e[i] * e[i]), (x, y) -> x + y)) AS nrm,
-        {sig_cols}
-    FROM v
-), qsigs AS (
-    SELECT * FROM sigs WHERE vec_id IN ({ids})
-), corpus AS (
-    {corpus}
-), probes AS (
-    {probes}
-), cand AS (
-    SELECT DISTINCT p.query_id, c.neighbor_id
-    FROM probes p
-    JOIN corpus c ON c.table_idx = p.table_idx AND c.bucket = p.bucket
-    WHERE c.neighbor_id != p.query_id
-), scored AS (
-    SELECT cand.query_id, cand.neighbor_id,
-        ROUND(list_reduce(list_transform(generate_series(1, {dim}),
-                  i -> q.e[i] * n.e[i]), (x, y) -> x + y)
-              / NULLIF(q.nrm * n.nrm, 0), 6) AS cosine_sim
-    FROM cand
-    JOIN sigs q ON q.vec_id = cand.query_id
-    JOIN sigs n ON n.vec_id = cand.neighbor_id
-)
-SELECT query_id, neighbor_id, cosine_sim,
-       CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                               ORDER BY cosine_sim DESC, neighbor_id) AS INT) AS rank
-FROM scored
-QUALIFY rank <= {k}
-"""
-
-
-@register("embedding_topk_lsh", _lsh_ann_oracle_sql([0, 1, 2, 3, 4], 5))
-def q_embedding_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hyperplane-LSH approximate top-k (multiprobe) — the ANN scale path.
-    The hyperplanes are seeded constants, so the WHOLE pipeline (sign-bit
-    signatures, multi-table buckets, multiprobe, cosine re-rank) is
-    deterministic and oracle-checked end-to-end in DuckDB; recall vs brute
-    force additionally asserted in tests/test_similarity.py."""
-    from .operators.similarity import cosine_topk_lsh
-
-    return cosine_topk_lsh(
-        load_fixture(spark, sf_dir, "embeddings"), [0, 1, 2, 3, 4], k=5
-    )
-
-
-@register(
-    "embedding_topk_ivf",
-    """
-SELECT CAST(5 AS BIGINT) AS n_queries,
-       CAST(25 AS BIGINT) AS n_exact_pairs,
-       true AS recall_ok,
-       true AS scores_exact
-""",
-)
-def q_embedding_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF (k-means inverted-file) approximate top-k — the data-adaptive
-    ANN tier; nprobe/nlist of the corpus scanned per query.
-
-    The iterative k-means training is not SQL-expressible, so the entry is
-    a HARD GATE instead of rows-only: it runs the full IVF pipeline AND the
-    exact brute-force twin, and returns one audit row the oracle pins as
-    constants — every query answered, recall ≥ 0.3 vs brute force (the
-    floor tests/test_similarity.py enforces), and every overlapping pair's
-    cosine bit-equal to the exact kernel. A silent recall collapse or score
-    drift flips the hash red in CORRECTNESS_r{N}.json.
-    """
-    from .operators.similarity import (
-        cosine_topk_bruteforce,
-        cosine_topk_ivf,
-        ivf_index,
-    )
-
-    emb = load_fixture(spark, sf_dir, "embeddings")
-    qids = [0, 1, 2, 3, 4]
-    # Build the index ONCE and persist the assigned frame: the probe reads
-    # it twice (corpus side + query side), and this audit consumes the IVF
-    # result in two branches (hits join + n_queries agg) — without the
-    # persist the corpus-scale assignment aggregate re-runs ~4x. At 100 TB
-    # the same role is played by the _cell-partitioned index table
-    # (ivf_index docstring); persist() is the single-session twin. The two
-    # ≤25-row result frames are cached for the same two-branch reason.
-    centroids, assigned = ivf_index(emb)
-    assigned.persist()
-    ivf = cosine_topk_ivf(emb, qids, k=5, index=(centroids, assigned)).select(
-        "query_id", "neighbor_id", "cosine_sim"
-    ).cache()
-    bf = cosine_topk_bruteforce(emb, qids, k=5).select(
-        "query_id", "neighbor_id", F.col("cosine_sim").alias("bf_sim")
-    ).cache()
-    try:
-        hits = ivf.join(bf, ["query_id", "neighbor_id"])
-        row = (
-            bf.agg(F.count(F.lit(1)).alias("n_exact_pairs"))
-            .crossJoin(ivf.agg(F.countDistinct("query_id").alias("n_queries")))
-            .crossJoin(
-                hits.agg(
-                    F.count(F.lit(1)).alias("n_hits"),
-                    F.max(
-                        F.abs(F.col("cosine_sim") - F.col("bf_sim"))
-                    ).alias("max_diff"),
-                )
-            )
-            .select(
-                "n_queries",
-                "n_exact_pairs",
-                (
-                    F.col("n_hits") >= F.lit(0.3) * F.col("n_exact_pairs")
-                ).alias("recall_ok"),
-                (
-                    F.coalesce(F.col("max_diff"), F.lit(0.0)) < F.lit(1e-9)
-                ).alias("scores_exact"),
-            )
-            .first()
-        )
-    finally:
-        # the audit scalars are computed — drop the cached frames so a
-        # long-lived session (the driver runs 50 queries on one session,
-        # bench runs everything twice) doesn't accumulate dead cache
-        for f in (ivf, bf, assigned):
-            f.unpersist()
-    return spark.createDataFrame(
-        [tuple(row)],
-        "n_queries long, n_exact_pairs long, "
-        "recall_ok boolean, scores_exact boolean",
     )
 
 
@@ -1318,38 +1073,6 @@ def q_doc_contamination_dual(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "embedding_centroids",
-    """
-SELECT
-    label,
-    CAST(i - 1 AS INT) AS pos,
-    ROUND(AVG(embedding[i]), 6) AS component,
-    COUNT(*) AS n_vectors
-FROM embeddings CROSS JOIN generate_series(1, 64) AS s(i)
-GROUP BY label, i
-""",
-)
-def q_embedding_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-label mean embedding (class prototype): posexplode + one
-    (label, pos)-keyed hash-aggregate, exploded back for comparison
-    (operators.similarity.group_centroids)."""
-    from .operators.similarity import group_centroids
-
-    cents = group_centroids(
-        load_fixture(spark, sf_dir, "embeddings"),
-        vec_col="embedding",
-        group_col="label",
-    )
-    return cents.select(
-        "label",
-        F.posexplode("centroid").alias("pos", "component"),
-        "n_vectors",
-    ).select(
-        "label", "pos", F.round("component", 6).alias("component"), "n_vectors"
-    )
-
-
-@register(
     "split_balance",
     f"""
 WITH assigned AS (
@@ -1402,7 +1125,7 @@ def q_split_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Crawl-text curation: paragraph dedup, HTML extraction, C4 line rules,
-# semantic dedup, Gopher quality flags, DSIR weights
+# Gopher quality flags, DSIR weights
 # ---------------------------------------------------------------------------
 
 
@@ -1679,51 +1402,6 @@ def q_c4_line_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     return c4_line_quality(docs.select("doc_id", page.alias("text")))
-
-
-@register(
-    "embedding_semantic_dedup",
-    f"""
-WITH RECURSIVE vv AS (
-    SELECT vec_id, label, embedding::DOUBLE[] AS e FROM embeddings
-), pairs AS (
-    SELECT a.vec_id AS id_a, b.vec_id AS id_b
-    FROM vv a JOIN vv b ON a.label = b.label AND a.vec_id < b.vec_id
-    WHERE ROUND({_COS_SQL.format(a="a.e", b="b.e")}, 6) >= 0.35
-), edges AS (
-    SELECT id_a AS u, id_b AS v FROM pairs
-    UNION ALL
-    SELECT id_b AS u, id_a AS v FROM pairs
-), reach(id, lbl) AS (
-    SELECT vec_id, vec_id FROM embeddings
-    UNION
-    SELECT e.u, r.lbl FROM edges e JOIN reach r ON r.id = e.v
-), cl AS (SELECT id, MIN(lbl) AS cluster_id FROM reach GROUP BY id),
-sz AS (SELECT cluster_id, COUNT(*) AS cluster_size FROM cl GROUP BY cluster_id)
-SELECT cl.id AS vec_id, cl.cluster_id,
-       cl.id = cl.cluster_id AS is_canonical, sz.cluster_size
-FROM cl JOIN sz USING (cluster_id)
-""",
-)
-def q_embedding_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup-shaped semantic dedup (Abbas et al. 2023) END TO END:
-    embedding-cosine near-dup pairs within cluster blocks → connected
-    components → one canonical survivor per semantic group —
-    ``filter(is_canonical)`` IS the semantically deduplicated corpus,
-    the embedding-space twin of ``doc_dedup_clusters``'s lexical dedup.
-    Composes the existing blocked cosine-pair generator
-    (operators/similarity.embedding_near_dup_pairs — the label blocks
-    stand in for SemDeDup's k-means cells; the unblocked scale path is
-    the LSH/IVF bucketing) with the hash-min CC + survivor machinery
-    (operators/graph.dedup_clusters). Oracle: the same pairs via the
-    exact cosine SQL, transitive closure as a recursive CTE, MIN(label)
-    per vertex = hash-min's fixpoint."""
-    from .operators.graph import dedup_clusters
-    from .operators.similarity import embedding_near_dup_pairs
-
-    emb = load_fixture(spark, sf_dir, "embeddings")
-    pairs = embedding_near_dup_pairs(emb, threshold=0.35)
-    return dedup_clusters(emb, pairs, id_col="vec_id")
 
 
 @register(

@@ -34,8 +34,8 @@ def q_streaming_pct_change_vol(spark: SparkSession, sf_dir: str) -> DataFrame:
     Stateful-streaming HARD GATE (§2.9): the chained streaming flagship
     — applyInPandasWithState pct-change → watermark → 7-day windowed
     stddev — executed as REAL streaming queries over 3 file micro-batches,
-    then audited against the batch LAG twin. Like the IVF gate, the oracle
-    pins the audit row: every event yields exactly one pct row across
+    then audited against the batch LAG twin. The oracle pins the audit
+    row: every event yields exactly one pct row across
     micro-batches (n_rows vs COUNT(*) — cross-batch state loss would drop
     or duplicate), streamed pct values equal the batch LAG path row-for-row
     (1e-9), and append-mode windows are a value-matching subset of the
@@ -974,40 +974,6 @@ def q_doc_length_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.quality import equi_depth_histogram
 
     return equi_depth_histogram(load_fixture(spark, sf_dir, "documents"))
-
-
-@register(
-    "embedding_quantization",
-    """
-WITH m AS (
-    SELECT vec_id, embedding,
-           list_max(list_transform(embedding,
-                                   x -> abs(CAST(x AS DOUBLE)))) AS maxabs
-    FROM embeddings
-)
-SELECT vec_id,
-       CAST(i - 1 AS INT) AS pos,
-       CAST(CASE WHEN maxabs = 0 THEN 0
-                 ELSE floor(CAST(embedding[i] AS DOUBLE) / maxabs * 127
-                            + 0.5)
-            END AS INT) AS q,
-       ROUND(maxabs / 127, 6) AS scale
-FROM m CROSS JOIN generate_series(1, 64) AS s(i)
-""",
-)
-def q_embedding_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Symmetric int8 quantization of the embedding column
-    (operators/similarity.quantize_embeddings), exploded to (vec_id, pos,
-    q, scale) for comparison. DOUBLE-pinned arithmetic + floor(v + 0.5)
-    makes the integers bit-identical cross-engine."""
-    from .operators.similarity import quantize_embeddings
-
-    qdf = quantize_embeddings(load_fixture(spark, sf_dir, "embeddings"))
-    return qdf.select(
-        "vec_id",
-        F.round("scale", 6).alias("scale"),
-        F.posexplode("qvec").alias("pos", "q"),
-    ).select("vec_id", "pos", "q", "scale")
 
 
 @register(

@@ -1,6 +1,5 @@
 """Markets-wide gate tier: OHLCV bars, drawdown/beta/correlation,
-pagerank, PQ/IVFPQ ANN audits, stateful funnel streaming, and
-rollup sketches.
+pagerank, stateful funnel streaming, and rollup sketches.
 
 ``harness.py`` imports the tier modules in sequence; its note
 on that import states what registration order does and does not
@@ -523,160 +522,6 @@ def q_doc_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return duplicate_span_stats(
         load_fixture(spark, sf_dir, "documents"), span_tokens=10, min_docs=2
-    )
-
-
-@register(
-    "embedding_topk_pq",
-    """
-SELECT CAST(5 AS BIGINT) AS n_queries,
-       CAST(25 AS BIGINT) AS n_exact_pairs,
-       true AS recall_ok,
-       true AS scores_exact
-""",
-)
-def q_embedding_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Product-quantization approximate top-k with exact refine
-    (operators/similarity.cosine_topk_pq) — the memory-bounded ANN tier:
-    ~17 bytes of codes+norm per vector scanned instead of 256 bytes of
-    raw floats, ADC table lookups against the broadcast query tables,
-    then an id-keyed exact re-rank of the top-refine·k candidates.
-
-    The per-subspace k-means training is not SQL-expressible, so like
-    the IVF entry this is a HARD audit GATE: it runs the PQ pipeline AND
-    the brute-force twin and pins one row — every query answered, recall
-    >= 0.6 vs exact (0.96 measured at the defaults; the pytest floor
-    matches), and every overlapping pair's cosine bit-equal (the refine
-    re-ranks on raw vectors through the same kernel). Recall collapse or
-    score drift flips the hash red in CORRECTNESS_r{N}.json.
-    """
-    from .operators.similarity import (
-        cosine_topk_bruteforce,
-        cosine_topk_pq,
-        pq_index,
-    )
-
-    emb = load_fixture(spark, sf_dir, "embeddings")
-    qids = [0, 1, 2, 3, 4]
-    books, codes = pq_index(emb)
-    codes.persist()
-    pq = cosine_topk_pq(emb, qids, k=5, index=(books, codes)).select(
-        "query_id", "neighbor_id", "cosine_sim"
-    ).cache()
-    bf = cosine_topk_bruteforce(emb, qids, k=5).select(
-        "query_id", "neighbor_id", F.col("cosine_sim").alias("bf_sim")
-    ).cache()
-    try:
-        hits = pq.join(bf, ["query_id", "neighbor_id"])
-        row = (
-            bf.agg(F.count(F.lit(1)).alias("n_exact_pairs"))
-            .crossJoin(pq.agg(F.countDistinct("query_id").alias("n_queries")))
-            .crossJoin(
-                hits.agg(
-                    F.count(F.lit(1)).alias("n_hits"),
-                    F.max(
-                        F.abs(F.col("cosine_sim") - F.col("bf_sim"))
-                    ).alias("max_diff"),
-                )
-            )
-            .select(
-                "n_queries",
-                "n_exact_pairs",
-                (
-                    F.col("n_hits") >= F.lit(0.6) * F.col("n_exact_pairs")
-                ).alias("recall_ok"),
-                (
-                    F.coalesce(F.col("max_diff"), F.lit(0.0)) < F.lit(1e-12)
-                ).alias("scores_exact"),
-            )
-            .first()
-        )
-    finally:
-        for f in (pq, bf, codes):
-            f.unpersist()
-    return spark.createDataFrame(
-        [tuple(row)],
-        "n_queries long, n_exact_pairs long, "
-        "recall_ok boolean, scores_exact boolean",
-    )
-
-
-@register(
-    "embedding_topk_ivfpq",
-    """
-SELECT CAST(5 AS BIGINT) AS n_queries,
-       CAST(25 AS BIGINT) AS n_exact_pairs,
-       true AS recall_ok,
-       true AS scores_exact
-""",
-)
-def q_embedding_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF∘PQ composed approximate top-k with exact refine
-    (operators/similarity.cosine_topk_ivfpq) — the self-described
-    PRODUCTION ANN layout: the coarse quantizer prunes WHICH rows are
-    scanned (nprobe/nlist of the corpus; ``_cell`` is the partition key
-    at scale) and PQ bounds WHAT each scanned row costs (~17-byte code
-    rows); cells + codes are stamped in ONE corpus pass.
-
-    Same HARD audit-gate shape as ``embedding_topk_pq`` (the composed
-    quantizers are not SQL-expressible): runs the IVF∘PQ pipeline AND
-    the brute-force twin and pins one row — every query answered,
-    recall >= 0.6 vs exact (0.88 measured at nprobe=8 on the fixture
-    corpus; the pytest floor matches), and every overlapping pair's
-    cosine bit-equal (the refine re-ranks on raw vectors through the
-    brute-force kernel). Recall collapse, a broken cell probe, or score
-    drift flips the hash red in CORRECTNESS_r{N}.json.
-    """
-    from .operators.similarity import (
-        cosine_topk_bruteforce,
-        cosine_topk_ivfpq,
-        ivfpq_index,
-    )
-
-    emb = load_fixture(spark, sf_dir, "embeddings")
-    qids = [0, 1, 2, 3, 4]
-    cents, books, frame = ivfpq_index(emb)
-    frame.persist()
-    ivfpq = cosine_topk_ivfpq(
-        emb, qids, k=5, nprobe=8, index=(cents, books, frame)
-    ).select("query_id", "neighbor_id", "cosine_sim").cache()
-    bf = cosine_topk_bruteforce(emb, qids, k=5).select(
-        "query_id", "neighbor_id", F.col("cosine_sim").alias("bf_sim")
-    ).cache()
-    try:
-        hits = ivfpq.join(bf, ["query_id", "neighbor_id"])
-        row = (
-            bf.agg(F.count(F.lit(1)).alias("n_exact_pairs"))
-            .crossJoin(
-                ivfpq.agg(F.countDistinct("query_id").alias("n_queries"))
-            )
-            .crossJoin(
-                hits.agg(
-                    F.count(F.lit(1)).alias("n_hits"),
-                    F.max(
-                        F.abs(F.col("cosine_sim") - F.col("bf_sim"))
-                    ).alias("max_diff"),
-                )
-            )
-            .select(
-                "n_queries",
-                "n_exact_pairs",
-                (
-                    F.col("n_hits") >= F.lit(0.6) * F.col("n_exact_pairs")
-                ).alias("recall_ok"),
-                (
-                    F.coalesce(F.col("max_diff"), F.lit(0.0)) < F.lit(1e-12)
-                ).alias("scores_exact"),
-            )
-            .first()
-        )
-    finally:
-        for f in (ivfpq, bf, frame):
-            f.unpersist()
-    return spark.createDataFrame(
-        [tuple(row)],
-        "n_queries long, n_exact_pairs long, "
-        "recall_ok boolean, scores_exact boolean",
     )
 
 

@@ -677,51 +677,6 @@ def q_file_roundtrip_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "embedding_contrastive_negatives",
-    """
-WITH cands AS (
-    SELECT CAST(('0x' || substr(md5('negs:b:' || CAST(vec_id AS VARCHAR)), 1, 8)) AS BIGINT) % 32 AS bkt,
-           vec_id AS neg_id, label AS neg_label
-    FROM embeddings
-), anchors AS (
-    SELECT vec_id AS anchor_id, label AS anchor_label,
-           CAST(('0x' || substr(md5('negs:p:' || CAST(vec_id AS VARCHAR)), 1, 8)) AS BIGINT) % 32 AS bkt
-    FROM embeddings
-), pairs AS (
-    SELECT a.anchor_id, a.anchor_label, c.neg_id, c.neg_label,
-           ROW_NUMBER() OVER (
-               PARTITION BY a.anchor_id
-               ORDER BY CAST(('0x' || substr(md5(
-                   'negs:r:' || CAST(a.anchor_id AS VARCHAR) || ':'
-                             || CAST(c.neg_id AS VARCHAR)), 1, 8)) AS BIGINT) ASC,
-                        c.neg_id ASC
-           ) AS rnk
-    FROM anchors a JOIN cands c USING (bkt)
-    WHERE a.anchor_label != c.neg_label
-)
-SELECT anchor_id, anchor_label, neg_id, neg_label,
-       CAST(rnk AS INT) AS neg_rank
-FROM pairs WHERE rnk <= 3
-""",
-)
-def q_embedding_contrastive_negatives(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Deterministic contrastive negative sampling
-    (operators/sampling.contrastive_negatives): per anchor vector, 3
-    cross-label negatives from ONE salted-hash candidate bucket — the
-    auditable, reproducible negative draw an embedding-training pipeline
-    needs, with pair fan-out bounded by N/buckets per anchor (buckets
-    scales with the table; never N^2). All randomness is the sampling
-    module's one md5 kernel, mirrored verbatim by the oracle."""
-    from .operators.sampling import contrastive_negatives
-
-    return contrastive_negatives(
-        load_fixture(spark, sf_dir, "embeddings"), k=3, buckets=32
-    )
-
-
-@register(
     "term_heavy_hitters",
     f"""
 SELECT term, n FROM (

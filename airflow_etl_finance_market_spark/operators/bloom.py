@@ -23,8 +23,8 @@ it — a k-mismatch is unrepresentable, not merely unlikely.
 
 Build side: the filter's set bit POSITIONS are computed in Spark
 (explode k hash positions per value, distinct) and collected — bounded
-by k x |set|, the same parameter-bounded-collect contract as the ANN
-training samples; the bitmap ships back as one BinaryType literal.
+by k x |set|, a parameter-bounded collect; the bitmap ships back as
+one BinaryType literal.
 """
 
 from __future__ import annotations

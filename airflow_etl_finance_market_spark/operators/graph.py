@@ -1,6 +1,6 @@
 """Connected components — the closing step of fuzzy dedup at scale.
 
-Near-dup detection (MinHash/SimHash/embedding pairs) yields EDGES; what a
+Near-dup detection (MinHash/SimHash pairs) yields EDGES; what a
 curation pipeline actually needs is the transitive closure: one cluster id
 per document, one canonical survivor per cluster. The reference has no
 graph tier at all (its dedup is Postgres ON CONFLICT, reference:
@@ -340,8 +340,8 @@ def dedup_clusters(
 ) -> DataFrame:
     """(doc_id, cluster_id, is_canonical, cluster_size) for every document.
 
-    ``pairs`` is any near-dup pair frame (MinHash, SimHash, embedding —
-    they all emit (id_a, id_b)). The canonical survivor is the smallest
+    ``pairs`` is any near-dup pair frame (MinHash, SimHash — they all
+    emit (id_a, id_b)). The canonical survivor is the smallest
     doc_id in the cluster (deterministic); ``filter(is_canonical)`` IS the
     dedup, and ``cluster_size`` is the dedup ratio audit for free. Sizes
     ride a count-over-window on the component labels — one shuffle, no

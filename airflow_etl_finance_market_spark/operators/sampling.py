@@ -272,63 +272,3 @@ def weighted_sample(
         .withColumn(rank_col, F.row_number().over(w))
         .filter(F.col(rank_col) <= k)
     )
-
-
-def contrastive_negatives(
-    df: DataFrame,
-    *,
-    k: int = 3,
-    buckets: int = 32,
-    id_col: str = "vec_id",
-    label_col: str = "label",
-    seed: str = "negs",
-) -> DataFrame:
-    """Deterministic in-batch negative sampling for contrastive training:
-    per anchor row, ``k`` cross-label negatives drawn from ONE hash
-    bucket of candidates.
-
-    The all-pairs hazard is gated up front: candidates land in
-    ``buckets`` buckets by a salted hash of their id, each anchor probes
-    the single bucket a DIFFERENT salt assigns it, and only that
-    bucket's cross-label rows race (salted-md5 key, ties on neg id) for
-    the k slots. Pair fan-out is |anchors| x N/buckets, so ``buckets``
-    scales WITH the table to hold the per-anchor candidate count
-    constant — the knob is candidates-per-anchor, never N². Everything
-    is the module's one md5 kernel (`hash_bucket`), so the draw is
-    engine-portable and reproducible run-over-run — the property that
-    makes a training set auditable after the fact.
-
-    Anchors whose probed bucket lacks k cross-label rows yield fewer
-    negatives (never a substitute from another bucket — the draw stays
-    a pure function of (id, seed, buckets)).
-    """
-    cands = df.select(
-        hash_bucket(id_col, seed=f"{seed}:b", buckets=buckets).alias("_bkt"),
-        F.col(id_col).alias("neg_id"),
-        F.col(label_col).alias("neg_label"),
-    )
-    anchors = df.select(
-        F.col(id_col).alias("anchor_id"),
-        F.col(label_col).alias("anchor_label"),
-        hash_bucket(id_col, seed=f"{seed}:p", buckets=buckets).alias("_bkt"),
-    )
-    race = hash_bucket(
-        F.concat(
-            F.col("anchor_id").cast("string"),
-            F.lit(":"),
-            F.col("neg_id").cast("string"),
-        ),
-        seed=f"{seed}:r",
-        buckets=4294967296,  # identity modulo: the raw 32-bit race key
-    )
-    w = Window.partitionBy("anchor_id").orderBy(
-        F.col("_race").asc(), F.col("neg_id").asc()
-    )
-    return (
-        anchors.join(cands, "_bkt")
-        .filter(F.col("anchor_label") != F.col("neg_label"))
-        .withColumn("_race", race)
-        .withColumn("neg_rank", F.row_number().over(w))
-        .filter(F.col("neg_rank") <= k)
-        .select("anchor_id", "anchor_label", "neg_id", "neg_label", "neg_rank")
-    )

@@ -53,7 +53,7 @@ histogram; every E-step is one Arrow `mapInPandas` pass over the
 TYPE table (|word types| rows — millions at web scale, cluster-trivial;
 the vocab rides the closure, parameter-bounded) feeding one hash-agg;
 the per-round driver collect is the pruned vocab itself — bounded by
-(`keep_multi` + alphabet), the bpe/ANN house-rule exception. The corpus
+(`keep_multi` + alphabet), the bpe house-rule exception. The corpus
 is touched again only by :func:`unigram_token_stats`' apply join — the
 half that must stay distributed. Words longer than `max_word_len` are
 excluded from training (the SentencePiece max-sentencepiece-length

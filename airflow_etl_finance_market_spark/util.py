@@ -49,8 +49,8 @@ def fan_out(
 ) -> DataFrame:
     """Spread CPU-bound per-row work across every core.
 
-    Text/hash kernels (shingling, minhash, simhash, tokenization, vector
-    math) are compute-bound, and a small single-file input otherwise pins
+    Text/hash kernels (shingling, minhash, simhash, tokenization) are
+    compute-bound, and a small single-file input otherwise pins
     the whole stage to ONE task — a 5k-doc corpus in one parquet file ran
     the entire dedup family on 1 of 32 cores. The shuffle this inserts
     moves only the small input once and unlocks N× the CPU.

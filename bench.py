@@ -65,8 +65,7 @@ by construction, and markets_x10 (10x lineitem, ~6M rows) + events_x10
 (10x USER cardinality, 1M rows — the dimension the user-keyed
 funnel/retention/ffill shuffles scale on; all five entries 0.5-1.2 s)
 give the market and event tiers the same scaling evidence as the
-corpus tier. corpus_x10 additionally gains ann_pq / ann_ivfpq /
-ann_pq_query / dup_spans.
+corpus tier. corpus_x10 additionally gains dup_spans.
 
 r06 notes: ARBITRATION of the r05 containment_lsh +49% (2.989 -> 4.456,
 past the +20% rule, flagged by the r05 verdict): solo best-of-3 x3 sets
@@ -87,20 +86,7 @@ honest scale-up; 10x the corpus_x10 data) timing the dedup/CC chain
 decade of scaling the 100 TB story rests on; x100/x10 wall-clock ratios
 ≈ 10 are the pass criterion, anything materially super-linear needs an
 arbitration note. events_x10 additionally gains weekly_activity_panel
-(the new ffill+HLL composition entry); ann_ivfpq's audit-gate twin
-(embedding_topk_ivfpq) is registry-gated, its bench cost is the
-existing ann_ivfpq row. An ann_x100 section (200k vectors, indexes
-built OUTSIDE the timers) measures the per-query decade: probed
-x100/x10 ratios are ~2.6x brute / ~1.5x ivf / ~1.7x pq for 10x data —
-every tier is far from its asymptote because 200k x 64-dim is only
-~51 MB, so fixed per-query costs (broadcast of the query tables, the
-top-k window, the refine join) dominate the scan term; at this scale
-PQ's refine-join overhead actually exceeds its scan savings (pq_query
-> brute_query), which is the honest local reading — the PQ/IVFPQ win
-is the ~15x smaller scan working set and the cell-pruned partition
-reads, terms that only dominate once the corpus stops fitting in page
-cache. The numbers are reported so the crossover claim stays measured,
-not asserted.
+(the new ffill+HLL composition entry).
 
 r07 notes: ARBITRATION of the r06 ticker_beta markets_x10 +28%
 (1.418 -> 1.817, past the +20% rule, flagged by the r06 verdict): solo
@@ -111,7 +97,7 @@ across solo sets shows the host jitter band for this entry spans the
 whole "regression"; noise, not a plan change. Root-cause fix, closing
 the pattern for good (third best-of-2 casualty after r04 ingest and
 r05 containment_lsh): EVERY tier now runs best-of-3 — markets_x10,
-events_x10, corpus_x100, ann_x100 included. ARTIFACT contract change
+events_x10, corpus_x100 included. ARTIFACT contract change
 (r06 verdict #1): the full payload now lands in the committed
 BENCH_LOCAL.json ($SPARK_GRAFT_BENCH_OUT) and stdout carries only the
 compact headline line, so the driver's tail capture can never truncate
@@ -137,7 +123,7 @@ the arbiter.
 r07 late additions: a markets_x100 section (60M lineitem rows — 10x
 tickers x 10x series depth; OHLCV/drawdown/beta/pair-corr plus the
 flagship weekly_volatility) gives the FINANCE tier the same measured
-decade corpus/ANN/events already carry; nb_classifier and
+decade corpus/events already carry; nb_classifier and
 contamination_bloom join corpus_x10 (the aggregation-only Naive Bayes
 domain classifier and the Bloom-pre-gated decontamination A/B twin at
 50k docs; contamination_bloom postdates the committed BENCH_LOCAL
@@ -249,10 +235,6 @@ multiplier (all solo best-of-3 x3, quiet host):
 - dup_spans corpus_x100 (+80% in-tier, 13.9 -> 25.1): solo 14.764 /
   15.994 / 16.298 — r08's 13.9 plus the regime factor; the 25.1 was
   an in-tier stall. Steady ~15-16 s.
-- ann_x100 ivf_index_build (+72%, 4.83 -> 8.30): solo 4.055 / 4.183 /
-  6.506 — at the r08 value (this number is single-shot by design,
-  "build cost reported once", so it carries no best-of-3 protection;
-  treat its round-to-round swings accordingly).
 - doc_token_stats headline (+115% sub-second): solo 0.143-0.294; the
   committed r08 0.110 was an unusually fast min. In-band noise.
 
@@ -308,8 +290,6 @@ this round; plan-shape pins all green):
   — recorded value IS the solo floor; the old 1.083 was a fast min.
 - minhash_full_portable 4.969 -> 6.352 (+30%): solo 4.94/5.29/4.95 —
   below the recorded in-tier value and at the old one; in-tier stall.
-- ann_lsh_query 1.022 -> 1.264 (+26%): solo 1.62/1.38/1.14 — the
-  band covers both recorded rounds; warm-index query jitter.
 - events_x100 weekly_activity_panel 2.927 -> 3.990 (+39%): solo
   4.26/3.61 — at the recorded value; the r09 steady band (3.1-3.7)
   widened ~10% today. weekly_user_kmv_rollup 1.514 -> 2.208 (+48%):
@@ -350,13 +330,11 @@ First numbers for the r11 stages: c4_filter 0.53 s / url_dedup
 0.72 s at 50k docs (both linear map/window shapes, the html_extract
 class).
 
-r11 arbitration by second refresh (regime 0.918 run-to-run): run 1's
-ann_x100 section ran uniformly ~2x high (brute 2.84, ivf 1.98, pq
-4.76) and run 2 regressed the WHOLE section to the r10 mean (1.99 /
-1.07 / 2.16 — the late-tier JVM-state pattern the r10 notes
-document); same verdict for flagship_posthygiene (11.94 -> 8.10 vs
-r10 7.16) and weekly_user_kmv_rollup (1.00 -> 0.78 vs r10 0.63):
-transients, not drift.
+r11 arbitration by second refresh (regime 0.918 run-to-run):
+flagship_posthygiene (11.94 -> 8.10 vs r10 7.16) and
+weekly_user_kmv_rollup (1.00 -> 0.78 vs r10 0.63) ran high in run 1
+and back at the r10 mean in run 2 — the late-tier JVM-state pattern
+the r10 notes document: transients, not drift.
 
 r11 one-off crawl-stage x100 decade (500k docs, same contract as the
 other one-offs): html_extract 0.598 s (1.4x for 10x docs),
@@ -485,7 +463,7 @@ scan-like plans only). Entries that must NOT drift: ccnet_buckets /
 kn_bigram_lp / repetition / tfidf keep forced fan-out exchanges
 (multi-consumer sharing — the first optimization re-bench caught the
 skip regressing them 1.4-2.4x and they were individually A/B'd
-back); ann tier / simhash / unigram A/B'd as ties and keep the skip.
+back); simhash / unigram A/B'd as ties and keep the skip.
 Methodology unchanged: same queries, same best-of-3 noop-sink
 timing, same fixtures; no measurement-path edits this round.
 
@@ -541,7 +519,6 @@ BENCH_QUERIES = [
     "doc_exact_dedup",
     "curated_corpus",
     "minhash_lsh_near_dups",
-    "embedding_topk",
     # r04 wave-4 (market tier): NEW entries — the headline total therefore
     # grows vs r03 by construction; compare per-query, not the sum.
     "ohlcv_weekly_bars",
@@ -556,9 +533,9 @@ BENCH_QUERIES = [
 ]
 
 
-#: Corpus-scale section (dedup/ANN tier at 10x documents). sf0.1's 5k docs
+#: Corpus-scale section (dedup tier at 10x documents). sf0.1's 5k docs
 #: under-exercise banding skew; a deterministic 10x perturbed fixture (50k
-#: docs, 20k vectors, each doc in a 10-member near-dup family) is built
+#: docs, each doc in a 10-member near-dup family) is built
 #: once per run and the tier is timed per-stage. Reported under the
 #: separate "corpus_x10" key — NOT folded into the headline total, so the
 #: headline stays comparable across rounds. Disable with SPARK_GRAFT_X10=0.
@@ -590,18 +567,6 @@ def build_x10_fixture(spark, tmp: str) -> str:
         .repartition(32)
         .write.mode("overwrite")
         .parquet(f"{x10}/documents.parquet")
-    )
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    (
-        emb.crossJoin(copies)
-        .select(
-            (F.col("vec_id") + F.col("copy") * X10_LIFT).alias("vec_id"),
-            "embedding",
-            "label",
-        )
-        .repartition(32)
-        .write.mode("overwrite")
-        .parquet(f"{x10}/embeddings.parquet")
     )
     return x10
 
@@ -857,7 +822,7 @@ def events_x100_section(spark, qs, tmp: str) -> tuple[dict[str, float], int]:
 #: cardinality x 10x per-ticker series depth — the two dimensions the
 #: chain's hash-aggs (key space) and per-key window sorts (partition
 #: depth) actually scale in, and the reference's own domain (the decade
-#: corpus/ANN/events already have). weekly_volatility rides along: it is
+#: corpus/events already have). weekly_volatility rides along: it is
 #: the flagship headline query. Pass bar, same contract as the other
 #: decades: x100/x10 wall-clock ratio ≈ 10 (linear), arbitration note
 #: otherwise.
@@ -1007,113 +972,9 @@ def build_x100_docs_fixture(spark, tmp: str) -> str:
     return x100
 
 
-def build_x100_embeddings_fixture(spark, tmp: str) -> str:
-    """200k vectors: 100 copies with a copy-and-dimension-dependent
-    additive perturbation. Cosine is SCALE-invariant, so a multiplicative
-    copy factor would leave every copy at distance 0 from its source
-    (degenerate ties, an unfairly easy index); the sin-based offset moves
-    each copy in a different direction instead, so neighborhoods are
-    non-trivial at every copy depth. Deterministic, JVM-side."""
-    from pyspark.sql import functions as F
-
-    x100e = f"{tmp}/x100e"
-    copies = spark.range(100).withColumnRenamed("id", "copy")
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    (
-        emb.crossJoin(copies)
-        .select(
-            (F.col("vec_id") + F.col("copy") * X10_LIFT).alias("vec_id"),
-            F.transform(
-                "embedding",
-                lambda x, i: (
-                    x
-                    + F.col("copy").cast("double") * 0.003
-                    * F.sin(
-                        (i + 1).cast("double")
-                        * (F.col("copy") + 1).cast("double")
-                    )
-                ).cast("double"),
-            ).alias("embedding"),
-            "label",
-        )
-        .repartition(64)
-        .write.mode("overwrite")
-        .parquet(f"{x100e}/embeddings.parquet")
-    )
-    return x100e
-
-
-def ann_x100_section(spark, tmp: str) -> tuple[dict[str, float], int]:
-    """ANN decade point: query-path cost at 200k vectors, brute vs the
-    index tiers. Index builds happen OUTSIDE the timers (at scale they
-    are written tables; build cost is reported once, untimed trials
-    excluded) — what's measured is the per-query scan each layout pays,
-    the quantity the IVF/PQ sub-linearity claim is about: brute must
-    scale ~10x over the x10 numbers while the pruned/compact tiers hold
-    materially below that."""
-    import time as _time
-
-    from airflow_etl_finance_market_spark.operators import similarity as S
-
-    reclaim(spark)
-    x100e = build_x100_embeddings_fixture(spark, tmp)
-    emb = spark.read.parquet(f"{x100e}/embeddings.parquet")
-    n_vecs = emb.count()
-    qids = list(range(5))
-
-    def _noop(df):
-        df.write.format("noop").mode("overwrite").save()
-
-    out: dict[str, float] = {}
-
-    def best3(name, thunk):
-        best = float("inf")
-        for _ in range(3):  # best-of-3 since r07 (see the r07 notes)
-            t0 = _time.perf_counter()
-            thunk()
-            best = min(best, _time.perf_counter() - t0)
-        out[name] = round(best, 3)
-
-    best3("ann_brute_query", lambda: _noop(
-        S.cosine_topk_bruteforce(emb, qids, k=5)
-    ))
-    t0 = _time.perf_counter()
-    centroids, ivf_frame = S.ivf_index(emb)
-    ivf_frame = ivf_frame.persist()
-    ivf_frame.count()
-    out["ivf_index_build"] = round(_time.perf_counter() - t0, 3)
-    best3("ann_ivf_query", lambda: _noop(
-        S.cosine_topk_ivf(emb, qids, k=5, index=(centroids, ivf_frame))
-    ))
-    t0 = _time.perf_counter()
-    books, pq_codes = S.pq_index(emb)
-    pq_codes = pq_codes.persist()
-    pq_codes.count()
-    out["pq_index_build"] = round(_time.perf_counter() - t0, 3)
-    best3("ann_pq_query", lambda: _noop(
-        S.cosine_topk_pq(emb, qids, k=5, index=(books, pq_codes))
-    ))
-    t0 = _time.perf_counter()
-    ivfpq_idx = S.ivfpq_index(emb)
-    ivfpq_frame = ivfpq_idx[2].persist()
-    ivfpq_frame.count()
-    out["ivfpq_index_build"] = round(_time.perf_counter() - t0, 3)
-    best3("ann_ivfpq_query", lambda: _noop(
-        S.cosine_topk_ivfpq(
-            emb, qids, k=5,
-            index=(ivfpq_idx[0], ivfpq_idx[1], ivfpq_frame),
-        )
-    ))
-    for f in (ivf_frame, pq_codes, ivfpq_frame):
-        f.unpersist()
-    return out, n_vecs
-
-
 def corpus_x100_section(
     spark, qs, tmp: str
 ) -> tuple[dict[str, float], int]:
-    import time as _time
-
     from airflow_etl_finance_market_spark.operators import dedup as D
 
     reclaim(spark)
@@ -1203,14 +1064,12 @@ def corpus_x10_section(spark, qs, tmp: str) -> dict[str, float]:
     from pyspark.sql import functions as F  # noqa: F401  (parity with build)
 
     from airflow_etl_finance_market_spark.operators import dedup as D
-    from airflow_etl_finance_market_spark.operators import similarity as S
 
     def _ed_dups(docs_df):
         return D.edit_distance_near_dups(docs_df, len_bucket=4)
 
     x10 = build_x10_fixture(spark, tmp)
     docs = spark.read.parquet(f"{x10}/documents.parquet")
-    emb = spark.read.parquet(f"{x10}/embeddings.parquet")
 
     def _noop(df):
         df.write.format("noop").mode("overwrite").save()
@@ -1243,18 +1102,6 @@ def corpus_x10_section(spark, qs, tmp: str) -> dict[str, float]:
         # separately via the operators so the numbers stay comparable.
         "contamination": lambda: _noop(
             _contamination_exact_x10(spark, x10)
-        ),
-        "ann_brute": lambda: _noop(qs["embedding_topk"](spark, x10)),
-        "ann_lsh": lambda: _noop(qs["embedding_topk_lsh"](spark, x10)),
-        "ann_ivf": lambda: _noop(qs["embedding_topk_ivf"](spark, x10)),
-        # r05: PQ audit gate cold (train + encode + ADC + refine + brute
-        # twin — the gate's full cost); the amortized per-query number is
-        # ann_pq_query below
-        "ann_pq": lambda: _noop(qs["embedding_topk_pq"](spark, x10)),
-        # composed IVF+PQ cold: both quantizer trainings + the one-pass
-        # cell+code encode + nprobe-pruned ADC + exact refine
-        "ann_ivfpq": lambda: _noop(
-            S.cosine_topk_ivfpq(emb, list(range(5)), k=5)
         ),
         # round-3 corpus operators at x10
         "tfidf_top_terms": lambda: _noop(qs["doc_tfidf_top_terms"](spark, x10)),
@@ -1387,54 +1234,7 @@ def corpus_x10_section(spark, qs, tmp: str) -> dict[str, float]:
         ),
     }
 
-    def best_of_3(thunk, *, cold: bool = False) -> float:
-        # best-of-3 since r06: the corpus tier produced both best-of-2
-        # stall casualties (r05 ingest, r05->r06 containment_lsh) — see
-        # the r06 notes above.
-        best = float("inf")
-        for _ in range(3):
-            if cold:
-                # the IVF audit gate persists its index frame internally
-                # (legitimately — the audit reads it 4x); without this the
-                # 2nd iteration hits the 1st's cache via CacheManager plan
-                # substitution and the "cold" number silently goes warm.
-                spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            thunk()
-            best = min(best, time.perf_counter() - t0)
-        return round(best, 3)
-
-    out: dict[str, float] = {}
-    for name, thunk in jobs.items():
-        out[name] = best_of_3(thunk, cold=name.startswith("ann_"))
-
-    # ANN warm-query paths, timed LAST: the persisted index would otherwise
-    # leak into the cold ann_lsh/ann_ivf runs via CacheManager plan
-    # substitution. Index build+persist happens OUTSIDE the timer (at scale
-    # it is a written table); ann_*_query is the per-query cost an
-    # index-amortized workload actually pays.
-    qids = list(range(5))
-    lsh_idx = S.lsh_index(emb).persist()
-    lsh_idx.count()
-    out["ann_lsh_query"] = best_of_3(
-        lambda: _noop(S.cosine_topk_lsh(emb, qids, k=5, index=lsh_idx))
-    )
-    centroids, ivf_frame = S.ivf_index(emb)
-    ivf_frame = ivf_frame.persist()
-    ivf_frame.count()
-    out["ann_ivf_query"] = best_of_3(
-        lambda: _noop(S.cosine_topk_ivf(emb, qids, k=5, index=(centroids, ivf_frame)))
-    )
-    books, pq_codes = S.pq_index(emb)
-    pq_codes = pq_codes.persist()
-    pq_codes.count()
-    out["ann_pq_query"] = best_of_3(
-        lambda: _noop(S.cosine_topk_pq(emb, qids, k=5, index=(books, pq_codes)))
-    )
-    lsh_idx.unpersist()
-    ivf_frame.unpersist()
-    pq_codes.unpersist()
-    return out
+    return best_of_3_each(jobs)
 
 
 def main() -> None:
@@ -1506,7 +1306,7 @@ def main() -> None:
     if os.environ.get("SPARK_GRAFT_X10", "1") != "0":
         with tempfile.TemporaryDirectory() as tmp:
             payload["corpus_x10"] = corpus_x10_section(spark, qs, tmp)
-            payload["corpus_x10_rows"] = {"documents": 50000, "embeddings": 20000}
+            payload["corpus_x10_rows"] = {"documents": 50000}
         with tempfile.TemporaryDirectory() as tmp:
             mx, n_li = markets_x10_section(spark, qs, tmp)
             payload["markets_x10"] = mx
@@ -1525,10 +1325,6 @@ def main() -> None:
             crx, n_crawl = crawl_x100_section(spark, qs, tmp)
             payload["crawl_x100"] = crx
             payload["crawl_x100_rows"] = {"documents": n_crawl}
-        with tempfile.TemporaryDirectory() as tmp:
-            ax, n_vecs = ann_x100_section(spark, tmp)
-            payload["ann_x100"] = ax
-            payload["ann_x100_rows"] = {"embeddings": n_vecs}
         with tempfile.TemporaryDirectory() as tmp:
             evx, n_ev100 = events_x100_section(spark, qs, tmp)
             payload["events_x100"] = evx

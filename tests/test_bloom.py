@@ -103,80 +103,6 @@ def test_bloom_pregate_prunes_and_preserves_result(spark, sf_dir):
     assert true_members <= survivors < total
 
 
-# --- contrastive negatives (same "deterministic sampling kernel" family) ---
-
-from airflow_etl_finance_market_spark.operators.sampling import (  # noqa: E402
-    contrastive_negatives,
-)
-
-
-def test_negatives_cross_label_bounded_and_deterministic(spark, sf_dir):
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    out = contrastive_negatives(emb, k=3, buckets=8).collect()
-    assert out, "fixture buckets should yield at least some negatives"
-    by_anchor: dict[int, list] = {}
-    for r in out:
-        assert r.anchor_label != r.neg_label
-        assert 1 <= r.neg_rank <= 3
-        by_anchor.setdefault(r.anchor_id, []).append(r)
-    for rows in by_anchor.values():
-        assert len(rows) <= 3
-        assert sorted(r.neg_rank for r in rows) == list(
-            range(1, len(rows) + 1)
-        )
-    # Determinism: a second run returns the identical pair set.
-    again = contrastive_negatives(emb, k=3, buckets=8).collect()
-    key = lambda r: (r.anchor_id, r.neg_id, r.neg_rank)  # noqa: E731
-    assert sorted(map(key, out)) == sorted(map(key, again))
-
-
-def test_negatives_draw_is_a_pure_function_of_bucket(spark):
-    """Adding rows OUTSIDE an anchor's probed bucket never changes the
-    anchor's draw (the auditability property): rerunning on a superset
-    table keeps every surviving anchor's negatives identical unless the
-    new rows landed in its own bucket."""
-    from pyspark.sql import Row
-
-    base = [Row(vec_id=i, label=i % 3) for i in range(60)]
-    extra = [Row(vec_id=1000 + i, label=2 - i % 3) for i in range(30)]
-    small = spark.createDataFrame(base)
-    big = spark.createDataFrame(base + extra)
-    buckets = 4
-
-    from airflow_etl_finance_market_spark.operators.sampling import hash_bucket
-    import pyspark.sql.functions as SF
-
-    touched = {
-        r._bkt
-        for r in spark.createDataFrame(extra)
-        .select(hash_bucket("vec_id", seed="negs:b", buckets=buckets).alias("_bkt"))
-        .distinct()
-        .collect()
-    }
-    small_out = {
-        (r.anchor_id, r.neg_id, r.neg_rank)
-        for r in contrastive_negatives(small, k=2, buckets=buckets).collect()
-    }
-    big_out = {
-        (r.anchor_id, r.neg_id, r.neg_rank)
-        for r in contrastive_negatives(big, k=2, buckets=buckets)
-        .filter(SF.col("anchor_id") < 1000)
-        .collect()
-    }
-    untouched_anchor_bkts = (
-        spark.createDataFrame(base)
-        .select(
-            "vec_id",
-            hash_bucket("vec_id", seed="negs:p", buckets=buckets).alias("_bkt"),
-        )
-        .collect()
-    )
-    safe = {r.vec_id for r in untouched_anchor_bkts if r._bkt not in touched}
-    assert {t for t in small_out if t[0] in safe} == {
-        t for t in big_out if t[0] in safe
-    }
-
-
 def test_bloom_probe_is_map_side_codegen(spark):
     """Plan pin: the Bloom pre-gate is a pure map-side Filter — no
     exchange, no Python eval — so it rides the scan's whole-stage

@@ -1,4 +1,4 @@
-"""Unit tests for the sampling / term-stats / centroid / grouped-top-k
+"""Unit tests for the sampling / term-stats / grouped-top-k
 operators, independent of the DuckDB oracle: property checks against
 plain-Python recomputation on the small fixture."""
 
@@ -7,7 +7,6 @@ from __future__ import annotations
 import collections
 import re
 
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -17,7 +16,6 @@ from airflow_etl_finance_market_spark.operators.sampling import (
     hash_bucket,
     split_summary,
 )
-from airflow_etl_finance_market_spark.operators.similarity import group_centroids
 from airflow_etl_finance_market_spark.operators.topk import top_k_per_group
 from airflow_etl_finance_market_spark.sources.readers import load_fixture
 
@@ -78,25 +76,6 @@ class TestTermFrequencies:
             tf.update(toks)
             df.update(set(toks))
         assert got == {t: (tf[t], df[t]) for t in tf}
-
-
-class TestGroupCentroids:
-    def test_matches_numpy_mean(self, spark, sf_dir):
-        emb = load_fixture(spark, sf_dir, "embeddings")
-        got = {
-            r.label: (np.array(r.centroid), r.n_vectors)
-            for r in group_centroids(emb).collect()
-        }
-        rows = emb.select("label", "embedding").collect()
-        by_label: dict[int, list] = collections.defaultdict(list)
-        for r in rows:
-            by_label[r.label].append(np.array(r.embedding, dtype=np.float64))
-        assert set(got) == set(by_label)
-        for label, vecs in by_label.items():
-            centroid, n = got[label]
-            assert n == len(vecs)
-            assert centroid.shape == vecs[0].shape
-            np.testing.assert_allclose(centroid, np.mean(vecs, axis=0), rtol=1e-9)
 
 
 class TestTopKPerGroup:

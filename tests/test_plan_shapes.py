@@ -117,14 +117,6 @@ def test_simhash_block_join_reuses_block_exchange(spark, sf_dir):
     ), final
 
 
-def test_bruteforce_topk_broadcasts_queries_not_corpus(spark, sf_dir):
-    """The tiny query set must be the broadcast side; the corpus streams."""
-    plan = plan_of(harness.queries()["embedding_topk"](spark, sf_dir))
-    # broadcast build contains the query-id IN-filter scan
-    build = plan.split("BroadcastExchange")[1]
-    assert "vec_id IN (0,1,2,3,4)" in build.replace(" ", "").replace("#", " ").split("ReadSchema")[0] or "In(vec_id" in build
-
-
 def test_partitioned_fact_scan_prunes_partitions(spark, tmp_path):
     """The pipeline's fact table is partitioned by year; a year-filtered
     read must prune at the PartitionFilters level (at 100 TB this is the
@@ -288,13 +280,6 @@ def test_term_frequencies_single_data_shuffle(spark, sf_dir):
     assert "TakeOrderedAndProject" in plan
 
 
-def test_embedding_centroids_single_exchange(spark, sf_dir):
-    """posexplode + (label,pos) aggregate + per-label reassembly must ride
-    ONE label-keyed exchange (label subsumes both grouping keys)."""
-    plan = plan_of(harness.queries()["embedding_centroids"](spark, sf_dir))
-    assert plan.count("Exchange") == 1
-
-
 def test_curated_corpus_single_scan_kernels_once(spark, sf_dir):
     """The curation chain must scan the corpus ONCE, evaluate the text
     kernels ONCE above the fan-out exchange, and select survivors with a
@@ -320,38 +305,6 @@ def test_grouped_topk_prunes_before_exchange(spark, sf_dir):
     beyond k are dropped map-side, before the group-key shuffle."""
     plan = plan_of(harness.queries()["top_docs_per_lang"](spark, sf_dir))
     assert plan.count("WindowGroupLimit") == 2
-
-
-def test_ivf_index_table_probe_is_partition_pruned(spark, sf_dir, tmp_path):
-    """The IVF scale contract made concrete: write the index partitioned by
-    cell, and a probe of nprobe cells must prune at PartitionFilters —
-    reading nprobe/nlist of the corpus, which is the whole point of an
-    inverted file at 100 TB. The query over the persisted index must also
-    return exactly what the in-memory index returns."""
-    from airflow_etl_finance_market_spark.operators.similarity import (
-        cosine_topk_ivf,
-        ivf_index,
-    )
-
-    emb = load_fixture(spark, sf_dir, "embeddings")
-    centroids, assigned = ivf_index(emb, nlist=8)
-    path = str(tmp_path / "ivf_index")
-    assigned.write.partitionBy("_cell").parquet(path)
-
-    stored = spark.read.parquet(path)
-    # a probe of 2 cells prunes to 2 of the 8 partition directories
-    plan = plan_of(stored.filter(F.col("_cell").isin([1, 3])))
-    part_line = [ln for ln in plan.splitlines() if "PartitionFilters" in ln][0]
-    assert "_cell" in part_line and "1,3" in part_line.replace(" ", "")
-
-    qids = [0, 1, 2, 3, 4]
-    from_stored = cosine_topk_ivf(
-        emb, qids, k=5, index=(centroids, stored)
-    ).collect()
-    from_mem = cosine_topk_ivf(
-        emb, qids, k=5, index=(centroids, assigned)
-    ).collect()
-    assert sorted(map(tuple, from_stored)) == sorted(map(tuple, from_mem))
 
 
 def test_seq_packing_single_shard_exchange(spark, sf_dir):

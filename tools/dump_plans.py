@@ -13,10 +13,9 @@ sys.path.insert(0, REPO)
 NAMES = [
     "weekly_volatility", "top_avg_volatility", "star_revenue",
     "pricing_summary", "purchase_attribution", "rolling_close_avg",
-    "minhash_lsh_near_dups", "embedding_topk", "windowed_event_kpis",
+    "minhash_lsh_near_dups", "windowed_event_kpis",
     "sql_api_nation_rank", "curated_corpus", "term_frequencies",
-    "embedding_centroids", "doc_chunks", "doc_repetition_stats",
-    "doc_contamination_dual", "embedding_topk_lsh", "embedding_topk_ivf",
+    "doc_chunks", "doc_repetition_stats", "doc_contamination_dual",
     # round 3: the new corpus operators. doc_dedup_clusters runs its
     # label-propagation rounds eagerly at build time; the printed plan is
     # the final-round shape over the checkpointed labels (the per-round
@@ -30,7 +29,7 @@ NAMES = [
     "doc_bigram_logprob", "doc_edit_distance_near_dups",
     "doc_containment_pairs", "event_funnel", "user_retention_cohorts",
     "event_transition_matrix", "event_value_outliers", "doc_length_deciles",
-    "view_click_attribution", "embedding_quantization",
+    "view_click_attribution",
     "doc_near_dup_triangles", "price_trend_regression", "customer_tier_scd2",
     "trailing_7d_avg_price", "doc_token_entropy", "corpus_lang_source_chi2",
     "top_event_trigrams",
