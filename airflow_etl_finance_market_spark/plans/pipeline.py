@@ -30,10 +30,16 @@ Scale design (100 TB posture):
   the stored fact, so it runs after the fact's partition overwrite and
   only the dims overlap. On a cluster the same threads just queue the
   jobs in FIFO order;
-- the fact table is written partitioned by `ano`/`data_id` (year, day) →
-  static/dynamic partition pruning for BI consumers, and the incremental
-  daily run (`incremental_date=`) overwrites ONLY the touched day + week
-  partitions under dynamic partitionOverwriteMode;
+- the fact table is written partitioned by `ano`/`mes` (year, month): one
+  directory and one file per month, about 120 directories for the paper's
+  ten years (2,500 trading days). Every directory level stays under
+  Spark's 32-path threshold, so a scan of the fact lists it on the driver
+  instead of starting a distributed listing job, and year or month
+  predicates still prune. The incremental daily run (`incremental_date=`)
+  rewrites ONLY the touched month and week partitions under dynamic
+  partitionOverwriteMode. Rows are not sorted within a file: a month of the
+  paper's input is about 6k rows, one row group, so a sort would buy no
+  row-group skipping;
 - the fact DataFrame is cached between its three consumers (fact write,
   weekly aggregate, report) so the window computation runs once, and is
   unpersisted whether the run succeeds or fails;
@@ -69,6 +75,8 @@ log = logging.getLogger(__name__)
 
 # the keys of PipelineResult.stage_seconds, in the order they are logged
 STAGES = ("staging", "gate", "dim_instrumento", "dim_tempo", "fact", "weekly", "total")
+# the fact's partition columns: year and month of data_id
+_FACT_PARTITIONS = ["ano", "mes"]
 # branches on pool threads: the two dims and the full reload's weekly MV;
 # the fact runs on the calling thread
 _SINK_BRANCHES = 3
@@ -272,6 +280,16 @@ def build_fact(staging: DataFrame) -> DataFrame:
     )
 
 
+def _stored_months(spark: SparkSession, fact_path: str, lo: dt.date, hi: dt.date) -> DataFrame:
+    """The stored fact, read from only the month partitions that cover the
+    days ``lo``..``hi``: ``data_id`` is no partition column, so a filter on
+    it alone would open every month."""
+    month = F.col("ano") * 100 + F.col("mes")
+    return spark.read.schema(FACT_MOVIMENTACAO).parquet(fact_path).filter(
+        month.between(lo.year * 100 + lo.month, hi.year * 100 + hi.month)
+    )
+
+
 def _incremental_fact(
     spark: SparkSession,
     staging: DataFrame,
@@ -282,16 +300,16 @@ def _incremental_fact(
     """One day's fact rows with variacao_diaria seeded from the EXISTING
     fact table instead of a full-history LAG window.
 
-    The previous close per ticker comes from a partition-pruned scan of at
-    most ``lookback_days`` day-partitions (max_by(close, data_id) — one
-    small hash aggregate, |tickers| rows, broadcast into the day's join).
-    Matches the full-reload LAG exactly whenever each ticker's previous
-    trading day is within the lookback; a longer gap yields NULL, the same
-    as a series' first-ever row.
+    The previous close per ticker comes from a scan of the last
+    ``lookback_days`` days, pruned to the months that cover them
+    (max_by(close, data_id) — one small hash aggregate, |tickers| rows,
+    broadcast into the day's join). Matches the full-reload LAG exactly
+    whenever each ticker's previous trading day is within the lookback; a
+    longer gap yields NULL, the same as a series' first-ever row.
     """
     lo = day - dt.timedelta(days=lookback_days)
     prev = (
-        spark.read.schema(FACT_MOVIMENTACAO).parquet(fact_path)
+        _stored_months(spark, fact_path, lo, day)
         .filter((F.col("data_id") >= F.lit(lo)) & (F.col("data_id") < F.lit(day)))
         .groupBy("ticker")
         .agg(F.max_by("close", "data_id").alias("_prev_close"))
@@ -316,6 +334,17 @@ def _incremental_fact(
             "variacao_diaria",
         )
     )
+
+
+def _month_with_day(
+    spark: SparkSession, day_fact: DataFrame, fact_path: str, day: dt.date
+) -> DataFrame:
+    """The month partition of ``day`` as it must be stored: its stored rows
+    of every other day, with their stored values (``id`` included), plus
+    ``day_fact``. Dynamic overwrite stages the write and swaps the month's
+    directory only at commit, so the plan may read the month it rewrites."""
+    kept = _stored_months(spark, fact_path, day, day).filter(F.col("data_id") != F.lit(day))
+    return kept.unionByName(day_fact)
 
 
 def _refresh_weekly(
@@ -363,13 +392,15 @@ def run_pipeline(
     filtered (predicate pushdown), the day's variacao_diaria is seeded from
     the existing fact (see ``_incremental_fact``), and both the fact and
     the weekly MV are refreshed via DYNAMIC partition overwrite: only the
-    ``ano=/data_id=`` directory of that day and the ``week=`` directory of
-    its week are rewritten; every other partition's files stay untouched.
-    The touched week is recomputed from the stored fact, so the weekly MV
-    runs after the fact's overwrite and only the dims overlap.
-    This is the reference's TRUNCATE-reload cadence upgraded to the 100 TB
-    posture promised above: a daily run costs one day of I/O, not the
-    table.
+    ``ano=/mes=`` directory of that day's month and the ``week=`` directory
+    of its week are rewritten; every other partition's files stay
+    untouched. The month is rebuilt from its stored rows of the other days,
+    values and ``id`` kept, plus the day's new rows, so rerunning a day is
+    idempotent; ``fact_rows`` counts the day's rows only. The touched week
+    is recomputed from the stored fact, so the weekly MV runs after the
+    fact's overwrite and only the dims overlap. This is the reference's
+    TRUNCATE-reload cadence upgraded to the 100 TB posture promised above:
+    a daily run costs one month of I/O, not the table.
     """
     t_run = time.perf_counter()
     seconds: dict[str, float] = {}
@@ -414,7 +445,7 @@ def run_pipeline(
                     else _incremental_fact(
                         spark, staging, fact_path, incremental_date, lookback_days
                     )
-                ).withColumn("ano", F.year("data_id"))
+                ).withColumn("ano", F.year("data_id")).withColumn("mes", F.month("data_id"))
                 fact.cache()  # three consumers below (SURVEY.md §4.3)
                 fact_rows = fact.count()
                 if incremental_date is None:
@@ -423,22 +454,22 @@ def run_pipeline(
                     branches.submit("weekly", lambda: _refresh_weekly(
                         spark, overwrite_parquet, fact, weekly_path, top_k
                     ))
-                    overwrite_parquet(fact, fact_path, partition_by=["ano", "data_id"])
+                    overwrite_parquet(fact, fact_path, partition_by=_FACT_PARTITIONS)
                 else:
-                    overwrite_partitions(fact, fact_path, partition_by=["ano", "data_id"])
+                    overwrite_partitions(
+                        _month_with_day(spark, fact, fact_path, incremental_date),
+                        fact_path,
+                        partition_by=_FACT_PARTITIONS,
+                    )
 
             if incremental_date is not None:
-                # -- 7: recompute ONLY the touched week from its (pruned)
-                # day-partitions of the fact just written
+                # -- 7: recompute ONLY the touched week from the month
+                # partitions of the fact just written that cover it
                 with _timed(seconds, "weekly"):
                     wk0 = incremental_date - dt.timedelta(days=incremental_date.weekday())
-                    week_slice = (
-                        spark.read.schema(FACT_MOVIMENTACAO)
-                        .parquet(fact_path)
-                        .filter(
-                            (F.col("data_id") >= F.lit(wk0))
-                            & (F.col("data_id") <= F.lit(wk0 + dt.timedelta(days=6)))
-                        )
+                    wk6 = wk0 + dt.timedelta(days=6)
+                    week_slice = _stored_months(spark, fact_path, wk0, wk6).filter(
+                        F.col("data_id").between(wk0, wk6)
                     )
                     weekly_rows, top = _refresh_weekly(
                         spark, overwrite_partitions, week_slice, weekly_path, top_k

@@ -69,7 +69,9 @@ def overwrite_partitions(
     untouched — byte-identical, not rewritten.
 
     This is the 100 TB daily-load primitive: a one-day increment rewrites
-    one ``data_id=`` directory instead of truncate-reloading the table. The
+    the one ``ano=/mes=`` directory of its month instead of truncate-reloading
+    the table. The write is staged and each directory it replaces is swapped
+    only at commit, so ``df`` may read the partitions it overwrites. The
     ``dynamic`` mode is a per-write option, so the session's own
     ``spark.sql.sources.partitionOverwriteMode`` (Spark's default ``static``
     would wipe the whole table root) is never touched.
@@ -99,12 +101,14 @@ def append_if_absent(
     failure (permissions, corrupt footer, transient storage error) re-raises
     instead of silently overwriting a valid table — ON CONFLICT DO NOTHING
     must never destroy the conflict target.
-    """
-    from pyspark.errors import AnalysisException
 
+    The table is read with ``incoming.schema``, the schema it was written
+    with, so no footer-inference job runs before the anti-join; an
+    unreadable file then fails the anti-join's ``count`` instead of the read.
+    """
     fresh = incoming.dropDuplicates(keys)
     try:
-        existing = spark.read.parquet(path).select(*keys)
+        existing = spark.read.schema(incoming.schema).parquet(path).select(*keys)
     except AnalysisException as e:
         if e.getCondition() != "PATH_NOT_FOUND":
             raise
@@ -298,7 +302,7 @@ def compact_parquet(
     round-robin repartition — no key skew possible — and lands via
     overwrite, so a crashed compaction leaves the original intact until
     the final commit rename. At warehouse scale run this per partition
-    directory (data_id=...) so only cold partitions rewrite.
+    directory (ano=.../mes=...) so only cold partitions rewrite.
     """
     import math
     import os as _os

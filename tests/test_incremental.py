@@ -1,7 +1,8 @@
 """Incremental daily load (plans/pipeline.py incremental_date=):
-dynamic partition overwrite must rewrite ONLY the touched day/week
-partitions — every other partition's files stay byte-identical — and the
-rewritten day must carry the same values as the full reload."""
+dynamic partition overwrite must rewrite ONLY the touched month/week
+partitions — every other partition's files stay byte-identical — the
+rewritten day must carry the same values as the full reload, and the
+month's other days must keep their stored rows."""
 
 from __future__ import annotations
 
@@ -31,6 +32,20 @@ def _snapshot(root: str) -> dict[str, str]:
     return out
 
 
+def _month_rows(spark, path, day):
+    """Stored rows, ``id`` included, of ``day``'s month other than ``day``."""
+    return sorted(
+        tuple(r)
+        for r in spark.read.parquet(path)
+        .filter(
+            (F.col("ano") == day.year)
+            & (F.col("mes") == day.month)
+            & (F.col("data_id") != F.lit(day))
+        )
+        .collect()
+    )
+
+
 def _day_rows(spark, path, day):
     return {
         r["ticker"]: (r["close"], r["volume"], round(r["variacao_diaria"], 9))
@@ -51,26 +66,28 @@ def test_incremental_touches_only_its_partitions(spark, tmp_path):
     fact_before = _snapshot(fact_path)
     weekly_before = _snapshot(weekly_path)
     day_before = _day_rows(spark, fact_path, DAY)
+    month_before = _month_rows(spark, fact_path, DAY)
     weekly_rows_before = {
         (r["ticker"], r["week"]): r["vol"]
         for r in spark.read.parquet(weekly_path).collect()
     }
     assert day_before, "fixture must contain the incremental day"
+    assert month_before, "the day's month must hold other days"
 
     inc = run_pipeline(spark, csv, wh, incremental_date=DAY)
     assert inc.staged_rows == len(day_before)  # only that day staged
     assert inc.fact_rows == len(day_before)
 
-    # every file OUTSIDE the touched day/week partition is byte-identical
-    day_prefix = os.path.join("ano=2024", f"data_id={DAY.isoformat()}")
+    # every file OUTSIDE the touched month/week partition is byte-identical
+    month_prefix = os.path.join("ano=2024", "mes=1") + os.sep
     week_prefix = f"week={WEEK.isoformat()}"
     fact_after = _snapshot(fact_path)
     untouched_before = {k: v for k, v in fact_before.items()
-                        if not k.startswith(day_prefix)}
+                        if not k.startswith(month_prefix)}
     untouched_after = {k: v for k, v in fact_after.items()
-                       if not k.startswith(day_prefix)}
-    assert untouched_before == untouched_after
-    assert any(k.startswith(day_prefix) for k in fact_after)
+                       if not k.startswith(month_prefix)}
+    assert untouched_before and untouched_before == untouched_after
+    assert any(k.startswith(month_prefix) for k in fact_after)
 
     weekly_after = _snapshot(weekly_path)
     assert {k: v for k, v in weekly_before.items()
@@ -81,6 +98,8 @@ def test_incremental_touches_only_its_partitions(spark, tmp_path):
     # the rewritten day's values match the full reload (variacao seeded
     # from the existing fact == the LAG over full history)
     assert _day_rows(spark, fact_path, DAY) == day_before
+    # the month's other days keep their stored rows, ids included
+    assert _month_rows(spark, fact_path, DAY) == month_before
 
     # weekly MV content identical to the full refresh, table-wide (the
     # recomputed week's stddev may differ in the last ulp — float
@@ -97,6 +116,12 @@ def test_incremental_touches_only_its_partitions(spark, tmp_path):
         ), (k, v, w)
 
     # total row count unchanged — the increment replaced, not appended
+    assert spark.read.parquet(fact_path).count() == full.fact_rows
+
+    # rerunning the day is idempotent: the month is rebuilt, not appended to
+    run_pipeline(spark, csv, wh, incremental_date=DAY)
+    assert _day_rows(spark, fact_path, DAY) == day_before
+    assert _month_rows(spark, fact_path, DAY) == month_before
     assert spark.read.parquet(fact_path).count() == full.fact_rows
 
 

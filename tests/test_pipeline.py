@@ -107,6 +107,23 @@ def test_dim_instrumento_shape(spark, result, warehouse):
     assert rows["SYM01"]["tipo_ativo"] == "Acao"
 
 
+def test_fact_layout_is_year_month(result, warehouse):
+    """The fact is stored as one ``ano=/mes=`` directory per month holding
+    one parquet file, and no ``data_id=`` directory. The layout keeps two
+    directory levels, so the benchmark oracle's DuckDB glob
+    ``fact_movimentacao_diaria/*/*/*.parquet`` (perfbench/oracle.py) still
+    reads every row."""
+    root = f"{warehouse}/fact_movimentacao_diaria"
+    file_dirs = sorted(
+        os.path.relpath(d, root)
+        for d, _, fs in os.walk(root)
+        for f in fs
+        if f.endswith(".parquet")
+    )
+    assert file_dirs == ["ano=2024/mes=1", "ano=2024/mes=2", "ano=2024/mes=3"]
+    assert not any("data_id=" in d for d, _, _ in os.walk(root))
+
+
 def test_rerun_idempotent(spark, ohlcv_csv, warehouse, result):
     again = run_pipeline(spark, ohlcv_csv, warehouse)
     assert again.staged_rows == result.staged_rows
@@ -123,10 +140,13 @@ def test_warm_rerun_job_count(spark, ohlcv_csv, warehouse, result, job_group):
     so a change in the count means the plan changed, not the host. It was
     26 before staging and the weekly MV were re-read with their DDL schemas
     (two footer-inference jobs gone) and the gate row was collected once
-    (one job gone); the benchmark's traced reload moved 26 -> 23 too."""
+    (one job gone); the benchmark's traced reload moved 26 -> 23 too.
+    23 -> 21: each dim append reads its existing table with the incoming
+    schema, so its footer-inference job is gone (-2). Writing the fact by
+    month instead of by day changes no job: the reload never reads it."""
     with job_group("pipeline-rerun") as tracker:
         run_pipeline(spark, ohlcv_csv, warehouse)
-    assert len(tracker.getJobIdsForGroup("pipeline-rerun")) == 23
+    assert len(tracker.getJobIdsForGroup("pipeline-rerun")) == 21
 
 
 def test_report_file_written(spark, ohlcv_csv, warehouse, result, tmp_path):
