@@ -80,15 +80,12 @@ _WINDOW_DEMOTED = [
     "doc_edit_distance_near_dups",
     "doc_containment_pairs",
     "html_text_extract",
-    "bpe_pipeline",
     "weekly_user_kmv_rollup",
     "cross_doc_ngram_overlap",
-    "doc_nb_lang_classifier",
     "corpus_prep_pipeline",
     "term_heavy_hitters",
     "weekly_value_quantile_rollup",
     "unicode_fold_dedup",
-    "unigram_lm_tokenizer",
     # r16-green: verified in the newest ledger
     "recent_extract",
     "url_canonical_dedup",
@@ -103,7 +100,6 @@ _WINDOW_DEMOTED = [
     "doc_repetition_stats",
     "split_balance",
     "doc_tfidf_top_terms",
-    "doc_seq_packing",
     "doc_winnow_fingerprints",
     "doc_stratified_sample",
     "doc_unigram_logprob",
@@ -124,9 +120,7 @@ _WINDOW_DEMOTED = [
     "streaming_funnel_ooo",
     "weekly_activity_panel",
     "domain_blocklist_filter",
-    "kn_bigram_logprob",
     "near_dup_decontamination",
-    "ccnet_perplexity_buckets",
 ]
 
 #: The driver verifies exactly this many leading registry entries per round.

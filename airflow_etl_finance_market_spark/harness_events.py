@@ -1,6 +1,6 @@
 """Corpus gate tier II + event analytics: streaming pct-change
-gates, cluster dedup, retrieval (TF-IDF/BM25/PMI), packing,
-funnels, and sequence analytics.
+gates, cluster dedup, retrieval (TF-IDF/BM25/PMI), funnels,
+and sequence analytics.
 
 ``harness.py`` imports the tier modules in sequence; its note
 on that import states what registration order does and does not
@@ -367,40 +367,6 @@ def q_doc_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tfidf_top_terms(
         load_fixture(spark, sf_dir, "documents"), k=3
     ).withColumn("rank", F.col("rank").cast("int"))
-
-
-@register(
-    "doc_seq_packing",
-    f"""
-WITH base AS (
-    SELECT doc_id,
-           CAST(('0x' || substr(md5('seed42:' || CAST(doc_id AS VARCHAR)), 1, 8))
-                AS BIGINT) % 8 AS shard,
-           CAST(len({_TOKS_SQL}) AS BIGINT) AS n_tokens
-    FROM documents
-), cum AS (
-    -- CAST: DuckDB's windowed SUM(BIGINT) yields HUGEINT, which surfaces
-    -- as float64 at the driver's type-sensitive hasher (r03 red row);
-    -- Spark emits bigint, so pin the oracle to BIGINT too.
-    SELECT doc_id, shard, n_tokens,
-           CAST(SUM(n_tokens) OVER (
-               PARTITION BY shard ORDER BY doc_id ROWS UNBOUNDED PRECEDING
-           ) - n_tokens AS BIGINT) AS c
-    FROM base
-)
-SELECT doc_id, shard, c // 512 AS seq_id, n_tokens, c % 512 AS seq_offset
-FROM cum
-""",
-)
-def q_doc_seq_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sequence packing (operators/packing.py): every document's
-    deterministic (shard, sequence, offset) coordinate under greedy
-    concat-then-split at a 512-token budget across 8 md5-bucketed shards."""
-    from .operators.packing import pack_sequences
-
-    return pack_sequences(
-        load_fixture(spark, sf_dir, "documents"), budget=512, shards=8
-    )
 
 
 @register(

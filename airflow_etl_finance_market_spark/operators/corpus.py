@@ -728,9 +728,7 @@ def dsir_importance(
     raw text), so materializing it writes more bytes than the second
     tokenize+hash pass costs to recompute, and the trade only worsens
     at 100 TB where checkpoint storage is the scarce resource. Same
-    deliberate-double-scan posture as ``bloom.py``; contrast
-    ``classify.py``, which checkpoints ``dw`` because that frame is
-    doc×distinct-term BOUNDED, i.e. much smaller than its lineage.
+    deliberate-double-scan posture as ``bloom.py``.
     """
     occ = (
         fan_out(docs, id_col)
@@ -1272,240 +1270,3 @@ def unicode_normalize_docs(
         _kernel_factory(form, strip_zero_width, text_col), docs.schema
     )
     return clean.unionByName(normalized)
-
-
-def kn_bigram_logprob(
-    docs: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    discount: float = 0.75,
-) -> DataFrame:
-    """(doc_id, n_bigrams, avg_logprob) under an interpolated KNESER-NEY
-    bigram LM trained on the corpus itself — the smoothing the published
-    perplexity filters actually use (CCNet filters on a KenLM model;
-    KenLM's default estimator is interpolated modified KN), one rung
-    above :func:`bigram_logprob`'s add-one on the quality ladder:
-    add-one over-penalizes rich contexts (it spreads V pseudo-counts
-    under every context), while KN discounts each SEEN bigram a fixed
-    ``discount`` and backs off to the CONTINUATION unigram — "how many
-    distinct contexts does w2 follow" — so boilerplate tokens that
-    appear everywhere in one fixed phrase (low continuation diversity)
-    score lower than genuinely productive words (Kneser & Ney 1995;
-    Chen & Goodman 1999 eq. 4.25, interpolated form):
-
-        P(w2|w1) = (max(c(w1 w2) - D, 0)
-                    + D * N1+(w1 .) * Pcont(w2)) / c(w1 .)
-        Pcont(w2) = N1+(. w2) / N1+(. .)
-
-    with c() token counts, N1+() DISTINCT-bigram-type counts, and
-    D = ``discount``. Scoring the training corpus itself means every
-    scored bigram and context is observed (c >= 1), the same
-    self-scoring posture as the add-one scorer; documents with fewer
-    than 2 tokens drop out identically. Floats appear only in the
-    final mean (ROUND 6 at the presentation edge) — no interior
-    argmax, so the formula is oracle-replayable despite the division
-    (the r14 unigram gate's integer rule is about interior BRANCHING,
-    which this scorer has none of).
-
-    Physical shape (the 100 TB bill): ONE positional expansion feeds
-    four vocab-bounded aggregates — bigram token counts (Zipf-sparse
-    vocab²), context totals + context type-diversity N1+(w1 .) (both
-    from one grouped pass over the bigram TYPE table), continuation
-    diversity N1+(. w2) (the other grouping of the same type table),
-    and the scalar N1+(. .) as a broadcast 1-row frame; the per-doc
-    mean rides term-keyed joins with build sides bounded by observed
-    vocab. No corpus-sized shuffle beyond the occurrence expansion —
-    identical exchange structure to :func:`bigram_logprob`.
-    """
-    return _kn_doc_scores(
-        docs,
-        text_col=text_col,
-        id_col=id_col,
-        discount=discount,
-        group_cols=(),
-    )
-
-
-def _kn_doc_scores(
-    docs: DataFrame,
-    *,
-    text_col: str,
-    id_col: str,
-    discount: float,
-    group_cols: tuple[str, ...],
-) -> DataFrame:
-    """Shared interpolated-KN per-document scoring core — ONE
-    implementation of the positional expansion + the four count
-    aggregates + the Chen & Goodman eq. 4.25 formula, parameterized by
-    the extra grouping keys prepended to every aggregate:
-    :func:`kn_bigram_logprob` is ``group_cols=()`` (corpus-global LM,
-    the N1+(. .) total a broadcast 1-row crossJoin);
-    :func:`ccnet_perplexity_buckets` passes its language column
-    (per-language LMs, the total a broadcast |langs|-row join). Factored
-    (r15 review) so a fix to the expansion or the formula can never
-    apply to one scorer and silently miss the other."""
-    if not (0.0 < discount < 1.0):
-        raise ValueError("discount must be in (0, 1)")
-    gc = list(group_cols)
-    # force=True (r15): occ2 below feeds FOUR differently-keyed
-    # aggregates plus the scoring join — this exchange is the shared
-    # stage they all reuse at runtime; without it each consumer re-runs
-    # scan+tokenize+expand (measured: ccnet 8.9 s → 5.2 s at 50k docs)
-    base = fan_out(docs, id_col, force=True).select(
-        F.col(id_col),
-        *[F.col(c) for c in gc],
-        tokens(text_col).alias("toks"),
-    )
-    occ2 = (
-        base.filter(F.size("toks") >= 2)
-        .select(
-            F.col(id_col),
-            *[F.col(c) for c in gc],
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, size(toks) - 1), i -> "
-                    "struct(element_at(toks, i) AS w1, "
-                    "element_at(toks, i + 1) AS w2, "
-                    "concat(element_at(toks, i), ' ', "
-                    "element_at(toks, i + 1)) AS big))"
-                )
-            ).alias("u"),
-        )
-        .select(
-            F.col(id_col),
-            *[F.col(c) for c in gc],
-            F.col("u.w1").alias("w1"),
-            F.col("u.w2").alias("w2"),
-            F.col("u.big").alias("big"),
-        )
-    )
-    big_counts = occ2.groupBy(*gc, "big").agg(F.count("*").alias("_cb"))
-    ctx = occ2.groupBy(*gc, "w1").agg(
-        F.count("*").alias("_cctx"),
-        F.count_distinct("w2").alias("_n1p_fwd"),
-    )
-    cont = (
-        occ2.select(*gc, "w1", "w2")
-        .distinct()
-        .groupBy(*gc, "w2")
-        .agg(F.count("*").alias("_n1p_bwd"))
-    )
-    d = F.lit(float(discount))
-    p = (
-        F.greatest(F.col("_cb") - d, F.lit(0.0))
-        + d
-        * F.col("_n1p_fwd")
-        * (F.col("_n1p_bwd") / F.col("_n1p_all"))
-    ) / F.col("_cctx")
-    joined = (
-        occ2.join(big_counts, gc + ["big"])
-        .join(ctx, gc + ["w1"])
-        .join(cont, gc + ["w2"])
-    )
-    if gc:
-        total_types = (
-            occ2.select(*gc, "big")
-            .distinct()
-            .groupBy(*gc)
-            .agg(F.count("*").alias("_n1p_all"))
-        )
-        joined = joined.join(F.broadcast(total_types), gc)
-    else:
-        total_types = (
-            occ2.select("big").distinct().agg(F.count("*").alias("_n1p_all"))
-        )
-        joined = joined.crossJoin(F.broadcast(total_types))
-    return joined.groupBy(id_col, *gc).agg(
-        F.count(F.lit(1)).alias("n_bigrams"),
-        F.round(F.avg(F.log(p)), 6).alias("avg_logprob"),
-    )
-
-
-def ccnet_perplexity_buckets(
-    docs: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    lang_col: str = "lang",
-    discount: float = 0.75,
-    n_buckets: int = 3,
-) -> DataFrame:
-    """(doc_id, lang, n_bigrams, avg_logprob, ppl_bucket) — the CCNet
-    quality-bucketing stage (Wenzek et al. 2020): score every document
-    under a PER-LANGUAGE interpolated Kneser-Ney bigram LM (CCNet
-    scores with per-language KenLM models — a global LM would rank
-    every low-resource language as "perplexing" English), then split
-    each language's documents into ``n_buckets`` equal-count
-    perplexity buckets — CCNet's published head/middle/tail terciles,
-    the split its corpus releases ship as directory names and the
-    knob downstream recipes (LLaMA's CCNet reproduction) select on.
-
-    Semantics: the LM is :func:`kn_bigram_logprob`'s formula (Chen &
-    Goodman eq. 4.25, D = ``discount``) with every count aggregate
-    additionally keyed by ``lang_col`` — each language trains on and
-    scores only its own bigram stream; documents with fewer than 2
-    tokens drop out exactly as the corpus-global scorer drops them.
-    Bucketing is INTEGER-EXACT and engine-replayable (the r14 rule:
-    interior orderings never compare raw floats cross-engine): docs
-    rank within their language by the ROUND-6 presentation-edge score
-    (descending — higher avg logprob = lower perplexity = 'head')
-    with ``doc_id`` as the total-order tiebreak, and bucket index is
-    ``((rank - 1) * n_buckets) div lang_count`` — the floor split, so
-    bucket sizes differ by at most 1 and the boundary doc lands by
-    the pinned tiebreak, never by a float race. ``n_buckets=3``
-    labels 'head'/'middle'/'tail'; other widths label 'b0'..'bN'.
-
-    Physical shape (the 100 TB bill): identical to
-    :func:`kn_bigram_logprob` — one positional expansion, four
-    aggregates now keyed (lang, term) so they stay vocab-bounded PER
-    LANGUAGE (the per-lang N1+(. .) scalar becomes a |langs|-row
-    frame, broadcast) — plus ONE window over the per-DOC score frame
-    partitioned by language. That window is the only new exchange and
-    it moves one row per document, ~10^-4 of the corpus bytes; with
-    few languages its partitions are count-skewed, which is exactly
-    AQE-irrelevant here because rank assignment is a streaming pass
-    over each sorted partition (no buffering). A deployment where
-    even the doc-level frame overwhelms single-partition sort should
-    range-partition on the rounded score per language first (the
-    token_budget_select boundary trick) — the contract (rank by
-    (score, id)) is partition-strategy-independent.
-    """
-    if n_buckets < 1:
-        raise ValueError("n_buckets must be >= 1")
-    from pyspark.sql.window import Window
-
-    per_doc = _kn_doc_scores(
-        docs,
-        text_col=text_col,
-        id_col=id_col,
-        discount=discount,
-        group_cols=(lang_col,),
-    )
-    rank_w = Window.partitionBy(lang_col).orderBy(
-        F.col("avg_logprob").desc(), F.col(id_col)
-    )
-    count_w = Window.partitionBy(lang_col)
-    labels = (
-        ["head", "middle", "tail"]
-        if n_buckets == 3
-        else [f"b{i}" for i in range(n_buckets)]
-    )
-    return (
-        per_doc.withColumn("_rn", F.row_number().over(rank_w))
-        .withColumn("_n", F.count(F.lit(1)).over(count_w))
-        .withColumn(
-            "_bidx",
-            F.expr(f"((_rn - 1) * {int(n_buckets)}) div _n"),
-        )
-        .select(
-            id_col,
-            lang_col,
-            "n_bigrams",
-            "avg_logprob",
-            F.element_at(
-                F.array(*[F.lit(x) for x in labels]),
-                (F.col("_bidx") + 1).cast("int"),
-            ).alias("ppl_bucket"),
-        )
-    )

@@ -86,8 +86,8 @@ def ohlcv_resample(
     # lands ON round-off ties whenever the volume is a power of two
     # (x/64 terminates at the 6th decimal), and Spark's valueOf-HALF_UP
     # vs C-library rounding then disagree in the last digit. Integer DIV
-    # (like operators/packing.py's seq arithmetic) is tie-free. Units:
-    # micro-dollars; overflow bound ~9.2e18 micro-dollar-units per bar.
+    # is tie-free. Units: micro-dollars; overflow bound ~9.2e18
+    # micro-dollar-units per bar.
     cents = F.round(F.col(price) * 100).cast("long")
     units = F.round(F.col(qty)).cast("long")
     return (

@@ -18,7 +18,7 @@ pruning, and so overwrites of a daily run touch one partition, not 100 TB
 from __future__ import annotations
 
 from pyspark.errors import AnalysisException, SparkRuntimeException
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -306,6 +306,7 @@ def compact_parquet(
     """
     import math
     import os as _os
+    from urllib.parse import unquote, urlparse
 
     # Crash recovery for the swap below: a crash between
     # rename(path -> __old) and rename(tmp -> path) leaves nothing at
@@ -322,11 +323,8 @@ def compact_parquet(
     jvm_files = df.inputFiles()
     total_bytes = 0
     for f in jvm_files:
-        local = f.removeprefix("file:")
-        try:
-            total_bytes += _os.path.getsize(local)
-        except OSError:
-            total_bytes += target_file_mb * 1024 * 1024  # conservative
+        # file URIs percent-encode the path ("a b" -> "a%20b")
+        total_bytes += _os.path.getsize(unquote(urlparse(f).path))
     n_files = max(1, math.ceil(total_bytes / (target_file_mb * 1024 * 1024)))
     # Write to a sibling then swap: overwrite-in-place of the path being
     # read would delete the input mid-scan. The swap sequence is

@@ -78,12 +78,14 @@ def fan_out(
 
     ``force=True`` keeps the UNCONDITIONAL repartition: when the
     fanned-out frame feeds a MULTI-CONSUMER expansion whose consumers
-    aggregate on DIFFERENT keys (the KN scorer's occ2 stream feeds
-    four differently-keyed aggregates), this exchange is the one
-    shared stage runtime exchange-reuse can dedupe — skipping it makes
-    every consumer re-run the scan+tokenize+explode subtree
-    independently (measured: ccnet_perplexity_buckets 8.9 s → 5.2 s
-    WITH the forced exchange at 50k docs; repetition_stats 4.0 → 3.0).
+    aggregate on DIFFERENT keys (tfidf_top_terms' per-doc counts feed
+    the doc-length window, the document-frequency aggregate and the
+    scoring join), this exchange is the one shared stage runtime
+    exchange-reuse can dedupe — skipping it makes every consumer
+    re-run the scan+tokenize+explode subtree independently. It also
+    pays when the expansion is wider than the text it came from
+    (measured: repetition_stats 4.0 s → 3.0 s WITH the forced
+    exchange at 50k docs).
     Single-consumer pipelines, and multi-consumer ones whose sharing
     point is a downstream aggregate's own exchange (the MinHash
     signature frame), should leave it off.

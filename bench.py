@@ -123,11 +123,10 @@ the arbiter.
 r07 late additions: a markets_x100 section (60M lineitem rows — 10x
 tickers x 10x series depth; OHLCV/drawdown/beta/pair-corr plus the
 flagship weekly_volatility) gives the FINANCE tier the same measured
-decade corpus/events already carry; nb_classifier and
-contamination_bloom join corpus_x10 (the aggregation-only Naive Bayes
-domain classifier and the Bloom-pre-gated decontamination A/B twin at
-50k docs; contamination_bloom postdates the committed BENCH_LOCAL
-refresh — its first numbers land in the driver's BENCH_r07).
+decade corpus/events already carry; contamination_bloom joins
+corpus_x10 (the Bloom-pre-gated decontamination A/B twin at 50k docs;
+it postdates the committed BENCH_LOCAL refresh — its first numbers
+land in the driver's BENCH_r07).
 
 r07 final-refresh arbitration: the first refresh attempt hit a
 transient co-tenant burst (30+ unchanged-code entries +20-50%
@@ -407,28 +406,16 @@ unicode_fold_raw 0.804 at 500k docs (the exact-normalization operator
 over the whole fixture — the ASCII-majority detector keeps it a
 JVM-side filter scan, ~1.1x the html_extract stage) and
 unicode_fold_dedup 2.081 (the gate chain: Arrow NFKC kernel over the
-planted non-ASCII quints + the fingerprint hash-agg). The unigram
-trainer is driver-gated, not benched as a decade: its per-round cost
-is bounded by the word-TYPE table, not the corpus — the corpus-scale
-surfaces it does pay (the histogram agg, the apply broadcast join)
-are the token_stats/bpe shapes already priced above.
+planted non-ASCII quints + the fingerprint hash-agg).
 
 r14 addendum (run2, same day — the COMMITTED BENCH_LOCAL): the regime
 relaxed mid-day exactly as in r13 (headline 14.606 -> 12.629, every
-tier moved together), and the type-bounded claim above became a
-measured line after all: corpus_x10.unigram_train 1.621 at 50k docs
-(histogram + seed explode + 2 hard-EM Arrow passes over types +
-bounded collects + the apply DP — cheaper than one minhash_sigs
-pass). crawl_x100 url stage 1.191 (r13 1.149 — the port gate
+tier moved together). crawl_x100 url stage 1.191 (r13 1.149 — the port gate
 confirmed free), unicode_fold_raw 0.649 / unicode_fold_dedup 1.373 at
 500k docs.
 
 r15 notes (regime 0.852 vs r14 — machine faster; headline 12.223):
-NEW priced lines — corpus_x10.kn_bigram_lp 2.150 (vs bigram_lp 1.631:
-the KN smoothing machinery — two extra vocab-bounded aggregates — is
-+0.5 s at 50k docs), corpus_x10.ccnet_buckets 2.604 (lang-keyed KN
-counts + the ONE doc-level rank window add +0.45 s over corpus-global
-KN), corpus_x10.decontam_near_dup 2.902 and corpus_x100.
+NEW priced lines — corpus_x10.decontam_near_dup 2.902 and corpus_x100.
 decontam_near_dup 9.562 — the x100/x10 ratio is 3.3x for 10x corpus
 against the same construction (the benchmark-broadcast shape holds:
 the corpus side's bill is its signature agg, not the cross join).
@@ -459,11 +446,11 @@ histogram checkpointed); the whole single-pass corpus family
 (html/c4/chunking/token_stats/exact_dedup/inverted_index/pmi...)
 -10-40% at multi-file tiers (fan_out now skips the raw-payload
 repartition when the input already scans in >= target partitions —
-scan-like plans only). Entries that must NOT drift: ccnet_buckets /
-kn_bigram_lp / repetition / tfidf keep forced fan-out exchanges
-(multi-consumer sharing — the first optimization re-bench caught the
-skip regressing them 1.4-2.4x and they were individually A/B'd
-back); simhash / unigram A/B'd as ties and keep the skip.
+scan-like plans only). Entries that must NOT drift: repetition /
+tfidf keep forced fan-out exchanges (multi-consumer sharing — the
+first optimization re-bench caught the skip regressing them 1.4-2.4x
+and they were individually A/B'd back); simhash A/B'd as a tie and
+keeps the skip.
 Methodology unchanged: same queries, same best-of-3 noop-sink
 timing, same fixtures; no measurement-path edits this round.
 
@@ -569,22 +556,6 @@ def build_x10_fixture(spark, tmp: str) -> str:
         .parquet(f"{x10}/documents.parquet")
     )
     return x10
-
-
-def _unigram_train_x10(spark, x10: str):
-    """Unigram-LM trainer at decade scale, gate params (r14): returns
-    the segments frame so the timer covers the histogram, the seed, both
-    hard-EM rounds (their bounded collects run eagerly inside the call),
-    and the final apply DP materialized by the noop write."""
-    from airflow_etl_finance_market_spark.operators.unigram import (
-        unigram_train,
-    )
-
-    docs = spark.read.parquet(f"{x10}/documents.parquet")
-    return unigram_train(
-        docs, rounds=2, max_piece_len=3, max_word_len=10,
-        seed_multi=64, keep_multi=32,
-    )[1]
 
 
 def _contamination_exact_x10(spark, x10: str):
@@ -1105,7 +1076,6 @@ def corpus_x10_section(spark, qs, tmp: str) -> dict[str, float]:
         ),
         # round-3 corpus operators at x10
         "tfidf_top_terms": lambda: _noop(qs["doc_tfidf_top_terms"](spark, x10)),
-        "seq_packing": lambda: _noop(qs["doc_seq_packing"](spark, x10)),
         "winnow_fps": lambda: _noop(qs["doc_winnow_fingerprints"](spark, x10)),
         # dedup_clusters runs its label-propagation rounds eagerly when the
         # frame is built, so the timer wraps construction + materialization
@@ -1115,19 +1085,6 @@ def corpus_x10_section(spark, qs, tmp: str) -> dict[str, float]:
         # round-4 corpus operators at x10
         "inverted_index": lambda: _noop(qs["doc_inverted_index"](spark, x10)),
         "bigram_lp": lambda: _noop(qs["doc_bigram_logprob"](spark, x10)),
-        # r15: the interpolated-KN rung above bigram_lp — same single
-        # positional expansion, but four vocab-bounded aggregates
-        # (bigram counts, context totals + fwd diversity, continuation
-        # diversity, the 1-row N1+(..) scalar) instead of two; the
-        # delta vs bigram_lp prices the KN smoothing machinery
-        "kn_bigram_lp": lambda: _noop(qs["kn_bigram_logprob"](spark, x10)),
-        # r15: the CCNet bucketing stage on top — per-LANG KN counts
-        # (same expansion, lang-keyed aggregates) + the one doc-level
-        # rank window; the delta vs kn_bigram_lp prices the per-lang
-        # keying + the head/middle/tail split
-        "ccnet_buckets": lambda: _noop(
-            qs["ccnet_perplexity_buckets"](spark, x10)
-        ),
         "pmi_pairs": lambda: _noop(qs["term_pmi_pairs"](spark, x10)),
         # narrow (4-char) length buckets: the default 64-char blocking is
         # tuned for the oracle fixture; at 50k docs it would put ~6k docs
@@ -1166,26 +1123,12 @@ def corpus_x10_section(spark, qs, tmp: str) -> dict[str, float]:
         "span_removal": lambda: _noop(
             D.duplicate_span_removal(docs, span_tokens=10)
         ),
-        # r14: the unigram-LM trainer at 50k docs (gate params) — the
-        # claim "per-round cost is bounded by the word-TYPE table, not
-        # the corpus" as a measured number: histogram agg + seed
-        # explode + 2 hard-EM rounds (Arrow DP over types + bounded
-        # collects) + the final apply DP
-        "unigram_train": lambda: _noop(
-            _unigram_train_x10(spark, x10)
-        ),
         # r07: the published-filter tier — Gopher rule bundle (map-only,
         # shuffle-free) and DSIR importance weights (explode + two
         # bounded aggs + broadcast ratio join) at 50k docs
         "gopher_flags": lambda: _noop(qs["gopher_quality_flags"](spark, x10)),
         "dsir_weights": lambda: _noop(
             qs["dsir_importance_weights"](spark, x10)
-        ),
-        # r07: aggregation-only Naive Bayes domain classifier at 50k docs
-        # (ONE explode -> checkpointed per-doc term vectors; vocab-bounded
-        # model frames; per-doc argmax window over |classes| rows)
-        "nb_classifier": lambda: _noop(
-            qs["doc_nb_lang_classifier"](spark, x10)
         ),
         # r07: the Bloom-pre-gated decontamination A/B twin of
         # "contamination" above — identical output, map-side bitmap

@@ -73,9 +73,10 @@ def _norm_cell(v):
     Numeric cells carry an explicit type tag: the driver's value hasher is
     type-sensitive (an oracle emitting HUGEINT/float64 where Spark emits
     bigint hash-mismatches even when the values are equal), but Python's
-    ``0 == 0.0`` is True — an untagged compare masked exactly that bug in
-    round 3 (``doc_seq_packing``). Tagging int vs float here makes the
-    local parity test fail the same way the driver would.
+    ``0 == 0.0`` is True — an untagged compare once masked exactly that
+    bug (a windowed DuckDB ``SUM(BIGINT)`` yields HUGEINT). Tagging int
+    vs float here makes the local parity test fail the same way the
+    driver would.
     """
     if v is None:
         return None

@@ -259,49 +259,6 @@ class TestTfidfTopTerms:
         assert top[0] == "zebra"  # df=1 outranks the everywhere-word
 
 
-class TestSequencePacking:
-    def test_contiguous_greedy_packing(self, spark):
-        """Within a shard: offsets advance by token counts, sequences roll
-        over exactly when the budget is crossed, coordinates re-derive from
-        a driver-side replay."""
-        from airflow_etl_finance_market_spark.operators.packing import (
-            pack_sequences,
-        )
-        from airflow_etl_finance_market_spark.operators.sampling import (
-            hash_bucket,
-        )
-
-        docs = spark.createDataFrame(
-            [(i, " ".join(["tok"] * (3 + i % 5))) for i in range(100)],
-            "doc_id long, text string",
-        )
-        out = pack_sequences(docs, budget=10, shards=4).collect()
-        by_shard = collections.defaultdict(list)
-        for r in out:
-            by_shard[r["shard"]].append(r)
-        assert sum(len(v) for v in by_shard.values()) == 100
-        for shard_rows in by_shard.values():
-            shard_rows.sort(key=lambda r: r["doc_id"])
-            cum = 0
-            for r in shard_rows:
-                assert r["seq_id"] == cum // 10
-                assert r["seq_offset"] == cum % 10
-                cum += r["n_tokens"]
-
-    def test_deterministic_under_partitioning(self, spark):
-        from airflow_etl_finance_market_spark.operators.packing import (
-            pack_sequences,
-        )
-
-        docs = spark.createDataFrame(
-            [(i, " ".join(["w"] * (1 + i % 7))) for i in range(60)],
-            "doc_id long, text string",
-        )
-        a = sorted(map(tuple, pack_sequences(docs).collect()))
-        b = sorted(map(tuple, pack_sequences(docs.repartition(13)).collect()))
-        assert a == b
-
-
 class TestStratifiedSample:
     def test_membership_matches_python_md5(self, spark, docs):
         """Row membership replays exactly from Python's md5 — the portable
@@ -717,104 +674,6 @@ class TestDsirImportance:
             for r in dsir_importance(df, F.col("t")).collect()
         }
         assert got == pytest.approx(exp)
-
-
-class TestBpe:
-    @staticmethod
-    def _ref_bpe(word_counts, num_merges, min_pair_count=2):
-        """Pure-Python reference (Sennrich-style, with the repo's
-        deterministic (count desc, left asc, right asc) tie-break)."""
-        segs = {w: list(w) + ["</w>"] for w in word_counts}
-        merges = []
-        for rank in range(num_merges):
-            stats = {}
-            for w, seq in segs.items():
-                c = word_counts[w]
-                for a, b in zip(seq, seq[1:]):
-                    stats[(a, b)] = stats.get((a, b), 0) + c
-            if not stats:
-                break
-            (left, right), cnt = min(
-                stats.items(), key=lambda kv: (-kv[1], kv[0][0], kv[0][1])
-            )
-            if cnt < min_pair_count:
-                break
-            merges.append((rank, left, right, cnt))
-            for w, seq in segs.items():
-                out = []
-                for s in seq:
-                    if out and out[-1] == left and s == right:
-                        out[-1] = left + right
-                    else:
-                        out.append(s)
-                segs[w] = out
-        return merges, segs
-
-    def test_merges_and_segments_match_reference(self, spark):
-        from airflow_etl_finance_market_spark.operators.bpe import (
-            bpe_train,
-        )
-
-        texts = [
-            "low lower lowest low low",
-            "new newer newest new newer",
-            "wide wider widest wide",
-            "low new wide lower newer",
-        ]
-        df = spark.createDataFrame(
-            list(enumerate(texts)), "doc_id long, text string"
-        )
-        counts = collections.Counter(
-            w for t in texts for w in t.split()
-        )
-        exp_merges, exp_segs = self._ref_bpe(counts, 25)
-        merges, segments = bpe_train(df, num_merges=25)
-        got = [
-            (r.rank, r.left, r.right, r.pair_count)
-            for r in merges.orderBy("rank").collect()
-        ]
-        assert got == exp_merges
-        got_segs = {
-            r.term: list(r.subwords) for r in segments.collect()
-        }
-        assert got_segs == dict(exp_segs)
-
-    def test_token_stats_replay(self, spark):
-        from airflow_etl_finance_market_spark.operators.bpe import (
-            bpe_token_stats,
-            bpe_train,
-        )
-
-        texts = ["aa ab aa b", "ab ab aa"]
-        df = spark.createDataFrame(
-            list(enumerate(texts)), "doc_id long, text string"
-        )
-        counts = collections.Counter(w for t in texts for w in t.split())
-        _, exp_segs = self._ref_bpe(counts, 10)
-        _, segments = bpe_train(df, num_merges=10)
-        stats = {
-            r.doc_id: (r.n_words, r.n_bpe_tokens)
-            for r in bpe_token_stats(df, segments).collect()
-        }
-        for doc_id, text in enumerate(texts):
-            words = text.split()
-            exp_tokens = sum(len(exp_segs[w]) for w in words)
-            assert stats[doc_id] == (len(words), exp_tokens)
-
-    def test_min_pair_count_stops_early(self, spark):
-        from airflow_etl_finance_market_spark.operators.bpe import (
-            bpe_train,
-        )
-
-        # every word unique, every pair count 1 -> zero merges at the
-        # default min_pair_count=2
-        df = spark.createDataFrame(
-            [(0, "abc defg hij")], "doc_id long, text string"
-        )
-        merges, segments = bpe_train(df, num_merges=5)
-        assert merges.count() == 0
-        segs = {r.term: list(r.subwords) for r in segments.collect()}
-        assert segs["abc"] == ["a", "b", "c", "</w>"]
 
 
 class TestCrossDocNgramOverlap:
@@ -1614,421 +1473,3 @@ def test_domain_blocklist_entries_normalized_and_unhinted_join(spark):
             ).collect()
         )
         assert got == [1], f"broadcast_blocklist={hint}"
-
-
-
-class TestKnBigramLogprob:
-    """Interpolated Kneser-Ney bigram scorer (r14, gate pre-committed
-    for r15): pure-Python reference differential + the properties that
-    separate KN from add-one."""
-
-    @staticmethod
-    def _ref(texts_by_id, D=0.75):
-        import math
-        import re
-        from collections import Counter
-
-        toks = {
-            i: re.sub(r"\s+", " ", t.lower()).strip().split(" ")
-            for i, t in texts_by_id
-        }
-        bigs = Counter()
-        for ws in toks.values():
-            for a, b in zip(ws, ws[1:]):
-                bigs[(a, b)] += 1
-        cctx = Counter()
-        fwd = Counter()
-        bwd = Counter()
-        for (a, b), c in bigs.items():
-            cctx[a] += c
-            fwd[a] += 1
-            bwd[b] += 1
-        n_all = len(bigs)
-        out = {}
-        for i, ws in toks.items():
-            if len(ws) < 2:
-                continue
-            lps = []
-            for a, b in zip(ws, ws[1:]):
-                c = bigs[(a, b)]
-                p = (max(c - D, 0.0) + D * fwd[a] * (bwd[b] / n_all)) / cctx[a]
-                lps.append(math.log(p))
-            out[i] = (len(lps), round(sum(lps) / len(lps), 6))
-        return out
-
-    def test_matches_python_reference(self, spark):
-        from airflow_etl_finance_market_spark.operators.corpus import (
-            kn_bigram_logprob,
-        )
-
-        corpus = [
-            (1, "the cat sat on the mat"),
-            (2, "the cat ran and the dog sat"),
-            (3, "san francisco san francisco san diego"),
-            (4, "single"),  # < 2 tokens: drops out
-            (5, "the the the the"),
-        ]
-        df = spark.createDataFrame(corpus, "doc_id long, text string")
-        got = {
-            r.doc_id: (r.n_bigrams, r.avg_logprob)
-            for r in kn_bigram_logprob(df).collect()
-        }
-        ref = self._ref(corpus)
-        assert set(got) == set(ref)
-        for i in ref:
-            assert got[i][0] == ref[i][0]
-            assert abs(got[i][1] - ref[i][1]) <= 1e-6
-        assert 4 not in got
-
-    def test_continuation_beats_raw_frequency(self, spark):
-        """The KN signature property: 'francisco' is frequent but only
-        ever follows 'san' (continuation diversity 1), while a
-        similarly-frequent word seen after MANY contexts gets a higher
-        continuation probability — the backoff term must reflect
-        context diversity, not raw counts (the reason KN demotes
-        templated boilerplate)."""
-        from airflow_etl_finance_market_spark.operators.corpus import (
-            kn_bigram_logprob,
-        )
-
-        # 'x' follows 4 distinct contexts; 'francisco' follows only
-        # 'san', with the same total count. The UNSEEN-context backoff
-        # is what KN changes; here both bigrams scored are seen, so
-        # compare the interpolation weight via constructed docs whose
-        # only difference is the continuation diversity of the second
-        # token.
-        corpus = [
-            (1, "a x"), (2, "b x"), (3, "c x"), (4, "d x"),
-            (5, "san francisco san francisco san francisco san francisco"),
-            # probe docs: one seen-once bigram each, same c/ctx totals
-            (6, "a x"),
-            (7, "san francisco"),
-        ]
-        df = spark.createDataFrame(corpus, "doc_id long, text string")
-        got = {r.doc_id: r.avg_logprob for r in kn_bigram_logprob(df).collect()}
-        ref = self._ref(corpus)
-        for i in (6, 7):
-            assert abs(got[i] - ref[i][1]) <= 1e-6
-        # 'a x' (diverse continuation) outscores 'san francisco' ONLY
-        # through the continuation term? No — c(san francisco) is much
-        # larger; the pin here is the reference agreement above plus
-        # the diversity ordering of the continuation probabilities
-        # themselves, asserted on the reference's internals:
-        import collections
-        bwd = collections.Counter()
-        seen = set()
-        for _, t in corpus:
-            ws = t.split()
-            for a, b in zip(ws, ws[1:]):
-                if (a, b) not in seen:
-                    seen.add((a, b))
-                    bwd[b] += 1
-        assert bwd["x"] == 4 and bwd["francisco"] == 1
-
-    def test_discount_validated(self, spark):
-        import pytest as _pytest
-
-        from airflow_etl_finance_market_spark.operators.corpus import (
-            kn_bigram_logprob,
-        )
-
-        df = spark.createDataFrame([(1, "a b")], "doc_id long, text string")
-        with _pytest.raises(ValueError):
-            kn_bigram_logprob(df, discount=1.5)
-
-
-class TestCcnetPerplexityBuckets:
-    """CCNet head/middle/tail bucketing over PER-LANGUAGE interpolated-KN
-    scores (r15): python reference differential, per-language isolation,
-    the integer-exact floor split + (score, id) tiebreak."""
-
-    @staticmethod
-    def _ref(rows, D=0.75, n_buckets=3):
-        import math
-        import re
-        from collections import Counter, defaultdict
-
-        by_lang = defaultdict(list)
-        for i, lang, t in rows:
-            by_lang[lang].append((i, t))
-        out = {}
-        for lang, docs in by_lang.items():
-            toks = {
-                i: re.sub(r"\s+", " ", t.lower()).strip().split(" ")
-                for i, t in docs
-            }
-            bigs = Counter()
-            for ws in toks.values():
-                for a, b in zip(ws, ws[1:]):
-                    bigs[(a, b)] += 1
-            cctx, fwd, bwd = Counter(), Counter(), Counter()
-            for (a, b), c in bigs.items():
-                cctx[a] += c
-                fwd[a] += 1
-                bwd[b] += 1
-            n_all = len(bigs)
-            scored = []
-            for i, ws in toks.items():
-                if len(ws) < 2:
-                    continue
-                lps = [
-                    math.log(
-                        (max(bigs[(a, b)] - D, 0.0)
-                         + D * fwd[a] * (bwd[b] / n_all)) / cctx[a]
-                    )
-                    for a, b in zip(ws, ws[1:])
-                ]
-                scored.append((i, len(lps), round(sum(lps) / len(lps), 6)))
-            scored.sort(key=lambda r: (-r[2], r[0]))
-            n = len(scored)
-            labels = (
-                ["head", "middle", "tail"]
-                if n_buckets == 3
-                else [f"b{j}" for j in range(n_buckets)]
-            )
-            for rn, (i, nb, lp) in enumerate(scored, 1):
-                out[i] = (lang, nb, lp, labels[((rn - 1) * n_buckets) // n])
-        return out
-
-    CORPUS = [
-        # lang A: 7 scorable docs spanning repetitive -> diverse
-        (1, "aa", "the cat sat on the mat"),
-        (2, "aa", "the cat sat on the mat"),  # tie with doc 1
-        (3, "aa", "the dog ran over the hill"),
-        (4, "aa", "a b c d e f g h"),
-        (5, "aa", "the the the the the"),
-        (6, "aa", "cat dog cat dog cat dog"),
-        (7, "aa", "the mat sat on the cat"),
-        (8, "aa", "single"),  # < 2 tokens: drops out
-        # lang B: same TEXTS as some lang-A docs — must score under B's
-        # own LM, not A's
-        (11, "bb", "the cat sat on the mat"),
-        (12, "bb", "x y z w v u"),
-        (13, "bb", "x y x y x y"),
-    ]
-
-    def _run(self, spark, rows, **kw):
-        from airflow_etl_finance_market_spark.operators.corpus import (
-            ccnet_perplexity_buckets,
-        )
-
-        df = spark.createDataFrame(
-            rows, "doc_id long, lang string, text string"
-        )
-        return ccnet_perplexity_buckets(df, **kw)
-
-    def test_matches_python_reference(self, spark):
-        got = {
-            r.doc_id: (r.lang, r.n_bigrams, r.avg_logprob, r.ppl_bucket)
-            for r in self._run(spark, self.CORPUS).collect()
-        }
-        ref = self._ref(self.CORPUS)
-        assert set(got) == set(ref)
-        for i in ref:
-            assert got[i][0] == ref[i][0]
-            assert got[i][1] == ref[i][1]
-            assert abs(got[i][2] - ref[i][2]) <= 1e-6
-            assert got[i][3] == ref[i][3], f"doc {i}"
-        assert 8 not in got
-
-    def test_per_language_isolation(self, spark):
-        """A document's score depends only on ITS language's corpus:
-        adding documents to lang B must not move any lang-A score —
-        the per-language-LM contract that separates this from scoring
-        everything under one global model."""
-        base = [r for r in self.CORPUS if r[1] == "aa"]
-        a_only = {
-            r.doc_id: r.avg_logprob
-            for r in self._run(spark, base).collect()
-        }
-        mixed = {
-            r.doc_id: r.avg_logprob
-            for r in self._run(spark, self.CORPUS).collect()
-            if r.lang == "aa"
-        }
-        assert a_only == mixed
-
-    def test_floor_split_and_id_tiebreak(self, spark):
-        """7 scorable lang-A docs split 3/2/2, and the tied pair
-        (docs 1, 2 — identical text, identical score) lands in rank
-        order by doc_id: the floor-split boundary is decided by the
-        pinned total order, never a float race."""
-        rows = [r for r in self._run(spark, self.CORPUS).collect()
-                if r.lang == "aa"]
-        from collections import Counter
-
-        sizes = Counter(r.ppl_bucket for r in rows)
-        assert sizes == {"head": 3, "middle": 2, "tail": 2}
-        by_id = {r.doc_id: r for r in rows}
-        assert by_id[1].avg_logprob == by_id[2].avg_logprob
-        # doc 1 ranks ahead of doc 2; they may straddle a boundary but
-        # doc 2's bucket can never precede doc 1's
-        order = ["head", "middle", "tail"]
-        assert order.index(by_id[1].ppl_bucket) <= order.index(
-            by_id[2].ppl_bucket
-        )
-
-    def test_two_buckets_labels(self, spark):
-        rows = self._run(spark, self.CORPUS, n_buckets=2).collect()
-        assert {r.ppl_bucket for r in rows} == {"b0", "b1"}
-
-    def test_validation(self, spark):
-        import pytest as _pytest
-
-        with _pytest.raises(ValueError):
-            self._run(spark, self.CORPUS, discount=0.0)
-        with _pytest.raises(ValueError):
-            self._run(spark, self.CORPUS, n_buckets=0)
-
-
-class TestSpfhpPacking:
-    """Shortest-Pack-First Histogram-Packing (r15): solver differential
-    vs a one-sequence-at-a-time reference, conservation properties, and
-    the whole-document assignment arithmetic."""
-
-    @staticmethod
-    def _ref_spfhp(histogram, budget, max_per_pack=None):
-        """Naive SPFHP: one sequence at a time (the paper's description
-        verbatim) — the differential oracle for the bulk solver."""
-        packs = []  # [composition list, remaining, seq]
-        seq = 0
-        for length in sorted(histogram, reverse=True):
-            for _ in range(histogram[length]):
-                fits = [
-                    p
-                    for p in packs
-                    if p[1] >= length
-                    and (max_per_pack is None or len(p[0]) < max_per_pack)
-                ]
-                if fits:
-                    p = min(fits, key=lambda p: (p[1], p[2]))
-                    p[0].append(length)
-                    p[1] -= length
-                else:
-                    seq += 1
-                    packs.append([[length], budget - length, seq])
-        out = {}
-        for comp, _, _ in packs:
-            key = tuple(comp)
-            out[key] = out.get(key, 0) + 1
-        return out
-
-    def test_bulk_solver_matches_sequential_reference(self):
-        import random
-
-        from airflow_etl_finance_market_spark.operators.packing import (
-            spfhp_strategies,
-        )
-
-        rng = random.Random(42)
-        for trial in range(300):
-            budget = rng.choice([8, 16, 37, 64])
-            hist = {
-                rng.randint(1, budget): rng.randint(1, 40)
-                for _ in range(rng.randint(1, 12))
-            }
-            cap = rng.choice([None, 2, 4])
-            got = dict(spfhp_strategies(hist, budget=budget, max_per_pack=cap))
-            ref = self._ref_spfhp(hist, budget, cap)
-            assert got == ref, (budget, cap, hist)
-
-    def test_solver_validation(self):
-        import pytest as _pytest
-
-        from airflow_etl_finance_market_spark.operators.packing import (
-            spfhp_strategies,
-        )
-
-        with _pytest.raises(ValueError):
-            spfhp_strategies({9: 1}, budget=8)
-        with _pytest.raises(ValueError):
-            spfhp_strategies({0: 1}, budget=8)
-
-    DOCS = [
-        (1, "a b c d e f"),        # 6 tokens
-        (2, "a b c d e"),          # 5
-        (3, "a b c"),              # 3
-        (4, "a b"),                # 2
-        (5, "a b c d e f"),        # 6
-        (6, "x y"),                # 2
-    ]
-
-    def test_assignment_tiles_packs_exactly(self, spark):
-        from collections import defaultdict
-
-        from airflow_etl_finance_market_spark.operators.packing import (
-            pack_sequences_spfhp,
-            spfhp_strategies,
-        )
-
-        docs = spark.createDataFrame(self.DOCS, "doc_id long, text string")
-        out = pack_sequences_spfhp(docs, budget=8).collect()
-        # every doc placed exactly once
-        assert sorted(r.doc_id for r in out) == [1, 2, 3, 4, 5, 6]
-        packs = defaultdict(list)
-        for r in out:
-            packs[r.pack_id].append(r)
-        # pack ids contiguous from 0
-        assert sorted(packs) == list(range(len(packs)))
-        for rows in packs.values():
-            fill = rows[0].pack_fill
-            assert all(r.pack_fill == fill for r in rows)
-            assert sum(r.n_tokens for r in rows) == fill <= 8
-            # offsets tile [0, fill) without overlap
-            spans = sorted((r.pack_offset, r.pack_offset + r.n_tokens) for r in rows)
-            assert spans[0][0] == 0 and spans[-1][1] == fill
-            for (a, b), (c, d) in zip(spans, spans[1:]):
-                assert b == c
-        # the realized composition multiset equals the solver's answer
-        hist = {6: 2, 5: 1, 3: 1, 2: 2}
-        want = {}
-        for comp, m in spfhp_strategies(hist, budget=8):
-            want[comp] = want.get(comp, 0) + m
-        got = {}
-        for rows in packs.values():
-            comp = tuple(sorted((r.n_tokens for r in rows), reverse=True))
-            got[comp] = got.get(comp, 0) + 1
-        assert got == want
-
-    def test_oversize_policy(self, spark):
-        import pytest as _pytest
-
-        from airflow_etl_finance_market_spark.operators.packing import (
-            pack_sequences_spfhp,
-        )
-
-        docs = spark.createDataFrame(
-            self.DOCS + [(7, "t " * 20)], "doc_id long, text string"
-        )
-        with _pytest.raises(ValueError, match="exceed budget"):
-            pack_sequences_spfhp(docs, budget=8)
-        out = pack_sequences_spfhp(docs, budget=8, oversize="drop").collect()
-        assert 7 not in {r.doc_id for r in out}
-        assert len(out) == 6
-
-    def test_null_and_empty_text_policy(self, spark):
-        """NULL text counts 0 tokens (coalesced — a NULL size would
-        silently fail BOTH filters and vanish by accident) and is
-        excluded by the documented rule, never raising the oversize
-        error; an empty STRING is one empty token under the package
-        tokenizer convention (split('') = ['']) and packs normally."""
-        from airflow_etl_finance_market_spark.operators.packing import (
-            pack_sequences_spfhp,
-        )
-
-        docs = spark.createDataFrame(
-            self.DOCS + [(8, None), (9, "")], "doc_id long, text string"
-        )
-        out = pack_sequences_spfhp(docs, budget=8).collect()  # no raise
-        assert {r.doc_id for r in out} == {1, 2, 3, 4, 5, 6, 9}
-        assert next(r for r in out if r.doc_id == 9).n_tokens == 1
-
-    def test_deterministic_across_runs(self, spark):
-        from airflow_etl_finance_market_spark.operators.packing import (
-            pack_sequences_spfhp,
-        )
-
-        docs = spark.createDataFrame(self.DOCS, "doc_id long, text string")
-        a = sorted(map(tuple, pack_sequences_spfhp(docs, budget=8).collect()))
-        b = sorted(map(tuple, pack_sequences_spfhp(docs, budget=8).collect()))
-        assert a == b

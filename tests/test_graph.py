@@ -95,14 +95,10 @@ def test_empty_inputs_yield_empty_not_crash(spark):
     from airflow_etl_finance_market_spark.operators.dedup import (
         winnow_fingerprints,
     )
-    from airflow_etl_finance_market_spark.operators.packing import (
-        pack_sequences,
-    )
 
     empty_docs = spark.createDataFrame([], "doc_id long, text string")
     empty_pairs = spark.createDataFrame([], "id_a long, id_b long")
     assert dedup_clusters(empty_docs, empty_pairs).collect() == []
-    assert pack_sequences(empty_docs).collect() == []
     assert tfidf_top_terms(empty_docs).collect() == []
     assert unigram_logprob(empty_docs).collect() == []
     assert winnow_fingerprints(empty_docs).collect() == []

@@ -140,3 +140,36 @@ def test_finance_path_import_closure_stays_in_census():
         if not any(fnmatch.fnmatchcase(m, pat) for pat in _FINANCE_CENSUS)
     )
     assert not outside, f"finance path imports outside its census: {outside}"
+
+
+def test_every_package_annotation_resolves():
+    """With ``from __future__ import annotations`` a hint is a string that
+    nothing evaluates at import, so a name missing from the module's
+    globals only fails the first ``typing.get_type_hints`` on it."""
+    import inspect
+    import typing
+
+    importlib.import_module(f"{PKG}.harness")
+    unresolved = []
+    n_checked = 0
+    for path in glob.glob(f"{_REPO}/{PKG}/**/*.py", recursive=True):
+        module = importlib.import_module(
+            os.path.relpath(path, _REPO)[:-3].replace(os.sep, ".")
+            .removesuffix(".__init__")
+        )
+        fns = []
+        for obj in vars(module).values():
+            if getattr(obj, "__module__", None) != module.__name__:
+                continue
+            if inspect.isfunction(obj):
+                fns.append(obj)
+            elif inspect.isclass(obj):
+                fns += [f for f in vars(obj).values() if inspect.isfunction(f)]
+        for fn in fns:
+            n_checked += 1
+            try:
+                typing.get_type_hints(fn)
+            except NameError as exc:
+                unresolved.append(f"{module.__name__}.{fn.__qualname__}: {exc}")
+    assert n_checked > 100, f"only {n_checked} functions found — walker broken?"
+    assert not unresolved, "unresolvable annotations:\n" + "\n".join(unresolved)

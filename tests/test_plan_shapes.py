@@ -307,14 +307,6 @@ def test_grouped_topk_prunes_before_exchange(spark, sf_dir):
     assert plan.count("WindowGroupLimit") == 2
 
 
-def test_seq_packing_single_shard_exchange(spark, sf_dir):
-    """Packing is one shard-keyed exchange + window; token counting stays
-    map-side. A second Exchange would mean the shard/window keys split."""
-    plan = plan_of(harness.queries()["doc_seq_packing"](spark, sf_dir))
-    assert plan.count("Exchange") == 1
-    assert "Window" in plan
-
-
 def test_winnowing_is_map_side_until_distinct(spark, sf_dir):
     """The sliding MIN runs array-side (transform + slice + array_min):
     NO Window operator — the per-doc sort a rowsBetween frame would
@@ -539,24 +531,6 @@ def test_dsir_ratio_table_broadcasts_onto_occurrences(spark, sf_dir):
     )
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
-
-
-def test_bpe_apply_is_broadcast_join_one_agg(spark, sf_dir):
-    """bpe_token_stats: the segmentation table is vocab-bounded and must
-    BROADCAST onto the occurrence stream (shuffling the stream to join a
-    vocab would be the 100 TB mistake), followed by one partial+final
-    hash-aggregate on the doc key."""
-    from airflow_etl_finance_market_spark.operators.bpe import (
-        bpe_token_stats,
-        bpe_train,
-    )
-
-    docs = load_fixture(spark, sf_dir, "documents").limit(50)
-    _, segments = bpe_train(docs, num_merges=3)
-    plan = plan_of(bpe_token_stats(docs, segments))
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
-    assert plan.count("HashAggregate") == 2  # partial + final, doc key
 
 
 def test_kmv_rollup_is_join_free_array_arithmetic(spark, sf_dir):

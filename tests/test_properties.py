@@ -112,43 +112,6 @@ def test_asof_join_matches_pandas_merge_asof(spark, sides, inclusive):
             assert g == row["v"]
 
 
-@given(
-    toks=st.lists(st.integers(min_value=0, max_value=40), min_size=0, max_size=60),
-    budget=st.integers(min_value=1, max_value=50),
-    shards=st.integers(min_value=1, max_value=5),
-)
-@settings(**SETTINGS)
-def test_pack_sequences_replays_greedy_packing(spark, toks, budget, shards):
-    """For arbitrary token-count corpora, every (shard, seq, offset)
-    coordinate must equal a literal greedy concat-then-split replay over
-    the same md5 shard assignment."""
-    import hashlib
-
-    from airflow_etl_finance_market_spark.operators.packing import (
-        pack_sequences,
-    )
-
-    docs = spark.createDataFrame(
-        [(i, " ".join(["w"] * n) if n else "") for i, n in enumerate(toks)],
-        "doc_id long, text string",
-    )
-    got = {
-        r["doc_id"]: (r["shard"], r["seq_id"], r["n_tokens"], r["seq_offset"])
-        for r in pack_sequences(docs, budget=budget, shards=shards).collect()
-    }
-    cum: dict[int, int] = {}
-    for i, n in enumerate(toks):
-        # '' splits to [''] — one (empty) token, same as the engine's
-        # tokenizer contract
-        n_tok = max(n, 1)
-        shard = (
-            int(hashlib.md5(f"seed42:{i}".encode()).hexdigest()[:8], 16) % shards
-        )
-        c = cum.get(shard, 0)
-        assert got[i] == (shard, c // budget, n_tok, c % budget), (i, got[i])
-        cum[shard] = c + n_tok
-
-
 _etype = st.sampled_from(["view", "click", "purchase"])
 
 
@@ -544,48 +507,3 @@ def test_duplicate_span_removal_matches_replay_hypothesis(
         ).collect()
     }
     assert got == _span_removal_replay(docs, k, min_docs)
-
-
-# --- unigram-LM trainer differential (r14) ---------------------------------
-
-
-@st.composite
-def _unigram_corpus(draw):
-    """Tiny-alphabet doc soups: heavy substring sharing, ties everywhere
-    — exactly where an argmax/tie-break drift between the Spark kernel
-    and the reference would surface."""
-    n_docs = draw(st.integers(min_value=1, max_value=5))
-    word = st.text(alphabet="abc", min_size=1, max_size=6)
-    docs = []
-    for i in range(n_docs):
-        words = draw(st.lists(word, min_size=1, max_size=8))
-        docs.append((i, " ".join(words)))
-    return docs
-
-
-@given(corpus=_unigram_corpus(), rounds=st.integers(min_value=1, max_value=2))
-@settings(**SETTINGS)
-def test_unigram_train_matches_reference_hypothesis(spark, corpus, rounds):
-    """unigram_train + unigram_token_stats vs the pure-Python reference
-    over adversarial tiny-alphabet corpora (the span-removal precedent):
-    the integer-exact objective must make every interior argmax agree,
-    so vocab AND per-doc apply counts are equal exactly."""
-    from airflow_etl_finance_market_spark.operators.unigram import (
-        unigram_token_stats,
-        unigram_train,
-    )
-    from tests.test_unigram_ops import _ref_doc_tokens, _ref_train
-
-    params = dict(rounds=rounds, L=2, W=4, seed_multi=5, keep_multi=3)
-    ref_vocab, _ = _ref_train([t for _, t in corpus], **params)
-    df = spark.createDataFrame(corpus, "doc_id long, text string")
-    vocab, segments = unigram_train(
-        df, rounds=rounds, max_piece_len=2, max_word_len=4,
-        seed_multi=5, keep_multi=3,
-    )
-    assert {r.piece: r.weight for r in vocab.collect()} == ref_vocab
-    got_docs = {
-        r.doc_id: (r.n_words, r.n_unigram_tokens)
-        for r in unigram_token_stats(df, segments).collect()
-    }
-    assert got_docs == _ref_doc_tokens(corpus, ref_vocab, 2, 4)

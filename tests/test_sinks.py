@@ -5,9 +5,12 @@ genuinely-missing path."""
 from __future__ import annotations
 
 import os
+import shutil
+import tempfile
 
 import pytest
 
+from airflow_etl_finance_market_spark.sources.readers import read_orc, write_orc
 from airflow_etl_finance_market_spark.sources.sinks import append_if_absent
 
 
@@ -174,19 +177,21 @@ class TestCompaction:
         )
 
         docs = load_fixture(spark, sf_dir, "documents")
-        path = str(tmp_path / "frag")
-        # simulate incremental debt: 16 tiny files
-        docs.repartition(16).write.parquet(path)
-        before = len(glob.glob(f"{path}/*.parquet"))
-        assert before == 16
         want = sorted((r.doc_id, r.text) for r in docs.collect())
-        n = compact_parquet(spark, path, target_file_mb=128)
-        after = len(glob.glob(f"{path}/*.parquet"))
-        assert n == after == 1  # tiny fixture -> one target-size file
-        got = sorted(
-            (r.doc_id, r.text) for r in spark.read.parquet(path).collect()
-        )
-        assert got == want
+        # a space in the path reaches the sizing as "%20" in the file URIs
+        for name in ("frag", "with space/frag"):
+            path = str(tmp_path / name)
+            # simulate incremental debt: 16 tiny files
+            docs.repartition(16).write.parquet(path)
+            before = len(glob.glob(f"{path}/*.parquet"))
+            assert before == 16
+            n = compact_parquet(spark, path, target_file_mb=128)
+            after = len(glob.glob(f"{path}/*.parquet"))
+            assert n == after == 1, name  # tiny fixture -> one target-size file
+            got = sorted(
+                (r.doc_id, r.text) for r in spark.read.parquet(path).collect()
+            )
+            assert got == want
 
     def test_heals_crashed_swap_on_entry(self, spark, sf_dir, tmp_path):
         """Crash window between rename(path -> __old) and
@@ -303,6 +308,25 @@ class TestOrcInterchange:
         assert "lang" in plan
         n_en = docs.filter(F.col("lang") == "en").count()
         assert df.count() == n_en
+
+
+def test_orc_roundtrip_preserves_rows_types_and_partition_column(spark, sf_dir):
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    tmp = tempfile.mkdtemp(prefix="orc_rt_test_")
+    try:
+        write_orc(docs, f"{tmp}/docs", partition_by=("lang",))
+        back = read_orc(spark, f"{tmp}/docs")
+        assert back.count() == docs.count()
+        # Partition column survives (string), payload types unchanged.
+        got = dict(back.dtypes)
+        want = dict(docs.dtypes)
+        assert got == want
+        # Values round-trip: anti-join both ways is empty.
+        cols = docs.columns
+        assert back.select(cols).exceptAll(docs.select(cols)).count() == 0
+        assert docs.select(cols).exceptAll(back.select(cols)).count() == 0
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def test_bucketed_write_recovers_stale_location(spark):

@@ -20,7 +20,7 @@ NAMES = [
     # label-propagation rounds eagerly at build time; the printed plan is
     # the final-round shape over the checkpointed labels (the per-round
     # shape is one edges⋈labels SMJ + min-agg + labels⋈labels jump).
-    "doc_tfidf_top_terms", "doc_seq_packing", "doc_winnow_fingerprints",
+    "doc_tfidf_top_terms", "doc_winnow_fingerprints",
     "doc_dedup_clusters", "reorder_within_30d", "doc_stratified_sample",
     "doc_unigram_logprob",
     # round 4: retrieval, association stats, sequential event analytics,
@@ -65,12 +65,8 @@ NAMES = [
     # the broadcast-ratio-join importance weights
     "gopher_quality_flags",
     "dsir_importance_weights",
-    # round 8: the BPE apply path (broadcast vocab join + one doc-keyed
-    # agg) and the KMV theta rollup (join-free array arithmetic over
+    # round 8: the KMV theta rollup (join-free array arithmetic over
     # <= k-element sketches; two grouped-top-k windows upstream)
-    # (r11 merged bpe_token_counts into bpe_pipeline — the apply-path
-    # plan is the second branch of the union)
-    "bpe_pipeline",
     "weekly_user_kmv_rollup",
     # round 12: the provenance tier (codegen canonicalization chain +
     # md5-keyed window; suffix-explode + broadcast anti-join), the
@@ -87,21 +83,12 @@ NAMES = [
     "doc_duplicate_span_removal",
     # round 14: the unicode fold (detector-split union — the ASCII
     # branch filter-only, ONE MapInPandas on the non-ASCII branch —
-    # feeding the fingerprint hash-agg) and the unigram trainer's
-    # apply surface (vocab createDataFrame + type-table DP +
-    # broadcast-join doc aggregate)
+    # feeding the fingerprint hash-agg)
     "unicode_fold_dedup",
-    "unigram_lm_tokenizer",
-    # round 15: the KN scorer (one positional expansion joining four
-    # vocab-bounded aggregates + a broadcast 1-row scalar), the
-    # cross-frame decontamination (per-side signature aggs, the
-    # benchmark side broadcast through band join AND gram verify —
-    # the corpus never shuffles past its signature agg), and the
-    # CCNet bucketing (the KN shape with lang-keyed aggregates + ONE
-    # doc-level rank window)
-    "kn_bigram_logprob",
+    # round 15: the cross-frame decontamination (per-side signature
+    # aggs, the benchmark side broadcast through band join AND gram
+    # verify — the corpus never shuffles past its signature agg)
     "near_dup_decontamination",
-    "ccnet_perplexity_buckets",
 ]
 
 
