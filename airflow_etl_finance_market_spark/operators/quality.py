@@ -11,17 +11,52 @@ Here the same gate is a one-row DataFrame (distributed aggregate — a full
 scan with map-side partial aggregation, no shuffle of data rows, only of the
 per-partition counters) plus a driver-side raise. On 100 TB this is the
 cheapest possible full-table pass: count + conditional count fused into one
-aggregation over a column-pruned scan.
+aggregation over a column-pruned scan. Cheaper still is no pass of its own:
+the pipeline observes the same aggregates (``gate_columns``) in the job
+that writes staging.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Row
+from collections.abc import Mapping
+from typing import Any
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
 class QualityGateError(ValueError):
     """Raised when a quality gate fails — halts the pipeline (C4 semantics)."""
+
+
+def gate_columns(
+    null_check_cols: list[str],
+    *,
+    expected_count: int | None = None,
+) -> list[Column]:
+    """The gate as aggregate columns: total_rows, null_rows, passed.
+
+    ``passed`` is the reference's boolean conjunction: exact row count (when
+    ``expected_count`` given, else just non-empty) AND zero NULLs in the
+    critical columns. The columns suit ``DataFrame.agg`` and also
+    ``DataFrame.observe``, so a write that already reads every row can
+    compute the gate in its own job.
+    """
+    null_cond: Column = F.lit(False)
+    for c in null_check_cols:
+        null_cond = null_cond | F.col(c).isNull()
+    total_rows = F.count(F.lit(1))
+    null_rows = F.sum(F.when(null_cond, 1).otherwise(0)).cast("long")
+    count_ok = (
+        (total_rows == F.lit(expected_count))
+        if expected_count is not None
+        else (total_rows > F.lit(0))
+    )
+    return [
+        total_rows.alias("total_rows"),
+        null_rows.alias("null_rows"),
+        (count_ok & (null_rows == F.lit(0))).alias("passed"),
+    ]
 
 
 def quality_summary(
@@ -30,27 +65,8 @@ def quality_summary(
     *,
     expected_count: int | None = None,
 ) -> DataFrame:
-    """One-row gate summary: total_rows, null_rows, passed.
-
-    ``passed`` is the reference's boolean conjunction: exact row count (when
-    ``expected_count`` given, else just non-empty) AND zero NULLs in the
-    critical columns.
-    """
-    null_cond: Column = F.lit(False)
-    for c in null_check_cols:
-        null_cond = null_cond | F.col(c).isNull()
-    count_ok = (
-        (F.col("total_rows") == F.lit(expected_count))
-        if expected_count is not None
-        else (F.col("total_rows") > F.lit(0))
-    )
-    return (
-        df.agg(
-            F.count(F.lit(1)).alias("total_rows"),
-            F.sum(F.when(null_cond, 1).otherwise(0)).cast("long").alias("null_rows"),
-        )
-        .withColumn("passed", count_ok & (F.col("null_rows") == F.lit(0)))
-    )
+    """One-row gate summary of ``df``: the columns of ``gate_columns``."""
+    return df.agg(*gate_columns(null_check_cols, expected_count=expected_count))
 
 
 def fk_orphans(
@@ -88,14 +104,13 @@ def fk_orphans(
     )
 
 
-def expect_passed(summary: DataFrame, gate_name: str = "quality") -> Row:
+def expect_passed(row: Mapping[str, Any], gate_name: str = "quality") -> Mapping[str, Any]:
     """Driver-side fail-fast: raise if the gate row is falsy (C4).
 
-    The collect here moves exactly one row — the gate aggregate — never data.
-    The row is returned, so a caller that also wants its counts does not run
-    the gate a second time.
+    ``row`` holds the columns of ``gate_columns``: the ``get`` of an
+    ``Observation`` of them, or the one row of ``quality_summary``. It is
+    returned, so a caller that also wants its counts reads them from it.
     """
-    row = summary.collect()[0]
     if not row["passed"]:
         raise QualityGateError(
             f"{gate_name} gate failed: total_rows={row['total_rows']} "

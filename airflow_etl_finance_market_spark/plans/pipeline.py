@@ -20,16 +20,18 @@ Scale design (100 TB posture):
 - the reference's chain is strictly linear, but after the quality gate the
   sinks depend only on staging and on the fact. They run as concurrent
   Spark jobs from driver threads, and Spark's FIFO scheduler shares the
-  cores between them: the two dimension appends start beside the fact's
-  window + `count`; on the full reload the weekly MV starts once that
-  `count` has filled the fact cache, beside the fact write. Staging and
-  the gate come first because every sink reads staging and none may be
-  submitted before the gate passes (C4); the `count` comes before the
-  weekly fan-out so the weekly aggregate reads the cache instead of
-  recomputing the window. On the incremental path the weekly MV re-reads
-  the stored fact, so it runs after the fact's partition overwrite and
-  only the dims overlap. On a cluster the same threads just queue the
-  jobs in FIFO order;
+  cores between them: on the full reload the two dimension appends, the
+  weekly MV write, the top-k collect and the fact write all start at once.
+  Staging and the gate come first because every sink reads staging and
+  none may be submitted before the gate passes (C4). On the incremental
+  path the weekly MV re-reads the stored fact, so it runs after the fact's
+  partition overwrite and only the dims overlap. On a cluster the same
+  threads just queue the jobs in FIFO order;
+- the gate and the row counts ride the writes: the gate's aggregates are
+  observed in the job that writes staging, `fact_rows` is the staged count,
+  and on the full reload `weekly_rows` is the count the weekly write
+  observed (`overwrite_parquet` returns it). Only the incremental path
+  re-reads the weekly MV, for its table-wide count and top-k;
 - the fact table is written partitioned by `ano`/`mes` (year, month): one
   directory and one file per month, about 120 directories for the paper's
   ten years (2,500 trading days). Every directory level stays under
@@ -40,12 +42,14 @@ Scale design (100 TB posture):
   partitionOverwriteMode. Rows are not sorted within a file: a month of the
   paper's input is about 6k rows, one row group, so a sort would buy no
   row-group skipping;
-- the fact DataFrame is cached between its three consumers (fact write,
-  weekly aggregate, report) so the window computation runs once, and is
-  unpersisted whether the run succeeds or fails;
+- the fact DataFrame is cached between its consumers (fact write, weekly
+  write, top-k, report) so the window computation runs once: whichever
+  consumer comes first fills the cache, and the concurrent ones wait on
+  its block locks instead of recomputing it. It is unpersisted whether the
+  run succeeds or fails;
 - dims use the anti-join append sink (ON CONFLICT DO NOTHING, S6) — the
   incoming distinct keys are the broadcast side;
-- nothing `.collect()`s except the one-row gate and the ≤k-row report;
+- nothing `.collect()`s except the ≤k-row report;
 - every re-read of a table the run wrote (staging, the weekly MV, the fact
   on the incremental path) passes the table's DDL schema from ``schemas``,
   so no read pays a footer-inference job before its scan.
@@ -60,11 +64,13 @@ import time
 from concurrent.futures import Future, ThreadPoolExecutor
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.util import inheritable_thread_target
 
-from ..operators.quality import expect_passed, quality_summary
+# quality_summary is not called here but stays a name of this module:
+# perfbench's traced run wraps each name of its PIPELINE_CALLS here
+from ..operators.quality import expect_passed, gate_columns, quality_summary  # noqa: F401
 from ..schemas import FACT_MOVIMENTACAO, STAGING, VOLATILITY_WEEKLY
 from ..sources.readers import read_ohlcv_csv
 from ..sources.sinks import append_if_absent, overwrite_parquet, overwrite_partitions
@@ -77,9 +83,9 @@ log = logging.getLogger(__name__)
 STAGES = ("staging", "gate", "dim_instrumento", "dim_tempo", "fact", "weekly", "total")
 # the fact's partition columns: year and month of data_id
 _FACT_PARTITIONS = ["ano", "mes"]
-# branches on pool threads: the two dims and the full reload's weekly MV;
-# the fact runs on the calling thread
-_SINK_BRANCHES = 3
+# branches on pool threads: the two dims and the full reload's weekly MV
+# write and top-k; the fact runs on the calling thread
+_SINK_BRANCHES = 4
 
 
 @dataclass
@@ -88,6 +94,7 @@ class PipelineResult:
 
     ``stage_seconds`` holds the wall of each of ``STAGES``. The dims, the
     fact and the weekly MV overlap, so their walls can sum past ``total``.
+    The full reload's top-k branch is no stage of its own.
     """
 
     staged_rows: int
@@ -207,7 +214,7 @@ def run_activity_rollup(
     panel = resample_daily_ffill(
         events, key="user_id", ts="ts", value="value"
     )
-    overwrite_parquet(panel, panel_path)
+    daily_rows = overwrite_parquet(panel, panel_path)
     panel = spark.read.parquet(panel_path)  # stored panel feeds the rollup
     weekly_panel = (
         panel.groupBy("user_id", week_start("d").alias("week"))
@@ -217,7 +224,7 @@ def run_activity_rollup(
             F.count(F.lit(1)).alias("n_days"),
         )
     )
-    overwrite_parquet(weekly_panel, weekly_panel_path)
+    weekly_rows = overwrite_parquet(weekly_panel, weekly_panel_path)
 
     sketches = hll_daily_user_sketches(events)
     overwrite_parquet(sketches, sketch_path)
@@ -225,11 +232,7 @@ def run_activity_rollup(
     weekly_users = hll_rollup_estimate(
         stored.withColumn("week", week_start("d")), group_cols=("week",)
     )
-    overwrite_parquet(weekly_users, weekly_users_path)
-
-    daily_rows = spark.read.parquet(panel_path).count()
-    weekly_rows = spark.read.parquet(weekly_panel_path).count()
-    user_rows = spark.read.parquet(weekly_users_path).count()
+    user_rows = overwrite_parquet(weekly_users, weekly_users_path)
     alltime = int(hll_rollup_estimate(stored).first()["users_est"])
     summary = "\n".join(
         [
@@ -348,13 +351,15 @@ def _month_with_day(
 
 
 def _refresh_weekly(
-    spark: SparkSession, sink, daily: DataFrame, weekly_path: str, top_k: int
+    spark: SparkSession, daily: DataFrame, weekly_path: str, top_k: int
 ) -> tuple[int, list]:
-    """Write the weekly MV of the ``daily`` fact rows with ``sink``, then
-    re-read the stored table with its DDL schema: its row count and its
-    top-k rows."""
+    """Overwrite the weeks of the ``daily`` fact rows in the weekly MV, then
+    re-read the whole stored table with its DDL schema: its row count and
+    its top-k rows. The incremental day needs this re-read because it
+    rewrites one week of a table whose every week counts; the full reload
+    takes both numbers from the frame it writes instead."""
     weekly = weekly_volatility(daily, key="ticker", ts="data_id")
-    sink(weekly, weekly_path, partition_by=["week"])
+    overwrite_partitions(weekly, weekly_path, partition_by=["week"])
     stored = spark.read.schema(VOLATILITY_WEEKLY).parquet(weekly_path)
     return stored.count(), top_avg_volatility(stored, k=top_k).collect()
 
@@ -373,14 +378,16 @@ def run_pipeline(
 ) -> PipelineResult:
     """Execute the full daily run. Raises QualityGateError to halt (C4).
 
-    Staging and the quality gate run first; no sink is submitted before the
-    gate passes. Then the two dimension appends run on pool threads beside
-    the fact (window, cache, ``count``, write) on the calling thread. On the
-    full reload the weekly MV (write from the cached fact, re-read,
-    ``count``, top-k) joins them once the ``count`` has filled the cache,
-    beside the fact write. Each branch inherits the caller's job group and
-    tags. The run waits for every branch, raises the first error with the
-    others attached as notes, and always unpersists the fact.
+    Staging and the quality gate run first: the gate's aggregates are
+    observed by the staging write, and no sink is submitted before the gate
+    passes. Then the two dimension appends run on pool threads beside the
+    fact write (window, cache, write) on the calling thread. On the full
+    reload the weekly MV write and the top-k collect over the same weekly
+    frame join them as two more branches, all reading the one cached fact;
+    the row counts are those the writes observed. Each branch inherits the
+    caller's job group and tags. The run waits for every branch, raises
+    the first error with the others attached as notes, and always
+    unpersists the fact.
 
     ``report_path``: when set, write the executive text report (S9,
     the notebook's `relatorio_completo.txt`) there from the fact table.
@@ -413,16 +420,21 @@ def run_pipeline(
         if incremental_date is not None:
             staging = staging.filter(F.col("date") == F.lit(incremental_date))
         staging_path = f"{warehouse_dir}/staging"
-        overwrite_parquet(staging, staging_path)
+        # the gate's aggregates ride the write, which reads every row anyway;
+        # staging is unpartitioned, so they run in the write's only stage
+        gate = Observation()
+        overwrite_parquet(
+            staging.observe(
+                gate, *gate_columns(["close", "date"], expected_count=expected_count)
+            ),
+            staging_path,
+        )
         # re-read: columnar, pruned
         staging = spark.read.schema(STAGING).parquet(staging_path)
 
     # -- 4: quality gate (A1, A2, P4, P5, C4) ------------------------------
     with _timed(seconds, "gate"):
-        gate = quality_summary(
-            staging, null_check_cols=["close", "date"], expected_count=expected_count
-        )
-        staged_rows = expect_passed(gate, gate_name="staging")["total_rows"]
+        staged_rows = expect_passed(gate.get, gate_name="staging")["total_rows"]
 
     fact = None
     try:
@@ -446,14 +458,20 @@ def run_pipeline(
                         spark, staging, fact_path, incremental_date, lookback_days
                     )
                 ).withColumn("ano", F.year("data_id")).withColumn("mes", F.month("data_id"))
-                fact.cache()  # three consumers below (SURVEY.md §4.3)
-                fact_rows = fact.count()
+                fact.cache()  # consumers below (SURVEY.md §4.3)
+                # one fact row per staged row: build_fact projects and
+                # windows, _incremental_fact left-joins one row per ticker
+                fact_rows = staged_rows
                 if incremental_date is None:
-                    # -- 7: weekly volatility = MV refresh (F1, A3, S7), from
-                    # the cache the count just filled
-                    branches.submit("weekly", lambda: _refresh_weekly(
-                        spark, overwrite_parquet, fact, weekly_path, top_k
+                    # -- 7: weekly volatility = MV refresh (F1, A3, S7) and
+                    # its top-k, both from the cached fact
+                    weekly = weekly_volatility(fact, key="ticker", ts="data_id")
+                    branches.submit("weekly", lambda: overwrite_parquet(
+                        weekly, weekly_path, partition_by=["week"]
                     ))
+                    branches.submit("top_k", lambda: top_avg_volatility(
+                        weekly, k=top_k
+                    ).collect())
                     overwrite_parquet(fact, fact_path, partition_by=_FACT_PARTITIONS)
                 else:
                     overwrite_partitions(
@@ -472,10 +490,10 @@ def run_pipeline(
                         F.col("data_id").between(wk0, wk6)
                     )
                     weekly_rows, top = _refresh_weekly(
-                        spark, overwrite_partitions, week_slice, weekly_path, top_k
+                        spark, week_slice, weekly_path, top_k
                     )
         if incremental_date is None:
-            weekly_rows, top = branches.result("weekly")
+            weekly_rows, top = branches.result("weekly"), branches.result("top_k")
 
         # -- 8: report + charts (S9), before the fact cache is released ----
         if report_path or charts_dir:

@@ -18,7 +18,7 @@ pruning, and so overwrites of a daily run touch one partition, not 100 TB
 from __future__ import annotations
 
 from pyspark.errors import AnalysisException, SparkRuntimeException
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -49,13 +49,25 @@ def overwrite_parquet(
     path: str,
     *,
     partition_by: list[str] | None = None,
-) -> None:
-    """Truncate-and-reload sink (S4/S5/S7): full overwrite of `path`."""
+) -> int:
+    """Truncate-and-reload sink (S4/S5/S7): full overwrite of `path`.
+
+    Returns the number of rows written, counted by an ``Observation`` in
+    the write job itself, so no caller re-reads the table to count it. The
+    observation follows the clustering shuffle: it sits in the write's
+    result stage, whose accumulator updates Spark applies once per
+    partition, where one in a map stage would count a rerun stage's rows
+    twice. Each call gets its own unnamed observation (unique names), so
+    concurrent sinks never share one.
+    """
     if partition_by:
         df = _cluster_for_write(df, partition_by)
-        df.write.mode("overwrite").partitionBy(*partition_by).parquet(path)
-    else:
-        df.write.mode("overwrite").parquet(path)
+    rows = Observation()
+    writer = df.observe(rows, F.count(F.lit(1)).alias("rows")).write.mode("overwrite")
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    writer.parquet(path)  # a failed write raises here, before the get
+    return rows.get["rows"]
 
 
 def overwrite_partitions(

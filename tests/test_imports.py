@@ -173,3 +173,23 @@ def test_every_package_annotation_resolves():
                 unresolved.append(f"{module.__name__}.{fn.__qualname__}: {exc}")
     assert n_checked > 100, f"only {n_checked} functions found — walker broken?"
     assert not unresolved, "unresolvable annotations:\n" + "\n".join(unresolved)
+
+
+def test_perfbench_pipeline_calls_resolve_in_pipeline():
+    """A traced benchmark run wraps each name of ``PIPELINE_CALLS`` with
+    ``getattr`` on ``plans.pipeline``, so every name must stay an attribute
+    there even when the pipeline stops calling it. The tuple is read with
+    ``ast``: importing perfbench would need its directory on ``sys.path``."""
+    path = os.path.join(_REPO, "perfbench", "workloads.py")
+    tree = ast.parse(open(path).read(), path)
+    calls = next(
+        ast.literal_eval(node.value)
+        for node in tree.body
+        if isinstance(node, ast.Assign)
+        and any(getattr(t, "id", None) == "PIPELINE_CALLS" for t in node.targets)
+    )
+    pipeline = importlib.import_module(f"{PKG}.plans.pipeline")
+    names = [name for name, _, _ in calls]
+    assert "run_pipeline" in names and "overwrite_parquet" in names
+    missing = [n for n in names if not hasattr(pipeline, n)]
+    assert not missing, f"PIPELINE_CALLS names missing from plans.pipeline: {missing}"

@@ -48,6 +48,22 @@ def test_pipeline_counts(result):
     assert "Ativo mais volátil" in result.report_message
 
 
+def test_weekly_rows_and_message_match_stored_table(spark, result, warehouse):
+    """The full reload counts the weekly MV and ranks its top-k from the
+    frame it writes, not from a re-read: both must still equal what the
+    stored table gives."""
+    from airflow_etl_finance_market_spark.plans.volatility import top_avg_volatility
+    from airflow_etl_finance_market_spark.schemas import VOLATILITY_WEEKLY
+
+    stored = spark.read.schema(VOLATILITY_WEEKLY).parquet(f"{warehouse}/volatility_weekly")
+    assert result.weekly_rows == stored.count()
+    r = top_avg_volatility(stored, k=1).collect()[0]
+    assert result.report_message == (
+        f"Ativo mais volátil: {r['ticker']} "
+        f"(volatilidade média semanal: {r['avg_volatility']:.2f}%)"
+    )
+
+
 def test_first_day_null_change(spark, result, warehouse):
     fact = spark.read.parquet(f"{warehouse}/fact_movimentacao_diaria")
     firsts = (
@@ -143,10 +159,17 @@ def test_warm_rerun_job_count(spark, ohlcv_csv, warehouse, result, job_group):
     (one job gone); the benchmark's traced reload moved 26 -> 23 too.
     23 -> 21: each dim append reads its existing table with the incoming
     schema, so its footer-inference job is gone (-2). Writing the fact by
-    month instead of by day changes no job: the reload never reads it."""
+    month instead of by day changes no job: the reload never reads it.
+    21 -> 16: the counts come from the writes. A dump of job call sites
+    before and after: the gate's collect (2 jobs; the staging write now
+    observes the gate), the fact's ``count`` (4) and the weekly MV's
+    re-read ``count`` (2) are gone. The window shuffle and the cache fill
+    moved into whichever reader of the cached fact runs first, so the fact
+    write, the weekly write and the top-k collect (now over the in-memory
+    weekly frame) run 9 jobs where they ran 6 (+3)."""
     with job_group("pipeline-rerun") as tracker:
         run_pipeline(spark, ohlcv_csv, warehouse)
-    assert len(tracker.getJobIdsForGroup("pipeline-rerun")) == 21
+    assert len(tracker.getJobIdsForGroup("pipeline-rerun")) == 16
 
 
 def test_report_file_written(spark, ohlcv_csv, warehouse, result, tmp_path):

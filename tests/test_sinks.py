@@ -11,7 +11,7 @@ import tempfile
 import pytest
 
 from airflow_etl_finance_market_spark.sources.readers import read_orc, write_orc
-from airflow_etl_finance_market_spark.sources.sinks import append_if_absent
+from airflow_etl_finance_market_spark.sources.sinks import append_if_absent, overwrite_parquet
 
 
 def _df(spark, rows):
@@ -59,8 +59,6 @@ def test_partitioned_write_fans_out_one_file_per_directory(
     write task however small the data."""
     from pyspark.sql import functions as F
 
-    from airflow_etl_finance_market_spark.sources.sinks import overwrite_parquet
-
     df = spark.range(800).select(
         (F.col("id") % 8).alias("k"), F.col("id").alias("v")
     )
@@ -77,6 +75,35 @@ def test_partitioned_write_fans_out_one_file_per_directory(
     write_job = tracker.getJobInfo(max(tracker.getJobIdsForGroup("sinks-fanout")))
     write_stage = tracker.getStageInfo(max(write_job.stageIds))
     assert write_stage.numTasks > 1
+
+
+def test_overwrite_returns_rows_of_partitioned_write(spark, tmp_path):
+    """The returned count is the rows a re-read finds, also when the
+    clustering shuffle has more partitions than there are partition values,
+    so most write tasks get no rows."""
+    from pyspark.sql import functions as F
+
+    assert int(spark.conf.get("spark.sql.shuffle.partitions")) > 2
+    df = spark.range(301).select((F.col("id") % 2).alias("k"), F.col("id").alias("v"))
+    path = str(tmp_path / "counted")
+    assert overwrite_parquet(df, path, partition_by=["k"]) == 301
+    assert spark.read.parquet(path).count() == 301
+    # an overwrite counts its own rows, not the table's
+    assert overwrite_parquet(df.limit(7), path, partition_by=["k"]) == 7
+    assert spark.read.parquet(path).count() == 7
+
+
+def test_overwrite_returns_rows_of_unpartitioned_write(spark, tmp_path):
+    path = str(tmp_path / "flat")
+    n = overwrite_parquet(_df(spark, [(1, "a"), (2, "b"), (2, "b")]), path)
+    assert n == 3 == spark.read.parquet(path).count()
+
+
+def test_overwrite_of_empty_frame_returns_zero(spark, tmp_path):
+    path = str(tmp_path / "empty")
+    assert overwrite_parquet(_df(spark, []), path) == 0
+    assert spark.read.parquet(path).count() == 0
+    assert overwrite_parquet(_df(spark, []), str(tmp_path / "empty_k"), partition_by=["k"]) == 0
 
 
 def test_zorder_write_clusters_both_dimensions(spark, sf_dir, tmp_path):
