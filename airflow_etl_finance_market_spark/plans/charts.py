@@ -13,24 +13,21 @@ the exact label=value series) so tests — and any downstream consumer —
 can assert chart CONTENT, not just existence.
 
 Scale shape: identical to the text report (plans/report.py). All chart
-data comes from the same one-pass ``ticker_stats`` aggregate; only the
-3×k ranking rows plus the |tickers|-bounded scatter frame are collected
-(S8's ≤k-row extract discipline — the scatter set is capped at
-``max_points`` by top-volume, a TakeOrderedAndProject). Rendering is pure
-driver-side numpy on those rows.
+data comes from the same one-pass ``report_rows`` collect: the three bar
+charts take the report's top-k rankings, and the scatter takes up to
+``max_points`` complete ticker rows by top volume, ranked on the driver.
+Rendering is pure driver-side numpy on those rows.
 """
 
 from __future__ import annotations
 
+import math
 import struct
 import zlib
 
 import numpy as np
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-from .report import ticker_stats
+from .report import ReportRows, ranked
 
 # --------------------------------------------------------------------------
 # Minimal PNG writer and reader (stdlib only)
@@ -345,40 +342,26 @@ def render_scatter_png(
 
 
 def write_report_charts(
-    fact: DataFrame,
-    out_dir: str,
-    *,
-    k: int = 5,
-    max_points: int = 2000,
-    change: str = "variacao_diaria",
-    volume: str = "volume",
+    rows: ReportRows, out_dir: str, *, k: int = 5, max_points: int = 2000
 ) -> dict[str, str]:
-    """Render the notebook's four figures from ONE ticker_stats pass.
+    """Draw the notebook's four figures of ``rows`` into ``out_dir``.
 
     Returns {chart_key: file_path}. File names mirror the notebook's
     ``outputs/`` artifacts (01_volatilidade / 02_performance / 03_volume
-    plus the risk/return scatter, cell 805fec87).
+    plus the risk/return scatter, cell 805fec87). The scatter skips a
+    ticker with a NULL or NaN stat, as ``DataFrame.dropna`` does.
     """
     import os
 
     os.makedirs(out_dir, exist_ok=True)
-    stats = ticker_stats(fact, change=change, volume=volume)
-    stats.cache()
-    try:
-        top_vol = stats.orderBy(
-            F.desc_nulls_last("volatility"), F.asc("ticker")
-        ).limit(k).collect()
-        top_perf = stats.orderBy(
-            F.desc_nulls_last("mean_change"), F.asc("ticker")
-        ).limit(k).collect()
-        top_volume = stats.orderBy(
-            F.desc_nulls_last("total_volume"), F.asc("ticker")
-        ).limit(k).collect()
-        scatter = stats.dropna().orderBy(
-            F.desc("total_volume"), F.asc("ticker")
-        ).limit(max_points).collect()
-    finally:
-        stats.unpersist()
+    top_vol = ranked(rows.tickers, "volatility", k)
+    top_perf = ranked(rows.tickers, "mean_change", k)
+    top_volume = ranked(rows.tickers, "total_volume", k)
+    complete = [
+        r for r in rows.tickers
+        if not any(v is None or (isinstance(v, float) and math.isnan(v)) for v in r)
+    ]
+    scatter = ranked(complete, "total_volume", max_points)
 
     paths = {
         "volatility": f"{out_dir}/01_volatilidade.png",

@@ -49,7 +49,9 @@ Scale design (100 TB posture):
   run succeeds or fails;
 - dims use the anti-join append sink (ON CONFLICT DO NOTHING, S6) — the
   incoming distinct keys are the broadcast side;
-- nothing `.collect()`s except the ≤k-row report;
+- nothing `.collect()`s except the top-k rows and, when a report or chart
+  sink is set, the report's one aggregate: |tickers| + |days| + 1 rows,
+  shared by both sinks;
 - every re-read of a table the run wrote (staging, the weekly MV, the fact
   on the incremental path) passes the table's DDL schema from ``schemas``,
   so no read pays a footer-inference job before its scan.
@@ -497,21 +499,22 @@ def run_pipeline(
 
         # -- 8: report + charts (S9), before the fact cache is released ----
         if report_path or charts_dir:
+            from .report import report_rows, write_report
+
             # the report is global: in incremental mode the in-memory `fact`
-            # is one day, so read the full (freshly updated) table back
-            report_fact = (
+            # is one day, so read the full (freshly updated) table back.
+            # Both sinks draw from the one collected aggregate
+            rows = report_rows(
                 fact
                 if incremental_date is None
                 else spark.read.schema(FACT_MOVIMENTACAO).parquet(fact_path)
             )
             if report_path:
-                from .report import write_report
-
-                write_report(report_fact, report_path, k=5)
+                write_report(rows, report_path, k=5)
             if charts_dir:
                 from .charts import write_report_charts
 
-                write_report_charts(report_fact, charts_dir, k=5)
+                write_report_charts(rows, charts_dir, k=5)
     finally:
         if fact is not None:
             fact.unpersist()

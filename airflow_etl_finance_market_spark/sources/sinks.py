@@ -97,6 +97,14 @@ def overwrite_partitions(
     )
 
 
+def _path_exists(spark: SparkSession, path: str) -> bool:
+    """Whether ``path`` exists, asked of the Hadoop file system that a
+    read of it would use."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    return jpath.getFileSystem(conf).exists(jpath)
+
+
 def append_if_absent(
     spark: SparkSession,
     incoming: DataFrame,
@@ -109,23 +117,23 @@ def append_if_absent(
     degrades to a plain create. The incoming batch is de-duplicated on the
     keys first, matching ``SELECT DISTINCT ... ON CONFLICT DO NOTHING``.
 
-    Only a genuinely-missing path takes the create branch: any other read
-    failure (permissions, corrupt footer, transient storage error) re-raises
-    instead of silently overwriting a valid table — ON CONFLICT DO NOTHING
-    must never destroy the conflict target.
+    Only a missing path takes the create branch, decided by the file
+    system before any read: every read failure (permissions, corrupt
+    footer, transient storage error) raises instead of silently
+    overwriting a valid table — ON CONFLICT DO NOTHING must never destroy
+    the conflict target. A failed read is no test for "missing": once an
+    ``Observation`` has run in the session, its listener throws on every
+    failed query, and Spark logs that as an ERROR with the query's stack.
 
     The table is read with ``incoming.schema``, the schema it was written
     with, so no footer-inference job runs before the anti-join; an
     unreadable file then fails the anti-join's ``count`` instead of the read.
     """
     fresh = incoming.dropDuplicates(keys)
-    try:
-        existing = spark.read.schema(incoming.schema).parquet(path).select(*keys)
-    except AnalysisException as e:
-        if e.getCondition() != "PATH_NOT_FOUND":
-            raise
+    if not _path_exists(spark, path):
         fresh.write.mode("overwrite").parquet(path)
         return fresh.count()
+    existing = spark.read.schema(incoming.schema).parquet(path).select(*keys)
     to_insert = fresh.join(existing, on=keys, how="left_anti")
     n = to_insert.count()
     if n:

@@ -172,6 +172,29 @@ def test_warm_rerun_job_count(spark, ohlcv_csv, warehouse, result, job_group):
     assert len(tracker.getJobIdsForGroup("pipeline-rerun")) == 16
 
 
+def test_warm_rerun_with_both_sinks(
+    spark, ohlcv_csv, warehouse, result, job_group, tmp_path
+):
+    """The report and chart sinks share one aggregate of the cached fact,
+    collected once: a map job and a result job on top of the plain reload's
+    16. (They added 12 when each sink ran its own overview and ranking
+    queries.) The files equal those of runs with one sink each."""
+    charts = {"both": tmp_path / "both", "only": tmp_path / "only"}
+    report = {"both": tmp_path / "both.txt", "only": tmp_path / "only.txt"}
+    with job_group("pipeline-sinks") as tracker:
+        run_pipeline(
+            spark, ohlcv_csv, warehouse,
+            report_path=str(report["both"]), charts_dir=str(charts["both"]),
+        )
+    assert len(tracker.getJobIdsForGroup("pipeline-sinks")) == 18
+    run_pipeline(spark, ohlcv_csv, warehouse, report_path=str(report["only"]))
+    run_pipeline(spark, ohlcv_csv, warehouse, charts_dir=str(charts["only"]))
+    assert report["both"].read_bytes() == report["only"].read_bytes()
+    pngs = sorted(p.name for p in charts["only"].iterdir())
+    assert len(pngs) == 4
+    for name in pngs:
+        assert (charts["both"] / name).read_bytes() == (charts["only"] / name).read_bytes()
+
 def test_report_file_written(spark, ohlcv_csv, warehouse, result, tmp_path):
     """S9: run with report_path writes the notebook-equivalent artifact,
     consistent with the XCom report message."""

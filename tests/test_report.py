@@ -4,11 +4,23 @@ rankings, and the pipeline writes the file when asked."""
 from __future__ import annotations
 
 import datetime as dt
+import hashlib
+
+import pytest
+from pyspark.sql import functions as F
 
 from airflow_etl_finance_market_spark.plans.report import (
     build_report,
+    market_overview,
+    ranked,
+    report_rows,
     ticker_stats,
     write_report,
+)
+
+_SCHEMA = (
+    "ticker string, data_id date, close double, volume double, "
+    "variacao_diaria double"
 )
 
 
@@ -25,11 +37,7 @@ def _fact(spark):
         ("CCC", dt.date(2024, 1, 2), 31.5, 50.0, 5.0),
         ("CCC", dt.date(2024, 1, 3), 33.1, 50.0, 5.0),
     ]
-    return spark.createDataFrame(
-        rows,
-        "ticker string, data_id date, close double, volume double, "
-        "variacao_diaria double",
-    )
+    return spark.createDataFrame(rows, _SCHEMA)
 
 
 def test_ticker_stats_one_pass_values(spark):
@@ -69,7 +77,7 @@ def test_report_deterministic(spark):
 
 def test_write_report_roundtrip(spark, tmp_path):
     p = tmp_path / "relatorio_completo.txt"
-    text = write_report(_fact(spark), str(p), k=2)
+    text = write_report(report_rows(_fact(spark)), str(p), k=2)
     assert p.read_text(encoding="utf-8") == text
     assert "FIM DO RELATÓRIO" in text
 
@@ -84,7 +92,7 @@ def test_write_report_charts(spark, tmp_path):
     )
 
     out = tmp_path / "outputs"
-    paths = write_report_charts(_fact(spark), str(out), k=2)
+    paths = write_report_charts(report_rows(_fact(spark)), str(out), k=2)
     assert set(paths) == {"volatility", "performance", "volume", "risk_return"}
     for p in paths.values():
         meta = read_png_meta(p)
@@ -108,9 +116,9 @@ def test_write_report_charts(spark, tmp_path):
 def test_charts_deterministic(spark, tmp_path):
     from airflow_etl_finance_market_spark.plans.charts import write_report_charts
 
-    a = write_report_charts(_fact(spark), str(tmp_path / "a"), k=3)
+    a = write_report_charts(report_rows(_fact(spark)), str(tmp_path / "a"), k=3)
     b = write_report_charts(
-        _fact(spark).repartition(5), str(tmp_path / "b"), k=3
+        report_rows(_fact(spark).repartition(5)), str(tmp_path / "b"), k=3
     )
     for key in a:
         assert open(a[key], "rb").read() == open(b[key], "rb").read()
@@ -125,14 +133,160 @@ def test_charts_handle_all_null_metric(spark, tmp_path):
     )
 
     one_row_each = spark.createDataFrame(
-        [("AAA", dt.date(2024, 1, 1), 10.0, 100.0, None)],
-        "ticker string, data_id date, close double, volume double, "
-        "variacao_diaria double",
+        [("AAA", dt.date(2024, 1, 1), 10.0, 100.0, None)], _SCHEMA
     )
-    paths = write_report_charts(one_row_each, str(tmp_path / "o"), k=2)
+    paths = write_report_charts(report_rows(one_row_each), str(tmp_path / "o"), k=2)
     for p in paths.values():
         meta = read_png_meta(p)
         assert int(meta["width"]) > 0
+
+
+# k=7 over 6 tickers: EEE has one change (NULL stddev_samp), FFF has none
+# (NULL stddev and mean); BBB/CCC tie on volatility, BBB/DDD on mean change
+# and on volume, AAA/FFF on volume
+_GOLDEN_ROWS = [
+    ("AAA", dt.date(2024, 1, 1), 10.0, 100.0, None),
+    ("AAA", dt.date(2024, 1, 2), 11.0, 100.0, 10.0),
+    ("AAA", dt.date(2024, 1, 3), 9.9, 100.0, -10.0),
+    ("BBB", dt.date(2024, 1, 1), 20.0, 900.0, None),
+    ("BBB", dt.date(2024, 1, 2), 20.2, 900.0, 1.0),
+    ("BBB", dt.date(2024, 1, 3), 20.4, 900.0, 1.0),
+    ("CCC", dt.date(2024, 1, 1), 30.0, 50.0, None),
+    ("CCC", dt.date(2024, 1, 2), 31.5, 50.0, 5.0),
+    ("CCC", dt.date(2024, 1, 3), 33.1, 50.0, 5.0),
+    ("DDD", dt.date(2024, 1, 1), 40.0, 900.0, None),
+    ("DDD", dt.date(2024, 1, 2), 40.8, 900.0, 2.0),
+    ("DDD", dt.date(2024, 1, 3), 40.8, 900.0, 0.0),
+    ("EEE", dt.date(2024, 1, 2), 50.0, 100.0, None),
+    ("EEE", dt.date(2024, 1, 3), 51.5, 100.0, 3.0),
+    ("FFF", dt.date(2024, 1, 3), 60.0, 300.0, None),
+]
+
+# rendered by the eight-job build_report (one query per ranking, two COUNT
+# DISTINCTs) that report_rows replaced
+GOLDEN_REPORT = """\
+╔════════════════════════════════════════════════════════════════════════════════╗
+║                              RELATÓRIO EXECUTIVO                               ║
+║                     ANÁLISE COMPLETA DE MERCADO FINANCEIRO                     ║
+╚════════════════════════════════════════════════════════════════════════════════╝
+
+DATA DE GERAÇÃO: 2024-06-01
+PERÍODO ANALISADO: 2024-01-01 até 2024-01-03
+═══════════════════════════════════════════════════════════════════════════════════
+1. RESUMO GERAL DOS DADOS
+═══════════════════════════════════════════════════════════════════════════════════
+
+   • Total de registros analisados: 15
+   • Número de ações diferentes: 6
+   • Dias de negociação: 3
+   • Volatilidade média do mercado: 5.40%
+   • Variação média diária geral: 1.89%
+   • Volume médio diário: 423 ações
+   • Preço médio de fechamento: R$ 31.28
+
+═══════════════════════════════════════════════════════════════════════════════════
+2. TOP 7 AÇÕES MAIS VOLÁTEIS (MAIOR RISCO)
+═══════════════════════════════════════════════════════════════════════════════════
+
+1. AAA: 14.14% de volatilidade
+2. DDD: 1.41% de volatilidade
+3. BBB: 0.00% de volatilidade
+4. CCC: 0.00% de volatilidade
+
+═══════════════════════════════════════════════════════════════════════════════════
+3. TOP 7 AÇÕES COM MELHOR PERFORMANCE (MAIOR RETORNO)
+═══════════════════════════════════════════════════════════════════════════════════
+
+1. CCC: +5.00% de variação média diária
+2. EEE: +3.00% de variação média diária
+3. BBB: +1.00% de variação média diária
+4. DDD: +1.00% de variação média diária
+5. AAA: +0.00% de variação média diária
+
+═══════════════════════════════════════════════════════════════════════════════════
+4. TOP 7 AÇÕES MAIS NEGOCIADAS (MAIOR LIQUIDEZ)
+═══════════════════════════════════════════════════════════════════════════════════
+
+1. BBB: 2,700 ações negociadas
+2. DDD: 2,700 ações negociadas
+3. AAA: 300 ações negociadas
+4. FFF: 300 ações negociadas
+5. EEE: 200 ações negociadas
+6. CCC: 150 ações negociadas
+
+═══════════════════════════════════════════════════════════════════════════════════
+FIM DO RELATÓRIO
+═══════════════════════════════════════════════════════════════════════════════════
+"""
+
+
+def test_report_golden_text(spark):
+    """NULL stats drop out of their ranking but keep their slot in the
+    top-k, ties go to the smaller ticker, and a k past the ranked tickers
+    lists them all."""
+    fact = spark.createDataFrame(_GOLDEN_ROWS, _SCHEMA)
+    assert build_report(fact, k=7, generated_at="2024-06-01") == GOLDEN_REPORT
+
+
+def test_build_report_job_count(spark, job_group):
+    """The report is one grouping-sets aggregate collected once: a map job
+    and a result job (8 jobs when the overview and the three rankings
+    were queries of their own)."""
+    fact = _fact(spark)
+    with job_group("build-report") as tracker:
+        build_report(fact, k=2)
+    assert len(tracker.getJobIdsForGroup("build-report")) == 2
+
+
+def test_report_rows_match_gated_aggregates(spark):
+    """The one-pass rows hold exactly what the registry-gated
+    ``market_overview`` and ``ticker_stats`` compute."""
+    fact = spark.createDataFrame(_GOLDEN_ROWS, _SCHEMA)
+    rows = report_rows(fact)
+    assert rows.overview == market_overview(fact).collect()[0].asDict()
+    key = lambda r: r["ticker"]  # noqa: E731
+    assert sorted(rows.tickers, key=key) == sorted(ticker_stats(fact).collect(), key=key)
+
+
+def test_report_rows_reject_empty_fact(spark):
+    with pytest.raises(ValueError, match="no rows"):
+        report_rows(spark.createDataFrame([], _SCHEMA))
+
+
+def test_ranked_matches_spark_order(spark):
+    """The driver-side ranking replays Spark's ``orderBy(desc_nulls_last,
+    asc(ticker))``: NaN first, -0.0 tied with 0.0, NULL metrics last and a
+    NULL ticker before the others."""
+    nan = float("nan")
+    stats = spark.createDataFrame(
+        [
+            ("A", 1.0, -0.0), ("B", nan, 0.0), ("C", None, 2.0), ("D", 1.0, None),
+            (None, 1.0, 0.0), ("E", nan, nan), ("F", -3.0, 0.0),
+        ],
+        "ticker string, x double, y double",
+    )
+    rows = stats.collect()
+    for metric in ("x", "y"):
+        for k in (3, 10):
+            want = stats.orderBy(F.desc_nulls_last(metric), F.asc("ticker")).limit(k)
+            assert [r["ticker"] for r in ranked(rows, metric, k)] == [
+                r["ticker"] for r in want.collect()
+            ], (metric, k)
+
+
+def test_chart_png_bytes_pinned(spark, tmp_path):
+    """The four PNGs, byte for byte, as the per-chart queries drew them
+    before the charts took their rows from ``report_rows``."""
+    from airflow_etl_finance_market_spark.plans.charts import write_report_charts
+
+    paths = write_report_charts(report_rows(_fact(spark)), str(tmp_path), k=2)
+    md5 = {key: hashlib.md5(open(p, "rb").read()).hexdigest() for key, p in paths.items()}
+    assert md5 == {
+        "volatility": "45b17a997d9b54605e289d085d57809b",
+        "performance": "7fe16dffac801877ec0adb23ca6a79b6",
+        "volume": "5145e008d7f8d11e97f545c7b25f3c8b",
+        "risk_return": "7245bccc7607c4994ad888f16c7dd43c",
+    }
 
 
 def test_encode_png_decodes_to_its_pixels():
