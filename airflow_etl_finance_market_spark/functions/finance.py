@@ -28,11 +28,6 @@ def series_window(partition_col: str, *order_cols: str) -> WindowSpec:
     return Window.partitionBy(partition_col).orderBy(*order_cols)
 
 
-def prev_value(col: Column | str, w: WindowSpec) -> Column:
-    """LAG(col, 1) over the series window (W1). First row → NULL."""
-    return F.lag(col, 1).over(w)
-
-
 def pct_change(col: Column | str, w: WindowSpec) -> Column:
     """Daily %-change with the NULLIF zero-division guard (W2 + F7)."""
     c = F.col(col) if isinstance(col, str) else col

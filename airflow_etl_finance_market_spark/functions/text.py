@@ -147,7 +147,7 @@ def bpe_token_estimate_from(toks: Column | str) -> Column:
 
 
 def char_shingles(col: Column | str, n: int = 5) -> Column:
-    """Character n-gram shingle array over the normalized text (MinHash input).
+    """Character n-gram shingle array over the normalized text.
 
     sequence+transform keeps it columnar; short texts yield one whole-text
     shingle (greatest(...,1) guard).
@@ -341,8 +341,7 @@ def token_entropy_from(toks: Column | str) -> Column:
     # -sum over distinct tokens of p*ln(p), p = count(tok)/n. The O(n)
     # histogram filter runs ONCE per distinct token (counts materialized
     # first); folding it into the aggregate lambda would evaluate it twice
-    # per token — interpreted HOFs re-evaluate shared subtrees (the same
-    # pitfall the minhash signature docstring documents).
+    # per token — interpreted HOFs re-evaluate shared subtrees.
     counts = F.transform(
         distinct, lambda tok: F.size(F.filter(t, lambda x: x == tok))
     )

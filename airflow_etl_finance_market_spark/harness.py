@@ -57,8 +57,6 @@ def register(name: str, oracle: str | None = None):
 #:    behind the newest CORRECTNESS file.
 _WINDOW_DEMOTED = [
     # r14-green: oldest ledger rows, due back in the window next round
-    "brand_scores",
-    "returnflag_correlation",
     "latest_event_per_user",
     "events_json_kpi",
     "doc_token_stats",
@@ -73,8 +71,6 @@ _WINDOW_DEMOTED = [
     "top_performers",
     "train_test_split",
     "doc_chunks",
-    "doc_contamination_dual",
-    "doc_incremental_probe",
     "doc_bm25_topk",
     "doc_bigram_logprob",
     "doc_edit_distance_near_dups",
@@ -94,7 +90,6 @@ _WINDOW_DEMOTED = [
     "doc_lang_id",
     "purchase_attribution",
     "user_sessions",
-    "minhash_lsh_near_dups",
     "top_docs_per_lang",
     "term_frequencies",
     "doc_repetition_stats",
@@ -120,7 +115,6 @@ _WINDOW_DEMOTED = [
     "streaming_funnel_ooo",
     "weekly_activity_panel",
     "domain_blocklist_filter",
-    "near_dup_decontamination",
 ]
 
 #: The driver verifies exactly this many leading registry entries per round.

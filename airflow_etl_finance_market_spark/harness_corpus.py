@@ -1,4 +1,4 @@
-"""Corpus gate tier I: text dedup (exact/minhash/simhash), language
+"""Corpus gate tier I: text dedup (exact and n-gram), language
 ID, window analytics, the curation funnel, and the crawl-text curation
 gates (paragraph dedup, HTML extraction, C4 line rules, Gopher flags,
 DSIR weights).
@@ -500,139 +500,6 @@ def q_user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# -- rows-only entries (non-SQL-expressible scale paths) ---------------------
-
-
-def _minhash_oracle_sql(num_hashes: int, bands: int, threshold: float) -> str:
-    """DuckDB twin of the FULL portable-mode MinHash+LSH pipeline: shingle
-    hash → affine minhash signature → band keys → bucket self-join →
-    exact-Jaccard verify. Generated from the same _minhash_params constants
-    the Spark operator uses, so signatures match bit-for-bit."""
-    from .operators.dedup import _MERSENNE_P, _minhash_params
-
-    p = _MERSENNE_P
-    params = _minhash_params(num_hashes)
-    mins = ",\n        ".join(
-        f"MIN(({a} * h + {b}) % {p}) AS m{i}" for i, (a, b) in enumerate(params)
-    )
-    rpb = num_hashes // bands
-    band_rows = "\n    UNION ALL\n    ".join(
-        f"SELECT doc_id, {b} AS band_idx, "
-        + " || ',' || ".join(f"CAST(m{b * rpb + j} AS VARCHAR)" for j in range(rpb))
-        + " AS band_key FROM sig"
-        for b in range(bands)
-    )
-    return f"""
-WITH sh AS (
-    SELECT DISTINCT doc_id,
-           CAST(('0x' || substr(md5(u.g), 1, 15)) AS BIGINT) % {p} AS h
-    FROM documents, unnest({_GRAMS_SQL}) AS u(g)
-), sig AS (
-    SELECT doc_id,
-        {mins}
-    FROM sh GROUP BY doc_id
-), bands AS (
-    {band_rows}
-), cand AS (
-    SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-    FROM bands a
-    JOIN bands b ON a.band_idx = b.band_idx AND a.band_key = b.band_key
-                AND a.doc_id < b.doc_id
-), g AS (
-    SELECT doc_id, {_GRAMS_SQL} AS grams FROM documents
-), scored AS (
-    SELECT c.id_a, c.id_b,
-           ROUND(len(list_intersect(ga.grams, gb.grams))::DOUBLE
-                 / len(list_distinct(list_concat(ga.grams, gb.grams))), 6)
-               AS jaccard_sim
-    FROM cand c
-    JOIN g ga ON ga.doc_id = c.id_a
-    JOIN g gb ON gb.doc_id = c.id_b
-)
-SELECT id_a, id_b, jaccard_sim FROM scored WHERE jaccard_sim >= {threshold}
-"""
-
-
-@register("minhash_lsh_near_dups", _minhash_oracle_sql(32, 8, 0.1))
-def q_minhash_lsh_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash+LSH near-dup pipeline (bands → candidates → exact verify),
-    run in engine-portable hash mode so the ENTIRE pipeline — signatures,
-    banding, candidate join, verify — is oracle-checked against DuckDB.
-    The xxhash64 fast path is the code default; tests pin that both modes
-    share a plan shape and recall the planted duplicates."""
-    from .operators.dedup import minhash_dedup_pairs
-
-    return minhash_dedup_pairs(
-        load_fixture(spark, sf_dir, "documents"),
-        num_hashes=32,
-        bands=8,
-        threshold=0.1,
-        hash_mode="portable",
-    )
-
-
-def _simhash_oracle_sql(max_hamming: int) -> str:
-    """DuckDB twin of the portable-mode SimHash pipeline: 60-bit md5 token
-    hash → per-bit votes → signature → 4x15-bit block LSH → Hamming verify.
-    Bit extraction is spelled arithmetically ((h // 2^i) % 2) so it is
-    engine-neutral; signatures reassemble as a sum of disjoint powers."""
-    n_bits, width = 60, 15
-    votes = ",\n        ".join(
-        f"SUM(CASE WHEN (h // {1 << i}) % 2 = 1 THEN 1 ELSE -1 END) AS v{i}"
-        for i in range(n_bits)
-    )
-    sig_expr = "\n        + ".join(
-        f"(CASE WHEN v{i} > 0 THEN CAST({1 << i} AS BIGINT) ELSE 0 END)"
-        for i in range(n_bits)
-    )
-    blocks = "\n    UNION ALL\n    ".join(
-        f"SELECT doc_id, {j} AS block_idx, "
-        f"(sig // {1 << (width * j)}) % {1 << width} AS block_val FROM sig"
-        for j in range(4)
-    )
-    return f"""
-WITH tok AS (
-    SELECT doc_id, CAST(('0x' || substr(md5(u.t), 1, 15)) AS BIGINT) AS h
-    FROM documents, unnest({_TOKS_SQL}) AS u(t)
-), votes AS (
-    SELECT doc_id,
-        {votes}
-    FROM tok GROUP BY doc_id
-), sig AS (
-    SELECT doc_id,
-        {sig_expr} AS sig
-    FROM votes
-), blocks AS (
-    {blocks}
-), cand AS (
-    SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-    FROM blocks a
-    JOIN blocks b ON a.block_idx = b.block_idx AND a.block_val = b.block_val
-                AND a.doc_id < b.doc_id
-)
-SELECT c.id_a, c.id_b, CAST(bit_count(xor(sa.sig, sb.sig)) AS INTEGER) AS hamming
-FROM cand c
-JOIN sig sa ON sa.doc_id = c.id_a
-JOIN sig sb ON sb.doc_id = c.id_b
-WHERE bit_count(xor(sa.sig, sb.sig)) <= {max_hamming}
-"""
-
-
-@register("simhash_near_dups", _simhash_oracle_sql(8))
-def q_simhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup pairs (block LSH + Hamming verify), run in
-    engine-portable 60-bit md5 mode so signatures, blocking and the Hamming
-    verify are all oracle-checked in DuckDB; xxhash64/64-bit stays the code
-    default (tests cover both modes)."""
-    from .operators.dedup import simhash_near_pairs
-
-    return simhash_near_pairs(
-        load_fixture(spark, sf_dir, "documents"),
-        max_hamming=8,
-        hash_mode="portable",
-    )
-
-
 @register(
     "approx_event_stats",
     """
@@ -1001,75 +868,6 @@ def q_doc_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.corpus import repetition_stats
 
     return repetition_stats(load_fixture(spark, sf_dir, "documents"))
-
-
-_CONTAM_GRAMS_SQL = f"""
-list_distinct(list_transform(
-    generate_series(1, greatest(len({_TOKS_SQL}) - 2, 1)),
-    i -> array_to_string(({_TOKS_SQL})[i:i+2], ' ')))
-"""
-
-
-#: Shared by doc_contamination AND doc_contamination_bloom: the Bloom
-#: pre-gate only prunes (no false negatives) and the exact verify join
-#: removes its false positives, so the SAME exact oracle pins both paths.
-_CONTAM_ORACLE_SQL = f"""
-WITH bg AS (
-    SELECT DISTINCT unnest({_CONTAM_GRAMS_SQL}) AS gram
-    FROM documents WHERE doc_id % 50 = 0
-), dg AS (
-    SELECT doc_id, unnest({_CONTAM_GRAMS_SQL}) AS gram
-    FROM documents WHERE doc_id % 50 != 0
-), ov AS (
-    SELECT dg.doc_id, COUNT(*) AS n_ov
-    FROM dg JOIN bg USING (gram) GROUP BY dg.doc_id
-)
-SELECT d.doc_id,
-       CAST(COALESCE(ov.n_ov, 0) AS BIGINT) AS n_overlap_grams,
-       COALESCE(ov.n_ov, 0) > 0 AS contaminated
-FROM documents d LEFT JOIN ov ON d.doc_id = ov.doc_id
-WHERE d.doc_id % 50 != 0
-"""
-
-
-@register(
-    "doc_contamination_dual",
-    f"""
-SELECT 'bloom' AS path, * FROM ({_CONTAM_ORACLE_SQL})
-UNION ALL
-SELECT 'exact' AS path, * FROM ({_CONTAM_ORACLE_SQL})
-""",
-)
-def q_doc_contamination_dual(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benchmark decontamination through BOTH physical paths in ONE
-    gate — the r10 verdict's registry-headroom merge of
-    ``doc_contamination`` + ``doc_contamination_bloom``, which always
-    shared one oracle: every 50th doc plays the held-out eval set;
-    corpus docs are flagged on any shared word trigram.
-
-    Path 'exact' broadcasts the benchmark gram set and verifies
-    directly (operators.corpus.contamination_flags); path 'bloom'
-    pre-gates the corpus gram stream MAP-SIDE with an m-bit xxhash64
-    bitmap (operators/bloom.py — the runtime-filter / semi-join-
-    reduction pattern by hand) before the same exact verify join.
-    Bloom has no false negatives and the verify join drops its false
-    positives, so both paths' outputs — and therefore both oracle
-    branches — are identical by construction; the union asserts that
-    identity on every driver run. At real benchmark sizes the bloom
-    broadcast shrinks from the gram string set to m/8 bytes (8 KB)."""
-    from .operators.bloom import bloom_pregated_contamination
-    from .operators.corpus import contamination_flags
-
-    docs = load_fixture(spark, sf_dir, "documents")
-    corpus = docs.filter(F.col("doc_id") % 50 != 0)
-    bench = docs.filter(F.col("doc_id") % 50 == 0)
-    exact = contamination_flags(corpus, bench, n=3).select(
-        F.lit("exact").alias("path"), "*"
-    )
-    bloom = bloom_pregated_contamination(corpus, bench, n=3).select(
-        F.lit("bloom").alias("path"), "*"
-    )
-    return exact.unionByName(bloom)
 
 
 @register(

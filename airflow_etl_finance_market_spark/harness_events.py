@@ -1,5 +1,5 @@
 """Corpus gate tier II + event analytics: streaming pct-change
-gates, cluster dedup, retrieval (TF-IDF/BM25/PMI), funnels,
+gates, retrieval (TF-IDF/BM25/PMI), funnels,
 and sequence analytics.
 
 ``harness.py`` imports the tier modules in sequence; its note
@@ -23,7 +23,6 @@ from .harness import (  # noqa: F401  (shared gate surface)
 from .harness_corpus import (  # noqa: F401
     _GRAMS_SQL,
     _TOKS_SQL,
-    _minhash_oracle_sql,
 )
 
 
@@ -281,50 +280,6 @@ def q_streaming_pct_change_reordered(spark: SparkSession, sf_dir: str) -> DataFr
     )
 
 
-def _dedup_clusters_oracle_sql() -> str:
-    """Recursive-CTE twin of pairs → connected components → canonical
-    survivor: DuckDB computes the same portable-mode MinHash pairs, then
-    the transitive closure by label reachability (UNION-dedup recursion);
-    MIN(label) per vertex is exactly hash-min's fixpoint."""
-    return f"""
-WITH RECURSIVE pairs AS (
-  SELECT id_a, id_b FROM ( {_minhash_oracle_sql(32, 8, 0.1)} ) AS mh
-),
-edges AS (
-  SELECT id_a AS u, id_b AS v FROM pairs
-  UNION ALL
-  SELECT id_b AS u, id_a AS v FROM pairs
-),
-reach(id, lbl) AS (
-  SELECT doc_id, doc_id FROM documents
-  UNION
-  SELECT e.u, r.lbl FROM edges e JOIN reach r ON r.id = e.v
-),
-cl AS (SELECT id, MIN(lbl) AS cluster_id FROM reach GROUP BY id),
-sz AS (SELECT cluster_id, COUNT(*) AS cluster_size FROM cl GROUP BY cluster_id)
-SELECT cl.id AS doc_id, cl.cluster_id,
-       cl.id = cl.cluster_id AS is_canonical, sz.cluster_size
-FROM cl JOIN sz USING (cluster_id)
-"""
-
-
-@register("doc_dedup_clusters", _dedup_clusters_oracle_sql())
-def q_doc_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fuzzy-dedup END TO END: MinHash+LSH near-dup pairs → connected
-    components (hash-min label propagation, operators/graph.py) → one
-    cluster id + canonical-survivor flag + cluster size per document.
-    This is the step that turns pair detection into an actual dedup
-    decision; ``filter(is_canonical)`` IS the deduplicated corpus."""
-    from .operators.dedup import minhash_dedup_pairs
-    from .operators.graph import dedup_clusters
-
-    docs = fan_out(load_fixture(spark, sf_dir, "documents"))
-    pairs = minhash_dedup_pairs(
-        docs, num_hashes=32, bands=8, threshold=0.1, hash_mode="portable"
-    )
-    return dedup_clusters(docs, pairs)
-
-
 @register(
     "doc_tfidf_top_terms",
     f"""
@@ -533,31 +488,6 @@ def q_doc_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.corpus import unigram_logprob
 
     return unigram_logprob(load_fixture(spark, sf_dir, "documents"))
-
-
-@register(
-    "doc_incremental_probe",
-    f"""
-SELECT id_b AS new_id, id_a AS corpus_id, jaccard_sim
-FROM ( {_minhash_oracle_sql(32, 8, 0.1)} ) AS all_pairs
-WHERE id_a < 450 AND id_b >= 450
-""",
-)
-def q_doc_incremental_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental dedup: docs >= 450 play the incoming crawl, probed
-    against a MinHash index of the rest. Candidates/verify use the same
-    banding constants as the batch pipeline, so the oracle is simply the
-    full-corpus pairs restricted to cross-split — equality here proves
-    index+probe ≡ batch dedup for the new batch."""
-    from .operators.dedup import minhash_index, minhash_probe
-
-    docs = load_fixture(spark, sf_dir, "documents")
-    corpus = docs.filter(F.col("doc_id") < 450)
-    new = docs.filter(F.col("doc_id") >= 450)
-    idx = minhash_index(corpus, hash_mode="portable")
-    return minhash_probe(
-        new, idx, corpus, threshold=0.1, hash_mode="portable"
-    )
 
 
 @register(

@@ -1,7 +1,7 @@
 """Streaming-dedup + late-pipeline gate tier: domain blocklist,
 KMV/histogram rollups, corpus-prep pipeline, file roundtrips, token
-budget selection, Unicode-fold dedup, cross-frame decontamination,
-and the streaming pct-change gates.
+budget selection, Unicode-fold dedup, and the streaming pct-change
+gates.
 
 ``harness.py`` imports the tier modules in sequence; its note
 on that import states what registration order does and does not
@@ -20,10 +20,7 @@ from .harness import (  # noqa: F401  (shared gate surface)
     load_fixture,
     register,
 )
-from .harness_corpus import (  # noqa: F401
-    _GRAMS_SQL,
-    _TOKS_SQL,
-)
+from .harness_corpus import _TOKS_SQL
 
 
 @register(
@@ -846,185 +843,4 @@ def q_unicode_fold_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "text",
         F.col("n_copies").alias("n_in"),
         F.col("keep_id").alias("survivor_id"),
-    )
-
-
-def _decontam_oracle_sql(num_hashes: int, bands: int, threshold: float) -> str:
-    """DuckDB twin of the FULL portable-mode cross-frame decontamination
-    pipeline: planted corpus/benchmark construction -> per-side shingle
-    hash -> per-side affine minhash signature -> per-side band keys ->
-    CROSS-side band bucket join (never corpus-corpus) -> exact-Jaccard
-    verify on the UNROUNDED value (the r14 ADVICE contract the operator
-    pins). Generated from the same _minhash_params constants the Spark
-    operator uses, so signatures match bit-for-bit — the
-    _minhash_oracle_sql template (harness_corpus) with two sig/band CTE
-    chains and the threshold cut in WHERE (QUALIFY needs a window fn)."""
-    from .operators.dedup import _MERSENNE_P, _minhash_params
-
-    p = _MERSENNE_P
-    params = _minhash_params(num_hashes)
-    rpb = num_hashes // bands
-
-    def mins() -> str:
-        return ",\n        ".join(
-            f"MIN(({a} * h + {b}) % {p}) AS m{i}"
-            for i, (a, b) in enumerate(params)
-        )
-
-    def band_rows(sig_cte: str, id_col: str) -> str:
-        return "\n    UNION ALL\n    ".join(
-            f"SELECT {id_col}, {b} AS band_idx, "
-            + " || ',' || ".join(
-                f"CAST(m{b * rpb + j} AS VARCHAR)" for j in range(rpb)
-            )
-            + f" AS band_key FROM {sig_cte}"
-            for b in range(bands)
-        )
-
-    return f"""
-WITH corpus AS MATERIALIZED (
-    SELECT doc_id,
-           CASE doc_id % 25
-             WHEN 8 THEN 'eval item ' || (doc_id - 1) || ' alpha ' ||
-                  (doc_id - 1) || ' beta ' || (doc_id - 1) || ' gamma ' ||
-                  (doc_id - 1) || ' delta ' || (doc_id - 1) || ' epsilon ' ||
-                  (doc_id - 1)
-             WHEN 9 THEN 'eval item ' || (doc_id - 2) || ' alpha ' ||
-                  (doc_id - 2) || ' beta ' || (doc_id - 2) || ' gamma ' ||
-                  (doc_id - 2) || ' delta ' || (doc_id - 2) || ' omega ' ||
-                  (doc_id - 2)
-             WHEN 12 THEN 'eval item ' || (doc_id - 5) || ' alpha ' ||
-                  (doc_id - 5) || ' one two three four five six'
-             ELSE text END AS text
-    FROM documents WHERE doc_id % 25 != 7
-), bench AS MATERIALIZED (
-    SELECT doc_id AS bench_id,
-           'eval item ' || doc_id || ' alpha ' || doc_id || ' beta ' ||
-           doc_id || ' gamma ' || doc_id || ' delta ' || doc_id ||
-           ' epsilon ' || doc_id AS text
-    FROM documents WHERE doc_id % 25 = 7
-), gd AS MATERIALIZED (
-    SELECT doc_id, {{grams}} AS grams FROM corpus
-), gb AS MATERIALIZED (
-    SELECT bench_id, {{grams}} AS grams FROM bench
-), shd AS (
-    SELECT DISTINCT doc_id,
-           CAST(('0x' || substr(md5(u.g), 1, 15)) AS BIGINT) % {p} AS h
-    FROM gd, unnest(grams) AS u(g)
-), shb AS (
-    SELECT DISTINCT bench_id,
-           CAST(('0x' || substr(md5(u.g), 1, 15)) AS BIGINT) % {p} AS h
-    FROM gb, unnest(grams) AS u(g)
-), sigd AS MATERIALIZED (
-    SELECT doc_id,
-        {mins()}
-    FROM shd GROUP BY doc_id
-), sigb AS MATERIALIZED (
-    SELECT bench_id,
-        {mins()}
-    FROM shb GROUP BY bench_id
-), bandsd AS (
-    {band_rows("sigd", "doc_id")}
-), bandsb AS (
-    {band_rows("sigb", "bench_id")}
-), cand AS (
-    SELECT DISTINCT d.doc_id, b.bench_id
-    FROM bandsd d
-    JOIN bandsb b ON d.band_idx = b.band_idx AND d.band_key = b.band_key
-)
-SELECT c.doc_id, c.bench_id,
-       ROUND(len(list_intersect(gd.grams, gb.grams))::DOUBLE
-             / (len(gd.grams) + len(gb.grams)
-                - len(list_intersect(gd.grams, gb.grams))), 6) AS jaccard_sim
-FROM cand c
-JOIN gd ON gd.doc_id = c.doc_id
-JOIN gb ON gb.bench_id = c.bench_id
-WHERE len(list_intersect(gd.grams, gb.grams))::DOUBLE
-      / (len(gd.grams) + len(gb.grams)
-         - len(list_intersect(gd.grams, gb.grams))) >= {threshold}
-"""
-
-
-@register(
-    "near_dup_decontamination",
-    _decontam_oracle_sql(32, 8, 0.5).replace("{grams}", _GRAMS_SQL),
-)
-def q_near_dup_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-frame NEAR-dup decontamination HARD GATE
-    (operators/dedup.near_dup_decontamination, portable hash mode) —
-    the r14-built, r15 pre-committed gate: the GPT-3/PaLM pipeline
-    stage above exact n-gram collision (doc_contamination_dual's
-    tier) — training documents near-duplicating EVAL documents are
-    flagged with their benchmark match and the exact word-3-gram
-    Jaccard. Planted families from doc_id arithmetic (the natural
-    %50 split was scratch-measured to yield ONE pair at sf0.01 — a
-    1-row accident, not a recall pin): every 25th document seeds a
-    BENCHMARK doc (doc_id % 25 = 7) whose text interleaves its own
-    id between every tail word ('eval item k alpha k beta k ...'),
-    so every trigram contains k and DISTINCT benchmark docs share
-    ZERO shingles (no cross-family smearing); the corpus side
-    (everything else, real text as background) plants (a) an EXACT
-    copy at doc_id % 25 = 8 of bench doc_id-1 — identical gram set,
-    so every band collides BY CONSTRUCTION and the pair is flagged
-    at jaccard 1.0 deterministically; (b) a light PARAPHRASE at
-    % 25 = 9 of bench doc_id-2 (one tail word swapped: 2 of 11
-    trigrams move, J = 9/13 ~ 0.692 >= 0.5) — the case exact n-gram
-    collision decontamination misses; (c) a NEAR-MISS at % 25 = 12
-    of bench doc_id-5 (tail replaced wholesale, J = 3/17 ~ 0.176 <
-    0.5) that must NOT be flagged even when a band happens to
-    collide — pinning the exact-verify cut, on the UNROUNDED value
-    per the r14 ADVICE fix. The oracle replays the ENTIRE pipeline
-    (construction, per-side md5 shingle hashes, affine signatures,
-    band keys, the CROSS-side-only bucket join, unrounded verify) so
-    both engines agree on every candidate, flagged or killed; the
-    within-corpus duplicates that real background text contains must
-    never appear (no corpus-corpus pairs — the cross-frame
-    contract)."""
-    from .operators.dedup import near_dup_decontamination
-
-    docs = load_fixture(spark, sf_dir, "documents")
-
-    def bench_text(k):
-        ks = k.cast("string")
-        return F.concat(
-            F.lit("eval item "), ks, F.lit(" alpha "), ks,
-            F.lit(" beta "), ks, F.lit(" gamma "), ks,
-            F.lit(" delta "), ks, F.lit(" epsilon "), ks,
-        )
-
-    def para_text(k):
-        ks = k.cast("string")
-        return F.concat(
-            F.lit("eval item "), ks, F.lit(" alpha "), ks,
-            F.lit(" beta "), ks, F.lit(" gamma "), ks,
-            F.lit(" delta "), ks, F.lit(" omega "), ks,
-        )
-
-    def miss_text(k):
-        ks = k.cast("string")
-        return F.concat(
-            F.lit("eval item "), ks, F.lit(" alpha "), ks,
-            F.lit(" one two three four five six"),
-        )
-
-    v = F.col("doc_id") % 25
-    corpus = docs.filter(v != 7).select(
-        "doc_id",
-        F.when(v == 8, bench_text(F.col("doc_id") - 1))
-        .when(v == 9, para_text(F.col("doc_id") - 2))
-        .when(v == 12, miss_text(F.col("doc_id") - 5))
-        .otherwise(F.col("text"))
-        .alias("text"),
-    )
-    bench = docs.filter(v == 7).select(
-        F.col("doc_id").alias("bench_id"),
-        bench_text(F.col("doc_id")).alias("text"),
-    )
-    return near_dup_decontamination(
-        fan_out(corpus, "doc_id"),
-        bench,
-        num_hashes=32,
-        bands=8,
-        threshold=0.5,
-        hash_mode="portable",
     )

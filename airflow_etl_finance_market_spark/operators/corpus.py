@@ -727,8 +727,7 @@ def dsir_importance(
     CORPUS-SCALE (one row per bigram occurrence — several times the
     raw text), so materializing it writes more bytes than the second
     tokenize+hash pass costs to recompute, and the trade only worsens
-    at 100 TB where checkpoint storage is the scarce resource. Same
-    deliberate-double-scan posture as ``bloom.py``.
+    at 100 TB where checkpoint storage is the scarce resource.
     """
     occ = (
         fan_out(docs, id_col)
@@ -805,8 +804,8 @@ def cross_doc_ngram_overlap(
     ``occ`` is referenced twice in the one plan (the df aggregate and
     the rejoin) and deliberately NOT localCheckpointed: it is the
     corpus-scale gram stream, so a checkpoint writes more than the
-    second explode costs — the ``bloom.py``/``dsir_importance``
-    deliberate-double-scan posture.
+    second explode costs — the ``dsir_importance`` deliberate-double-scan
+    posture.
     """
     occ = (
         fan_out(docs, id_col)
@@ -1199,8 +1198,8 @@ def unicode_normalize_docs(
     #1). In a multilingual crawl, NFC-vs-NFD byte variants, full-width
     forms, ligatures, and zero-width characters make byte-DIFFERENT
     copies of the same text, and every exact tier here keys on the
-    raw-byte md5 (exact dedup, paragraph dedup, span removal, minhash
-    shingles) — published pipelines (CCNet, Dolma, Gopher
+    raw-byte md5 (exact dedup, paragraph dedup, span removal) —
+    published pipelines (CCNet, Dolma, Gopher
     preprocessing) therefore normalize FIRST. Run this in front of any
     fingerprint consumer; the pure-Catalyst sibling for the common
     compat planes is :func:`...functions.text.fold_unicode_compat`.

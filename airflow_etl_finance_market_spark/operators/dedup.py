@@ -1,52 +1,33 @@
 """Deduplication family for training-data pipelines (SURVEY.md §7.5).
 
-Four tiers, all pure DataFrame ops (no Python UDFs anywhere):
+Two tiers, all pure DataFrame ops (no Python UDFs anywhere):
 
 - **exact**: MD5 fingerprint of the normalized text → hash groupBy. One
   shuffle on the fingerprint; at 100 TB this is the cheapest dedup and the
   fingerprint doubles as the bucketing key for storage.
-- **MinHash + LSH**: shingles → k minhashes (affine transforms of a 64-bit
-  base hash) → b bands → bucket self-join for candidates → exact Jaccard
-  verify. Candidate generation is O(n·b) shuffle rows instead of O(n²)
-  pairs — the scale path.
-- **SimHash**: per-token 64-bit hashes vote per bit → one 64-bit signature;
-  near-dups share a 16-bit block (4-block LSH) and pass a Hamming threshold.
-- **n-gram Jaccard**: exact set similarity on word n-grams for
-  candidate pairs; blocked all-pairs form for oracle-checkable correctness.
+- **n-gram**: exact set similarity (Jaccard, containment) on word n-grams
+  for pairs within a block, winnowing fingerprints, edit distance and
+  duplicate spans; blocked all-pairs forms for oracle-checkable correctness.
 
-The minhash affine transforms operate mod 2^31-1 so they are overflow-free
-in int64 under Spark's default ANSI mode.
+Shingle hashes are reduced mod 2^31-1, the reduction the winnowing
+oracle (``doc_winnow_fingerprints``) reproduces in DuckDB.
 """
 
 from __future__ import annotations
-
-import random
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import (
     fingerprint,
-    normalize_text,
     tokens,
     word_ngrams,
     word_ngrams_from,
 )
 from ..util import fan_out
 
-# Deterministic affine-transform parameters for the minhash family
-# (fixed seed — signatures must be reproducible across runs/sessions).
-# p = 2^31-1 keeps a*h+b < 2^62, inside int64 even under ANSI mode
-# (Spark 4 enables ANSI by default: long overflow is an ERROR, not a wrap).
+# Shingle hashes live in [0, p), p = 2^31-1.
 _MERSENNE_P = (1 << 31) - 1
-
-
-def _minhash_params(num_hashes: int, seed: int = 42) -> list[tuple[int, int]]:
-    rng = random.Random(seed)
-    return [
-        (rng.randrange(1, _MERSENNE_P), rng.randrange(0, _MERSENNE_P))
-        for _ in range(num_hashes)
-    ]
 
 
 def _shingle_hash(col: Column, hash_mode: str) -> Column:
@@ -56,9 +37,9 @@ def _shingle_hash(col: Column, hash_mode: str) -> Column:
       no string materialization), but engine-specific.
     - ``portable``: first 15 hex chars of md5 (60 bits) parsed as an
       integer — bit-identical in Spark, DuckDB, Postgres and Python, which
-      makes the whole MinHash pipeline oracle-checkable end-to-end (same
+      makes winnowing fingerprints oracle-checkable end-to-end (same
       trick as operators.sampling.hash_bucket). ~2x the cost of xxhash64;
-      use it when cross-engine reproducibility of signatures matters more
+      use it when cross-engine reproducibility of fingerprints matters more
       than throughput.
     """
     if hash_mode == "xxhash64":
@@ -100,122 +81,6 @@ def dedup_exact(
     return docs.join(keep, id_col, "left_semi")
 
 
-# ---------------------------------------------------------------------------
-# MinHash + LSH
-# ---------------------------------------------------------------------------
-
-
-def minhash_signatures(
-    docs: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_fn=None,
-    num_hashes: int = 32,
-    hash_mode: str = "xxhash64",
-) -> DataFrame:
-    """(id, sig: array<bigint>[num_hashes]) — min over shingles of affine
-    transforms of the shingle base hash (see :func:`_shingle_hash`).
-
-    Shape: explode shingle hashes to rows, then one hash-aggregate with
-    `num_hashes` MIN aggregates. Higher-order array functions are interpreted
-    (no codegen), so an array-of-array_min formulation re-evaluates the whole
-    shingle pipeline per hash function (~30 s for 500 docs); the explode +
-    groupBy form stays inside WholeStageCodegen and map-side partial
-    aggregation collapses the exploded rows before the shuffle — one 32-long
-    row per doc crosses the wire regardless of document length.
-    """
-    shingles = (shingle_fn or (lambda c: word_ngrams(c, 3)))(text_col)
-    hashed = fan_out(docs, id_col).select(
-        F.col(id_col).alias("id"),
-        # reduce the 64-bit hash into [0, p) so every affine transform below
-        # stays overflow-free in int64; distinct first = set semantics
-        F.explode(
-            F.array_distinct(
-                F.transform(shingles, lambda s: _shingle_hash(s, hash_mode))
-            )
-        ).alias("h"),
-    )
-    aggs = [
-        F.min(
-            F.pmod(F.col("h") * F.lit(a) + F.lit(b), F.lit(_MERSENNE_P))
-        ).alias(f"_mh{i}")
-        for i, (a, b) in enumerate(_minhash_params(num_hashes))
-    ]
-    return (
-        hashed.groupBy("id")
-        .agg(*aggs)
-        .select(
-            "id",
-            F.array(*[F.col(f"_mh{i}") for i in range(num_hashes)]).alias("sig"),
-        )
-    )
-
-
-def _banded_keys(bands: int, hash_mode: str) -> Column:
-    """array[bands] of band bucket keys over the `sig` column.
-
-    ``xxhash64`` buckets by Spark's native hash of the band slice (4-byte
-    key); ``portable`` uses the comma-joined slice values verbatim — a
-    longer string key, but exactly reproducible in any engine (and
-    collision-free by construction).
-    """
-
-    def one_band(b: Column) -> Column:
-        band = F.slice(
-            F.col("sig"),
-            b * (F.size("sig") / bands).cast("int") + 1,
-            (F.size("sig") / bands).cast("int"),
-        )
-        if hash_mode == "portable":
-            return F.concat_ws(",", F.transform(band, lambda x: x.cast("string")))
-        return F.hash(band)
-
-    return F.transform(F.sequence(F.lit(0), F.lit(bands - 1)), one_band)
-
-
-def lsh_candidate_pairs(
-    signatures: DataFrame, *, bands: int = 8, hash_mode: str = "xxhash64"
-) -> DataFrame:
-    """Distinct (id_a, id_b) sharing ≥1 LSH band bucket (id_a < id_b).
-
-    Explodes each signature into `bands` (band_idx, band_hash) keys; the
-    shuffle key is the bucket, so work scales with bucket occupancy, not
-    n². Banding trades recall/precision via rows-per-band =
-    num_hashes/bands.
-
-    Pairs come from a sort-merge self-join per bucket, which never
-    materializes a bucket membership list: pathological buckets (e.g.
-    masses of identical empty documents) degrade into AQE skew-split
-    territory instead of an aggregation-buffer blowup.
-    """
-    # rows-per-band derived inside the expression (slice is 1-based)
-    banded = signatures.select(
-        "id",
-        F.posexplode(_banded_keys(bands, hash_mode)).alias("band_idx", "band_hash"),
-    )
-    # Force a sort-merge join: Catalyst would otherwise broadcast one side
-    # of the self-join, and a broadcast build of the full banded corpus
-    # (a) re-computes the signature pipeline for the build side and
-    # (b) collects the whole corpus to the driver — measured 4x slower
-    # here and a non-starter at 100 TB. With SMJ both sides shuffle on the
-    # bucket key, which is also the shape AQE's skew-join splitting can fix
-    # when a degenerate bucket (e.g. many empty documents) concentrates
-    # candidates.
-    left = banded.alias("l").hint("merge")
-    right = banded.alias("r").hint("merge")
-    return (
-        left.join(
-            right,
-            (F.col("l.band_idx") == F.col("r.band_idx"))
-            & (F.col("l.band_hash") == F.col("r.band_hash"))
-            & (F.col("l.id") < F.col("r.id")),
-        )
-        .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
-        .distinct()
-    )
-
-
 def jaccard(a: Column, b: Column) -> Column:
     """Exact set Jaccard of two DISTINCT-element array columns.
 
@@ -224,56 +89,6 @@ def jaccard(a: Column, b: Column) -> Column:
     integer denominator (callers pass array_distinct'ed grams)."""
     inter = F.size(F.array_intersect(a, b))
     return inter / (F.size(a) + F.size(b) - inter)
-
-
-def minhash_dedup_pairs(
-    docs: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 32,
-    bands: int = 8,
-    threshold: float = 0.5,
-    hash_mode: str = "xxhash64",
-) -> DataFrame:
-    """Full MinHash-LSH near-dup pipeline: candidates → exact-Jaccard verify.
-
-    Returns (id_a, id_b, jaccard_sim) for verified near-duplicates. The
-    verify join rehydrates only candidate ids with their n-gram sets —
-    at scale that's |candidates| rows, not |corpus|².
-
-    ``hash_mode="portable"`` swaps xxhash64 for the md5-based engine-portable
-    shingle hash and raw-value band keys, making the whole pipeline
-    reproducible bit-for-bit in DuckDB/Postgres (the harness oracle-checks
-    that mode end-to-end); plan shape is identical in both modes (tested).
-    """
-    sigs = minhash_signatures(
-        docs, text_col=text_col, id_col=id_col, num_hashes=num_hashes,
-        hash_mode=hash_mode,
-    )
-    cands = lsh_candidate_pairs(sigs, bands=bands, hash_mode=hash_mode)
-    grams = fan_out(docs, id_col).select(
-        F.col(id_col).alias("gid"),
-        F.array_distinct(word_ngrams(text_col, 3)).alias("grams"),
-    )
-    # Verify-join strategy (r15 measurement note): an A/B of SMJ vs
-    # shuffle_hash vs planner default on the two gram-rehydration joins
-    # at 500k docs / 2.3M candidates measured all three within noise
-    # (17.7-18.8 s full pipeline) — the wall is the gram computation
-    # and exchange bytes, not the join algorithm — so the planner
-    # default stays (no hint, no per-partition build-side memory bet).
-    ga = grams.withColumnRenamed("gid", "id_a").withColumnRenamed("grams", "grams_a")
-    gb = grams.withColumnRenamed("gid", "id_b").withColumnRenamed("grams", "grams_b")
-    return (
-        cands.join(ga, "id_a")
-        .join(gb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.round(jaccard(F.col("grams_a"), F.col("grams_b")), 6).alias("jaccard_sim"),
-        )
-        .filter(F.col("jaccard_sim") >= threshold)
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -292,9 +107,8 @@ def ngram_jaccard_pairs(
 ) -> DataFrame:
     """Exact Jaccard near-dup pairs within blocks (id_a < id_b).
 
-    Blocking on `block_col` bounds the quadratic term to the largest block;
-    for unblocked scale use minhash_dedup_pairs. SQL-expressible, so this is
-    the oracle-checked twin of the MinHash path.
+    Blocking on `block_col` bounds the quadratic term to the largest block.
+    SQL-expressible, so the harness oracle-checks it.
     """
     grams = fan_out(docs, id_col).select(
         F.col(id_col).alias("id"),
@@ -310,152 +124,6 @@ def ngram_jaccard_pairs(
             F.round(jaccard(F.col("a.grams"), F.col("b.grams")), 6).alias("jaccard_sim"),
         )
         .filter(F.col("jaccard_sim") >= threshold)
-    )
-
-
-# ---------------------------------------------------------------------------
-# SimHash
-# ---------------------------------------------------------------------------
-
-
-def simhash_bits(hash_mode: str) -> int:
-    """Signature width per hash mode: xxhash64 fills 64 bits; the portable
-    md5 hash parses 15 hex chars → 60 usable bits."""
-    return 64 if hash_mode == "xxhash64" else 60
-
-
-def simhash_signatures(
-    docs: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    hash_mode: str = "xxhash64",
-) -> DataFrame:
-    """SimHash per document via explode → per-bit votes → reassemble
-    (64-bit with xxhash64; 60-bit in engine-portable md5 mode, which the
-    harness oracle mirrors bit-for-bit in DuckDB).
-
-    The explode+groupBy form keeps each aggregation row tiny and scales to
-    arbitrarily long documents (vs. a 64-deep expression over an array).
-    """
-    n_bits = simhash_bits(hash_mode)
-    token_hash = (
-        F.xxhash64("tok")
-        if hash_mode == "xxhash64"
-        else F.conv(F.substring(F.md5("tok"), 1, 15), 16, 10).cast("bigint")
-    )
-    toks = fan_out(docs, id_col).select(
-        F.col(id_col).alias("id"), F.explode(tokens(text_col)).alias("tok")
-    ).withColumn("h", token_hash)
-    # vote_i = Σ±1 = 2·Σbit_i − n, so each per-bit aggregate is a branchless
-    # SUM(getbit) and the ±1 CASE never materializes; sign test becomes
-    # 2·s_i > n. Same integer arithmetic, same signatures.
-    votes = toks.groupBy("id").agg(
-        F.count(F.lit(1)).alias("_n"),
-        *[F.sum(F.getbit("h", F.lit(i))).alias(f"v{i}") for i in range(n_bits)],
-    )
-    sig = None
-    for i in range(n_bits):
-        bit = F.when(
-            F.col(f"v{i}") * 2 > F.col("_n"), F.lit(1).cast("long")
-        ).otherwise(F.lit(0).cast("long"))
-        term = F.shiftleft(bit, i)
-        sig = term if sig is None else sig.bitwiseOR(term)
-    return votes.select("id", sig.alias("simhash"))
-
-
-def _block_join_pairs(
-    sigs: DataFrame, *, max_hamming: int, n_bits: int, n_blocks: int
-) -> DataFrame:
-    """Block-LSH pairs over an ``(id, simhash)`` frame: ``(id_a, id_b,
-    hamming)`` with ``id_a < id_b`` and ``hamming <= max_hamming``.
-
-    Each signature explodes into ``n_blocks`` ``(block_idx, block_val)``
-    rows; two ``n_bits`` signatures within Hamming ``n_blocks - 1`` must
-    agree on at least one block (pigeonhole), so the equi-join on those
-    rows is an EXACT candidate generator for ``max_hamming <= n_blocks -
-    1``. Candidates verify with ``bit_count(xor)``; a pair colliding in
-    several blocks appears once per collision, hence the ``distinct``.
-    """
-    width = n_bits // n_blocks
-    shifts = [width * j for j in range(n_blocks)]
-    # remainder bits (n_bits not divisible by n_blocks) widen the LAST
-    # block, which only tightens buckets
-    widths = [width] * (n_blocks - 1) + [n_bits - width * (n_blocks - 1)]
-
-    def _block(sh: int, w: int) -> Column:
-        # unsigned shift + mask read the signed-long signature as 64
-        # unsigned bits: every block value is its w bits, never negative
-        shifted = F.shiftrightunsigned(F.col("sig"), sh)
-        if w >= 64:
-            # full-width block (n_blocks=1): the mask literal (1<<64)-1
-            # overflows a Java long and the AND would be the identity
-            return shifted
-        return shifted.bitwiseAND(F.lit((1 << w) - 1))
-
-    # `sig` must be a real column before posexplode references it (a
-    # lateral alias inside a generator fails at resolution time)
-    items = sigs.select("id", F.col("simhash").alias("sig"))
-    blocks = items.select(
-        "*",
-        F.posexplode(
-            F.array(*[_block(sh, w) for sh, w in zip(shifts, widths)])
-        ).alias("block_idx", "block_val"),
-    )
-    # the two join sides stay PLAN-IDENTICAL: Spark reuses the shuffled
-    # block exchange (ReusedExchange) only for byte-equal subplans, and
-    # without the reuse the signature aggregation runs once per side
-    a, b = blocks.alias("a"), blocks.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.block_idx") == F.col("b.block_idx"))
-            & (F.col("a.block_val") == F.col("b.block_val"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.bit_count(F.col("a.sig").bitwiseXOR(F.col("b.sig"))).alias(
-                "hamming"
-            ),
-        )
-        .distinct()
-        .filter(F.col("hamming") <= max_hamming)
-    )
-
-
-def simhash_near_pairs(
-    docs: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_hamming: int = 8,
-    hash_mode: str = "xxhash64",
-    n_blocks: int = 4,
-) -> DataFrame:
-    """Near-dup pairs by SimHash: block LSH + Hamming verify.
-
-    Two signatures within Hamming < n_blocks must agree on ≥1 block
-    (pigeonhole), so the block join is an exact candidate generator for
-    max_hamming ≤ n_blocks - 1; beyond that it is the standard
-    high-recall/bounded-cost heuristic. Candidates then verify with
-    bit_count(xor) ≤ max_hamming.
-
-    The block-count tradeoff at scale: more blocks widen the exact-recall
-    band but shrink block width (n_bits // n_blocks), which collapses the
-    bucket space (2^width) and fattens the self-join. The default 4 blocks
-    (16-bit at 64-bit width, 15-bit portable) keeps 32k-64k buckets —
-    the classic Manku/Jain/Sarma web-dedup configuration.
-    """
-    sigs = simhash_signatures(
-        docs, text_col=text_col, id_col=id_col, hash_mode=hash_mode
-    )
-    return _block_join_pairs(
-        sigs,
-        max_hamming=max_hamming,
-        n_bits=simhash_bits(hash_mode),
-        n_blocks=n_blocks,
     )
 
 
@@ -559,7 +227,7 @@ def winnow_fingerprints(
     tokens contributes a common fingerprint to both documents, at a
     ~2/(window+1) sampling rate — the containment-detection primitive
     (quote/excerpt finding, plagiarism-style overlap) that whole-document
-    MinHash can't express. Documents shorter than one window keep their
+    similarity can't express. Documents shorter than one window keep their
     global-min gram hash (the final position's window spans the whole doc),
     so every non-empty document gets ≥1 fingerprint.
 
@@ -605,153 +273,6 @@ def winnow_fingerprints(
     )
 
 
-# ---------------------------------------------------------------------------
-# Incremental dedup: persisted MinHash index + new-batch probe
-# ---------------------------------------------------------------------------
-
-
-def minhash_index(
-    docs: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 32,
-    bands: int = 8,
-    hash_mode: str = "xxhash64",
-) -> DataFrame:
-    """(id, band_idx, band_hash) — the persisted dedup index.
-
-    The 100 TB dedup cadence is INCREMENTAL: the corpus is signed once and
-    each new crawl probes against it, rather than re-running dedup over
-    corpus+batch. Write this frame as a table bucketed (or partitioned) by
-    ``band_hash`` so a probe's band join co-locates/prunes instead of
-    shuffling the whole index; append each accepted batch's rows to keep
-    the index current. Same banding constants as
-    :func:`minhash_dedup_pairs`, so index+probe finds exactly the pairs
-    the batch pipeline would (differential-tested).
-    """
-    sigs = minhash_signatures(
-        docs,
-        text_col=text_col,
-        id_col=id_col,
-        num_hashes=num_hashes,
-        hash_mode=hash_mode,
-    )
-    return sigs.select(
-        "id",
-        F.posexplode(_banded_keys(bands, hash_mode)).alias(
-            "band_idx", "band_hash"
-        ),
-    )
-
-
-def write_minhash_index_table(
-    index: DataFrame, table: str, *, n_buckets: int = 32
-) -> DataFrame:
-    """Persist a :func:`minhash_index` frame as a band-key-bucketed
-    managed table and return the catalog-backed frame.
-
-    Bucketing on exactly the probe join key (band_idx, band_hash)
-    pre-pays the index side of every future probe: the bucketed scan
-    supplies its hash partitioning from storage, so the band join plans
-    with NO Exchange over the (huge, corpus-sized) index — only the
-    (small, batch-sized) probe side shuffles (pinned in
-    tests/test_plan_shapes.py; bucket columns must equal the join keys,
-    or Spark's DisableUnnecessaryBucketedScan reverts to a plain scan).
-    Appending an accepted batch's rows keeps the index current; `sortBy`
-    keeps each bucket merge-ready."""
-    from ..sources.sinks import write_bucketed_table
-
-    write_bucketed_table(
-        index,
-        table,
-        bucket_by=["band_idx", "band_hash"],
-        n_buckets=n_buckets,
-        sort_by=["band_idx", "band_hash"],
-    )
-    return index.sparkSession.table(table)
-
-
-def band_candidates(new_banded: DataFrame, index: DataFrame) -> DataFrame:
-    """(new_id, corpus_id) candidate pairs: the probe batch's banded keys
-    merge-joined against the corpus index on (band_idx, band_hash). The
-    candidate-generation core of :func:`minhash_probe`, exposed so its
-    plan shape is pinnable in isolation."""
-    return (
-        new_banded.alias("n")
-        .hint("merge")
-        .join(
-            index.alias("i").hint("merge"),
-            (F.col("n.band_idx") == F.col("i.band_idx"))
-            & (F.col("n.band_hash") == F.col("i.band_hash"))
-            & (F.col("n.id") != F.col("i.id")),
-        )
-        .select(
-            F.col("n.id").alias("new_id"), F.col("i.id").alias("corpus_id")
-        )
-        .distinct()
-    )
-
-
-def minhash_probe(
-    new_docs: DataFrame,
-    index: DataFrame,
-    corpus_docs: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 32,
-    bands: int = 8,
-    threshold: float = 0.1,
-    hash_mode: str = "xxhash64",
-) -> DataFrame:
-    """(new_id, corpus_id, jaccard_sim) — near-dups of a NEW batch against
-    an indexed corpus (see :func:`minhash_index`).
-
-    Cost scales with the batch: the batch is signed and banded (map-side),
-    the band join touches only index buckets the batch hashes into, and
-    the exact-Jaccard verify joins text for candidate ids only. The
-    corpus is never re-signed. ``corpus_docs`` supplies candidate texts —
-    at scale the docs table itself, read through the candidate-id join's
-    pushed-down filter.
-
-    PRECONDITION: batch and corpus ids come from one disjoint id space
-    (the candidate join drops same-id pairs, which exist only as
-    index-refresh echoes — a crawl that REUSED a corpus doc_id for a
-    different document would have that one pair silently skipped; assign
-    fresh ids upstream, as every append-only ingest naturally does).
-    """
-    new_banded = minhash_index(
-        new_docs,
-        text_col=text_col,
-        id_col=id_col,
-        num_hashes=num_hashes,
-        bands=bands,
-        hash_mode=hash_mode,
-    )
-    cand = band_candidates(new_banded, index)
-    grams_new = fan_out(new_docs, id_col).select(
-        F.col(id_col).alias("new_id"),
-        F.array_distinct(word_ngrams(text_col, 3)).alias("_g_new"),
-    )
-    grams_corpus = fan_out(corpus_docs, id_col).select(
-        F.col(id_col).alias("corpus_id"),
-        F.array_distinct(word_ngrams(text_col, 3)).alias("_g_corpus"),
-    )
-    return (
-        cand.join(grams_new, "new_id")
-        .join(grams_corpus, "corpus_id")
-        .select(
-            "new_id",
-            "corpus_id",
-            F.round(jaccard(F.col("_g_new"), F.col("_g_corpus")), 6).alias(
-                "jaccard_sim"
-            ),
-        )
-        .filter(F.col("jaccard_sim") >= threshold)
-    )
-
-
 def edit_distance_near_dups(
     docs: DataFrame,
     *,
@@ -764,7 +285,7 @@ def edit_distance_near_dups(
     """(id_a, id_b, edit_dist) — near-duplicate pairs by Levenshtein
     distance over the lowercased ``prefix_len``-char prefix, blocked on a
     document-length bucket. The character-level complement to the
-    token-level MinHash/SimHash family: it catches templated documents
+    token-level n-gram similarity: it catches templated documents
     whose shared opening n-gram profiles differ (OCR noise, boilerplate
     with one edited field) and is the classic entity-resolution primitive.
 
@@ -818,12 +339,10 @@ def edit_distance_near_dups(
     )
 
 
-
 def _directed_containment(joined: DataFrame, threshold: float) -> DataFrame:
     """Both containment directions from ONE (_ida, _idb, _inter, _na, _nb)
     joined row via a two-struct explode (a unionAll of two selects would
-    plan the upstream join twice). Shared by the blocked-oracle and
-    LSH-candidate containment paths so their semantics cannot drift."""
+    plan the upstream join twice)."""
     both = joined.select(
         F.explode(
             F.array(
@@ -871,8 +390,7 @@ def ngram_containment_pairs(
     directions come out of the SAME joined row via an explode of two
     structs — a unionAll of two selects would plan the expensive join
     subtree TWICE (Spark reuses exchanges, not arbitrary subplans), the
-    explode keeps it to one. At unblocked scale, candidates come from the
-    MinHash index and only the verify formula changes.
+    explode keeps it to one.
     """
     grams = fan_out(docs, id_col).select(
         F.col(id_col).alias("id"),
@@ -893,63 +411,6 @@ def ngram_containment_pairs(
     return _directed_containment(joined, threshold)
 
 
-def minhash_containment_pairs(
-    docs: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 32,
-    bands: int = 8,
-    threshold: float = 0.5,
-    hash_mode: str = "xxhash64",
-) -> DataFrame:
-    """Containment dedup AT SCALE: MinHash-LSH candidate generation +
-    exact-containment verify — the unblocked path for
-    :func:`ngram_containment_pairs`'s semantics.
-
-    Returns (id_contained, id_container, containment), both directions of
-    every candidate pair above the threshold. Caveat inherent to the
-    combination: LSH banding recalls by JACCARD, so an extreme subset pair
-    (tiny doc inside a huge one — high containment, low Jaccard) can miss
-    candidacy; production pipelines pair this with
-    :func:`winnow_fingerprints` bands, whose shared-substring guarantee is
-    length-ratio-independent, when that regime matters. Costs one
-    candidate join + one gram rehydration — |candidates| rows, never
-    |corpus|².
-    """
-    sigs = minhash_signatures(
-        docs, text_col=text_col, id_col=id_col, num_hashes=num_hashes,
-        hash_mode=hash_mode,
-    )
-    cands = lsh_candidate_pairs(sigs, bands=bands, hash_mode=hash_mode)
-    grams = fan_out(docs, id_col).select(
-        F.col(id_col).alias("gid"),
-        F.array_distinct(word_ngrams(text_col, 3)).alias("grams"),
-    )
-    joined = (
-        cands.join(
-            grams.withColumnRenamed("gid", "id_a").withColumnRenamed(
-                "grams", "grams_a"
-            ),
-            "id_a",
-        )
-        .join(
-            grams.withColumnRenamed("gid", "id_b").withColumnRenamed(
-                "grams", "grams_b"
-            ),
-            "id_b",
-        )
-        .select(
-            F.col("id_a").alias("_ida"),
-            F.col("id_b").alias("_idb"),
-            F.size(F.array_intersect("grams_a", "grams_b")).alias("_inter"),
-            F.size("grams_a").alias("_na"),
-            F.size("grams_b").alias("_nb"),
-        )
-    )
-    return _directed_containment(joined, threshold)
-
-
 def duplicate_span_stats(
     docs: DataFrame,
     *,
@@ -963,7 +424,7 @@ def duplicate_span_stats(
     Language Models Better": a span of ``span_tokens`` consecutive
     normalized tokens counts as duplicated when it appears in at least
     ``min_docs`` DISTINCT documents (boilerplate, licenses, templated
-    headers — the text MinHash whole-doc similarity misses when the rest
+    headers — the text whole-doc similarity misses when the rest
     of the documents differ).
 
     Output: (id_col, n_spans, n_dup_spans, dup_ratio) — one row per doc;
@@ -1175,8 +636,8 @@ def duplicate_span_removal(
     # the birthday term on 2 correlated 64-bit values, still far below
     # any realistic span count), but crafted multi-seed collisions are
     # far cheaper than against md5. For corpora that may contain
-    # ADVERSARIAL text, use the md5-based portable spelling the way
-    # near_dup_decontamination's hash_mode escape hatch does. The hash
+    # ADVERSARIAL text, use an md5-based spelling (the portable mode of
+    # _shingle_hash). The hash
     # is a pure internal grouping key (equal spans → equal pair; the
     # survivor order is (id, p), never the hash), so on collision-free
     # inputs the output is bit-identical — oracle-verified.
@@ -1286,359 +747,3 @@ def duplicate_span_removal(
             F.size(rm).cast("long").alias("n_tokens_removed"),
         )
     )
-
-
-def near_dup_decontamination(
-    docs: DataFrame,
-    benchmark: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    bench_text_col: str = "text",
-    bench_id_col: str = "bench_id",
-    num_hashes: int = 32,
-    bands: int = 8,
-    threshold: float = 0.8,
-    hash_mode: str = "xxhash64",
-    broadcast_benchmark: bool = True,
-) -> DataFrame:
-    """NEAR-duplicate decontamination: (doc_id, bench_id, jaccard_sim)
-    for every training document whose exact n-gram Jaccard to some
-    benchmark document reaches ``threshold`` — the published-pipeline
-    stage above the EXACT tier (`operators/bloom.py`'s n-gram collision
-    + Bloom pre-gate): GPT-3's appendix-C dedup removes eval overlap by
-    13-gram collision, and later pipelines (PaLM, Llama) additionally
-    drop NEAR-duplicates of eval documents, which exact n-gram
-    collision misses under light paraphrase. Callers anti-join the
-    flagged ``doc_id`` set (or audit the pairs — the benchmark id and
-    similarity are kept for exactly that).
-
-    Shape — the cross-frame twin of :func:`minhash_dedup_pairs`, and
-    the reason this is NOT a self-join of the unioned frames: signature
-    and banding machinery are reused verbatim per side, the candidate
-    join is banded-bucket equi-join ACROSS the two frames only (no
-    corpus-corpus or benchmark-benchmark pairs ever materialize, which
-    a unioned self-join would pay for and then filter away), and the
-    exact-Jaccard verify rehydrates |cross candidates| rows. The
-    benchmark side is typically thousands of eval documents against a
-    100 TB corpus — its banded keys are broadcastable, so the candidate
-    join needs NO shuffle of the corpus side beyond the signature agg
-    (``broadcast_benchmark=True``, the default, hints it explicitly —
-    pass False for a freak-sized benchmark and the planner falls back
-    to the SMJ shape this module's self-join form pins).
-
-    ``bands`` must divide ``num_hashes`` (r14 ADVICE: ``_banded_keys``
-    would silently drop the trailing ``num_hashes % bands`` signature
-    values, quietly changing recall vs the requested parameters), and
-    the ``threshold`` cut is applied to the UNROUNDED exact Jaccard
-    (r14 ADVICE: rounding first would admit pairs up to 5e-7 below
-    threshold); ``round(.., 6)`` happens only in the output projection,
-    the presentation-edge float rule every gate follows.
-    """
-    _check_bands(num_hashes, bands)
-    sigs_d = minhash_signatures(
-        docs, text_col=text_col, id_col=id_col,
-        num_hashes=num_hashes, hash_mode=hash_mode,
-    ).select(
-        F.col("id").alias("_did"),
-        F.col("sig"),
-    )
-    sigs_b = minhash_signatures(
-        benchmark, text_col=bench_text_col, id_col=bench_id_col,
-        num_hashes=num_hashes, hash_mode=hash_mode,
-    ).select(
-        F.col("id").alias("_bid"),
-        F.col("sig"),
-    )
-    banded_d = sigs_d.select(
-        "_did",
-        F.posexplode(_banded_keys(bands, hash_mode)).alias(
-            "band_idx", "band_hash"
-        ),
-    )
-    banded_b = sigs_b.select(
-        "_bid",
-        F.posexplode(_banded_keys(bands, hash_mode)).alias(
-            "band_idx", "band_hash"
-        ),
-    )
-    maybe_bcast = F.broadcast if broadcast_benchmark else (lambda df: df)
-    cands = (
-        banded_d.join(maybe_bcast(banded_b), ["band_idx", "band_hash"])
-        .select("_did", "_bid")
-        .distinct()
-    )
-    grams_d = fan_out(docs, id_col).select(
-        F.col(id_col).alias("_did"),
-        F.array_distinct(word_ngrams(text_col, 3)).alias("_grams_d"),
-    )
-    grams_b = benchmark.select(
-        F.col(bench_id_col).alias("_bid"),
-        F.array_distinct(word_ngrams(bench_text_col, 3)).alias("_grams_b"),
-    )
-    return (
-        cands.join(grams_d, "_did")
-        .join(maybe_bcast(grams_b), "_bid")
-        .filter(jaccard(F.col("_grams_d"), F.col("_grams_b")) >= threshold)
-        .select(
-            F.col("_did").alias(id_col),
-            F.col("_bid").alias(bench_id_col),
-            F.round(
-                jaccard(F.col("_grams_d"), F.col("_grams_b")), 6
-            ).alias("jaccard_sim"),
-        )
-    )
-
-
-def _check_bands(num_hashes: int, bands: int) -> None:
-    """Shared validation (r14 ADVICE): ``_banded_keys`` silently drops
-    the trailing ``num_hashes % bands`` signature values when bands does
-    not divide num_hashes, quietly changing recall. The r15-added entry
-    points (estimator, triage, decontamination) raise through this
-    helper; the OLDER minhash surfaces (dedup_pairs, index/probe,
-    containment) still truncate silently — their validation rollout is
-    scheduled at the r16 rotation (harness.py rotation docstring), where
-    the demoted gates that depend on them can re-enter the window under
-    rule 2 rather than carrying an unserviceable mid-round debt."""
-    if num_hashes % bands != 0:
-        raise ValueError(
-            f"bands ({bands}) must divide num_hashes ({num_hashes}): "
-            "_banded_keys would silently truncate the trailing "
-            f"{num_hashes % bands} signature values"
-        )
-
-
-def _min_agree(frac: float, num_hashes: int) -> int:
-    """Smallest integer agreement count n with n/num_hashes >= frac.
-
-    The estimate n/num_hashes is an exact RATIONAL; comparing the
-    integer n against the float product ``frac * num_hashes`` directly
-    would mis-round exact boundaries (IEEE: 0.28 * 25 =
-    7.000000000000001, so a 7/25 = 0.28 estimate would fail an
-    ``n >= 0.28*25`` cut that the contract says it passes). The epsilon
-    absorbs that last-ulp product error; it is far below the 1/num_hashes
-    resolution of the estimator, so it can never move a non-boundary
-    count."""
-    import math
-
-    return math.ceil(frac * num_hashes - 1e-9)
-
-
-def _signature_agreement(
-    docs: DataFrame,
-    *,
-    text_col: str,
-    id_col: str,
-    num_hashes: int,
-    bands: int,
-    hash_mode: str,
-) -> DataFrame:
-    """(id_a, id_b, n_agree) for every banded candidate pair — the
-    shared scoring stage of :func:`minhash_estimated_pairs` and
-    :func:`minhash_triage_pairs`: signatures once, banded candidates,
-    then the component-wise agreement count off the same signature
-    frame (identical subplans on both join sides, so the exchange is
-    reused — the r10 rule; no text column anywhere past the signature
-    aggregation)."""
-    sigs = minhash_signatures(
-        docs,
-        text_col=text_col,
-        id_col=id_col,
-        num_hashes=num_hashes,
-        hash_mode=hash_mode,
-    )
-    cands = lsh_candidate_pairs(sigs, bands=bands, hash_mode=hash_mode)
-    sig_a = sigs.select(F.col("id").alias("id_a"), F.col("sig").alias("_sig_a"))
-    sig_b = sigs.select(F.col("id").alias("id_b"), F.col("sig").alias("_sig_b"))
-    return (
-        cands.join(sig_a, "id_a")
-        .join(sig_b, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.size(
-                F.filter(
-                    F.zip_with("_sig_a", "_sig_b", lambda x, y: x == y),
-                    lambda eq: eq,
-                )
-            ).alias("n_agree"),
-        )
-    )
-
-
-def minhash_estimated_pairs(
-    docs: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 32,
-    bands: int = 8,
-    threshold: float = 0.8,
-    hash_mode: str = "xxhash64",
-) -> DataFrame:
-    """(id_a, id_b, n_agree, est_jaccard) for candidate pairs whose
-    ESTIMATED Jaccard reaches ``threshold`` — the signature-only verify
-    tier below :func:`minhash_dedup_pairs`' exact rehydration: Broder's
-    resemblance estimator (Broder 1997; the b-bit refinement is Li &
-    König 2010), ``est = |{i : sig_a[i] = sig_b[i]}| / num_hashes``,
-    an unbiased estimate of the true Jaccard because each minhash
-    component collides with probability exactly J.
-
-    Why this tier exists (the 100 TB bill): exact verification
-    rehydrates every candidate's gram set — a SECOND full scan +
-    re-shingle of the corpus text joined to |candidates| rows, which
-    at petabyte scale can cost more than the signature pass itself.
-    The estimator touches ONLY the signatures the band join already
-    co-located: per candidate it compares two ``num_hashes``-long int
-    arrays, no text column anywhere past the signature aggregation
-    (the signature frame is reused for banding AND verify — identical
-    subplans, so the self-join reuses one exchange, the r10 rule).
-
-    Precision contract (documented, pinned in tests): the estimator's
-    std error is sqrt(J(1-J)/num_hashes) — ~0.09 at the default 32
-    hashes around J=0.5 — so this is a TRIAGE tier, not a replacement:
-    published pipelines either accept it outright at high thresholds
-    (dedup at 0.8+ where the s-curve is steep) or route the
-    borderline band ``est in [threshold - margin, threshold + margin]``
-    through :func:`minhash_dedup_pairs`' exact verify. The threshold
-    cut itself is INTEGER-exact: ``est >= threshold`` is evaluated as
-    ``n_agree >= ceil(threshold * num_hashes)`` with the ceiling
-    computed driver-side over the exact rational boundary
-    (:func:`_min_agree` — comparing the integer count against the raw
-    float product would mis-round exact boundaries like 7/25 vs
-    0.28*25), so no float sits under the filter at all (the estimate
-    is rounded only in the output projection, the r14 rule).
-
-    ``bands`` must divide ``num_hashes`` (same truncation hazard as
-    :func:`near_dup_decontamination`).
-    """
-    _check_bands(num_hashes, bands)
-    scored = _signature_agreement(
-        docs,
-        text_col=text_col,
-        id_col=id_col,
-        num_hashes=num_hashes,
-        bands=bands,
-        hash_mode=hash_mode,
-    )
-    return scored.filter(
-        F.col("n_agree") >= F.lit(_min_agree(threshold, num_hashes))
-    ).select(
-        "id_a",
-        "id_b",
-        "n_agree",
-        F.round(F.col("n_agree") / F.lit(num_hashes), 6).alias(
-            "est_jaccard"
-        ),
-    )
-
-
-def minhash_triage_pairs(
-    docs: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 32,
-    bands: int = 8,
-    threshold: float = 0.5,
-    margin: float = 0.125,
-    hash_mode: str = "xxhash64",
-) -> DataFrame:
-    """(id_a, id_b, n_agree, est_jaccard, jaccard_sim, verdict) — the
-    composed TRIAGE pipeline the estimator tier exists for: every
-    banded candidate is first judged by the signature-agreement
-    estimate (:func:`minhash_estimated_pairs`' arithmetic), and ONLY
-    the borderline band pays the exact gram-rehydration verify:
-
-    - ``n_agree >= (threshold + margin) * num_hashes``: accepted on
-      the estimate alone (``verdict='estimate'``, ``jaccard_sim``
-      NULL — no text was rehydrated to produce the row);
-    - ``n_agree < (threshold - margin) * num_hashes``: dropped on the
-      estimate alone, never rehydrated;
-    - otherwise BORDERLINE: the exact verify runs for just these
-      pairs (``verdict='exact'``, ``jaccard_sim`` the true ROUND-6
-      Jaccard, cut at ``threshold`` on the UNROUNDED value — the r14
-      ADVICE contract).
-
-    Why at 100 TB: the exact tier's rehydration join re-reads and
-    re-shingles the text of every candidate; with a steep s-curve
-    (high threshold, rows-per-band >= 4) the overwhelming majority of
-    candidates sit far from the threshold on the estimate, so the
-    expensive join shrinks to the band where the estimator's
-    resolution (std ~ sqrt(J(1-J)/num_hashes), ~2.6/32 agreements at
-    J=0.5) actually matters. ``margin`` is that resolution dial: the
-    default 0.125 = 4/32 agreements ~ 1.5 sigma; widen it for exactness
-    on more of the range, shrink it for throughput. Every cut is
-    INTEGER-exact on ``n_agree``: both band edges go through
-    :func:`_min_agree`'s driver-side ceiling over the exact rational
-    boundary (a raw ``(threshold-margin)*num_hashes`` float product
-    mis-rounds exact edges and would silently eject true borderline
-    pairs before the verify), so the three-way split is
-    engine-replayable with no float under any filter.
-
-    The candidate+agreement frame is ``localCheckpoint``-ed before the
-    split (3 integers per candidate — bounded): the accept and
-    borderline branches are two filters over it, and without the
-    checkpoint each branch would re-run the whole signature pipeline
-    (the unicode-split double-scan lesson, r14 verdict). This makes
-    the operator EAGER at call time, like the other checkpoint-backed
-    operators (dedup_clusters).
-    """
-    _check_bands(num_hashes, bands)
-    if not (0.0 <= margin <= threshold):
-        raise ValueError("margin must be in [0, threshold]")
-    lo = F.lit(_min_agree(threshold - margin, num_hashes))
-    hi = F.lit(_min_agree(threshold + margin, num_hashes))
-    scored = (
-        _signature_agreement(
-            docs,
-            text_col=text_col,
-            id_col=id_col,
-            num_hashes=num_hashes,
-            bands=bands,
-            hash_mode=hash_mode,
-        )
-        .filter(F.col("n_agree") >= lo)
-        .localCheckpoint()
-    )
-    est_col = F.round(F.col("n_agree") / F.lit(num_hashes), 6).alias(
-        "est_jaccard"
-    )
-    accepted = scored.filter(F.col("n_agree") >= hi).select(
-        "id_a",
-        "id_b",
-        "n_agree",
-        est_col,
-        F.lit(None).cast("double").alias("jaccard_sim"),
-        F.lit("estimate").alias("verdict"),
-    )
-    borderline = scored.filter(F.col("n_agree") < hi)
-    grams = fan_out(docs, id_col).select(
-        F.col(id_col).alias("gid"),
-        F.array_distinct(word_ngrams(text_col, 3)).alias("grams"),
-    )
-    exact_sim = jaccard(F.col("grams_a"), F.col("grams_b"))
-    verified = (
-        borderline.join(
-            grams.withColumnRenamed("gid", "id_a").withColumnRenamed(
-                "grams", "grams_a"
-            ),
-            "id_a",
-        )
-        .join(
-            grams.withColumnRenamed("gid", "id_b").withColumnRenamed(
-                "grams", "grams_b"
-            ),
-            "id_b",
-        )
-        .filter(exact_sim >= threshold)
-        .select(
-            "id_a",
-            "id_b",
-            "n_agree",
-            est_col,
-            F.round(exact_sim, 6).alias("jaccard_sim"),
-            F.lit("exact").alias("verdict"),
-        )
-    )
-    return accepted.unionByName(verified)

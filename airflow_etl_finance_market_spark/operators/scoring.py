@@ -10,13 +10,12 @@ group) is computed with an un-partitioned window. That collapses the frame to
 a single partition, which is exactly right here because the input is already
 one-row-per-group (30 tickers / 25 brands — bytes, not data). For scaling a
 LARGE frame, use the two-step form instead: ``agg(min, max)`` to one row and
-a broadcast crossJoin — same result, no single-partition bottleneck. Both are
-provided.
+a broadcast crossJoin — same result, no single-partition bottleneck.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, Window
 from pyspark.sql import functions as F
 
 
@@ -30,26 +29,6 @@ def minmax_scale(col: str, *, out: str | None = None) -> Column:
     lo, hi = F.min(col).over(w), F.max(col).over(w)
     expr = (F.col(col) - lo) / F.nullif(hi - lo, F.lit(0)) * F.lit(100)
     return expr.alias(out or f"{col}_scaled")
-
-
-def minmax_scale_large(df: DataFrame, cols: list[str]) -> DataFrame:
-    """Scale-path variant: one global agg row, broadcast-crossJoined back.
-
-    Use when ``df`` is big enough that a single-partition window would
-    bottleneck (the agg is map-side partial + one 1-row exchange instead).
-    """
-    aggs = []
-    for c in cols:
-        aggs += [F.min(c).alias(f"__min_{c}"), F.max(c).alias(f"__max_{c}")]
-    bounds = df.agg(*aggs)
-    out = df.crossJoin(F.broadcast(bounds))
-    for c in cols:
-        lo, hi = F.col(f"__min_{c}"), F.col(f"__max_{c}")
-        out = out.withColumn(
-            f"{c}_scaled",
-            (F.col(c) - lo) / F.nullif(hi - lo, F.lit(0)) * F.lit(100),
-        )
-    return out.drop(*[f"__min_{c}" for c in cols], *[f"__max_{c}" for c in cols])
 
 
 def weighted_score(weights: dict[str, float], *, out: str = "score") -> Column:

@@ -9,8 +9,7 @@ two-pass sketch-then-verify shape:
           terms per partition, NO shuffle of the stream;
   pass 2  exact counts for the candidate set only — the occurrence
           stream is pruned by a broadcast semi-join before the one
-          (small) aggregate, the same semi-join-reduction economics as
-          the Bloom pre-gate.
+          (small) aggregate (semi-join reduction).
 
 Correctness rests on the averaging argument: an item with global count
 > N/capacity must exceed n_p/capacity in at least one partition p
@@ -100,7 +99,7 @@ def heavy_hitters(
     computed with the two-pass sketch-then-verify plan. Ties break on
     term ascending (deterministic cross-engine)."""
     # occ feeds both passes and is deliberately NOT localCheckpointed
-    # (the bloom.py/dsir double-scan posture): the token stream is
+    # (the dsir_importance double-scan posture): the token stream is
     # corpus-scale, so materializing it for reuse writes more than the
     # second tokenize+explode costs — and pass 2 prunes it map-side
     # with the broadcast semi-join before anything shuffles anyway.

@@ -305,7 +305,6 @@ def render_scatter_png(
     def to_py(y: float) -> int:
         return int(plot_y1 - (y - y_lo) / y_span * (plot_y1 - plot_y0 - 20) - 10)
 
-    yy, xx = np.mgrid[0:_H, 0:_W]
     for lab, x, y, wgt in sorted(points, key=lambda p: -p[3]):
         cx, cy = to_px(x), to_py(y)
         r = 4 + int(10 * (wgt / w_hi) ** 0.5)
@@ -314,8 +313,11 @@ def render_scatter_png(
             [int(220 * (1 - t) + 60 * t), int(60 * (1 - t) + 180 * t), 70],
             dtype=np.uint8,
         )
-        mask = (xx - cx) ** 2 + (yy - cy) ** 2 <= r * r
-        canvas[mask] = color
+        # the disc's bounding box only: centres sit >= 58 px inside the
+        # canvas (margin + 10 px inset) and r <= 14, so it never clips
+        dy, dx = np.ogrid[-r : r + 1, -r : r + 1]
+        box = canvas[cy - r : cy + r + 1, cx - r : cx + r + 1]
+        box[dx * dx + dy * dy <= r * r] = color
         _draw_text(canvas, cx - len(lab) * 4, cy - r - 12, lab)
 
     mean_y = to_py(float(np.mean(ys)))

@@ -19,15 +19,12 @@ from .io import (
     read_events_batch,
     read_events_stream,
     run_available_now,
-    run_decontaminate_to_parquet,
 )
 from .stateful import (
     pct_change_reordered,
     pct_change_stateful,
 )
 from .windows import (
-    contamination_pregate_flags,
-    dedup_by_signature,
     dedup_events,
     session_stats,
     windowed_event_kpis,
@@ -35,10 +32,7 @@ from .windows import (
 )
 
 __all__ = [
-    "contamination_pregate_flags",
-    "dedup_by_signature",
     "dedup_events",
-    "run_decontaminate_to_parquet",
     "read_events_batch",
     "read_events_stream",
     "run_available_now",

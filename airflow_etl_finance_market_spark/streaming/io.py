@@ -169,110 +169,3 @@ def run_available_now_upsert(
         .start()
     )
     q.awaitTermination()
-
-
-def run_decontaminate_to_parquet(
-    docs: DataFrame,
-    benchmark: DataFrame,
-    clean_path: str,
-    quarantine_path: str,
-    checkpoint: str,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    bench_text_col: str = "text",
-    n: int = 3,
-    bloom_k: int = 3,
-    m_bits: int | None = None,
-) -> None:
-    """Benchmark DECONTAMINATION AT THE STREAM EDGE (r15): drain a
-    document stream, landing exactly-clean rows in ``clean_path`` and
-    benchmark-colliding rows (GPT-3's appendix-C rule: any shared word
-    ``n``-gram) in ``quarantine_path`` with their overlap counts.
-
-    Three tiers, each at its cheapest legal place:
-
-    1. ONCE, before the stream starts (driver, bounded): the
-       benchmark's distinct gram frame is built and PERSISTED, and a
-       Bloom filter over it is collected (k x |grams| positions — the
-       ``bloom_build`` contract, never the text).
-    2. IN-PLAN, stateless (``contamination_pregate_flags``): rows
-       whose Bloom probe misses are EXACTLY clean (no false
-       negatives) and stream straight to the clean sink — the
-       majority path pays one codegen expression, no explode, no
-       join, no state.
-    3. PER MICRO-BATCH, exact (foreachBatch — the batch escape
-       hatch): only Bloom-flagged rows explode to grams and join the
-       persisted benchmark gram frame (broadcast — eval sets are
-       small); confirmed rows quarantine with ``n_overlap_grams``,
-       Bloom false positives fall back to the clean sink. Per-batch
-       exactness IS end-to-end exactness here because the verdict is
-       per-document and stateless — no document's decision needs rows
-       from another batch (unlike the windowed dedup sink, which
-       argues batch-completeness from watermark alignment).
-
-    The batch differential twin is
-    :func:`..operators.bloom.bloom_pregated_contamination` /
-    ``contamination_flags`` — pytest pins stream output == batch
-    output on a 3-micro-batch replay. The checkpoint makes re-runs
-    incremental and restart-safe exactly as the other foreachBatch
-    sinks."""
-    from ..functions.text import word_ngrams
-    from ..operators.bloom import bloom_build
-    from ..util import fan_out
-    from .windows import contamination_pregate_flags
-
-    bench_grams = (
-        fan_out(benchmark)
-        .select(
-            F.explode(
-                F.array_distinct(word_ngrams(bench_text_col, n))
-            ).alias("gram")
-        )
-        .distinct()
-        .persist()
-    )
-    bench_grams.count()  # materialize once, outside the stream
-    bloom = bloom_build(bench_grams, "gram", m_bits=m_bits, k=bloom_k)
-    flagged = contamination_pregate_flags(
-        docs, bloom, text_col=text_col, n=n
-    )
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = batch_df.localCheckpoint()
-        clean = batch_df.filter(~F.col("maybe_contaminated")).drop(
-            "maybe_contaminated"
-        )
-        suspect = batch_df.filter(F.col("maybe_contaminated")).drop(
-            "maybe_contaminated"
-        )
-        overlap = (
-            suspect.select(
-                F.col(id_col),
-                F.explode(
-                    F.array_distinct(word_ngrams(text_col, n))
-                ).alias("gram"),
-            )
-            .join(F.broadcast(bench_grams), "gram")
-            .groupBy(id_col)
-            .agg(F.count("*").alias("n_overlap_grams"))
-        )
-        confirmed = suspect.join(overlap, id_col)
-        false_pos = suspect.join(overlap.select(id_col), id_col, "left_anti")
-        clean.unionByName(false_pos).write.mode("append").parquet(clean_path)
-        confirmed.write.mode("append").parquet(quarantine_path)
-
-    try:
-        q = (
-            flagged.writeStream.outputMode("append")
-            .foreachBatch(_sink)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        # unpersist even when the stream fails: a leaked persisted
-        # frame is non-evictable storage for the session lifetime —
-        # exactly the GCLocker pressure the bench notes document
-        bench_grams.unpersist()

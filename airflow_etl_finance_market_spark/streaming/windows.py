@@ -143,33 +143,6 @@ def dedup_events(
     return events.dropDuplicates(list(keys))
 
 
-def dedup_by_signature(
-    sigs: DataFrame,
-    *,
-    sig_col: str,
-    ts: str = "ts",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Dedup-on-ingest: keep one row per content SIGNATURE.
-
-    The content-keyed twin of :func:`dedup_events` — the key is not a
-    delivery id but a signature of the payload (e.g. a normalized-text
-    fingerprint), so byte-DIFFERENT redeliveries of the same content
-    collapse at the stream edge before storage ever pays for them.
-    Streaming frames use ``dropDuplicatesWithinWatermark`` keyed on the
-    signature: per-signature state is EVICTED once the watermark passes,
-    so state is bounded by (watermark horizon x unique-content arrival
-    rate) — re-sends of years-old content are NOT deduped by this
-    operator (that is the batch dedup tier's job over the stored table);
-    the stream edge's contract is the redelivery window. Batch frames
-    take the plain ``dropDuplicates`` twin for differential testing."""
-    if sigs.isStreaming:
-        return sigs.withWatermark(ts, watermark).dropDuplicatesWithinWatermark(
-            [sig_col]
-        )
-    return sigs.dropDuplicates([sig_col])
-
-
 def click_attribution_join(
     views: DataFrame,
     clicks: DataFrame,
@@ -259,42 +232,3 @@ def enrich_with_dim(
     """
     d = dim.select(F.col(dim_key).alias(key), *[F.col(c) for c in dim_cols])
     return events.join(F.broadcast(d), key, how)
-
-
-def contamination_pregate_flags(
-    docs: DataFrame,
-    bloom,
-    *,
-    text_col: str = "text",
-    n: int = 3,
-    flag_col: str = "maybe_contaminated",
-) -> DataFrame:
-    """Add a STATELESS row-level Bloom contamination pre-verdict — the
-    stream-edge half of benchmark decontamination (r15).
-
-    ``bloom`` is an :class:`..operators.bloom.BloomFilter` built over
-    the benchmark's distinct word n-grams (``bloom_build`` — a
-    parameter-bounded driver collect done ONCE, outside any stream).
-    The probe is :func:`..operators.bloom.bloom_contains` under an
-    ``exists`` over the document's distinct n-grams: a pure-Catalyst
-    column expression, so it runs identically on batch AND streaming
-    frames with ZERO state — no watermark, no aggregation, no Python.
-
-    The verdict's exactness contract is one-sided, and that is the
-    point: Bloom filters have NO false negatives, so
-    ``flag_col = false`` means EXACTLY CLEAN — at a decontamination
-    stream edge the overwhelming majority of documents take this
-    branch and never pay the exact verify — while ``flag_col = true``
-    means "possibly contaminated" (false-positive rate ~ fill^k,
-    auto-sized to ~1e-4 by ``bloom_build``) and routes the row to the
-    exact per-micro-batch verify
-    (:func:`..streaming.io.run_decontaminate_to_parquet`). Documents
-    with NULL text carry no grams and flag clean, matching the batch
-    tier (NULL text contaminates nothing).
-    """
-    from ..functions.text import word_ngrams
-    from ..operators.bloom import bloom_contains
-
-    grams = F.array_distinct(word_ngrams(text_col, n))
-    maybe = F.exists(grams, lambda g: bloom_contains(bloom, g))
-    return docs.withColumn(flag_col, F.coalesce(maybe, F.lit(False)))

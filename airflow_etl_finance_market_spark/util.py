@@ -49,7 +49,7 @@ def fan_out(
 ) -> DataFrame:
     """Spread CPU-bound per-row work across every core.
 
-    Text/hash kernels (shingling, minhash, simhash, tokenization) are
+    Text/hash kernels (shingling, tokenization) are
     compute-bound, and a small single-file input otherwise pins
     the whole stage to ONE task — a 5k-doc corpus in one parquet file ran
     the entire dedup family on 1 of 32 cores. The shuffle this inserts
@@ -64,9 +64,8 @@ def fan_out(
     and, worse, it moved raw rows where the downstream aggregate would
     otherwise map-side combine BEFORE its own shuffle, so skipping it
     both removes an exchange and shrinks the next one to partial-agg
-    rows. Measured at the 500k-doc tier: the full MinHash near-dup
-    pipeline 25.4 s → 19.5 s; every fan_out consumer in the corpus
-    family sheds one raw-payload exchange.
+    rows. Every fan_out consumer in the corpus family sheds one
+    raw-payload exchange.
     Partition count probing uses the physical scan plan only
     (``df.rdd.getNumPartitions()`` — plans, never runs, the frame);
     single-file / single-row-group gate fixtures keep the fan-out.
@@ -87,8 +86,7 @@ def fan_out(
     (measured: repetition_stats 4.0 s → 3.0 s WITH the forced
     exchange at 50k docs).
     Single-consumer pipelines, and multi-consumer ones whose sharing
-    point is a downstream aggregate's own exchange (the MinHash
-    signature frame), should leave it off.
+    point is a downstream aggregate's own exchange, should leave it off.
 
     Pass the downstream grouping key(s) so the exchange, when taken,
     doubles as the aggregation's shuffle (hash-partitioning by key is

@@ -28,9 +28,7 @@ noise, not a plan change — r03 measured volume_leaders +29%, ticker_metrics
 filing any perf task off a BENCH_r{N} diff.
 
 r04 notes: the host's noise band widened under shared load — solo 3-trial
-reruns are the arbiter (r04 saw minhash_full read 23.9s in one run and
-6.3-6.9s solo; dedup_clusters wanders 8.4-12.6s across solo runs with an
-unchanged plan). Deliberate r04 deltas to expect vs r03: winnow_fps ≈ -35%
+reruns are the arbiter. Deliberate r04 deltas to expect vs r03: winnow_fps ≈ -35%
 (array-side sliding min, no Window sort), edit_dist_dups ≈ 1.3-1.8s
 (threshold-bounded Levenshtein; was 6.1s at introduction), four NEW
 entries (inverted_index, bigram_lp, pmi_pairs, edit_dist_dups), and the
@@ -41,9 +39,8 @@ doc_source_quota_sample): the headline sum grows by their cost; per-query
 deltas remain the comparison basis. Late-r04 deliberate deltas: the
 word-ngram kernel moved from transform(sequence, slice-per-shingle) to a
 zip_with chain (4.4x faster shingling, byte-identical output), cutting the
-whole n-gram tier — solo x10 minimums: minhash_full ~4.3s (was 8.0-8.6),
-minhash portable ~5.7 (8.2), winnow_fps ~1.9 (5.1), containment_lsh ~3.2
-(6.9), contamination ~1.4 (3.1), dedup_clusters ~7.0 (10.5). Opposite
+whole n-gram tier — solo x10 minimums: winnow_fps ~1.9 (5.1),
+contamination ~1.4 (3.1). Opposite
 direction, also deliberate: edit_dist_dups ~3x (1.2 -> 4-7s solo) — the
 blocking now probes adjacent length buckets so boundary-straddling
 near-dups are no longer silently missed; ~3x the candidate pairs is the
@@ -67,22 +64,17 @@ funnel/retention/ffill shuffles scale on; all five entries 0.5-1.2 s)
 give the market and event tiers the same scaling evidence as the
 corpus tier. corpus_x10 additionally gains dup_spans.
 
-r06 notes: ARBITRATION of the r05 containment_lsh +49% (2.989 -> 4.456,
-past the +20% rule, flagged by the r05 verdict): solo best-of-3 x3 sets
-measured 3.277 / 3.064 / 2.617 s best — at-or-below BOTH recorded
-rounds, so the 4.456 was host noise, not a plan change (the containment
-code did not change in r05; the round-5 dedup.py diff was duplicate-span
-additions only). Root-cause fix, same as r05's ingest arbitration: the
-corpus_x10 tier was the last best-of-2 hold-out and has now produced
-both best-of-2 casualties — it runs BEST-OF-3 from r06 (expect no
-deliberate corpus deltas from that alone; minima can only drop).
+r06 notes: the corpus_x10 tier, the last best-of-2 hold-out, runs
+BEST-OF-3 from r06, the root-cause fix of r05's ingest arbitration
+(expect no deliberate corpus deltas from that alone; minima can only
+drop).
 markets/events tiers stay best-of-2: their entries are 0.5-2 s where a
 third trial buys little, and both tiers have shown no rule-breaking
 drift. NEW in r06: a corpus_x100 section (500k docs — 100 near-dup
 families of 10 built by per-group vowel-substitution so family size
 stays constant and candidate generation scales LINEARLY with docs, the
-honest scale-up; 10x the corpus_x10 data) timing the dedup/CC chain
-(minhash_full, dedup_clusters, dup_spans) best-of-2 — the measured
+honest scale-up; 10x the corpus_x10 data) timing the dedup chain
+(dup_spans) best-of-2 — the measured
 decade of scaling the 100 TB story rests on; x100/x10 wall-clock ratios
 ≈ 10 are the pass criterion, anything materially super-linear needs an
 arbitration note. events_x10 additionally gains weekly_activity_panel
@@ -95,8 +87,8 @@ is within +3% of r05's recorded 1.418 with an UNCHANGED plan
 (operators/markets.py untouched in r06), and the 1.46-1.86 spread
 across solo sets shows the host jitter band for this entry spans the
 whole "regression"; noise, not a plan change. Root-cause fix, closing
-the pattern for good (third best-of-2 casualty after r04 ingest and
-r05 containment_lsh): EVERY tier now runs best-of-3 — markets_x10,
+the pattern for good (third best-of-2 casualty after r04 ingest):
+EVERY tier now runs best-of-3 — markets_x10,
 events_x10, corpus_x100 included. ARTIFACT contract change
 (r06 verdict #1): the full payload now lands in the committed
 BENCH_LOCAL.json ($SPARK_GRAFT_BENCH_OUT) and stdout carries only the
@@ -109,10 +101,9 @@ ffill, activity panel) — ratio ≈ 10 vs events_x10 is the pass bar,
 same contract as corpus_x100.
 
 r07 local-artifact arbitration (BENCH_LOCAL refresh on the r07 code):
-four entries moved past the noise rule vs the r06-tail artifact with
-UNCHANGED code — all four arbitrated to host noise by the solo
-best-of-3 x3 protocol: simhash_full corpus_x10 2.64->3.23 in-tier but
-2.35-2.47 solo (below the old value); curated_corpus corpus_x10
+entries that moved past the noise rule vs the r06-tail artifact with
+UNCHANGED code were all arbitrated to host noise by the solo
+best-of-3 x3 protocol: curated_corpus corpus_x10
 1.11->1.42 in-tier, 0.95-1.24 solo; doc_exact_dedup headline
 0.30->0.53 in-tier, 0.39-0.46 solo (sub-second noise band);
 user_funnel_times events_x100 1.17->1.50 in-tier, 1.35-1.57 solo
@@ -123,10 +114,7 @@ the arbiter.
 r07 late additions: a markets_x100 section (60M lineitem rows — 10x
 tickers x 10x series depth; OHLCV/drawdown/beta/pair-corr plus the
 flagship weekly_volatility) gives the FINANCE tier the same measured
-decade corpus/events already carry; contamination_bloom joins
-corpus_x10 (the Bloom-pre-gated decontamination A/B twin at 50k docs;
-it postdates the committed BENCH_LOCAL refresh — its first numbers
-land in the driver's BENCH_r07).
+decade corpus/events already carry.
 
 r07 final-refresh arbitration: the first refresh attempt hit a
 transient co-tenant burst (30+ unchanged-code entries +20-50%
@@ -134,13 +122,11 @@ TOGETHER, including headline entries that run before any new code;
 spot solos immediately after came back AT or BELOW the committed
 values — csv_ingest 0.603-0.683 vs in-run 0.983, tfidf 0.906-1.006 vs
 1.649), so it was discarded and re-run. The clean rerun is flat on the
-headline (11.99 vs 11.98) with four drifts past the rule, each solo
+headline (11.99 vs 11.98) with drifts past the rule, each solo
 best-of-3 x3 arbitrated: ohlcv_weekly_bars markets_x10 1.237->1.499
 (solo 1.420-1.773, min +15% — host steady-state shift, unchanged
 plan); edit_dist_dups 1.851->2.223 (solo 2.308-2.615 — consistent
-host shift, unchanged code);
-corpus_x100 minhash_full 15.9->19.3 (solo 17.6-18.1, min +11% —
-inside the rule; noise). markets_x100 decade ratios vs markets_x10,
+host shift, unchanged code). markets_x100 decade ratios vs markets_x10,
 same-run: 8.9x (ohlcv), 8.2x (drawdown), 8.6x (beta), 6.9x
 (pair-corr) for 10x rows — SUB-linear across the finance chain; the
 flagship weekly_volatility at x100 runs 7.6 s = 13.9x its sf0.1
@@ -285,10 +271,6 @@ r10 final-refresh arbitrations (regime 0.983 vs r09 — same regime,
 so normalized == raw; every flag solo-arbitrated best-of-3, fresh
 JVMs, and NONE is a plan change — no code touched any flagged path
 this round; plan-shape pins all green):
-- corpus_x10 minhash_sigs 1.083 -> 1.361 (+28%): solo 1.36/1.88/1.36
-  — recorded value IS the solo floor; the old 1.083 was a fast min.
-- minhash_full_portable 4.969 -> 6.352 (+30%): solo 4.94/5.29/4.95 —
-  below the recorded in-tier value and at the old one; in-tier stall.
 - events_x100 weekly_activity_panel 2.927 -> 3.990 (+39%): solo
   4.26/3.61 — at the recorded value; the r09 steady band (3.1-3.7)
   widened ~10% today. weekly_user_kmv_rollup 1.514 -> 2.208 (+48%):
@@ -305,8 +287,7 @@ this round; plan-shape pins all green):
 
 r10 SECOND same-day refresh (the committed BENCH_LOCAL; the r09
 corroboration precedent): regime 1.044 vs the first refresh, and it
-CORROBORATES every r10 arbitration — minhash_full_portable back at
-4.634 (solo band 4.94-5.29), weekly_activity_panel 3.16 (the r09
+CORROBORATES every r10 arbitration — weekly_activity_panel 3.16 (the r09
 steady state), weekly_user_kmv_rollup 1.604, ticker_max_drawdown
 7.625, ohlcv 15.58, beta 14.37 (all flagged x100 values regressed to
 the mean — in-tier jitter, as arbitrated). First in-tier numbers for the
@@ -367,7 +348,7 @@ but x100 in-tier 8.711 and post-hygiene 8.286 = 0.89x r12): per-task
 overhead roughly doubled host-wide while THROUGHPUT improved ~10%,
 so every sub-second overhead-dominated entry inflated ~1.8-3x
 together and every multi-second entry is flat-to-better
-(ohlcv 2.069, minhash 1.072, pagerank regime-normalized -27%). No
+(ohlcv 2.069, pagerank regime-normalized -27%). No
 plan touching the inflated queries changed this round (git: plans/
 and operators/markets untouched); a fresh idle JVM reproduces the
 inflation (ticker_metrics 1.148 cold / 0.783 warm vs r12's 0.467),
@@ -388,11 +369,10 @@ r13 addendum (run3, same day — the COMMITTED BENCH_LOCAL): the split
 regime RELAXED (flagship 0.694 / x100 8.525 — right at the r12
 anchors), headline 15.187, confirming run1's 20.2 was transient host
 state, exactly the documented wander. All new entries present:
-corpus_x100.span_removal 39.782 IN-TIER (vs 21.9 solo — it runs
-after dedup_clusters' checkpoint blocks; a between-entries reclaim
-now precedes it after one observed run died in GCLocker allocation
-stalls there — the r10 storage-headroom failure mode, not a plan
-problem), crawl url stage 1.149.
+corpus_x100.span_removal 39.782 IN-TIER (vs 21.9 solo — it ran after
+another entry's checkpoint blocks, and one observed run died in
+GCLocker allocation stalls there — the r10 storage-headroom failure
+mode, not a plan problem), crawl url stage 1.149.
 
 r14 refresh: headline 14.606, MILD SLOW REGIME (factor 1.281 on the
 flagship anchor 0.616 -> 0.789; regime_delta normalizes EVERY stage
@@ -415,10 +395,6 @@ confirmed free), unicode_fold_raw 0.649 / unicode_fold_dedup 1.373 at
 500k docs.
 
 r15 notes (regime 0.852 vs r14 — machine faster; headline 12.223):
-NEW priced lines — corpus_x10.decontam_near_dup 2.902 and corpus_x100.
-decontam_near_dup 9.562 — the x100/x10 ratio is 3.3x for 10x corpus
-against the same construction (the benchmark-broadcast shape holds:
-the corpus side's bill is its signature agg, not the cross join).
 ARBITRATION (this round's movers, all resolved as JVM-state — the
 bench run logged GCLocker allocation-stall warnings in the late
 tiers, the known r10 non-evictable-checkpoint pressure): regime_delta
@@ -449,22 +425,10 @@ repartition when the input already scans in >= target partitions —
 scan-like plans only). Entries that must NOT drift: repetition /
 tfidf keep forced fan-out exchanges (multi-consumer sharing — the
 first optimization re-bench caught the skip regressing them 1.4-2.4x
-and they were individually A/B'd back); simhash A/B'd as a tie and
-keeps the skip.
+and they were individually A/B'd back).
 Methodology unchanged: same queries, same best-of-3 noop-sink
 timing, same fixtures; no measurement-path edits this round.
 
-r15 addendum: the estimator/triage tiers priced (solo, fresh JVM,
-50k docs, threshold 0.5, best-of-3): minhash_full 4.079 /
-minhash_est 2.317 / minhash_triage 3.539 — the signature-only
-estimator is 1.76x the exact pipeline, i.e. the gram-rehydration
-verify is ~43% of the exact bill at this scale, exactly the term
-the tier exists to skip (it grows with document length — 50k-doc
-fixtures have short docs, so this is the CONSERVATIVE end of the
-claim); triage sits between, paying rehydration only for the
-borderline band plus its eager candidate checkpoint. Permanent
-corpus_x10 lines minhash_est / minhash_triage added beside
-minhash_full.
 """
 
 from __future__ import annotations
@@ -505,7 +469,6 @@ BENCH_QUERIES = [
     "doc_token_stats",
     "doc_exact_dedup",
     "curated_corpus",
-    "minhash_lsh_near_dups",
     # r04 wave-4 (market tier): NEW entries — the headline total therefore
     # grows vs r03 by construction; compare per-query, not the sum.
     "ohlcv_weekly_bars",
@@ -521,7 +484,7 @@ BENCH_QUERIES = [
 
 
 #: Corpus-scale section (dedup tier at 10x documents). sf0.1's 5k docs
-#: under-exercise banding skew; a deterministic 10x perturbed fixture (50k
+#: under-exercise near-dup skew; a deterministic 10x perturbed fixture (50k
 #: docs, each doc in a 10-member near-dup family) is built
 #: once per run and the tier is timed per-stage. Reported under the
 #: separate "corpus_x10" key — NOT folded into the headline total, so the
@@ -541,7 +504,7 @@ def build_x10_fixture(spark, tmp: str) -> str:
             (F.col("doc_id") + F.col("copy") * X10_LIFT).alias("doc_id"),
             # copy 0 is the original; copies 1-9 append one revision token,
             # perturbing only the trailing shingles -> a 10-member near-dup
-            # family per source doc (realistic LSH bucket occupancy/skew)
+            # family per source doc
             F.when(F.col("copy") == 0, F.col("text"))
             .otherwise(
                 F.concat_ws(" ", "text", F.concat(F.lit("rev"), "copy"))
@@ -559,8 +522,8 @@ def build_x10_fixture(spark, tmp: str) -> str:
 
 
 def _contamination_exact_x10(spark, x10: str):
-    """The retired doc_contamination gate's body (r11 merged the gates
-    into doc_contamination_dual; the bench keeps per-path timings)."""
+    """Benchmark contamination flags over the x10 fixture: every 50th
+    document plays the benchmark."""
     from pyspark.sql import functions as F
 
     from airflow_etl_finance_market_spark.operators.corpus import (
@@ -575,30 +538,14 @@ def _contamination_exact_x10(spark, x10: str):
     )
 
 
-def _contamination_bloom_x10(spark, x10: str):
-    """The retired doc_contamination_bloom gate's body (see above)."""
-    from pyspark.sql import functions as F
-
-    from airflow_etl_finance_market_spark.operators.bloom import (
-        bloom_pregated_contamination,
-    )
-
-    docs = spark.read.parquet(f"{x10}/documents.parquet")
-    return bloom_pregated_contamination(
-        docs.filter(F.col("doc_id") % 50 != 0),
-        docs.filter(F.col("doc_id") % 50 == 0),
-        n=3,
-    )
-
-
 def noop(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
 def reclaim(spark) -> None:
     """Release reclaimable JVM state between heavy tiers: clearCache +
-    driver GC (+ Python GC). localCheckpoint blocks (the CC rounds in
-    dedup_clusters, gate-style checkpointed frames) are NON-EVICTABLE
+    driver GC (+ Python GC). localCheckpoint blocks (gate-style
+    checkpointed frames) are NON-EVICTABLE
     storage until ContextCleaner notices the RDD is unreachable — which
     needs a driver GC. Without this, the last tier in the JVM
     (markets_x100) inherits every prior tier's leftover blocks and the
@@ -701,8 +648,7 @@ EVENTS_X10 = [
     "weekly_value_quantile_rollup",
     # r08: the KMV bottom-k theta sketch rollup (set-intersection
     # estimates; postdates the committed r08 BENCH_LOCAL refresh — first
-    # numbers land in the driver's BENCH_r08, the contamination_bloom
-    # precedent)
+    # numbers land in the driver's BENCH_r08)
     "weekly_user_kmv_rollup",
     # r09: the HLL rollup joins so all three stored-sketch reads carry
     # per-round x100/x10 ratios (solo-measured 0.247 s at x10)
@@ -864,10 +810,10 @@ def markets_x100_section(
     return out, n_rows
 
 
-#: Dedup/CC chain timed at 100x documents (500k) — the measured decade of
+#: Dedup chain timed at 100x documents (500k) — the measured decade of
 #: scaling (x100/x10 ratio ≈ 10 expected) the 100 TB posture rests on.
 CORPUS_X100 = [
-    "minhash_full", "dedup_clusters", "dup_spans",
+    "dup_spans",
     # r07: the published-filter tier's decade — gopher is the map-only
     # linear bound, dsir proves the bucket-agg + broadcast-ratio-join
     # shape holds when the occurrence stream grows 10x
@@ -876,11 +822,6 @@ CORPUS_X100 = [
     # 3-window pass + coverage explode + reassembly join stay linear
     # when the span stream grows 10x
     "span_removal",
-    # r15: the cross-frame decontamination decade — proves the
-    # corpus side's bill stays one signature agg (bench side
-    # broadcast; candidates cross-side only) when the corpus grows
-    # 10x against a ~20k-doc benchmark
-    "decontam_near_dup",
 ]
 
 
@@ -888,16 +829,16 @@ def build_x100_docs_fixture(spark, tmp: str) -> str:
     """500k docs as 50k near-dup families of 10 — the HONEST 100x.
 
     Naively crossJoining 100 copies of the x10 perturbation would make
-    every family 100 members wide, and LSH candidate generation (C(f,2)
-    per bucket) would grow QUADRATICALLY in the copy count — a fixture
+    every family 100 members wide, and near-dup pair generation (C(f,2)
+    per family) would grow QUADRATICALLY in the copy count — a fixture
     artifact, not an engine property. Instead each copy splits into
     (group g = copy//10, member m = copy%10): members differ by one
     trailing revision token (the x10 recipe — 10-member families), and
     each GROUP applies a distinct vowel-substitution cipher via
     translate() (length-preserving, JVM-side) that rewrites nearly every
     word, so cross-group shingle overlap collapses far below any
-    threshold. Family size stays constant ⇒ candidates, pairs, and CC
-    edges all scale LINEARLY with docs, which is exactly the claim the
+    threshold. Family size stays constant ⇒ near-dup pairs and shared
+    spans scale LINEARLY with docs, which is exactly the claim the
     x100 point is meant to test.
     """
     import itertools
@@ -957,33 +898,16 @@ def corpus_x100_section(
         df.write.format("noop").mode("overwrite").save()
 
     jobs = {
-        "minhash_full": lambda: _noop(
-            D.minhash_dedup_pairs(docs, num_hashes=32, bands=8, threshold=0.1)
-        ),
-        "dedup_clusters": lambda: _noop(qs["doc_dedup_clusters"](spark, x100)),
         "dup_spans": lambda: _noop(D.duplicate_span_stats(docs, span_tokens=10)),
-        "span_removal": lambda: _noop(
-            D.duplicate_span_removal(docs, span_tokens=10)
-        ),
         "gopher_flags": lambda: _noop(qs["gopher_quality_flags"](spark, x100)),
         "dsir_weights": lambda: _noop(
             qs["dsir_importance_weights"](spark, x100)
         ),
-        "decontam_near_dup": lambda: _noop(
-            qs["near_dup_decontamination"](spark, x100)
+        "span_removal": lambda: _noop(
+            D.duplicate_span_removal(docs, span_tokens=10)
         ),
     }
-    # r13: reclaim (outside the timers) before the removal entry —
-    # dedup_clusters leaves its CC-round localCheckpoint blocks behind,
-    # and the removal pass's h-sorted span stream + per-doc
-    # collect_sets on top of them took the 8g JVM into GCLocker
-    # allocation stalls on one observed run (the r10 failure mode;
-    # reclaim is ~100 ms and timing-neutral per the flagship pair)
-    first = [n for n in CORPUS_X100 if n != "span_removal"]
-    out = best_of_3_each({name: jobs[name] for name in first})
-    reclaim(spark)
-    out.update(best_of_3_each({"span_removal": jobs["span_removal"]}))
-    return {name: out[name] for name in CORPUS_X100}, n_docs
+    return best_of_3_each(jobs), n_docs
 
 
 #: r12: the crawl-prep decade is PERMANENT (r11 verdict #7 — the four
@@ -1045,43 +969,18 @@ def corpus_x10_section(spark, qs, tmp: str) -> dict[str, float]:
     def _noop(df):
         df.write.format("noop").mode("overwrite").save()
 
-    sigs = D.minhash_signatures(docs, num_hashes=32)
     jobs = {
-        # per-stage (cumulative: each stage includes its upstream plan)
-        "minhash_sigs": lambda: _noop(D.minhash_signatures(docs, num_hashes=32)),
-        "lsh_candidates_cum": lambda: _noop(
-            D.lsh_candidate_pairs(sigs, bands=8)
-        ),
-        "minhash_full": lambda: _noop(
-            D.minhash_dedup_pairs(
-                docs, num_hashes=32, bands=8, threshold=0.1
-            )
-        ),
-        "minhash_full_portable": lambda: _noop(
-            qs["minhash_lsh_near_dups"](spark, x10)
-        ),
-        "simhash_full": lambda: _noop(
-            D.simhash_near_pairs(docs, max_hamming=8)
-        ),
         "exact_dedup": lambda: _noop(qs["doc_exact_dedup"](spark, x10)),
         "token_stats": lambda: _noop(qs["doc_token_stats"](spark, x10)),
         "curated_corpus": lambda: _noop(qs["curated_corpus"](spark, x10)),
         "chunking": lambda: _noop(qs["doc_chunks"](spark, x10)),
         "repetition": lambda: _noop(qs["doc_repetition_stats"](spark, x10)),
-        # r11: the contamination gates merged into doc_contamination_dual
-        # (registry headroom); the bench keeps timing each PHYSICAL path
-        # separately via the operators so the numbers stay comparable.
         "contamination": lambda: _noop(
             _contamination_exact_x10(spark, x10)
         ),
         # round-3 corpus operators at x10
         "tfidf_top_terms": lambda: _noop(qs["doc_tfidf_top_terms"](spark, x10)),
         "winnow_fps": lambda: _noop(qs["doc_winnow_fingerprints"](spark, x10)),
-        # dedup_clusters runs its label-propagation rounds eagerly when the
-        # frame is built, so the timer wraps construction + materialization
-        "dedup_clusters": lambda: _noop(
-            qs["doc_dedup_clusters"](spark, x10)
-        ),
         # round-4 corpus operators at x10
         "inverted_index": lambda: _noop(qs["doc_inverted_index"](spark, x10)),
         "bigram_lp": lambda: _noop(qs["doc_bigram_logprob"](spark, x10)),
@@ -1092,25 +991,6 @@ def corpus_x10_section(spark, qs, tmp: str) -> dict[str, float]:
         # recall/cost dial and 4 keeps bench pairs ~10^7.
         "edit_dist_dups": lambda: _noop(
             _ed_dups(spark.read.parquet(f"{x10}/documents.parquet"))
-        ),
-        # containment semantics through the SAME LSH candidate machinery
-        # as minhash_full — the unblocked scale path for subset dedup
-        "containment_lsh": lambda: _noop(
-            D.minhash_containment_pairs(docs, threshold=0.5)
-        ),
-        # r15: the signature-only estimator tier vs minhash_full above —
-        # same candidates, verify = zip_with agreement over the already-
-        # co-located signatures (ZERO gram rehydration); the delta vs
-        # minhash_full IS the rehydration bill the tier exists to skip
-        "minhash_est": lambda: _noop(
-            D.minhash_estimated_pairs(docs, threshold=0.5)
-        ),
-        # r15: the composed triage — only the borderline estimate band
-        # (default +-4/32 agreements) pays the exact verify; eager
-        # (localCheckpoints the candidate frame), so the timer covers
-        # the whole pipeline including the checkpoint
-        "minhash_triage": lambda: _noop(
-            D.minhash_triage_pairs(docs, threshold=0.5)
         ),
         # r05: one-pass duplicate-span stats (md5-hashed spans, window
         # cardinality — the substring-dedup signal) at 50k docs
@@ -1129,20 +1009,6 @@ def corpus_x10_section(spark, qs, tmp: str) -> dict[str, float]:
         "gopher_flags": lambda: _noop(qs["gopher_quality_flags"](spark, x10)),
         "dsir_weights": lambda: _noop(
             qs["dsir_importance_weights"](spark, x10)
-        ),
-        # r07: the Bloom-pre-gated decontamination A/B twin of
-        # "contamination" above — identical output, map-side bitmap
-        # pruning before the verify join (includes the bitmap build job)
-        "contamination_bloom": lambda: _noop(
-            _contamination_bloom_x10(spark, x10)
-        ),
-        # r15: the NEAR-dup tier above the exact contamination twins —
-        # the full gate chain (planted bench construction + per-side
-        # portable signatures + cross-side band join + exact verify)
-        # at 50k docs; the corpus side never shuffles past its own
-        # signature agg (bench side broadcast)
-        "decontam_near_dup": lambda: _noop(
-            qs["near_dup_decontamination"](spark, x10)
         ),
         # r07: two-pass Misra-Gries frequent items at 50k docs (pass 1
         # map-only bounded-memory summaries, pass 2 candidate-only exact

@@ -4,7 +4,10 @@ Most of the package imports lazily, inside function bodies, so a module or
 name that a deletion removed only fails when that function runs. This test
 walks every ``import`` / ``from ... import`` statement (function-local ones
 included) in the package, ``bench.py``, ``tools/`` and ``__spark_entry__.py``
-and checks that each targeted module imports and each imported name exists.
+and checks that each targeted module imports and each imported name exists,
+as does each attribute read through a module alias (``D.name`` after
+``from ..operators import dedup as D``). Registry names that bench.py and
+``tools/dump_plans.py`` spell as string literals must be registered.
 The same walk bounds the finance path: what ``plans/`` and ``session.py``
 reach, import by import, stays inside the modules the daily ETL needs.
 """
@@ -80,6 +83,181 @@ def test_every_package_import_resolves():
     assert not unresolved, "unresolved package imports:\n" + "\n".join(
         unresolved
     )
+
+
+def _is_module(obj) -> bool:
+    return type(obj).__name__ == "module"
+
+
+def _bind(node, path: str) -> dict[str, str]:
+    """Names one import statement binds to package MODULES -> module name."""
+    out = {}
+    if isinstance(node, ast.Import):
+        for alias in node.names:
+            if alias.name.split(".")[0] != PKG:
+                continue
+            if alias.asname:
+                out[alias.asname] = alias.name
+            else:
+                out[PKG] = PKG
+        return out
+    if node.level:
+        module = importlib.util.resolve_name(
+            "." * node.level + (node.module or ""), _package_of(path)
+        )
+    else:
+        module = node.module or ""
+    if module.split(".")[0] != PKG:
+        return out
+    try:
+        mod = importlib.import_module(module)
+    except ImportError:  # reported by test_every_package_import_resolves
+        return out
+    for alias in node.names:
+        full = f"{module}.{alias.name}"
+        if _is_module(getattr(mod, alias.name, None)) or (
+            hasattr(mod, "__path__") and importlib.util.find_spec(full)
+        ):
+            out[alias.asname or alias.name] = full
+    return out
+
+
+_SCOPES = (ast.Module, ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)
+
+
+def _scope_nodes(scope):
+    """Nodes of ``scope`` that are not inside a nested function scope."""
+    todo = list(ast.iter_child_nodes(scope))
+    while todo:
+        node = todo.pop()
+        yield node
+        if not isinstance(node, _SCOPES):
+            todo.extend(ast.iter_child_nodes(node))
+
+
+def _alias_attribute_reads(path: str):
+    """(line, dotted chain, module name) for each ``alias.attr[.attr…]``
+    read whose head name an import in an enclosing scope bound to a
+    package module."""
+    tree = ast.parse(open(path).read(), path)
+
+    def visit(scope, bound):
+        nodes = list(_scope_nodes(scope))
+        bound = dict(bound)
+        for node in nodes:
+            if isinstance(node, (ast.Import, ast.ImportFrom)):
+                bound.update(_bind(node, path))
+        for node in nodes:
+            if isinstance(node, _SCOPES):
+                yield from visit(node, bound)
+            elif (
+                isinstance(node, ast.Attribute)
+                and not isinstance(getattr(node, "parent", None), ast.Attribute)
+            ):
+                chain, head = [], node
+                while isinstance(head, ast.Attribute):
+                    chain.append(head.attr)
+                    head = head.value
+                if isinstance(head, ast.Name) and head.id in bound:
+                    yield node.lineno, [head.id, *reversed(chain)], bound[head.id]
+
+    for node in ast.walk(tree):
+        for child in ast.iter_child_nodes(node):
+            child.parent = node
+    yield from visit(tree, {})
+
+
+def test_every_module_alias_attribute_resolves():
+    importlib.import_module(f"{PKG}.harness")
+    unresolved = []
+    n_checked = 0
+    for path in _sources():
+        where = os.path.relpath(path, _REPO)
+        for line, chain, module in _alias_attribute_reads(path):
+            n_checked += 1
+            obj = importlib.import_module(module)
+            name = module
+            for attr in chain[1:]:
+                if not _is_module(obj):
+                    break
+                name = f"{name}.{attr}"
+                if hasattr(obj, attr):
+                    obj = getattr(obj, attr)
+                elif hasattr(obj, "__path__") and importlib.util.find_spec(name):
+                    obj = importlib.import_module(name)
+                else:
+                    unresolved.append(f"{where}:{line}: {'.'.join(chain)}")
+                    break
+    assert n_checked > 10, f"only {n_checked} alias reads found — walker broken?"
+    assert not unresolved, "unresolved module attributes:\n" + "\n".join(
+        unresolved
+    )
+
+
+def _module_list(tree, name: str) -> list[str]:
+    """Value of a module-level list assignment: literals, other such
+    lists, and ``+`` of the two."""
+
+    def value(node):
+        if isinstance(node, ast.Name):
+            return _module_list(tree, node.id)
+        if isinstance(node, ast.BinOp) and isinstance(node.op, ast.Add):
+            return value(node.left) + value(node.right)
+        return ast.literal_eval(node)
+
+    return next(
+        value(node.value)
+        for node in tree.body
+        if isinstance(node, ast.Assign)
+        and any(getattr(t, "id", None) == name for t in node.targets)
+    )
+
+
+def _bench_registry_literals() -> list[tuple[int, str]]:
+    """(line, name) for every registry name bench.py spells as a literal:
+    ``BENCH_QUERIES``, ``qs["…"]`` subscripts and the name lists handed
+    to ``entry_jobs``."""
+    path = os.path.join(_REPO, "bench.py")
+    tree = ast.parse(open(path).read(), path)
+    lists = {
+        node.targets[0].id: node
+        for node in tree.body
+        if isinstance(node, ast.Assign) and isinstance(node.targets[0], ast.Name)
+    }
+    out = [(lists["BENCH_QUERIES"].lineno, n)
+           for n in _module_list(tree, "BENCH_QUERIES")]
+    for node in ast.walk(tree):
+        if (
+            isinstance(node, ast.Subscript)
+            and getattr(node.value, "id", None) == "qs"
+            and isinstance(node.slice, ast.Constant)
+        ):
+            out.append((node.lineno, node.slice.value))
+        elif (
+            isinstance(node, ast.Call)
+            and getattr(node.func, "id", None) == "entry_jobs"
+            and len(node.args) >= 3
+        ):
+            names = node.args[2]
+            if isinstance(names, ast.Name):
+                names = _module_list(tree, names.id)
+            else:
+                names = ast.literal_eval(names)
+            out += [(node.lineno, n) for n in names]
+    return out
+
+
+def test_bench_and_plan_dump_names_are_registered():
+    from airflow_etl_finance_market_spark import harness
+
+    registered = set(harness.queries())
+    path = os.path.join(_REPO, "tools", "dump_plans.py")
+    plan_names = _module_list(ast.parse(open(path).read(), path), "NAMES")
+    spelled = [(f"bench.py:{line}", n) for line, n in _bench_registry_literals()]
+    spelled += [("tools/dump_plans.py:NAMES", n) for n in plan_names]
+    assert len(spelled) > 50, f"only {len(spelled)} names found — walker broken?"
+    missing = [f"{where}: {n}" for where, n in spelled if n not in registered]
+    assert not missing, "unregistered query names:\n" + "\n".join(missing)
 
 
 #: What the finance path (``plans/`` and ``session.py``) may reach, as

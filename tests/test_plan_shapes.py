@@ -10,11 +10,6 @@ import re
 from pyspark.sql import functions as F
 
 from airflow_etl_finance_market_spark import harness
-from airflow_etl_finance_market_spark.operators.dedup import (
-    lsh_candidate_pairs,
-    minhash_signatures,
-    simhash_near_pairs,
-)
 from airflow_etl_finance_market_spark.sources.readers import load_fixture
 
 
@@ -61,62 +56,6 @@ def test_aggregation_is_partial_then_final(spark, sf_dir):
     assert "partial_sum" in plan  # map-side combine before the exchange
 
 
-def test_minhash_fan_out_exchange_is_reused_by_agg(spark, sf_dir):
-    """The fan_out exchange hashes on the grouping key, so the signature
-    aggregation must NOT add a second exchange (explode preserves
-    partitioning; partial agg runs co-partitioned)."""
-    docs = load_fixture(spark, sf_dir, "documents")
-    plan = plan_of(minhash_signatures(docs))
-    assert plan.count("Exchange") == 1
-
-
-def test_lsh_bucket_join_stays_sort_merge(spark, sf_dir):
-    """The banded self-join must stay SMJ: broadcasting the derived corpus
-    would recompute the signature pipeline on the build side and collect
-    the corpus to the driver at scale."""
-    docs = load_fixture(spark, sf_dir, "documents")
-    plan = plan_of(lsh_candidate_pairs(minhash_signatures(docs)))
-    assert "SortMergeJoin" in plan
-    assert "BroadcastHashJoin" not in plan
-
-
-def test_simhash_pair_plan_is_equi_join_never_cartesian(spark, sf_dir):
-    """SimHash candidates come from the block equi-join, never
-    CartesianProduct / all-pairs, and verify JVM-side with bit_count."""
-    docs = load_fixture(spark, sf_dir, "documents")
-    plan = plan_of(simhash_near_pairs(docs))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "bit_count" in plan
-
-
-def test_simhash_block_join_reuses_block_exchange(spark, sf_dir):
-    """At shuffle-join scale both sides of the block self-join must stay
-    plan-identical, so the shuffled (block_idx, block_val) exchange is
-    reused and the signature aggregation runs once. Broadcast is turned
-    off to get the shuffle join the fixture is too small for."""
-    # built from collected rows: a cached documents table (other tests
-    # cache it) plans one TableCacheQueryStage per side and no reuse
-    docs = spark.createDataFrame(
-        load_fixture(spark, sf_dir, "documents").select("doc_id", "text").collect(),
-        "doc_id long, text string",
-    )
-    key = "spark.sql.autoBroadcastJoinThreshold"
-    old = spark.conf.get(key)
-    spark.conf.set(key, "-1")
-    try:
-        df = simhash_near_pairs(docs)
-        df.collect()
-        # AQE surfaces ReusedExchange only in the FINAL executed plan
-        final = plan_of(df).split("== Initial Plan ==")[0]
-    finally:
-        spark.conf.set(key, old)
-    assert "SortMergeJoin" in final
-    assert re.search(
-        r"ReusedExchange \[[^\]]*\], Exchange hashpartitioning\(block_idx", final
-    ), final
-
-
 def test_partitioned_fact_scan_prunes_partitions(spark, tmp_path):
     """The pipeline's fact table is partitioned by year; a year-filtered
     read must prune at the PartitionFilters level (at 100 TB this is the
@@ -137,131 +76,6 @@ def test_partitioned_fact_scan_prunes_partitions(spark, tmp_path):
     # the data filter list stays empty — the predicate is partition-only
     part_line = [ln for ln in plan.splitlines() if "PartitionFilters" in ln][0]
     assert "2024" in part_line
-
-
-def test_bucketed_join_has_no_exchange(spark, sf_dir):
-    """Identically-bucketed tables must join with zero Exchange nodes —
-    the write-once/join-free contract that amortizes the shuffle of a
-    repeated fact⋈fact join at scale."""
-    from airflow_etl_finance_market_spark.sources.sinks import write_bucketed_table
-
-    # managed tables land in the session's spark-warehouse dir (static
-    # conf); DROP TABLE below removes the data, .gitignore covers the dir
-    li = load_fixture(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_quantity", "l_extendedprice"
-    )
-    orders = load_fixture(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_totalprice", "o_orderdate"
-    )
-    write_bucketed_table(li, "li_bkt", bucket_by=["l_orderkey"], n_buckets=8)
-    write_bucketed_table(orders, "ord_bkt", bucket_by=["o_orderkey"], n_buckets=8)
-    try:
-        joined = (
-            spark.table("li_bkt")
-            .hint("merge")  # force SMJ so broadcast doesn't mask the check
-            .join(
-                spark.table("ord_bkt"),
-                F.col("l_orderkey") == F.col("o_orderkey"),
-            )
-        )
-        plan = plan_of(joined)
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan
-        # bucketed scan is announced in the plan
-        assert "SelectedBucketsCount" in plan
-        # and the result is still correct
-        assert joined.count() == li.join(orders, F.col("l_orderkey") == F.col("o_orderkey")).count()
-    finally:
-        spark.sql("DROP TABLE IF EXISTS li_bkt")
-        spark.sql("DROP TABLE IF EXISTS ord_bkt")
-
-
-def test_cc_bucketed_edges_round_has_no_edge_side_exchange(spark, sf_dir):
-    """The per-round edge⋈labels join of connected components must plan
-    with NO Exchange on the edge side when the symmetrized edge list is
-    bucketed on the join vertex — at 100 TB the edge list is the frame
-    you can never afford to reshuffle every round (graph.py's scale
-    claim, pinned). Labels (|V| rows) may still exchange."""
-    from airflow_etl_finance_market_spark.operators.graph import (
-        connected_components,
-        symmetrize_edges_bucketed,
-    )
-
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (5, 6), (9, 9)], ["src", "dst"]
-    )
-    sym = symmetrize_edges_bucketed(edges, "cc_sym_bkt", n_buckets=4)
-    try:
-        labels = spark.range(10).select(
-            F.col("id"), F.col("id").alias("component")
-        )
-        joined = sym.hint("merge").join(labels, sym["v"] == labels["id"])
-        plan = plan_of(joined)
-        assert "SortMergeJoin" in plan
-        # exactly one shuffle — the labels side; the bucketed edge scan
-        # provides its partitioning from storage
-        assert plan.count("Exchange hashpartitioning") == 1
-        assert "SelectedBucketsCount" in plan
-        # and the full operator accepts the bucketed frame and agrees
-        # with the self-symmetrizing path
-        got = connected_components(
-            edges, sym=sym, vertices=spark.range(10), id_col="id"
-        )
-        want = connected_components(edges, vertices=spark.range(10), id_col="id")
-        assert sorted(map(tuple, got.collect())) == sorted(
-            map(tuple, want.collect())
-        )
-    finally:
-        spark.sql("DROP TABLE IF EXISTS cc_sym_bkt")
-
-
-def test_minhash_index_bucketed_probe_has_no_index_side_exchange(spark, sf_dir):
-    """The incremental-dedup contract (dedup.py minhash_index docstring):
-    an index written bucketed by band_hash must serve a probe's band join
-    with NO Exchange over the corpus-sized index — only the batch-sized
-    probe side shuffles. Also: index+probe pairs through the bucketed
-    table stay identical to the in-memory index path."""
-    from airflow_etl_finance_market_spark.operators.dedup import (
-        band_candidates,
-        minhash_index,
-        minhash_probe,
-        write_minhash_index_table,
-    )
-
-    docs = load_fixture(spark, sf_dir, "documents")
-    corpus = docs.filter(F.col("doc_id") < 450)
-    new = docs.filter(F.col("doc_id") >= 450)
-    idx_mem = minhash_index(corpus, hash_mode="portable")
-    # stale-LOCATION recovery (an interrupted run's orphaned warehouse
-    # dir) is handled inside write_bucketed_table — pinned by
-    # tests/test_sinks.py::test_bucketed_write_recovers_stale_location
-    idx_tbl = write_minhash_index_table(idx_mem, "mh_idx_bkt", n_buckets=8)
-    try:
-        new_banded = minhash_index(new, hash_mode="portable")
-        cand = band_candidates(new_banded, idx_tbl)
-        plan = plan_of(cand)
-        assert "SortMergeJoin" in plan
-        assert "SelectedBucketsCount" in plan
-        # count requirement-driven Exchanges BELOW the join: the index
-        # side must contribute none — the only shuffle EnsureRequirements
-        # inserts is the probe side's. (The probe side also carries
-        # fan_out's deliberate REPARTITION_BY_NUM, which is not a join
-        # requirement and is excluded.)
-        import re
-
-        join_part = plan.split("SortMergeJoin", 1)[1]
-        ensure = re.findall(
-            r"Exchange hashpartitioning\([^)]*\), ENSURE_REQUIREMENTS",
-            join_part,
-        )
-        assert len(ensure) == 1
-        got = minhash_probe(new, idx_tbl, corpus, hash_mode="portable")
-        want = minhash_probe(new, idx_mem, corpus, hash_mode="portable")
-        assert sorted(map(tuple, got.collect())) == sorted(
-            map(tuple, want.collect())
-        )
-    finally:
-        spark.sql("DROP TABLE IF EXISTS mh_idx_bkt")
 
 
 def test_train_test_split_is_shuffle_free(spark, sf_dir):

@@ -289,6 +289,26 @@ def test_chart_png_bytes_pinned(spark, tmp_path):
     }
 
 
+def test_scatter_png_pinned_with_many_overlapping_points(tmp_path):
+    """301 seeded points, most discs overlapping: the scatter's bytes as
+    the full-canvas mask drew them, before each disc was drawn over its
+    own bounding box."""
+    import random
+
+    from airflow_etl_finance_market_spark.plans.charts import render_scatter_png
+
+    rng = random.Random(1)
+    points = [
+        (f"T{i:03d}", rng.uniform(0.5, 4.0), rng.uniform(-30.0, 40.0),
+         rng.uniform(1e3, 1e6))
+        for i in range(301)
+    ]
+    path = str(tmp_path / "scatter.png")
+    render_scatter_png(points, path, title="Risk x return")
+    md5 = hashlib.md5(open(path, "rb").read()).hexdigest()
+    assert md5 == "0cd6011ced57e8dce991c497627f1569"
+
+
 def test_encode_png_decodes_to_its_pixels():
     """The chart encoder's PNG read back with the stdlib alone: every
     chunk's CRC holds, and the inflated IDAT is exactly the filter-0

@@ -823,7 +823,7 @@ def test_media_signature_dedup_carries_state_across_batches(spark, tmp_path):
     must still dedup — dropDuplicatesWithinWatermark state carries across
     batch boundaries until the watermark passes."""
     from airflow_etl_finance_market_spark.operators.dedup import fingerprint
-    from airflow_etl_finance_market_spark.streaming import dedup_by_signature
+    from airflow_etl_finance_market_spark.streaming import dedup_events
 
     t0 = 1_700_000_000_000_000
     in_dir = tmp_path / "in"
@@ -851,166 +851,9 @@ def test_media_signature_dedup_carries_state_across_batches(spark, tmp_path):
         .withColumn("fp", fingerprint("text"))
     )
     got = run_available_now(
-        dedup_by_signature(stream, sig_col="fp", ts="ts", watermark="1 hour"),
+        dedup_events(stream, keys=("fp",), ts="ts", watermark="1 hour"),
         "media_dedup_xbatch",
         output_mode="append",
     )
     rows = sorted(r.doc_id for r in got.collect())
     assert rows == [1, 2]  # doc 3's variant deduped ACROSS the boundary
-
-
-class TestStreamingDecontamination:
-    """Decontamination at the stream edge (r15): Bloom pre-gate in-plan
-    (stateless, exactly-clean majority), exact n-gram verify per
-    micro-batch — stream output must equal the batch contamination twin
-    on a 3-micro-batch file replay."""
-
-    DOCS = [
-        # exact copy of benchmark doc -> contaminated, many overlaps
-        (1, "held out test sentences must never leak into training data"),
-        # shares exactly one trigram with the benchmark
-        (2, "totally separate text but held out test material appears here"),
-        (3, "an entirely unrelated training document about cooking pasta"),
-        (4, None),  # NULL text: no grams, exactly clean
-        (5, "another clean page describing bicycle repair techniques"),
-        (6, "question answer pairs for the benchmark evaluation suite v1"),
-    ]
-    BENCH = [
-        (100, "held out test sentences must never leak into training data"),
-        (101, "question answer pairs for the benchmark evaluation suite v1"),
-    ]
-
-    def _frames(self, spark):
-        docs = spark.createDataFrame(self.DOCS, "doc_id long, text string")
-        # contamination_flags (the batch twin) fans the benchmark out on
-        # its own id_col name, so the bench frame shares the column name
-        bench = spark.createDataFrame(self.BENCH, "doc_id long, text string")
-        return docs, bench
-
-    def test_pregate_has_no_false_negatives(self, spark):
-        from airflow_etl_finance_market_spark.functions.text import word_ngrams
-        from airflow_etl_finance_market_spark.operators.bloom import bloom_build
-        from airflow_etl_finance_market_spark.operators.corpus import (
-            contamination_flags,
-        )
-        from airflow_etl_finance_market_spark.streaming import (
-            contamination_pregate_flags,
-        )
-
-        docs, bench = self._frames(spark)
-        grams = bench.select(
-            F.explode(F.array_distinct(word_ngrams("text", 3))).alias("gram")
-        ).distinct()
-        bf = bloom_build(grams, "gram")
-        flagged = {
-            r.doc_id: r.maybe_contaminated
-            for r in contamination_pregate_flags(docs, bf).collect()
-        }
-        truth = {
-            r.doc_id: r.contaminated
-            for r in contamination_flags(docs, bench).collect()
-        }
-        # Bloom contract: every truly contaminated doc is flagged
-        for i, c in truth.items():
-            if c:
-                assert flagged[i], f"false negative on doc {i}"
-        # NULL text is exactly clean
-        assert flagged[4] is False
-
-    def test_stream_equals_batch_contamination(self, spark, tmp_path):
-        from airflow_etl_finance_market_spark.operators.corpus import (
-            contamination_flags,
-        )
-        from airflow_etl_finance_market_spark.streaming import (
-            run_decontaminate_to_parquet,
-        )
-
-        docs, bench = self._frames(spark)
-        src = str(tmp_path / "docs")
-        for i, chunk in enumerate(
-            [self.DOCS[:2], self.DOCS[2:4], self.DOCS[4:]]
-        ):
-            spark.createDataFrame(
-                chunk, "doc_id long, text string"
-            ).coalesce(1).write.parquet(f"{src}/b{i}")
-        stream = (
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{src}/b*")
-        )
-        clean_p = str(tmp_path / "clean")
-        quar_p = str(tmp_path / "quarantine")
-        run_decontaminate_to_parquet(
-            stream, bench, clean_p, quar_p, str(tmp_path / "ckpt")
-        )
-        truth = {
-            r.doc_id: (r.contaminated, r.n_overlap_grams)
-            for r in contamination_flags(docs, bench).collect()
-        }
-        quarantined = {
-            r.doc_id: r.n_overlap_grams
-            for r in spark.read.parquet(quar_p).collect()
-        }
-        clean_ids = {
-            r.doc_id for r in spark.read.parquet(clean_p).collect()
-        }
-        assert quarantined == {
-            i: n for i, (c, n) in truth.items() if c
-        }
-        assert clean_ids == {i for i, (c, _) in truth.items() if not c}
-        assert clean_ids | set(quarantined) == {i for i, _ in self.DOCS}
-        # the one-trigram overlap is counted exactly
-        assert quarantined[2] == 1
-
-    def test_restart_with_checkpoint_is_incremental(self, spark, tmp_path):
-        """The checkpoint contract the sink docstring claims: re-running
-        with the same checkpoint after NEW files arrive processes only
-        the new data — no duplicate rows in either sink."""
-        from airflow_etl_finance_market_spark.streaming import (
-            run_decontaminate_to_parquet,
-        )
-
-        docs, bench = self._frames(spark)
-        src = str(tmp_path / "docs")
-        spark.createDataFrame(
-            self.DOCS[:4], "doc_id long, text string"
-        ).coalesce(1).write.parquet(f"{src}/b0")
-        stream_args = dict(
-            clean_path=str(tmp_path / "clean"),
-            quarantine_path=str(tmp_path / "quarantine"),
-            checkpoint=str(tmp_path / "ckpt"),
-        )
-
-        def run():
-            s = (
-                spark.readStream.schema("doc_id long, text string")
-                .option("maxFilesPerTrigger", 1)
-                .parquet(f"{src}/b*")
-            )
-            run_decontaminate_to_parquet(s, bench, **stream_args)
-
-        run()
-        first_clean = {
-            r.doc_id
-            for r in spark.read.parquet(stream_args["clean_path"]).collect()
-        }
-        # docs 1 (exact copy) and 2 (one shared trigram) quarantine
-        assert first_clean == {3, 4}
-        # new micro-batch arrives; SAME checkpoint
-        spark.createDataFrame(
-            self.DOCS[4:], "doc_id long, text string"
-        ).coalesce(1).write.parquet(f"{src}/b1")
-        run()
-        clean_ids = [
-            r.doc_id
-            for r in spark.read.parquet(stream_args["clean_path"]).collect()
-        ]
-        quar_ids = [
-            r.doc_id
-            for r in spark.read.parquet(
-                stream_args["quarantine_path"]
-            ).collect()
-        ]
-        # incremental: docs 1-4 processed exactly once, 5-6 appended once
-        assert sorted(clean_ids) == [3, 4, 5]
-        assert sorted(quar_ids) == [1, 2, 6]

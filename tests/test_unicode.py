@@ -190,7 +190,7 @@ def test_unicode_normalize_streams_into_dedup_on_ingest(spark, tmp_path):
         unicode_normalize_docs,
     )
     from airflow_etl_finance_market_spark.operators.dedup import fingerprint
-    from airflow_etl_finance_market_spark.streaming import dedup_by_signature
+    from airflow_etl_finance_market_spark.streaming import dedup_events
     from airflow_etl_finance_market_spark.streaming.io import (
         run_available_now,
     )
@@ -217,7 +217,7 @@ def test_unicode_normalize_streams_into_dedup_on_ingest(spark, tmp_path):
             docs.withColumn("ts", F.expr("timestamp_micros(ts)"))
         )
         sigs = folded.withColumn("fp", fingerprint("text"))
-        return dedup_by_signature(sigs, sig_col="fp", ts="ts")
+        return dedup_events(sigs, keys=("fp",), ts="ts")
 
     schema = "doc_id long, ts long, text string"
     batch = pipeline(spark.read.schema(schema).parquet(in_dir))

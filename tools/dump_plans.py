@@ -13,15 +13,12 @@ sys.path.insert(0, REPO)
 NAMES = [
     "weekly_volatility", "top_avg_volatility", "star_revenue",
     "pricing_summary", "purchase_attribution", "rolling_close_avg",
-    "minhash_lsh_near_dups", "windowed_event_kpis",
+    "windowed_event_kpis",
     "sql_api_nation_rank", "curated_corpus", "term_frequencies",
-    "doc_chunks", "doc_repetition_stats", "doc_contamination_dual",
-    # round 3: the new corpus operators. doc_dedup_clusters runs its
-    # label-propagation rounds eagerly at build time; the printed plan is
-    # the final-round shape over the checkpointed labels (the per-round
-    # shape is one edges⋈labels SMJ + min-agg + labels⋈labels jump).
+    "doc_chunks", "doc_repetition_stats",
+    # round 3: the new corpus operators
     "doc_tfidf_top_terms", "doc_winnow_fingerprints",
-    "doc_dedup_clusters", "reorder_within_30d", "doc_stratified_sample",
+    "reorder_within_30d", "doc_stratified_sample",
     "doc_unigram_logprob",
     # round 4: retrieval, association stats, sequential event analytics,
     # robust audits, graph + SCD2 oracle tiers
@@ -85,10 +82,6 @@ NAMES = [
     # branch filter-only, ONE MapInPandas on the non-ASCII branch —
     # feeding the fingerprint hash-agg)
     "unicode_fold_dedup",
-    # round 15: the cross-frame decontamination (per-side signature
-    # aggs, the benchmark side broadcast through band join AND gram
-    # verify — the corpus never shuffles past its signature agg)
-    "near_dup_decontamination",
 ]
 
 
