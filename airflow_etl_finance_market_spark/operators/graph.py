@@ -1,9 +1,20 @@
-"""Graph operators over edge frames: triangle enumeration and PageRank.
+"""Graph operators over edge frames: connected components, triangle
+enumeration and PageRank.
 
 The reference has no graph tier at all (its dedup is Postgres ON
 CONFLICT, reference: dags/financial_pipeline.py:105-118); these are
 (a)-tier compositions Spark lacks natively.
 
+- :func:`connected_components` labels every vertex with the smallest
+  vertex id reachable from it: hash-min label propagation with pointer
+  jumping, one checkpoint action per round, and the alternating
+  large-star/small-star algorithm (Kiveris et al.,
+  :func:`_alternating_star_components`, O(log² n) rounds on any graph)
+  as the fallback when the primary loop runs out of rounds.
+  :func:`symmetrize_edges_bucketed` writes the symmetrized edge list
+  once as a table bucketed on the join vertex, so every round's
+  edge⋈labels join plans with no Exchange on the edge side (pinned in
+  tests/test_plan_shapes.py).
 - :func:`triangles` enumerates every triangle of an undirected edge
   frame with one wedge self-join plus one closure join;
   :func:`oriented_wedges` exposes the wedge frame whose size is the
@@ -15,8 +26,300 @@ CONFLICT, reference: dags/financial_pipeline.py:105-118); these are
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+
+
+def symmetrize_edges_bucketed(
+    edges: DataFrame,
+    table: str,
+    *,
+    src: str = "src",
+    dst: str = "dst",
+    n_buckets: int = 32,
+) -> DataFrame:
+    """Materialize the symmetrized edge list ONCE as a bucketed table and
+    return the catalog-backed frame, ready for :func:`connected_components`
+    via its ``sym`` parameter.
+
+    Bucketing by ``v`` (the label-join side) pre-pays the edge shuffle at
+    write time: every subsequent round's ``sym ⋈ labels ON v = id`` join
+    reads bucket-for-bucket with no Exchange on the edge side — the
+    per-round cost that dominates iterative graph algorithms at scale.
+    """
+    from ..sources.sinks import write_bucketed_table
+
+    e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).filter(
+        F.col("u") != F.col("v")
+    )
+    sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+    write_bucketed_table(sym, table, bucket_by=["v"], n_buckets=n_buckets)
+    return edges.sparkSession.table(table)
+
+
+def connected_components(
+    edges: DataFrame,
+    *,
+    src: str = "src",
+    dst: str = "dst",
+    vertices: DataFrame | None = None,
+    id_col: str = "id",
+    max_iterations: int = 25,
+    vertices_complete: bool = False,
+    sym: DataFrame | None = None,
+) -> DataFrame:
+    """(id, component) for the undirected graph of ``edges``; ``component``
+    is the smallest vertex id reachable from ``id``.
+
+    ``vertices`` (one ``id_col`` column) adds isolated vertices — pass the
+    full corpus so singletons come back as their own component. With
+    ``vertices_complete=True`` the caller asserts ``vertices`` is unique
+    AND covers every edge endpoint (true for any dedup pipeline: pairs
+    come from the corpus), skipping the edge-endpoint distinct entirely.
+    The assertion is load-bearing: endpoints missing from ``vertices`` are
+    only PARTIALLY tolerated (a stray endpoint adjacent to a labeled
+    vertex is adopted and counted as changed, never silently converged
+    past) — a component containing NO listed vertex emits no rows at all.
+    If the pair frame can span ids outside ``vertices`` (e.g. an
+    incremental probe joining a new batch against an old corpus), pass
+    ``vertices_complete=False`` and pay the endpoint distinct.
+    ``sym`` supplies a pre-symmetrized (u, v) frame — e.g. the bucketed
+    table from :func:`symmetrize_edges_bucketed` — bypassing the internal
+    checkpoint. Edges are symmetrized internally otherwise; self-loops and
+    duplicates are harmless.
+
+    Deterministic: the fixpoint of min-label propagation is unique
+    regardless of partitioning or iteration interleaving.
+    """
+    if sym is None:
+        # Materialize the (possibly expensive — e.g. a pair-producing
+        # self-join) edge frame ONCE, then symmetrize from the checkpointed
+        # blocks: a plain union of two selects over the raw frame would
+        # evaluate its lineage twice. No distinct() on the result —
+        # duplicate edges cost nothing against the MIN aggregate below,
+        # while deduplicating would add a full edge-list shuffle before
+        # the first round starts.
+        e = (
+            edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+            .filter(F.col("u") != F.col("v"))
+            .localCheckpoint()
+        )
+        sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+
+    if vertices is not None and vertices_complete:
+        nodes = vertices.select(F.col(id_col))
+    else:
+        nodes = sym.select(F.col("u").alias(id_col)).distinct()
+        if vertices is not None:
+            nodes = nodes.union(vertices.select(F.col(id_col))).distinct()
+
+    # Eager localCheckpoint per round, NOT persist(): persist caches data
+    # but the logical plan still nests one level per iteration — by round
+    # ~15 the composed plan OOMs the JVM just rendering itself. Checkpoint
+    # truncates lineage so every round plans against a materialized base
+    # (a durable `checkpoint()` dir is the multi-executor-failure-safe
+    # variant for production runs). `sym` needs no checkpoint of its own:
+    # both union branches scan the already-checkpointed edge blocks.
+    labels = nodes.select(
+        id_col, F.col(id_col).alias("component")
+    ).localCheckpoint()
+    for rnd in range(max_iterations):
+        # 1-hop spread: adopt the minimum label among self + neighbors.
+        # Self-messages ride the SAME aggregate as neighbor messages (the
+        # `_self` flag recovers the old label via max-when), so the round
+        # needs no labels⋈neighbor_min join — every vertex appears exactly
+        # once as its own message, isolated vertices included.
+        nbr_msgs = sym.join(labels, sym["v"] == labels[id_col]).select(
+            F.col("u").alias(id_col),
+            F.col("component"),
+            F.lit(False).alias("_self"),
+        )
+        self_msgs = labels.select(
+            id_col, "component", F.lit(True).alias("_self")
+        )
+        stepped = (
+            self_msgs.union(nbr_msgs)
+            .groupBy(id_col)
+            .agg(
+                F.min("component").alias("_step"),
+                F.max(F.when(F.col("_self"), F.col("component"))).alias(
+                    "_old"
+                ),
+            )
+        )
+        if rnd == 0:
+            # Round 1's labels are the identity map — pointer jumping
+            # through it is a no-op, so skip the lookup join entirely.
+            # A vertex with NO self-message (an edge endpoint missing from
+            # a caller-supplied vertices_complete frame) has _old = NULL;
+            # it must count as CHANGED, not NULL-propagate into the
+            # convergence observation and allow an early exit with its
+            # labels unpropagated. Partial tolerance only: such a vertex
+            # enters the label frame when some neighbor IS labeled; a
+            # component with NO labeled vertex at all emits no messages and
+            # is silently absent (see the vertices_complete contract in the
+            # docstring).
+            cand = stepped.select(
+                stepped[id_col],
+                F.col("_step").alias("component"),
+                (
+                    F.col("_old").isNull()
+                    | (F.col("_step") < F.col("_old"))
+                ).alias("_changed"),
+            )
+        else:
+            # pointer jump (path halving): follow the adopted label's OWN
+            # label one hop — labels only ever decrease, so this shortcuts
+            # chains and turns diameter-round convergence into
+            # O(log diameter) (the same idea as union-find path
+            # compression / large-star contraction).
+            lut = labels.select(
+                F.col(id_col).alias("_lid"),
+                F.col("component").alias("_lcomp"),
+            )
+            cand = (
+                stepped.join(lut, stepped["_step"] == lut["_lid"], "left")
+                .select(
+                    stepped[id_col],
+                    F.least(
+                        F.col("_step"), F.coalesce("_lcomp", "_step")
+                    ).alias("component"),
+                    (
+                        F.col("_old").isNull()
+                        | (
+                            F.least(
+                                F.col("_step"),
+                                F.coalesce("_lcomp", "_step"),
+                            )
+                            < F.col("_old")
+                        )
+                    ).alias("_changed"),
+                )
+            )
+        # The convergence count rides the checkpoint materialization as an
+        # observed metric — one action per round, not a second count job.
+        obs = Observation()
+        new_labels = cand.observe(
+            obs, F.count(F.when(F.col("_changed"), 1)).alias("changed")
+        ).localCheckpoint()
+        labels = new_labels.drop("_changed")
+        if obs.get["changed"] == 0:
+            return labels
+    # Primary loop exhausted: pathological diameter for min-label
+    # propagation even with path halving. Finish with the worst-case-safe
+    # alternating large-star/small-star contraction on the graph
+    # CONTRACTED through the labels earned so far (|contracted| ≤ |E|,
+    # usually far smaller), then compose the two mappings. The fallback
+    # is O(log² n) rounds on ANY graph shape (Kiveris et al.), so the
+    # combined algorithm keeps the fast-typical path AND a bounded tail.
+    lu = labels.select(F.col(id_col).alias("_u"), F.col("component").alias("_cu"))
+    lv = labels.select(F.col(id_col).alias("_v"), F.col("component").alias("_cv"))
+    contracted = (
+        sym.join(lu, sym["u"] == lu["_u"])
+        .join(lv, sym["v"] == lv["_v"])
+        .filter(F.col("_cu") != F.col("_cv"))
+        .select(
+            F.least("_cu", "_cv").alias("u"),
+            F.greatest("_cu", "_cv").alias("v"),
+        )
+        .distinct()
+        .localCheckpoint()
+    )
+    star = _alternating_star_components(contracted).select(
+        F.col("id").alias("_sid"), F.col("component").alias("_scomp")
+    )
+    # old-component roots absent from the star frame map to themselves
+    return labels.join(
+        star, labels["component"] == star["_sid"], "left"
+    ).select(
+        id_col,
+        F.coalesce("_scomp", "component").alias("component"),
+    )
+
+
+def _alternating_star_components(
+    e: DataFrame, *, max_rounds: int = 60
+) -> DataFrame:
+    """Alternating large-star/small-star connected components (Kiveris et
+    al., "Connected Components in MapReduce and Beyond") — the
+    O(log² n)-rounds-on-ANY-graph algorithm :func:`connected_components`
+    falls back to when min-label propagation stalls on a pathological
+    diameter.
+
+    ``e`` is the canonical undirected edge set (u < v, distinct, no
+    self-loops, lineage already truncated). Per round:
+
+    - **large-star**: every node u connects each LARGER neighbor v to
+      m = min(Γ(u) ∪ {u});
+    - **small-star**: every node u connects its SMALLER neighbors and
+      itself to its minimum smaller neighbor.
+
+    Both steps preserve connectivity and monotonically pull nodes toward
+    their component minimum; the fixpoint (edge set unchanged by both) is
+    a disjoint union of stars rooted at each component's min. Returns
+    (id, component) for every NON-ROOT vertex — roots map to themselves
+    by construction (callers coalesce), and vertices isolated in ``e``
+    never appear.
+
+    Scale shape per round: two grouped min-aggregates over the edge list
+    + the emit joins — the same edges⋈per-node-min pattern as the primary
+    loop, no new primitive. The fixpoint check is a distinct-set compare
+    (anti-join), two extra jobs per round — acceptable for a fallback
+    that runs only after the primary loop's budget is spent.
+    """
+    converged = False
+    for _ in range(max_rounds):
+        # -- large-star: (v, min(Γ⁺(u))) for every larger neighbor v of u --
+        sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+        mins = sym.groupBy("u").agg(F.min("v").alias("_mn"))
+        m = F.least(F.col("u"), F.col("_mn"))
+        large = (
+            sym.join(mins, "u")
+            .filter(F.col("v") > F.col("u"))
+            .select(F.col("v").alias("x"), m.alias("y"))
+        )
+        e1 = (
+            large.filter(F.col("x") != F.col("y"))
+            .select(
+                F.least("x", "y").alias("u"), F.greatest("x", "y").alias("v")
+            )
+            .distinct()
+        )
+        # -- small-star: smaller neighbors ∪ {u} connect to their min --
+        sym1 = e1.union(e1.select(F.col("v").alias("u"), F.col("u").alias("v")))
+        smaller = sym1.filter(F.col("v") < F.col("u"))
+        mins1 = smaller.groupBy("u").agg(F.min("v").alias("_mn"))
+        small = (
+            smaller.join(mins1, "u")
+            .filter(F.col("v") != F.col("_mn"))
+            .select(F.col("v").alias("x"), F.col("_mn").alias("y"))
+            .union(mins1.select(F.col("u").alias("x"), F.col("_mn").alias("y")))
+        )
+        e_new = (
+            small.filter(F.col("x") != F.col("y"))
+            .select(
+                F.least("x", "y").alias("u"), F.greatest("x", "y").alias("v")
+            )
+            .distinct()
+            .localCheckpoint()
+        )
+        # fixpoint: the canonical distinct edge sets are equal
+        if e_new.count() == e.count() and e_new.subtract(e).isEmpty():
+            e = e_new
+            converged = True
+            break
+        e = e_new
+    if not converged:
+        # a non-star-forest edge set would map vertices to intermediate
+        # labels — SILENT under-merging; fail loudly instead (the bound
+        # is O(log² n), so hitting it means a bug, not a big graph)
+        raise RuntimeError(
+            f"large-star/small-star did not reach its fixpoint in "
+            f"{max_rounds} rounds — this exceeds the algorithm's "
+            "O(log² n) bound; inspect the edge frame"
+        )
+    # fixpoint edge set is a star forest: (root=u, member=v) per edge
+    return e.select(F.col("v").alias("id"), F.col("u").alias("component"))
 
 
 def oriented_wedges(

@@ -93,7 +93,7 @@ def inverted_index(
 
     This is the materialization step a 100 TB deployment runs ONCE so
     per-query BM25 never rescans the corpus: written bucketed by term
-    (``bucketBy`` on ``saveAsTable``), a query's term lookups prune to
+    (sources/sinks.write_bucketed_table), a query's term lookups prune to
     their buckets. Postings serialize as a canonical ascending string so
     the result is deterministic and engine-comparable; at scale the same
     aggregate keeps the array form instead.

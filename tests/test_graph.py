@@ -1,8 +1,64 @@
-"""Graph operators (operators/graph.py): triangle enumeration under
-both orientations and fixed-point PageRank against a Python replay, plus
-the empty-input contract of the round-3 corpus operators."""
+"""Graph operators (operators/graph.py): connected components against a
+driver-side union-find oracle (determinism under partitioning, the
+large-star/small-star fallback, stray edge ids), triangle enumeration
+under both orientations and fixed-point PageRank against a Python
+replay, plus the empty-input contract of the round-3 corpus operators."""
 
 from __future__ import annotations
+
+import random
+
+from airflow_etl_finance_market_spark.operators.graph import (
+    connected_components,
+)
+
+
+def _union_find(n_nodes, edges):
+    parent = list(range(n_nodes))
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    # canonical component = min id in component
+    comp = {}
+    for v in range(n_nodes):
+        r = find(v)
+        comp.setdefault(r, []).append(v)
+    return {v: min(members) for r, members in comp.items() for v in members}
+
+
+def test_chain_transitivity_and_singletons(spark):
+    edges = spark.createDataFrame([(1, 2), (2, 3), (5, 6)], "src long, dst long")
+    verts = spark.createDataFrame([(i,) for i in range(1, 8)], "id long")
+    got = {
+        r["id"]: r["component"]
+        for r in connected_components(edges, vertices=verts).collect()
+    }
+    assert got == {1: 1, 2: 1, 3: 1, 4: 4, 5: 5, 6: 5, 7: 7}
+
+
+def test_random_graph_matches_union_find(spark):
+    rng = random.Random(42)
+    n = 200
+    edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(150)]
+    expect = _union_find(n, edges)
+    edf = spark.createDataFrame(edges, "src long, dst long")
+    vdf = spark.createDataFrame([(i,) for i in range(n)], "id long")
+    for parts in (1, 7):
+        got = {
+            r["id"]: r["component"]
+            for r in connected_components(
+                edf.repartition(parts), vertices=vdf
+            ).collect()
+        }
+        assert got == expect
 
 
 def test_empty_inputs_yield_empty_not_crash(spark):
@@ -18,9 +74,83 @@ def test_empty_inputs_yield_empty_not_crash(spark):
     )
 
     empty_docs = spark.createDataFrame([], "doc_id long, text string")
+    empty_pairs = spark.createDataFrame([], "id_a long, id_b long")
     assert tfidf_top_terms(empty_docs).collect() == []
     assert unigram_logprob(empty_docs).collect() == []
     assert winnow_fingerprints(empty_docs).collect() == []
+    verts = spark.createDataFrame([(1,), (2,)], "id long")
+    got = {
+        r["id"]: r["component"]
+        for r in connected_components(empty_pairs.withColumnRenamed("id_a", "src")
+                                      .withColumnRenamed("id_b", "dst"),
+                                      vertices=verts).collect()
+    }
+    assert got == {1: 1, 2: 2}
+
+
+class TestStarFallback:
+    """Large-star/small-star — the worst-case-safe completion that kicks in
+    when the primary min-label loop exhausts max_iterations."""
+
+    def test_star_algorithm_matches_union_find(self, spark):
+        from airflow_etl_finance_market_spark.operators.graph import (
+            _alternating_star_components,
+        )
+
+        rng = random.Random(7)
+        n = 120
+        edges = sorted(
+            {
+                (min(a, b), max(a, b))
+                for a, b in (
+                    (rng.randrange(n), rng.randrange(n)) for _ in range(90)
+                )
+                if a != b
+            }
+        )
+        expect = _union_find(n, edges)
+        e = spark.createDataFrame(edges, "u long, v long").localCheckpoint()
+        got = {
+            r["id"]: r["component"]
+            for r in _alternating_star_components(e).collect()
+        }
+        # star frame holds non-roots only; roots map to themselves
+        endpoints = {x for ab in edges for x in ab}
+        for v in endpoints:
+            assert got.get(v, v) == expect[v]
+
+    def test_long_path_fallback_converges(self, spark):
+        """The pathological-diameter case the old code raised on: a long
+        path with a tiny primary budget must now fall through to the star
+        contraction and still return the exact union-find answer."""
+        n = 64
+        path = [(i, i + 1) for i in range(n - 1)]
+        expect = _union_find(n, path)
+        edf = spark.createDataFrame(path, "src long, dst long")
+        vdf = spark.createDataFrame([(i,) for i in range(n)], "id long")
+        got = {
+            r["id"]: r["component"]
+            for r in connected_components(
+                edf, vertices=vdf, max_iterations=2
+            ).collect()
+        }
+        assert got == expect  # every node labeled 0
+
+    def test_fallback_respects_isolated_vertices(self, spark):
+        """Singletons and already-converged components must pass through
+        the star composition unchanged (no star row -> coalesce to the
+        primary label)."""
+        edges = [(10, 11)] + [(i, i + 1) for i in range(8)]  # path 0..8
+        edf = spark.createDataFrame(edges, "src long, dst long")
+        vdf = spark.createDataFrame([(i,) for i in list(range(12)) + [99]], "id long")
+        got = {
+            r["id"]: r["component"]
+            for r in connected_components(
+                edf, vertices=vdf, max_iterations=1
+            ).collect()
+        }
+        expect = {i: 0 for i in range(9)} | {9: 9, 10: 10, 11: 10, 99: 99}
+        assert got == expect
 
 
 class TestTriangles:
@@ -160,3 +290,25 @@ class TestPageRank:
         # round 2: s(2) = base + (s1(1)*85)//100
         assert got[1] == 150_000
         assert got[2] == 150_000 + (150_000 * 85) // 100
+
+
+def test_cc_stray_edge_ids_still_converge(spark):
+    """An edge endpoint missing from a vertices_complete frame must still
+    propagate labels fully (counted as changed every round it moves), not
+    NULL-out of the convergence observation and stop early."""
+    from airflow_etl_finance_market_spark.operators.graph import (
+        connected_components,
+    )
+
+    # chain 1-2-3-4-5 but the vertices frame omits 3 and 5
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (4, 5)], "src long, dst long"
+    )
+    verts = spark.createDataFrame([(1,), (2,), (4,)], "id long")
+    got = {
+        r.id: r.component
+        for r in connected_components(
+            edges, vertices=verts, vertices_complete=True
+        ).collect()
+    }
+    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1}

@@ -78,6 +78,82 @@ def test_partitioned_fact_scan_prunes_partitions(spark, tmp_path):
     assert "2024" in part_line
 
 
+def test_bucketed_join_has_no_exchange(spark, sf_dir):
+    """Identically-bucketed tables must join with zero Exchange nodes —
+    the write-once/join-free contract that amortizes the shuffle of a
+    repeated fact⋈fact join at scale."""
+    from airflow_etl_finance_market_spark.sources.sinks import write_bucketed_table
+
+    # managed tables land in the session's spark-warehouse dir (static
+    # conf); DROP TABLE below removes the data, .gitignore covers the dir
+    li = load_fixture(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_quantity", "l_extendedprice"
+    )
+    orders = load_fixture(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_totalprice", "o_orderdate"
+    )
+    write_bucketed_table(li, "li_bkt", bucket_by=["l_orderkey"], n_buckets=8)
+    write_bucketed_table(orders, "ord_bkt", bucket_by=["o_orderkey"], n_buckets=8)
+    try:
+        joined = (
+            spark.table("li_bkt")
+            .hint("merge")  # force SMJ so broadcast doesn't mask the check
+            .join(
+                spark.table("ord_bkt"),
+                F.col("l_orderkey") == F.col("o_orderkey"),
+            )
+        )
+        plan = plan_of(joined)
+        assert "SortMergeJoin" in plan
+        assert "Exchange" not in plan
+        # bucketed scan is announced in the plan
+        assert "SelectedBucketsCount" in plan
+        # and the result is still correct
+        assert joined.count() == li.join(orders, F.col("l_orderkey") == F.col("o_orderkey")).count()
+    finally:
+        spark.sql("DROP TABLE IF EXISTS li_bkt")
+        spark.sql("DROP TABLE IF EXISTS ord_bkt")
+
+
+def test_cc_bucketed_edges_round_has_no_edge_side_exchange(spark, sf_dir):
+    """The per-round edge⋈labels join of connected components must plan
+    with NO Exchange on the edge side when the symmetrized edge list is
+    bucketed on the join vertex — at 100 TB the edge list is the frame
+    you can never afford to reshuffle every round (graph.py's scale
+    claim, pinned). Labels (|V| rows) may still exchange."""
+    from airflow_etl_finance_market_spark.operators.graph import (
+        connected_components,
+        symmetrize_edges_bucketed,
+    )
+
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (5, 6), (9, 9)], ["src", "dst"]
+    )
+    sym = symmetrize_edges_bucketed(edges, "cc_sym_bkt", n_buckets=4)
+    try:
+        labels = spark.range(10).select(
+            F.col("id"), F.col("id").alias("component")
+        )
+        joined = sym.hint("merge").join(labels, sym["v"] == labels["id"])
+        plan = plan_of(joined)
+        assert "SortMergeJoin" in plan
+        # exactly one shuffle — the labels side; the bucketed edge scan
+        # provides its partitioning from storage
+        assert plan.count("Exchange hashpartitioning") == 1
+        assert "SelectedBucketsCount" in plan
+        # and the full operator accepts the bucketed frame and agrees
+        # with the self-symmetrizing path
+        got = connected_components(
+            edges, sym=sym, vertices=spark.range(10), id_col="id"
+        )
+        want = connected_components(edges, vertices=spark.range(10), id_col="id")
+        assert sorted(map(tuple, got.collect())) == sorted(
+            map(tuple, want.collect())
+        )
+    finally:
+        spark.sql("DROP TABLE IF EXISTS cc_sym_bkt")
+
+
 def test_train_test_split_is_shuffle_free(spark, sf_dir):
     """The split assignment is a pure map-side projection: any Exchange
     would mean the 'no-shuffle, re-derivable per row' contract broke."""

@@ -356,6 +356,67 @@ def test_orc_roundtrip_preserves_rows_types_and_partition_column(spark, sf_dir):
         shutil.rmtree(tmp, ignore_errors=True)
 
 
+def test_bucketed_write_recovers_stale_location(spark):
+    """An interrupted run can leave a managed table's warehouse
+    directory on disk with NO catalog entry; saveAsTable then fails
+    with LOCATION_ALREADY_EXISTS even in overwrite mode (observed live
+    r13 after a killed session). write_bucketed_table must clear
+    exactly that orphaned state and succeed."""
+    import os
+    from urllib.parse import urlparse
+
+    from airflow_etl_finance_market_spark.sources.sinks import (
+        write_bucketed_table,
+    )
+
+    spark.sql("DROP TABLE IF EXISTS stale_loc_bkt")
+    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
+    stale = f"{wh}/stale_loc_bkt"
+    os.makedirs(stale, exist_ok=True)
+    with open(f"{stale}/orphan.parquet", "w") as f:
+        f.write("junk")
+    try:
+        df = spark.range(10).selectExpr("id", "id * 2 AS v")
+        write_bucketed_table(df, "stale_loc_bkt", bucket_by=["id"], n_buckets=2)
+        assert spark.table("stale_loc_bkt").count() == 10
+        # and a normal overwrite of the now-cataloged table still works
+        write_bucketed_table(
+            df.limit(5), "stale_loc_bkt", bucket_by=["id"], n_buckets=2
+        )
+        assert spark.table("stale_loc_bkt").count() == 5
+    finally:
+        spark.sql("DROP TABLE IF EXISTS stale_loc_bkt")
+
+
+def test_bucketed_write_does_not_touch_clean_preexisting_dirs(spark):
+    """Recovery is REACTIVE (r14, r13 ADVICE): when saveAsTable succeeds
+    outright, nothing is deleted — an unrelated pre-existing directory
+    whose name does NOT collide with the table survives the write."""
+    import os
+    from urllib.parse import urlparse
+
+    from airflow_etl_finance_market_spark.sources.sinks import (
+        write_bucketed_table,
+    )
+
+    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
+    bystander = f"{wh}/clean_bystander_dir"
+    os.makedirs(bystander, exist_ok=True)
+    marker = f"{bystander}/keep.txt"
+    with open(marker, "w") as f:
+        f.write("precious")
+    spark.sql("DROP TABLE IF EXISTS clean_write_bkt")
+    try:
+        df = spark.range(4).selectExpr("id", "id AS v")
+        write_bucketed_table(df, "clean_write_bkt", bucket_by=["id"], n_buckets=2)
+        assert os.path.exists(marker), "bystander directory was deleted"
+    finally:
+        spark.sql("DROP TABLE IF EXISTS clean_write_bkt")
+        import shutil
+
+        shutil.rmtree(bystander, ignore_errors=True)
+
+
 def test_orphan_location_guards_scheme_and_qualification():
     """The derived cleanup path is None — recovery re-raises instead of
     rmtree'ing — for any non-local warehouse scheme (the path would name
